@@ -430,6 +430,8 @@ object AisDecoder {
     try {
       var prev: Sentence = null
       var meta: (String, Int, String) = ("", 0, "")
+      val payloads = new Array[String](sentences.length)
+      var i = 0
       for (raw <- sentences) {
         val s = parseSentence(raw)
         meta = (s.packageType, s.packageId, s.channel)
@@ -440,8 +442,11 @@ object AisDecoder {
              prev.packageNo != s.packageNo - 1 ||
              prev.packageId != s.packageId)) return None
         prev = s
+        payloads(i) = s.payload
+        i += 1
       }
-      val bits = Armor.payloadBits(sentences.map(r => parseSentence(r).payload))
+      val bits = Armor.payloadBits(
+        scala.collection.immutable.ArraySeq.unsafeWrapArray(payloads))
       Some(parseBits(bits, meta, extended))
     } catch {
       case _: DecodeException | _: NumberFormatException |

@@ -23,6 +23,10 @@ object WarehouseStream {
     * `evictionTimeout` bounds reassembly state: NMEA package ids cycle
     * 0-9, so without eviction a lost fragment's stale state splices
     * with the NEXT message that reuses its key (garbage decode rows).
+    *
+    * A message that fails to decode keeps a null `d`; every route drops
+    * it with its `d.messageType` filter. A `d` null filter here would be
+    * pushed under the decode projection and decode every message twice.
     */
   def decodedStream(lines: DataFrame,
       evictionTimeout: Option[String] = Some("60 seconds")): DataFrame = {
@@ -35,7 +39,6 @@ object WarehouseStream {
                                              // reference does at ingest
                                              // (ais_egressServerCH.py:132-134)
       .withColumn("d", AisDecoder.ais_decode(col("sentences")))
-      .filter(col("d").isNotNull)
   }
 
   /** Start the four warehouse routes under `outDir`/(position|static|

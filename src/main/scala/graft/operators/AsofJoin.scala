@@ -10,12 +10,16 @@ import org.apache.spark.sql.functions._
   * the latest right row with `right(on) <= left(on)` and equal `by` keys;
   * unmatched left rows keep nulls (left outer).
   *
-  * Implementation: union-and-window. Both sides are unioned with a side tag
-  * (right=0 sorts before left=1 on equal `on`, giving backward-INCLUSIVE
-  * semantics, matching merge_asof's default), then a running
-  * `last(col, ignoreNulls)` over `Window.partitionBy(by).orderBy(on, side)`
-  * carries the most recent right-side values forward; finally only left rows
-  * are kept.
+  * Implementation: union-and-window, split in two so that callers holding
+  * both sides in ONE frame skip the union.
+  *  - [[asofTagged]] is the core. It takes a tagged frame whose [[Side]]
+  *    column marks right rows 0 and left rows 1 (right=0 sorts before
+  *    left=1 on equal `on`, giving backward-INCLUSIVE semantics, matching
+  *    merge_asof's default). A running `last(col, ignoreNulls)` over
+  *    `Window.partitionBy(by).orderBy(on, side)` carries the most recent
+  *    right-side values forward, then only left rows are kept.
+  *  - [[asofJoin]] is the two-input join: tag each side, union them, and
+  *    run the core.
   *
   * Scale: exactly ONE shuffle (hash by `by`) + an in-partition sort — the
   * same cost as a sort-merge join, with no risk of row explosion on
@@ -36,7 +40,9 @@ import org.apache.spark.sql.functions._
   *    arrival order; rightCols must therefore be orderable types.
   */
 object AsofJoin {
-  private val SIDE = "__asof_side"
+
+  /** Name of the side tag column [[asofTagged]] reads. */
+  val Side = "__asof_side"
 
   def asofJoin(
       left: DataFrame,
@@ -52,24 +58,39 @@ object AsofJoin {
     // single projection per side (a per-column withColumn fold stacks one
     // Project node per added column — real planning cost on wide tables)
     val leftU = left.select(
-      left.columns.map(col) ++ (lit(1).as(SIDE) +:
+      left.columns.map(col) ++ (lit(1).as(Side) +:
         rightCols.map(c => lit(null).cast(right.schema(c).dataType).as(c))): _*)
     val rightU = right
       .filter(col(on).isNotNull)
       .select(((by :+ on).map(col) ++ rightCols.map(col)) ++
-        (lit(0).as(SIDE) +:
+        (lit(0).as(Side) +:
           leftOnly.map(c => lit(null).cast(left.schema(c).dataType).as(c))): _*)
+    asofTagged(leftU.unionByName(rightU), on, by, rightCols)
+  }
 
+  /** The as-of core over one tagged frame: every left row (`Side` = 1)
+    * with `rightCols` filled from the latest right row (`Side` = 0) of its
+    * `by` key at or before its `on`. Rows of any other side value, null
+    * included, pass through the window untouched and are dropped with the
+    * right rows. The caller guarantees what [[asofJoin]]'s tagging does:
+    * right rows have a non-null `on`, and every row that is not a right
+    * row holds nulls in `rightCols`. Output: the frame's columns minus
+    * `Side`, in order.
+    */
+  def asofTagged(
+      tagged: DataFrame,
+      on: String,
+      by: Seq[String],
+      rightCols: Seq[String]): DataFrame = {
     val w = Window
       .partitionBy(by.map(col): _*)
-      .orderBy(col(on).asc +: col(SIDE).asc +: rightCols.map(c => col(c).asc): _*)
+      .orderBy(col(on).asc +: col(Side).asc +: rightCols.map(c => col(c).asc): _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val union = leftU.unionByName(rightU)
-    val filled = union.select(union.columns.map {
+    val filled = tagged.select(tagged.columns.map {
       case c if rightCols.contains(c) =>
         last(col(c), ignoreNulls = true).over(w).as(c)
       case c => col(c)
     }: _*)
-    filled.filter(col(SIDE) === 1).drop(SIDE)
+    filled.filter(col(Side) === 1).drop(Side)
   }
 }

@@ -52,6 +52,62 @@ class PipelineSpec extends AnyFunSuite {
     assert(s === 2)
   }
 
+  /** `sentence` re-framed with another package id and/or mmsi (payload
+    * bits 8-37, always in the first fragment) and a fresh checksum.
+    */
+  private def reframe(sentence: String, packageId: Option[Int] = None,
+      mmsi: Option[Long] = None): String = {
+    val alphabet = "0123456789:;<=>?@ABCDEFGHIJKLMNOPQRSTUVW`abcdefghijklmnopqrstuvw"
+    val f = sentence.substring(1, sentence.indexOf('*')).split(",", -1)
+    packageId.foreach(id => f(3) = id.toString)
+    mmsi.foreach { m =>
+      val bits = f(5).flatMap(c => (5 to 0 by -1).map(b => (alphabet.indexOf(c) >> b) & 1)).toArray
+      (0 until 30).foreach(i => bits(8 + i) = ((m >> (29 - i)) & 1L).toInt)
+      f(5) = bits.grouped(6).map(g => alphabet(g.reduce(_ * 2 + _))).mkString
+    }
+    val body = f.mkString(",")
+    f"!$body*${body.foldLeft(0)(_ ^ _)}%02X"
+  }
+
+  test("single-pass gold equals the two-input as-of join on edge rows") {
+    import spark.implicits._
+    val pos = Fixtures.sentenceGroups(0)._2.head // type 1
+    val Seq(st1, st2) = Fixtures.sentenceGroups(3)._2 // two-fragment type 5
+    val (m, m2) = (244000001L, 244000002L)
+    def static(id: Int, mmsi: Long) =
+      Seq(reframe(st1, Some(id), Some(mmsi)), reframe(st2, Some(id)))
+    def at(epoch: Long)(s: String) = s"\\s:stn,q:u,c:${1673222400L + epoch}*00$s"
+    val p = reframe(pos, mmsi = Some(m))
+    val badChecksum = p.dropRight(1) + (if (p.last == '0') "1" else "0")
+    val lines = (datalogLines ++ Seq(
+      at(0)(p),                                  // before any static: no imo
+      at(10)(p)) ++                              // same second as the static
+      static(1, m).map(at(10)) ++                //   below: inclusive match
+      Seq(at(30)(badChecksum)) ++                // fails decode: dropped
+      static(2, m2).map(s => s"\\s:stn,q:u*00$s") ++ // null ts: never carried
+      Seq(at(40)(reframe(pos, mmsi = Some(m2))),
+        at(50)(static(3, m).head),               // orphan fragment: no message
+        at(60)(p))).toDF("value")
+    val decoded = GoldJob.decode(lines)
+    val twoInput = graft.operators.AsofJoin.asofJoin(
+      GoldJob.positions(decoded),
+      GoldJob.statics(decoded).withColumnRenamed("static_ts", "ts"),
+      on = "ts", by = Seq("mmsi"),
+      rightCols = Seq("imo", "callsign", "shipName", "shipType", "destination"))
+    val imo = GoldJob.statics(decoded).filter($"mmsi" === m)
+      .select($"imo").as[Long].head()
+    for (onePass <- Seq(GoldJob.goldOf(lines), GoldJob.gold(decoded))) {
+      assert(onePass.columns.toSeq === twoInput.columns.toSeq)
+      assert(onePass.exceptAll(twoInput).count() === 0)
+      assert(twoInput.exceptAll(onePass).count() === 0)
+      val edge = onePass.filter($"mmsi".isin(m, m2))
+        .select(unix_timestamp($"ts") - 1673222400L, $"mmsi", $"imo")
+        .as[(Long, Long, Option[Long])].collect().toSet
+      assert(edge === Set((0L, m, None), (10L, m, Some(imo)), (40L, m2, None),
+        (60L, m, Some(imo))))
+    }
+  }
+
   test("streaming gold landing == batch positions, date-partitioned") {
     import spark.implicits._
     val in = Files.createTempDirectory("gold_in").toString

@@ -44,6 +44,25 @@ class PlanSpec extends AnyFunSuite {
       case p => p
     }
 
+  test("gold build runs the decode kernel once per reassembly branch") {
+    // read from a file as GoldJob.run does: over a local relation the
+    // optimizer would fold the single-fragment branch away
+    val dir = Files.createTempDirectory("gold_plan")
+    Files.write(dir.resolve("d.log"), graft.ais.Fixtures.sentenceGroups
+      .flatMap(_._2).map(s => s"\\s:stn,q:u,c:1673222400*00$s")
+      .mkString("\n").getBytes("UTF-8"))
+    val p = physical(graft.jobs.GoldJob.goldOf(spark.read.text(dir.toString)))
+    def kernelCalls(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+      e.collect { case k: org.apache.spark.sql.graft.AisDecode => k }.size
+    // one AisDecode for single-fragment messages, one for multi-fragment
+    // ones: a filter on `d` pushed below the exchange would add more
+    assert(p.collect { case n => n.expressions.map(kernelCalls).sum }.sum === 2,
+      p.treeString)
+    assert(p.collect {
+      case f: org.apache.spark.sql.execution.FilterExec if kernelCalls(f.condition) > 0 => f
+    }.isEmpty, p.treeString)
+  }
+
   test("dimension join broadcasts the small side") {
     val p = plan(graft.SparkEntry.queries("q3_broadcast_join")(spark, sf))
     assert(p.contains("BroadcastHashJoin"), p.take(800))

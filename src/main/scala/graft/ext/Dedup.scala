@@ -460,8 +460,14 @@ object Dedup {
 
   /** [[contaminationBloom]] against a prepared holdout artifact —
     * bit-identical rows (the Bloom prune only drops join misses).
+    * `smallTrain` broadcasts the TRAIN side — a delta-sized train side
+    * (the curation delta chain under its size cap): the holdout-code
+    * table is then scanned, never shuffled, and no adaptive re-plan is
+    * needed to get the build side right. Same rows either way (the
+    * join is the same equi-join; only the build-side hint moves).
     */
-  def contaminationAgainst(train: DataFrame, h: HoldoutCodes): DataFrame = {
+  def contaminationAgainst(train: DataFrame, h: HoldoutCodes,
+      smallTrain: Boolean = false): DataFrame = {
     val trCodesRaw = shingleSets(train)
       .select(col("doc_id"), explode_outer(col("tset")).as("code"))
       .filter(col("code").isNotNull)
@@ -472,27 +478,10 @@ object Dedup {
     // exchange sits ABOVE the cache, so the join is skew-splittable
     // even with canChangeCachedPlanOutputPartitioning at its false
     // default
-    trCodes.join(skewJoinReady(h.codes), Seq("code"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_shared"))
-  }
-
-  /** [[contaminationAgainst]] with the TRAIN side broadcast — the
-    * streaming hot path, where the train side is a micro-batch delta:
-    * the holdout-code table is scanned, never shuffled, and no
-    * adaptive re-plan is needed to get the build side right. Same rows
-    * (the join is the same equi-join; only the build-side hint moves).
-    */
-  def contaminationAgainstSmall(train: DataFrame, h: HoldoutCodes): DataFrame = {
-    val trCodesRaw = shingleSets(train)
-      .select(col("doc_id"), explode_outer(col("tset")).as("code"))
-      .filter(col("code").isNotNull)
-    val trCodes = h.bloomBytes.fold(trCodesRaw)(bytes =>
-      trCodesRaw.filter(org.apache.spark.sql.graft.GraftColumns
-        .bloomMightContain(bytes, col("code"))))
-    broadcast(trCodes).join(h.codes, Seq("code"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_shared"))
+    val joined =
+      if (smallTrain) broadcast(trCodes).join(h.codes, Seq("code"))
+      else trCodes.join(skewJoinReady(h.codes), Seq("code"))
+    joined.groupBy(col("doc_id")).agg(count(lit(1)).as("n_shared"))
   }
 
   /** K-wide MinHash signature over the token set. */
@@ -705,7 +694,8 @@ object Dedup {
     */
   def minhashPairsAgainst(store: DataFrame, incoming: DataFrame,
       minJaccard: Double, maxBucket: Int = 1000): DataFrame =
-    minhashPairsAgainstSigs(sigTable(store), incoming, minJaccard, maxBucket)
+    minhashPairsAgainstSigs(sigTable(store), sigTable(incoming), minJaccard,
+      maxBucket)
 
   /** The exploded (doc_id, band, key) band table of a [[signatureFrame]]
     * — UNCAPPED: the at-rest form a long-lived ingest surface derives
@@ -771,17 +761,17 @@ object Dedup {
       .select(col("in_doc"), col("store_doc"), col("jaccard"))
   }
 
-  /** [[minhashPairsAgainst]] over a PRE-DERIVED store signature table
-    * (the [[signatureFrame]] shape) — the store side of the streaming
+  /** [[minhashPairsAgainst]] over PRE-DERIVED signature tables (the
+    * [[signatureFrame]] shape) on both sides — the store side of an
     * ingest is append-only between maintenance, so its signatures are
-    * derived once per store version instead of once per micro-batch.
+    * derived once per store version, and a staged delta chain derives
+    * the incoming side once for both of its stage-4 halves.
     */
-  def minhashPairsAgainstSigs(sSig: DataFrame, incoming: DataFrame,
+  def minhashPairsAgainstSigs(sSig: DataFrame, iSig: DataFrame,
       minJaccard: Double, maxBucket: Int = 1000): DataFrame = {
     def explodeBands(sigs: DataFrame) = dropHotBuckets(sigs.select(
       col("doc_id"), posexplode(col("bands")).as(Seq("band", "key"))),
       Seq("band", "key"), maxBucket)
-    val iSig = sigTable(incoming)
     val candidates = explodeBands(iSig)
       .select(col("band"), col("key"), col("doc_id").as("in_doc"))
       .join(explodeBands(sSig)
@@ -904,11 +894,12 @@ object Dedup {
     }
   }
 
-  /** [[contaminationAgainstSmall]] with the train side's (doc_id, code)
-    * rows pre-built (the driver-resident micro-batch tier): the same
-    * exact equi-join against the holdout-code table, with no kernel
-    * pass and no Bloom prefilter — the prefilter only shrinks the
-    * broadcast build; the join IS the exact membership test either way.
+  /** `contaminationAgainst(smallTrain = true)` with the train side's
+    * (doc_id, code) rows pre-built (the driver-resident micro-batch
+    * tier): the same exact equi-join against the holdout-code table,
+    * with no kernel pass and no Bloom prefilter — the prefilter only
+    * shrinks the broadcast build; the join IS the exact membership
+    * test either way.
     */
   def contaminationAgainstCodes(trCodes: DataFrame,
       h: HoldoutCodes): DataFrame =

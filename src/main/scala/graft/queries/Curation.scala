@@ -125,31 +125,6 @@ object Curation {
       .filter($"rn" === 1).drop("rn")
   }
 
-  /** Env-gated stage clock (`SPARK_GRAFT_STAGE_TIMING`): forces the
-    * given stage frame and prints its wall-clock + row count, so
-    * ScaleProbe's multiplier sweeps can attribute the data term of the
-    * composed ingest to the OWNING stage. Off (the default, and in
-    * every gated run) this is the identity — the plan is untouched.
-    * Forcing a `Dedup.cached` frame here is what makes the attribution
-    * honest: later stages reuse the materialized cache, so each print
-    * is that stage's own cost.
-    */
-  private def clocked(name: String)(dfThunk: => DataFrame): DataFrame = {
-    if (!sys.env.contains("SPARK_GRAFT_STAGE_TIMING")) dfThunk
-    else {
-      // by-name so eager work in the stage expression (the store
-      // chain's localCheckpoint) lands INSIDE the timer — a strict
-      // parameter ran it during argument evaluation and attributed the
-      // dominant store-build cost to nothing
-      val t0 = System.nanoTime()
-      val df = dfThunk
-      val n = df.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"""{"stage":"$name%s","rows":$n%d,"sec":$sec%.3f}""")
-      df
-    }
-  }
-
   /** Drop `left` rows whose text appears in `store` — the store-first
     * half of the delta's exact dedup, hash-led like [[exactKeepMin]]:
     * the anti-join runs on (xxhash64(text), text) so its shuffle-side
@@ -163,22 +138,23 @@ object Curation {
         Seq("__h", "text"), "left_anti")
       .drop("__h")
 
-  /** Apply a DRIVER-RESIDENT drop list to `df` by doc_id: a literal
+  /** Apply a DRIVER-RESIDENT drop list to `df` by `key`: a literal
     * NOT-isin for small lists (no build job at all), a LocalRelation
     * anti-join past [[IsinLiteralMax]] (a many-thousand-entry In
     * literal is a pathological expression tree — the DropListCap
-    * lesson). Both equal the left_anti on non-null doc_id, which
-    * doc_id is by schema.
+    * lesson). Both equal the left_anti on a non-null key; a NULL key
+    * row is dropped here where a left_anti keeps it, which is why
+    * [[acceptDelta]] rejects NULL doc_id at its entry.
     */
   private val IsinLiteralMax = 10000
-  private def minusDropIds(df: DataFrame, drops: Array[Long]): DataFrame =
+  private def minusDropIds(df: DataFrame, drops: Array[Long],
+      key: String = "doc_id"): DataFrame =
     if (drops.length <= IsinLiteralMax)
-      df.filter(!col("doc_id").isin(drops.toIndexedSeq: _*))
+      df.filter(!col(key).isin(drops.toIndexedSeq: _*))
     else {
       val s = df.sparkSession
       import s.implicits._
-      df.join(broadcast(drops.toIndexedSeq.toDF("doc_id")),
-        Seq("doc_id"), "left_anti")
+      df.join(broadcast(drops.toIndexedSeq.toDF(key)), Seq(key), "left_anti")
     }
 
   /** Stage 2: quality + repetition filter on cleaned text. The ratio
@@ -450,34 +426,16 @@ object Curation {
     // INTO the leaf (the artifact-store discipline): the pack-append
     // base then reads one small column instead of re-tokenizing the
     // whole store a second time — same sum by the same expression.
-    val store = clocked("store_build")(stageLeaf(
+    val store = stageLeaf(
       curatedSurvivors(s, clS, emb, Some(() => awaitTrained()),
           cacheFinal = false)
         .withColumn("n_tok",
-          coalesce(size(TextStats.tokens($"text")), lit(0)).cast("long"))))
+          coalesce(size(TextStats.tokens($"text")), lit(0)).cast("long")))
     val holdout = clS.filter(bucketOf($"doc_id") >= HoldoutBucket)
 
     ingestDelta(s, store, holdout, clD, emb, awaitTrained())
   }
 
-  /** ONE ingest round against an EXPLICIT store — the store-in /
-    * manifest-out form a production system loops: round N+1 passes
-    * `store` = round N's store unioned with round N's accepted docs
-    * (their cleaned text rides the store frame, so the pack base —
-    * derived here from the store itself — advances automatically), the
-    * SAME frozen `holdout`, and the SAME maintained index. The q122
-    * entry point [[incrementalIngest]] is exactly one such round over a
-    * store it builds itself.
-    *
-    * Composition contract (IncrementalCurationSpec): sequential rounds
-    * ≡ one combined ingest of the concatenated deltas whenever no
-    * near-dup/semantic CHAIN straddles batches (a ~ b across batches,
-    * b ~ c within the later one, a !~ c). On such chains the sequential
-    * form keeps `c` (its only links died in round 1) while the combined
-    * form's component drops it — the anchor-based incremental semantics
-    * q76 established: the store, not the transitive closure over
-    * never-ingested docs, is the dedup authority.
-    */
   /** Store-side artifacts the delta stages consume — ids (the id-guard
     * authority), hashed survivor texts (stage 3), the minhash
     * signature table (stage 4), IVF cell assignments (stage 5), and
@@ -517,52 +475,11 @@ object Curation {
       holdout = Dedup.prepareHoldout(holdout))
   }
 
-  // ---- shared delta-stage builders --------------------------------------
-  // ONE definition per stage expression, consumed by BOTH [[acceptDelta]]
-  // (batch: lazy frames + Dedup.cached — the gated q122/q125 plans) and
-  // [[acceptDeltaFast]] (streaming: eager stage checkpoints + count
-  // short-circuits). The two drivers differ ONLY in materialization
-  // strategy; semantic drift between them is structurally impossible at
-  // the stage level and pinned end-to-end by CurationStreamSpec
-  // (streamed ≡ sequential [[ingestDelta]] rounds) and the soak parity.
-
-  /** Id guard at the ingest boundary: the store is the doc_id authority
-    * like it is the dedup authority — a delta doc reusing an existing
-    * store id (even with DIFFERENT text) is rejected, because duplicate
-    * ids would fan out every manifest/attribution join downstream.
-    * Text-level dedup alone (stage 3) cannot see this case. No-op on
-    * id-disjoint deltas (the gated q122/q125 split).
+  /** Stage-4 store half: the q76 asymmetric band join's drop list, over
+    * the delta's pre-derived signature table `iSig`.
     */
-  private def idGuarded(side: StoreSide, clDelta: DataFrame): DataFrame =
-    clDelta.join(side.ids, Seq("doc_id"), "left_anti")
-
-  /** Stage-3 store half: drop delta docs whose cleaned text appears
-    * among the store's survivor texts ([[textAntiJoin]]'s hash-led
-    * shape against the prepared `side.texts`).
-    */
-  private def exactVsStore(side: StoreSide, d2: DataFrame,
-      smallDelta: Boolean = false): DataFrame = {
-    val keyed = d2.withColumn("__h", xxhash64(col("text")))
-    if (!smallDelta)
-      keyed.join(side.texts, Seq("__h", "text"), "left_anti").drop("__h")
-    else {
-      // micro-batch form: probe the store-texts leaf with the BROADCAST
-      // delta keys (semi), then anti-join the tiny match list back —
-      // the store side is scanned, never shuffled, and no adaptive
-      // re-plan is needed to pick the build side. Same survivors: a
-      // row is dropped iff its (hash, text) exists in the store, and
-      // NULL text never equi-matches on either shape.
-      val matched = side.texts.join(
-        broadcast(keyed.select(col("__h"), col("text"))),
-        Seq("__h", "text"), "left_semi")
-      keyed.join(broadcast(matched), Seq("__h", "text"), "left_anti")
-        .drop("__h")
-    }
-  }
-
-  /** Stage-4 store half: the q76 asymmetric band join's drop list. */
-  private def minhashVsStoreDrop(side: StoreSide, d3: DataFrame): DataFrame =
-    Dedup.minhashPairsAgainstSigs(side.sigs, d3, MinJaccard)
+  private def minhashVsStoreDrop(side: StoreSide, iSig: DataFrame): DataFrame =
+    Dedup.minhashPairsAgainstSigs(side.sigs, iSig, MinJaccard)
       .select(col("in_doc").as("doc_id")).distinct()
 
   /** Within-delta component drop list (keep each cluster's min id). */
@@ -705,9 +622,20 @@ object Curation {
       (r.getInt(0), r.getUTF8String(1).toString)).map(_.toSet)
   }
 
-  /** Stage-boundary lineage truncation for the BATCH chains (the store
-    * leaf and every delta-stage boundary): a checkpoint replaces the
-    * plan with a leaf (LogicalRDD), where a `Dedup.cached` boundary
+  /** Run `body` under the Spark job description `desc` and restore the
+    * caller's afterwards, so a stage/drop/phase label never leaks onto
+    * the caller's later jobs.
+    */
+  private[graft] def stage[T](s: SparkSession, desc: String)(body: => T): T = {
+    val sc = s.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setLocalProperty("spark.job.description", prev)
+  }
+
+  /** Stage-boundary lineage truncation for the curation chains (the q122
+    * store leaf and every delta-stage boundary): a checkpoint replaces
+    * the plan with a leaf (LogicalRDD), where a `Dedup.cached` boundary
     * keeps the full child plan nested inside the InMemoryRelation.
     * Each delta stage references the previous stage's frame 2–4×, so
     * over the ~8-stage chain a cached-boundary composition nests
@@ -717,8 +645,7 @@ object Curation {
     * shared-DAG-walked-as-a-tree dominated the query's wall-clock.
     * A leaf at every boundary keeps each stage's plan O(stage). Rows
     * identical (checkpoint is a materialization boundary, not a
-    * transform); the checkpoint is LAZY — the first consuming action
-    * materializes it, so no dedicated count job per boundary.
+    * transform).
     *
     * Fault-tolerance knob: `localCheckpoint` stores blocks
     * executor-resident AND discards lineage, so on a real cluster an
@@ -729,17 +656,18 @@ object Curation {
     * (`sc.setCheckpointDir`, the standard Spark knob), every stage
     * boundary checkpoints there instead: recoverable after any
     * executor loss, same rows, same leaf-per-stage plan shape
-    * (CheckpointModeSpec drives the batch ingest through both modes).
+    * (CheckpointModeSpec drives the ingests through both modes).
     *
     * Block lifecycle: `Dataset.unpersist` never frees checkpoint
     * blocks, so each leaf's RDD is tracked here and released by
     * [[Dedup.clearSignatureCaches]] — the same query-scoped lifecycle
     * the caches it replaced lived under (Bench/Verify/QueryProbe call
-    * it between queries). Releasing is safe at that point for the
-    * local mode: the query's action has completed and the next run
-    * rebuilds its own leaves. Reliable-mode checkpoint FILES follow
-    * the deployment's `spark.cleaner.referenceTracking.cleanCheckpoints`
-    * policy, as for any reliable checkpoint.
+    * it between queries, the stream after each batch's own
+    * checkpoint). Releasing is safe at that point for the local mode:
+    * the consuming action has completed and the next run rebuilds its
+    * own leaves. Reliable-mode checkpoint FILES follow the deployment's
+    * `spark.cleaner.referenceTracking.cleanCheckpoints` policy, as for
+    * any reliable checkpoint.
     */
   private val stageLeafRdds =
     new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()
@@ -747,226 +675,169 @@ object Curation {
     var r = stageLeafRdds.poll()
     while (r != null) { r.unpersist(blocking); r = stageLeafRdds.poll() }
   }
-  private def stageLeaf(df: DataFrame): DataFrame = {
-    val reliable =
-      df.sparkSession.sparkContext.getCheckpointDir.isDefined
-    val ck = if (reliable) df.checkpoint(false) else df.localCheckpoint(false)
+  private def tracked(ck: DataFrame): DataFrame = {
     org.apache.spark.sql.graft.GraftExec.leafRdd(ck)
       .foreach(r => { stageLeafRdds.add(r); () })
     ck
   }
+  private def reliableCheckpoints(s: SparkSession): Boolean =
+    s.sparkContext.getCheckpointDir.isDefined
 
-  /** Delta stages guard–6 against a prepared [[StoreSide]]: returns the
-    * ACCEPTED delta docs (doc_id, lang, source, n_chars, text) — the
-    * rows an ingest appends to the store. [[ingestDelta]] adds the
-    * pack-append manifest on top; the streaming ingest uses
-    * [[acceptDeltaFast]] (its manifest is a VIEW over the store, so the
-    * per-batch prefix scan and store-wide token sum are never paid on
-    * the hot path).
+  /** The LAZY leaf (the q122 store boundary): the first consuming action
+    * materializes it, so it costs no count job of its own.
     */
-  private[graft] def acceptDelta(s: SparkSession, side: StoreSide,
-      clDelta: DataFrame, emb: DataFrame,
-      trained: Seq[(Long, Seq[Float])]): DataFrame = {
-    import s.implicits._
+  private def stageLeaf(df: DataFrame): DataFrame =
+    tracked(if (reliableCheckpoints(df.sparkSession)) df.checkpoint(false)
+      else df.localCheckpoint(false))
 
-    val clD0 = idGuarded(side, clDelta)
-
-    // delta stages 1–2
-    val d2 = qualityFiltered(clD0)
-
-    // stage 3: exact vs store survivor texts, then keep-min within
-    // delta — the [[textAntiJoin]] / [[exactKeepMin]] hash-led shapes
-    val d3 = clocked("d3_exact")(stageLeaf(
-      exactKeepMin(exactVsStore(side, d2))
-        .select($"doc_id", $"lang", $"source", $"n_chars", $"text")))
-
-    // stage 4: near-dup vs store (q76's asymmetric band join), then
-    // components over the remaining delta's internal pairs
-    val d4a = clocked("d4a_minhash_vs_store")(
-      stageLeaf(d3.join(minhashVsStoreDrop(side, d3),
-        Seq("doc_id"), "left_anti")))
-    val pairsD = Dedup.minhashPairs(d4a, MinJaccard)
-      .select($"doc1".as("src"), $"doc2".as("dst"))
-    // within-delta components through the size-tiered fused fetch
-    // (Graph.componentNonRootsCapped): ONE action yields the drop list
-    // where the old shape paid an isEmpty probe + the fixpoint's
-    // cache/count/collect; an empty list (the common case) skips the
-    // stage entirely — equivalent by construction (empty pairs ⇒ empty
-    // drop list ⇒ no-op anti-join), and a driver-resident list applies
-    // as a literal filter over the d4a leaf (no broadcast-build job)
-    val d4 = clocked("d4_minhash_within")(
-      graft.operators.Graph.componentNonRootsCapped(s, pairsD) match {
-        case Left(drops) if drops.isEmpty => d4a
-        case Left(drops) => stageLeaf(minusDropIds(d4a, drops))
-        case Right(dropDf) =>
-          stageLeaf(d4a.join(dropDf, Seq("doc_id"), "left_anti"))
-      })
-
-    // stage 5: semantic — the shared maintained index, store-vs-delta
-    // pairs within a cell first, then within-delta keep-min. aD stays
-    // a plain frame, not a leaf: it is a shuffle-free narrow map over
-    // the d4 leaf (scan ⋈ broadcast + per-row cell assignment), so
-    // inlining it twice costs less than a checkpoint's own job, and
-    // the plan stays O(stage) either way
-    val aD = deltaCells(emb, d4, trained)
-    val d5a = clocked("d5a_semantic_vs_store")(
-      stageLeaf(d4.join(semanticVsStoreDrop(side, aD),
-        Seq("doc_id"), "left_anti")))
-    val aD5 = aD.join(d5a.select($"doc_id".as("vec_id")), Seq("vec_id"))
-    val d5 = clocked("d5_semantic_within")(
-      d5a.join(semanticWithinDrop(aD5), Seq("doc_id"), "left_anti"))
-
-    // stage 6: decontaminate against the STORE corpus' frozen holdout;
-    // eval-bucket delta docs are eval data, never ingested
-    val dTrain = stageLeaf(d5.filter(bucketOf($"doc_id") < HoldoutBucket))
-    val cont = Dedup.contaminationAgainst(dTrain, side.holdout)
-      .select($"doc_id")
-    // no leaf on the RESULT: its one consumer (pack-append, which now
-    // carries attribution through the scan) materializes it exactly
-    // once, and the plan is already O(stage) over the dTrain leaf — a
-    // final checkpoint was a whole materialization round for nothing
-    clocked("d6_decontaminate")(
-      dTrain.join(cont, Seq("doc_id"), "left_anti"))
-  }
-
-  /** [[acceptDelta]] for the STREAMING hot path: the same stage
-    * builders, materialized EAGERLY at each stage boundary
-    * (localCheckpoint leaves) with row-count short-circuits. Why: a
-    * micro-batch delta is a handful of rows, but the lazy batch form
-    * re-analyzes the whole ~30-operator chain (centroid literal trees,
-    * kernel signatures, Bloom literals included) once per downstream
-    * Dataset construction — measured at ~6 s/batch of pure driver plan
-    * construction, the dominant micro-batch term after the round-13
-    * floor cut. A checkpoint leaf at each stage boundary makes every
-    * later analysis O(stage) instead of O(chain), and the counts the
-    * checkpoints yield skip provably-empty or single-row stages (a
-    * 1-row delta cannot have within-delta pairs) before their plans are
-    * even built. The result frame is LAZY over checkpoint leaves — the
-    * stream's own localCheckpoint materializes it once. Equivalence
-    * with [[acceptDelta]] is stage-for-stage by construction (shared
-    * builders) and pinned end-to-end by CurationStreamSpec (streamed ≡
-    * sequential [[ingestDelta]] rounds) plus the soak parity gates.
+  /** The delta chain's stage boundary: a tracked leaf materialized
+    * EAGERLY under a `graft-stage <name>` job description, with its row
+    * count — and, `keyed`, its doc_ids capped at [[DropListCap]] — from
+    * the materializing action itself (no extra job). The counts are
+    * what the chain's tier choices and empty-stage short-circuits read.
     */
-  /** Max ids a streaming drop list may inline as a driver literal
-    * filter. Drop lists are delta-bounded by construction, but a
-    * backlog-replay micro-batch (an unthrottled source after a restart)
-    * makes "delta-sized" as large as the backlog — an O(batch) driver
-    * array and a pathological In-literal plan. Over the cap the stage
-    * falls back to the batch form's anti-join shape (identical result
-    * set; `NOT isin` on a non-null key equals the left_anti).
-    * `@volatile var` so a spec can force the fallback on a tiny delta.
+  private def countedLeaf(s: SparkSession, name: String, df: DataFrame,
+      keyed: Boolean = false): (DataFrame, Long, Option[Array[Long]]) =
+    stage(s, s"graft-stage $name") {
+      val r = org.apache.spark.sql.graft.GraftExec.checkpointCounted(df,
+        reliableCheckpoints(s), keyOrdinal = if (keyed) 0 else -1,
+        cap = DropListCap)
+      tracked(r._1)
+      r
+    }
+
+  /** Max rows a delta counts as DELTA-SIZED: the size at which the chain
+    * stops forcing broadcasts and driver-resident drop lists (see
+    * [[acceptDelta]]). Every collect the chain makes is capped by it,
+    * so an over-cap drop list stays distributed. `@volatile var` so a
+    * spec can force the over-cap shapes on a tiny delta.
     */
   @volatile private[graft] var DropListCap: Long = 100000L
 
-  private[graft] def acceptDeltaFast(s: SparkSession, side: StoreSide,
+  /** Delta stages guard–6 against a prepared [[StoreSide]] — the ONE
+    * delta chain every ingest surface runs: [[ingestDelta]] (q122,
+    * JobAudit), [[persistedIngest]] (q125) and the streaming
+    * [[graft.streaming.CurationStream]]. Returns the ACCEPTED delta docs
+    * (doc_id, lang, source, n_chars, text) — the rows an ingest appends
+    * to the store; the batch surfaces add the pack-append manifest, the
+    * stream derives its manifest as a view over the store.
+    *
+    * Materialization: every stage boundary is a [[countedLeaf]], so
+    * each later analysis is O(stage) instead of O(chain) (a lazy chain
+    * re-analyzed all ~30 operators — centroid literal trees, kernel
+    * signatures, Bloom literals — per downstream Dataset, ~6 s per
+    * micro-batch), and the counts skip provably-empty or single-row
+    * stages (a 1-row delta has no within-delta pairs) before their
+    * plans are built. Drop LISTS name delta docs only, so they come
+    * back to the driver through one capped fetch and apply as literal
+    * filters over the stage leaf; a stage whose list is empty keeps the
+    * previous leaf. The result is lazy over the leaves: its consumer
+    * (pack-append, or the stream's own checkpoint) materializes it once.
+    *
+    * Join physics come from OBSERVED sizes, never from the caller —
+    * Shark's partial-DAG rule, broadcast or shuffle by what a stage
+    * actually produced:
+    *  - entry: the d2 leaf (stages 1–2) is counted with its ids. At
+    *    most [[DropListCap]] rows ⇒ the guard probe filters the store
+    *    ids by the collected ids and broadcasts the delta's hashed
+    *    texts; over it, the probe is an unhinted join. The plan's own
+    *    size estimate cannot make this call: a micro-batch reaches
+    *    `foreachBatch` as a LogicalRDD without statistics (sizeInBytes
+    *    = Long.MaxValue).
+    *  - after d3: n3 ≤ [[DropListCap]] ⇒ every delta-side build side is
+    *    broadcast explicitly, and n3 ≤ [[Dedup.DefaultMaxBucket]] adds
+    *    the DRIVER-LOCAL tier (signatures, cells and shingle codes
+    *    collected; every delta-side frame a LocalRelation). Over the
+    *    cap every stage takes the unhinted shuffle-join shape and
+    *    every drop list stays distributed.
+    * The broadcasts are explicit because the stream runs its batch body
+    * with adaptive execution OFF (AQE only split each stage query into
+    * one job per exchange, 69 vs 21 jobs/batch): the static planner
+    * then cannot see that a delta is small, and an unhinted anti-join
+    * against a store leaf would sort-merge-shuffle the store every
+    * batch. The cap is the other half of that contract: a backlog-
+    * sized batch pays shuffles, never a multi-GB broadcast build.
+    * Rows are identical on every tier (CurationStreamSpec,
+    * IncrementalCurationSpec and the q122/q125 oracle gates).
+    *
+    * NULL `doc_id` rows are rejected at entry: the store is the id
+    * authority, and a NULL id can be neither guarded (it never equi-
+    * matches), nor appended, nor attributed. Rejecting it also makes
+    * the literal `NOT isin` and the anti-join drop forms agree on
+    * every tier.
+    */
+  private[graft] def acceptDelta(s: SparkSession, side: StoreSide,
       clDelta: DataFrame, emb: DataFrame,
       trained: Seq[(Long, Seq[Float])],
-      bandsOpt: Option[BandSide] = None): DataFrame = {
+      bands: Option[BandSide] = None): DataFrame = {
     import s.implicits._
     val cols = Seq($"doc_id", $"lang", $"source", $"n_chars", $"text")
-    val dbg = sys.env.contains("SPARK_GRAFT_STREAM_DEBUG")
-    def ck(name: String)(df: DataFrame): (DataFrame, Long) = {
-      val t0 = System.nanoTime()
-      s.sparkContext.setJobDescription(s"graft-stage $name")
-      // checkpoint + count fused into ONE action (eager localCheckpoint
-      // already counts internally and discards the number)
-      val (c, n) = org.apache.spark.sql.graft.GraftExec
-        .localCheckpointCounted(df)
-      if (dbg) println(
-        f"    delta-stage $name%s: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n%d rows)")
+    def leaf(name: String)(df: DataFrame): (DataFrame, Long) = {
+      val (c, n, _) = countedLeaf(s, name, df)
       (c, n)
     }
-    // drop LISTS are delta-bounded by construction (every drop names a
-    // delta doc), so they come back to the driver as id arrays and
-    // apply as literal filters over the stage checkpoint — one action
-    // instead of an anti-join plus a broadcast build, and a stage whose
-    // drop list is empty keeps the PREVIOUS checkpoint (no re-
-    // materialization at all). NOT-isin equals the left_anti on a
-    // non-null key column, which doc_id is by schema. "Delta-bounded"
-    // is as large as the BACKLOG under a replay burst, so the fetch is
-    // capped ([[cappedFetch]]): an over-cap list stays DISTRIBUTED
-    // (Right) — applied as the batch form's anti-join instead of a
-    // driver literal.
+    // an over-cap list stays DISTRIBUTED (Right) and applies as an
+    // anti-join instead of a driver literal
     def dropIds(name: String)(
-        df: DataFrame): Either[Array[Long], DataFrame] = {
-      val t0 = System.nanoTime()
-      s.sparkContext.setJobDescription(s"graft-drop $name")
-      val got = cappedFetch(df, DropListCap)(_.getLong(0))
-      if (dbg) println(
-        f"    delta-stage $name%s: ${(System.nanoTime() - t0) / 1e9}%.2f s " +
-          got.fold(s"(>$DropListCap drops, anti-join fallback)")(ids =>
-            s"(${ids.length} drops)"))
-      got.toLeft(df)
-    }
+        df: DataFrame): Either[Array[Long], DataFrame] =
+      stage(s, s"graft-drop $name")(
+        cappedFetch(df, DropListCap)(_.getLong(0))).toLeft(df)
     def noDrops(drops: Either[Array[Long], DataFrame]): Boolean =
       drops.left.exists(_.isEmpty)
     def minusDrops(d: DataFrame,
         drops: Either[Array[Long], DataFrame]): DataFrame = drops match {
-      case Left(ids) => d.filter(!$"doc_id".isin(ids.toIndexedSeq: _*))
+      case Left(ids) => minusDropIds(d, ids)
       case Right(df) => d.join(df.select($"doc_id"), Seq("doc_id"),
         "left_anti")
     }
     def minus(d: DataFrame, n: Long, drops: Either[Array[Long], DataFrame],
         name: String): (DataFrame, Long) =
-      if (noDrops(drops)) (d, n) else ck(name)(minusDrops(d, drops))
+      if (noDrops(drops)) (d, n) else leaf(name)(minusDrops(d, drops))
     val empty = clDelta.select(cols: _*).limit(0)
+
+    // stages 1–2 (per-doc) behind the entry leaf, NULL ids rejected
+    val (d2, n2, d2Ids) = countedLeaf(s, "d2_quality",
+      qualityFiltered(clDelta.filter($"doc_id".isNotNull)), keyed = true)
+    if (n2 == 0) return empty
 
     // stages guard + 3-store-half in ONE probe action: the known-id
     // overlap (store is the id authority) and the exact-text matches
-    // (store is the text authority) are both store-leaf ⋉
-    // broadcast(delta) probes, so their UNION comes back as one drop
-    // list and the d3 checkpoint below runs JOIN-FREE (no broadcast
-    // builds inside its action). Probing the text matches BEFORE the
-    // id guard and the quality filter is exact: all three drops are
-    // per-doc predicates (they commute with each other and with the
-    // quality filter), an id-guarded doc that also text-matches is
-    // dropped either way, and keep-min runs after every literal filter
-    // — a dropped doc can never win it. NULL delta text never
-    // equi-matches (same as the anti-join form), and store-side nulls
-    // (redacted docs) likewise.
-    val keyed =
-      clDelta.select($"doc_id", xxhash64($"text").as("__h"), $"text")
-    val guardDrops = dropIds("guard_and_exact")(
-      side.ids.join(broadcast(clDelta.select($"doc_id")),
-          Seq("doc_id"), "left_semi")
-        .unionByName(side.texts
-          .join(broadcast(keyed), Seq("__h", "text"))
-          .select($"doc_id")))
-    val clD0 =
-      if (noDrops(guardDrops)) clDelta else minusDrops(clDelta, guardDrops)
-
-    // stages guard–3 ride ONE checkpoint: d2 has a single consumer, so
-    // a boundary between quality filter and exact dedup would be two
-    // extra jobs for no reuse and no analysis saving. The materializing
-    // job also yields the d3 ids (the key collection is free), seeding
-    // the driver-side survivor tracking the local tier below rides.
-    val (d3, n3, d3Ids) = {
-      val t0 = System.nanoTime()
-      s.sparkContext.setJobDescription("graft-stage d3_exact")
-      val r = org.apache.spark.sql.graft.GraftExec
-        .localCheckpointCountedKeyed(
-          exactKeepMin(qualityFiltered(clD0)).select(cols: _*),
-          keyOrdinal = 0, cap = DropListCap)
-      if (dbg) println(
-        f"    delta-stage d3_exact: ${(System.nanoTime() - t0) / 1e9}%.2f s (${r._2}%d rows)")
-      r
+    // (store is the text authority) come back as one drop list, so the
+    // d3 leaf below runs join-free. Probing after the quality filter
+    // is exact: all three drops are per-doc predicates (they commute),
+    // and keep-min runs after every one of them — a dropped doc can
+    // never win it. NULL text never equi-matches (same as an anti-join
+    // form), and store-side nulls (redacted docs) likewise.
+    // Under the cap the id side is a literal filter over the store ids
+    // (a LocalRelation broadcast past IsinLiteralMax), so only the
+    // hashed-text side pays a build.
+    val dKeyed = d2.select($"doc_id", xxhash64($"text").as("__h"), $"text")
+    val idHits = d2Ids match {
+      case Some(ids) if ids.length <= IsinLiteralMax =>
+        side.ids.filter($"doc_id".isin(ids.toIndexedSeq: _*))
+      case Some(ids) => side.ids.join(
+        broadcast(ids.toIndexedSeq.toDF("doc_id")), Seq("doc_id"), "left_semi")
+      case None =>
+        side.ids.join(d2.select($"doc_id"), Seq("doc_id"), "left_semi")
     }
+    val textHits = side.texts.join(
+      if (d2Ids.isDefined) broadcast(dKeyed) else dKeyed, Seq("__h", "text"))
+    val guardDrops = dropIds("guard_and_exact")(
+      idHits.unionByName(textHits.select($"doc_id")))
+
+    // stage 3 within the delta: keep-min per text. The leaf's action
+    // also yields the d3 ids, seeding the driver-side survivor tracking
+    // the local tier rides.
+    val (d3, n3, d3Ids) = countedLeaf(s, "d3_exact", exactKeepMin(
+      if (noDrops(guardDrops)) d2 else minusDrops(d2, guardDrops)),
+      keyed = true)
     if (n3 == 0) return empty
 
-    // DRIVER-LOCAL delta tier: when the surviving delta is micro-batch
-    // sized (≤ the band cap, which also proves the incoming-side
-    // hot-bucket cap a no-op), the delta's signature table is COLLECTED
-    // once instead of checkpointed, and every delta-side build below is
-    // a LocalRelation — broadcasting a LocalRelation submits NO Spark
-    // job (the exchange build reads driver memory directly), so each
-    // such broadcast is one job fewer per micro-batch. Every local
-    // frame carries the same rows as its leaf-backed twin by
-    // construction; over the bound, the leaf path (the round-14 shape)
-    // runs instead. Survivor ids are tracked on the driver (drop lists
-    // are always Left here: each is a subset of a ≤-cap delta).
-    val localDelta =
-      n3 <= math.min(Dedup.DefaultMaxBucket.toLong, DropListCap) &&
-        d3Ids.isDefined
+    // the tiers (see the scaladoc): survivor ids are tracked on the
+    // driver on the local tier (drop lists are always Left there: each
+    // is a subset of a ≤-cap delta)
+    val small = d3Ids.isDefined
+    val localDelta = small && n3 <= Dedup.DefaultMaxBucket
     var live: Array[Long] = d3Ids.getOrElse(Array.empty[Long])
     def applyDrops(drops: Either[Array[Long], DataFrame]): Unit =
       drops match {
@@ -978,13 +849,6 @@ object Curation {
         schema: org.apache.spark.sql.types.StructType): DataFrame =
       s.createDataFrame(rows, schema)
 
-    // stage 4 — within-delta pairs are impossible below 2 rows. The
-    // delta's signature table derives ONCE (a checkpoint leaf) and
-    // serves both halves; the vs-store half prefers the PREPARED band
-    // artifacts (store bands + hot-key counts derived once per store
-    // version) so the per-batch plan scans the store side instead of
-    // re-exploding, re-counting and re-shuffling it — identical drop
-    // list either way
     // within-delta near-dup components, DRIVER tier: the pair list is
     // delta-bounded, so fetch it capped (the same one-job discipline
     // as dropIds) and run the min-root union-find HERE — one job
@@ -995,58 +859,47 @@ object Curation {
     // drop list is every non-root node. Over the cap, fall back to
     // the distributed fixpoint path.
     def componentDropsCapped(name: String)(
-        pairs: DataFrame): Either[Array[Long], DataFrame] = {
-      val t0 = System.nanoTime()
-      s.sparkContext.setJobDescription(s"graft-drop $name")
-      cappedFetch(pairs, DropListCap)(r =>
-        (r.getLong(0), r.getLong(1))) match {
-        case None =>
-          if (dbg) println(
-            f"    delta-stage $name%s: >$DropListCap pairs, fixpoint fallback")
-          dropIds(name)(componentDrop(s, pairs))
-        case Some(es) =>
-          val drops = graft.operators.Graph.minRootNonRoots(es)
-          if (dbg) println(
-            f"    delta-stage $name%s: ${(System.nanoTime() - t0) / 1e9}%.2f s " +
-              f"(${es.length}%d pairs, ${drops.length}%d drops)")
-          Left(drops)
+        pairs: DataFrame): Either[Array[Long], DataFrame] =
+      stage(s, s"graft-drop $name") {
+        cappedFetch(pairs, DropListCap)(r => (r.getLong(0), r.getLong(1)))
+          .map(es => Left(graft.operators.Graph.minRootNonRoots(es)))
+          .getOrElse(dropIds(name)(componentDrop(s, pairs)))
       }
-    }
 
     // stage 4 — the delta's signature table derives ONCE and serves
     // both halves: COLLECTED to the driver on the local tier (its rows
-    // back every delta-side LocalRelation below), a checkpoint leaf
-    // otherwise
+    // back every delta-side LocalRelation below), a leaf otherwise. The
+    // vs-store half prefers the PREPARED band artifacts (store bands +
+    // hot-key counts derived once per store version) so the per-batch
+    // plan scans the store side instead of re-exploding, re-counting
+    // and re-shuffling it — identical drop list either way
     val sigFrame = Dedup.signatureFrame(d3)
     val (d3Sigs, sigRows) =
-      if (!localDelta) (ck("d3_sigs")(sigFrame)._1, null)
-      else {
-        val t0 = System.nanoTime()
-        s.sparkContext.setJobDescription("graft-stage d3_sigs")
-        val rows = sigFrame.collect()
-        if (dbg) println(
-          f"    delta-stage d3_sigs: ${(System.nanoTime() - t0) / 1e9}%.2f s (${rows.length}%d rows collected)")
-        (null: DataFrame, rows)
-      }
-    val hotLocal: Option[Set[(Int, String)]] = bandsOpt match {
-      case Some(b) if localDelta => hotKeysLocal(s, b)
+      if (!localDelta) (leaf("d3_sigs")(sigFrame)._1, null)
+      else (null: DataFrame,
+        stage(s, "graft-stage d3_sigs")(sigFrame.collect()))
+    lazy val iSig =
+      if (localDelta) localFrame(java.util.Arrays.asList(sigRows: _*),
+        sigFrame.schema)
+      else d3Sigs
+    val hotLocal: Option[Set[(Int, String)]] = bands match {
+      case Some(b) if localDelta =>
+        stage(s, "graft-drop d4a_hot_keys")(hotKeysLocal(s, b))
       case _ => None
     }
-    val dropVs4 = (bandsOpt, hotLocal) match {
+    val dropVs4 = (bands, hotLocal) match {
       case (Some(b), Some(hot)) =>
         val sb = b.recentBands.fold(b.bands)(r => b.bands.unionByName(r))
         Dedup.minhashPairsAgainstPreparedLocal(s, hot, sb, side.sigs,
           sigRows, MinJaccard)
           .select($"in_doc".as("doc_id")).distinct()
-      case (Some(b), None) =>
+      case (Some(b), None) if small =>
         val sb = b.recentBands.fold(b.bands)(r => b.bands.unionByName(r))
-        val iSig = if (localDelta) localFrame(
-          java.util.Arrays.asList(sigRows: _*), sigFrame.schema) else d3Sigs
         Dedup.minhashPairsAgainstPreparedSigs(sb, hotKeys(b), side.sigs,
           iSig, MinJaccard,
           incomingUnderCap = n3 <= Dedup.DefaultMaxBucket)
           .select($"in_doc".as("doc_id")).distinct()
-      case (None, _) => minhashVsStoreDrop(side, d3)
+      case _ => minhashVsStoreDrop(side, iSig)
     }
     val drops4 = dropIds("d4a_minhash_vs_store")(dropVs4)
     applyDrops(drops4)
@@ -1094,24 +947,20 @@ object Curation {
     // the already-tracked survivor set.
     val (aD, nA, aRows) =
       if (!localDelta) {
-        val (a, n) = ck("a5_cells")(
-          deltaCells(emb, d4, trained, smallDelta = true))
+        val (a, n) = leaf("a5_cells")(
+          deltaCells(emb, d4, trained, smallDelta = small))
         (a, n, null: Array[org.apache.spark.sql.Row])
       } else {
-        val t0 = System.nanoTime()
-        s.sparkContext.setJobDescription("graft-stage a5_cells")
         val cellsFrame = graft.ext.Similarity.ivfAssign(
           emb.filter($"vec_id".isin(live.toIndexedSeq: _*)), trained)
-        val rows = cellsFrame.collect()
-        if (dbg) println(
-          f"    delta-stage a5_cells: ${(System.nanoTime() - t0) / 1e9}%.2f s (${rows.length}%d rows collected)")
+        val rows = stage(s, "graft-stage a5_cells")(cellsFrame.collect())
         (localFrame(java.util.Arrays.asList(rows: _*), cellsFrame.schema),
           rows.length.toLong, rows)
       }
     val drops5a: Either[Array[Long], DataFrame] =
       if (nA == 0) Left(Array.empty[Long])
       else dropIds("d5a_semantic_vs_store")(
-        semanticVsStoreDrop(side, aD, smallDelta = true))
+        semanticVsStoreDrop(side, aD, smallDelta = small))
     applyDrops(drops5a)
     val (d5a, n5a) = minus(d4, n4, drops5a, "d5a_ck")
     if (n5a == 0) return empty
@@ -1158,28 +1007,26 @@ object Curation {
         }
       } else {
         // aD restricted to the d5a survivors: the vs-store drops all
-        // name aD vec_ids, so a literal NOT-isin equals the broadcast
-        // semi-join on d5a's ids — no broadcast build job
+        // name aD vec_ids, so dropping them by id equals the semi-join
+        // on d5a's ids with no build job. A Right list is over the cap
+        // (drops are a subset of the delta), hence the unhinted join.
         val aD5 = drops5a match {
           case Left(ids) if ids.isEmpty => aD
-          case Left(ids) =>
-            aD.filter(!$"vec_id".isin(ids.toIndexedSeq: _*))
+          case Left(ids) => minusDropIds(aD, ids, "vec_id")
           case Right(_) =>
-            aD.join(broadcast(d5a.select($"doc_id".as("vec_id"))),
-              Seq("vec_id"))
+            aD.join(d5a.select($"doc_id".as("vec_id")), Seq("vec_id"))
         }
         minus(d5a, n5a, dropIds("d5_semantic_within")(
-          semanticWithinDrop(aD5, smallDelta = true)), "d5_ck")._1
+          semanticWithinDrop(aD5, smallDelta = small)), "d5_ck")._1
       }
 
     // stage 6 — the train split and the final anti ride literal
-    // filters over the d5 leaf (no checkpoint: the stream's own
-    // localCheckpoint materializes the result once). An empty holdout
-    // cannot contaminate anything (zero jobs); the local tier builds
-    // the train-side (doc_id, code) rows from the collected signatures
-    // — the tset IS the shingle-code set — skipping the Bloom prefilter
-    // (it only shrinks a broadcast; the equi-join is the exact test)
-    // and tolerating eval-bucket extras (their matches name ids not in
+    // filters over the d5 leaf. An empty holdout cannot contaminate
+    // anything (zero jobs); the local tier builds the train-side
+    // (doc_id, code) rows from the collected signatures — the tset IS
+    // the shingle-code set — skipping the Bloom prefilter (it only
+    // shrinks a broadcast; the equi-join is the exact test) and
+    // tolerating eval-bucket extras (their matches name ids not in
     // dTrain, so the literal filter ignores them).
     val dTrain = d5.filter(bucketOf($"doc_id") < HoldoutBucket)
     val contIds: Either[Array[Long], DataFrame] =
@@ -1202,11 +1049,29 @@ object Curation {
             .select($"doc_id"))
         }
       } else dropIds("d6_decontaminate")(
-        Dedup.contaminationAgainstSmall(dTrain, side.holdout)
+        Dedup.contaminationAgainst(dTrain, side.holdout, smallTrain = small)
           .select($"doc_id"))
     if (noDrops(contIds)) dTrain else minusDrops(dTrain, contIds)
   }
 
+  /** ONE ingest round against an EXPLICIT store — the store-in /
+    * manifest-out form a production system loops: round N+1 passes
+    * `store` = round N's store unioned with round N's accepted docs
+    * (their cleaned text rides the store frame, so the pack base —
+    * derived here from the store itself — advances automatically), the
+    * SAME frozen `holdout`, and the SAME maintained index. The q122
+    * entry point [[incrementalIngest]] is exactly one such round over a
+    * store it builds itself.
+    *
+    * Composition contract (IncrementalCurationSpec): sequential rounds
+    * ≡ one combined ingest of the concatenated deltas whenever no
+    * near-dup/semantic CHAIN straddles batches (a ~ b across batches,
+    * b ~ c within the later one, a !~ c). On such chains the sequential
+    * form keeps `c` (its only links died in round 1) while the combined
+    * form's component drops it — the anchor-based incremental semantics
+    * q76 established: the store, not the transitive closure over
+    * never-ingested docs, is the dedup authority.
+    */
   def ingestDelta(s: SparkSession, store: DataFrame, holdout: DataFrame,
       clDelta: DataFrame, emb: DataFrame,
       trained: Seq[(Long, Seq[Float])]): DataFrame =
@@ -1247,7 +1112,6 @@ object Curation {
         $"start_seq", $"start_off", $"end_seq", $"n_seqs")
   }
 
-
   /** q125: the q122 ingest against a PERSISTED store read from disk —
     * the production steady state [[incrementalIngest]]'s own scaladoc
     * names. q122 rebuilds the whole store inside the timed query (a
@@ -1261,19 +1125,6 @@ object Curation {
     * timed ingest. Gated against the SAME q122 oracle string: the
     * persisted round-trip must be invisible to the answer.
     */
-  /** Max RAW delta docs the persisted serve routes through the staged
-    * [[acceptDeltaFast]] chain. The staged form force-broadcasts its
-    * delta-sized build sides — the right plan for micro-batch and
-    * serving-sized deltas, and exactly wrong for a corpus-proportional
-    * one (an explicit `broadcast()` bypasses the size threshold and
-    * collects the relation to the driver). Over the cap the serve
-    * takes the shuffle-join batch chain over the SAME prepared
-    * artifacts: [[acceptDelta]] is the spec-pinned equivalent, its
-    * joins all scale-safe. `@volatile var` so a spec can force the
-    * batch route on a tiny delta.
-    */
-  @volatile private[graft] var ServeStagedDeltaCap: Long = 100000L
-
   def persistedIngest(s: SparkSession, d: String): DataFrame = {
     val deltaPred = pmod(col("doc_id"), lit(7L)) === 0L
     val root = storeArtifacts(s, d, deltaPred)
@@ -1281,33 +1132,17 @@ object Curation {
     val trained = s.read.parquet(s"$root/centroids").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1))).sortBy(_._1).toSeq
     val side = preparedStoreSide(s, root, store)
-    val clD = clean(Tables.documents(s, d).filter(deltaPred))
-    // route on the RAW delta size — constant per corpus fingerprint,
-    // persisted at build time so the decision costs a file read, not a
-    // scan (the pmod predicate cannot prune parquet row groups):
-    // staged chain under the cap, batch chain over it — identical rows
-    // either way, different join physics
-    val rawDelta = new String(java.nio.file.Files.readAllBytes(
-      new java.io.File(root, "delta_count").toPath), "UTF-8").trim.toLong
-    val accepted =
-      if (rawDelta <= ServeStagedDeltaCap) {
-        // the prepared band artifacts: exploded bands are a narrow map
-        // over the persisted signature table; the per-key counts (the
-        // hot-bucket cap's input) come straight from parquet — the
-        // ingest never re-aggregates the store's band table
-        val bandSide = BandSide(
-          bands = Dedup.explodedBands(side.sigs),
-          counts = Dedup.cached(s.read.parquet(s"$root/band_counts")),
-          recentBands = None)
-        // the STAGED ingest (the streaming hot path's driver): stage
-        // checkpoints + count short-circuits + the driver-local tier —
-        // the production steady-state shape over the maintained
-        // artifacts, spec-pinned equivalent to [[acceptDelta]] and
-        // gated against the same q122 oracle
-        acceptDeltaFast(s, side, clD, Tables.embeddings(s, d),
-          trained, Some(bandSide))
-      } else acceptDelta(s, side, clD, Tables.embeddings(s, d), trained)
-    packAppend(s, store, accepted)
+    // the prepared band artifacts: exploded bands are a narrow map over
+    // the persisted signature table; the per-key counts (the hot-bucket
+    // cap's input) come straight from parquet — the ingest never
+    // re-aggregates the store's band table
+    val bandSide = BandSide(
+      bands = Dedup.explodedBands(side.sigs),
+      counts = Dedup.cached(s.read.parquet(s"$root/band_counts")),
+      recentBands = None)
+    packAppend(s, store, acceptDelta(s, side,
+      clean(Tables.documents(s, d).filter(deltaPred)),
+      Tables.embeddings(s, d), trained, Some(bandSide)))
   }
 
   /** The [[StoreSide]] read back from a [[storeArtifacts]] directory:
@@ -1355,7 +1190,7 @@ object Curation {
     * geometry and seed arrays, the token/shingle prime, the curation
     * thresholds, the trained-index shape, and the DELTA PREDICATE's
     * canonical SQL (the store/delta split is baked into the persisted
-    * store and its recorded delta_count, so a predicate edit with
+    * store, so a predicate edit with
     * unchanged data must also miss the cache). The corpus fingerprint
     * keys on DATA content only, so without this any constant edit
     * would leave a warm cache serving artifacts derived under the OLD
@@ -1475,12 +1310,6 @@ object Curation {
       java.nio.file.Files.write(
         new java.io.File(bld, "holdout_n").toPath,
         h.n.toString.getBytes("UTF-8"))
-      // the raw delta size, constant per corpus fingerprint — persisted
-      // so the serve-time route decision is a file read, not a scan
-      java.nio.file.Files.write(
-        new java.io.File(bld, "delta_count").toPath,
-        Tables.documents(s, d).filter(deltaPred).count()
-          .toString.getBytes("UTF-8"))
       h.bloomBytes.foreach(bytes => java.nio.file.Files.write(
         new java.io.File(bld, "holdout_bloom.bin").toPath, bytes))
       Dedup.clearSignatureCaches()

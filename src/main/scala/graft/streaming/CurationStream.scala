@@ -12,8 +12,8 @@ import graft.queries.Curation
 /** STREAMING curation ingest — the q122 contract run continuously:
   * delta documents arrive on a stream, each micro-batch flows through
   * the stage semantics of [[Curation.ingestDelta]] against the CURRENT
-  * store (via [[Curation.acceptDeltaFast]], the checkpoint-staged form
-  * of the same shared stage builders), and accepted docs append to the
+  * store (via [[Curation.acceptDelta]], the one delta chain every
+  * ingest surface runs), and accepted docs append to the
   * store directory. The store is the ONLY durable artifact this job
   * writes:
   *
@@ -671,7 +671,7 @@ object CurationStream {
   }
 
   /** Per-stream store-side state: the corpus-sized tables
-    * [[Curation.acceptDeltaFast]] consumes (ids, hashed texts,
+    * [[Curation.acceptDelta]] consumes (ids, hashed texts,
     * signatures, exploded bands + their counts, IVF cells, the
     * prepared holdout, the frozen embedding leaf), derived ONCE per
     * store version and APPENDED to in memory as batches commit —
@@ -731,10 +731,18 @@ object CurationStream {
       * micro-batch. A localCheckpoint is a LogicalRDD LEAF: same
       * block-manager residency, but no cache entry to scan, no path
       * reference for the append to refresh, and a one-node plan under
-      * every downstream analysis. Old checkpoints are reclaimed by the
-      * ContextCleaner when the rebuild drops the references.
+      * every downstream analysis. A rebuild releases the previous
+      * version's leaves and the window's row leaves explicitly: no plan
+      * references them once the batches that read them have committed,
+      * and left to the ContextCleaner they stay persisted until a GC
+      * happens to collect them.
       */
     private def rebuild(s: SparkSession, v: Long): Unit = {
+      val stale = recent ++ Option(side).toSeq.flatMap(x =>
+        Seq(x.ids, x.texts, x.sigs, x.cells)) ++ Option(bands) ++
+        Option(bandCounts)
+      stale.foreach(org.apache.spark.sql.graft.GraftExec.leafRdd(_)
+        .foreach(_.unpersist(blocking = false)))
       recent = Nil
       // the stream owns its holdout artifact; checkpoint-backed for
       // the same plan-leaf reason
@@ -821,17 +829,15 @@ object CurationStream {
     * pack-append stage (store-wide token sum + two-phase prefix scan)
     * entirely.
     *
-    * Delta-sizing contract: the staged hot path force-broadcasts its
-    * delta-sized build sides (the measured 21-jobs/batch floor depends
-    * on it under the scoped AQE-off), so the CALLER owns keeping
-    * micro-batches micro — bound a restart's backlog replay at the
-    * source (`maxFilesPerTrigger` / rate limits). Driver-side memory
-    * is independently protected (every collect is capped by
-    * [[Curation.DropListCap]], falling back to distributed forms),
-    * and the batch-serving twin routes corpus-proportional deltas to
-    * the shuffle-join chain (`Curation.ServeStagedDeltaCap`) — but an
-    * unthrottled multi-gigabyte batch would still pay oversized
-    * broadcast builds here.
+    * Delta-sizing contract: none on the caller. The chain picks its
+    * join physics from each batch's OBSERVED stage counts
+    * ([[Curation.acceptDelta]]): a micro-batch under
+    * [[Curation.DropListCap]] rows gets explicit broadcasts and the
+    * driver-local tier (the measured 21-jobs/batch floor under the
+    * scoped AQE-off), while an unthrottled backlog replay over the cap
+    * runs the shuffle-join shapes with distributed drop lists — slower
+    * per batch, but never a multi-gigabyte broadcast build or an
+    * O(batch) driver collect.
     */
   def ingestStream(deltaStream: DataFrame, emb: DataFrame,
       trained: Seq[(Long, Seq[Float])], holdout: DataFrame,
@@ -882,27 +888,14 @@ object CurationStream {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
-        // NOTE on AQE: leaving adaptive execution ON is deliberate and
-        // measured — a soak leg with adaptive disabled ran ~60% SLOWER
-        // (271 vs 65 jobs/batch: without AQE the planner stops
-        // broadcasting the delta-sized sides of the drop joins, and
-        // every anti-join becomes a full sort-merge over the store).
-        val dbg = sys.env.contains("SPARK_GRAFT_STREAM_DEBUG")
-        def ph[T](name: String)(f: => T): T = {
-          s.sparkContext.setJobDescription(s"graft-phase $name")
-          if (!dbg) f else {
-            val t0 = System.nanoTime()
-            val r = f
-            println(f"  stream-phase $name%s: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-            r
-          }
-        }
+        def ph[T](name: String)(f: => T): T =
+          Curation.stage(s, s"graft-phase $name")(f)
         // Adaptive execution is scoped OFF for the hot-path body: the
-        // staged acceptDeltaFast hints every build side explicitly
-        // (the delta side broadcasts by construction), so AQE has no
-        // plan decision left to improve — it only splits each stage
-        // query into one job per exchange (measured on the staged
-        // path: 69 vs 21 jobs/batch, batch p50 5.6 vs 3.6 s at 1×).
+        // staged chain hints every delta-sized build side explicitly
+        // (chosen by observed size), so AQE has no plan decision left
+        // to improve — it only splits each stage query into one job per
+        // exchange (measured on the staged path: 69 vs 21 jobs/batch,
+        // batch p50 5.6 vs 3.6 s at 1×).
         // This inverts the round-13 lazy-chain result (AQE-off 60%
         // slower) BECAUSE the broadcasts are now explicit; maintenance
         // ops and every batch surface keep AQE on.
@@ -912,12 +905,10 @@ object CurationStream {
         try {
         ph("ensureFresh")(state.ensureFresh(s))
         val clB = Curation.clean(batch)
-        // the staged (checkpoint-leaf) variant: stage materialization
-        // happens HERE, so this phase is construct + stage execution —
-        // the lazy batch form's ~6 s of pure per-batch plan analysis
-        // is gone (see Curation.acceptDeltaFast)
-        val accepted = ph("acceptDelta staged")(
-          Curation.acceptDeltaFast(s, state.effectiveSide, clB, state.emb,
+        // stage materialization happens HERE (checkpoint leaves), so
+        // this phase is construct + stage execution
+        val accepted = ph("acceptDelta")(
+          Curation.acceptDelta(s, state.effectiveSide, clB, state.emb,
             trained, Some(state.effectiveBands)))
         // materialize ONCE with truncated lineage: the appended rows
         // feed both the store write and the in-memory side increment,
@@ -932,11 +923,11 @@ object CurationStream {
         // always-correct scan fallback. Bucket hint: the batch id is a
         // literal, so the touched bucket is driver arithmetic.
         val (rows, nRows, ids) = ph("localCheckpoint")(
-          org.apache.spark.sql.graft.GraftExec.localCheckpointCountedKeyed(
+          org.apache.spark.sql.graft.GraftExec.checkpointCounted(
             accepted.select(col("doc_id"), col("lang"), col("source"),
               col("n_chars"), col("text"), tokCount,
-              lit(batchId).as("ingest_batch")), keyOrdinal = 0,
-            cap = graft.queries.Curation.DropListCap))
+              lit(batchId).as("ingest_batch")), reliable = false,
+            keyOrdinal = 0, cap = graft.queries.Curation.DropListCap))
         if (nRows > 0) {
           ph("appendStore")(appendStore(rows, storeDir,
             touchedBuckets = Some(Seq(batchId / BatchesPerBucket)),

@@ -50,48 +50,32 @@ object GraftExec {
       case _ => None
     }
 
-  /** Eager localCheckpoint AND row count in ONE Spark action.
-    * `Dataset.localCheckpoint(eager = true)` materializes the
-    * checkpoint by running an internal `rdd.count()` and DISCARDS the
-    * number — so a staged pipeline that checkpoints every stage and
-    * needs each stage's row count (the streaming curation ingest) pays
-    * a second, pure-overhead job per stage. This replicates the same
-    * construction — copy the unsafe rows, mark the RDD
-    * locally-checkpointed, materialize via count, wrap the
-    * materialized RDD as a leaf plan — and keeps the count.
-    */
-  def localCheckpointCounted(df: DataFrame): (DataFrame, Long) = {
-    val spark = df.sparkSession
-      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val rdd = df.queryExecution.toRdd.map(_.copy())
-    rdd.localCheckpoint()
-    val n = rdd.count()
-    (spark.internalCreateDataFrame(rdd, df.schema), n)
-  }
-
-  /** [[localCheckpointCounted]] that ALSO returns one long column's
-    * values: checkpoint, row count and key collection ride the SAME
-    * single action (the materializing job's per-partition iterators
-    * yield the keys instead of discarding them). For the streaming
-    * ingest's accepted rows, whose doc_ids feed the sidecar merge —
-    * previously a separate collect job over the fresh leaf.
+  /** Eager checkpoint AND row count in ONE Spark action.
+    * `Dataset.checkpoint`/`localCheckpoint(eager = true)` materialize
+    * by running an internal `rdd.count()` and DISCARD the number — so a
+    * staged pipeline that checkpoints every stage and needs each
+    * stage's row count (the curation delta chain) would pay a second,
+    * pure-overhead job per stage. This replicates the same construction
+    * — copy the unsafe rows, mark the RDD checkpointed (`reliable`: to
+    * the context's checkpoint directory, else locally), materialize,
+    * wrap the checkpointed RDD as a leaf plan — and keeps the count.
     *
-    * The key collection is CAPPED: each partition retains at most
-    * cap+1 keys while still counting every row, so a backlog-replay
-    * burst cannot turn the count action into an O(batch) driver
-    * collect — over the cap the keys come back None (callers fall
-    * back to their distributed forms) and the count stays exact.
-    * Total ≤ cap implies no partition truncated (a truncating
-    * partition alone holds ≥ cap+2 rows), so a Some is always the
-    * complete key set.
+    * With `keyOrdinal` ≥ 0 the same action also returns that long
+    * column's values, CAPPED: each partition retains at most cap+1 keys
+    * while still counting every row, so a backlog-sized input cannot
+    * turn the count into an O(rows) driver collect — over the cap the
+    * keys come back None and the count stays exact. Total ≤ cap implies
+    * no partition truncated (a truncating partition alone holds ≥
+    * cap+2 rows), so a Some is always the complete key set.
     */
-  def localCheckpointCountedKeyed(df: DataFrame, keyOrdinal: Int,
+  def checkpointCounted(df: DataFrame, reliable: Boolean, keyOrdinal: Int,
       cap: Long): (DataFrame, Long, Option[Array[Long]]) = {
     val spark = df.sparkSession
       .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val rdd = df.queryExecution.toRdd.map(_.copy())
-    rdd.localCheckpoint()
-    val perPart = math.min(cap + 1L, Int.MaxValue.toLong).toInt
+    if (reliable) rdd.checkpoint() else rdd.localCheckpoint()
+    val perPart =
+      if (keyOrdinal < 0) 0 else math.min(cap + 1L, Int.MaxValue.toLong).toInt
     val parts = spark.sparkContext.runJob(rdd,
       (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
         val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -105,7 +89,7 @@ object GraftExec {
       })
     val total = parts.iterator.map(_._1).sum
     val ids =
-      if (total > cap) None
+      if (keyOrdinal < 0 || total > cap) None
       else Some(Array.concat(parts.iterator.map(_._2).toIndexedSeq: _*))
     (spark.internalCreateDataFrame(rdd, df.schema), total, ids)
   }

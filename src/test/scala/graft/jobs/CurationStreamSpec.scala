@@ -197,6 +197,59 @@ class CurationStreamSpec extends AnyFunSuite {
     } finally stopAndWait(q)
   }
 
+  test("stage leaves are released: persistent RDDs grow by at most the window leaf per batch") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // each batch: one fresh doc (accepted — its rows leaf joins the
+    // in-memory window) and one semantic twin of a store doc (dropped
+    // vs the store, so the chain materializes a drop-stage leaf too).
+    // The chain's stage leaves must be gone once the batch commits;
+    // only the window leaf may stay, until the next side rebuild
+    // releases the window (a rebuild falls inside the run).
+    val nBatches = 12
+    def mk(rows: Seq[(Long, String)]) =
+      rows.map { case (id, t) => (id, "en", "web", t.length.toLong, t) }
+        .toDF("doc_id", "lang", "source", "n_chars", "text")
+    val sIds = pickIds(4, id => bucketOf(id) < 80)
+    val dIds = pickIds(2 * nBatches, id => bucketOf(id) < 80,
+      from = sIds.max + 1)
+    val curated = mk(sIds.zipWithIndex.map { case (id, i) =>
+      (id, text(s"s${('a' + i).toChar}")) })
+    val twins = dIds.grouped(2).map(_(1)).toSet
+    val allIds = sIds ++ dIds
+    val dims = allIds.zipWithIndex.toMap
+    val emb = allIds.map { id =>
+      val dim = if (twins(id)) dims(sIds.head) else dims(id)
+      (id, (0 until 64).map(x => if (x == dim) 1.0f else 0.0f))
+    }.toDF("vec_id", "embedding")
+    val trained = graft.ext.Similarity
+      .kmeansCentroids(emb, k = 16, iters = 1, roundTo = 4)
+    val storeDir = Files.createTempDirectory("cur_leaves").toString
+    val ckpt = Files.createTempDirectory("cur_leaves_ckpt").toString
+    CurationStream.initStore(curated, storeDir)
+    val in = MemoryStream[(Long, String, String, Long, String)]
+    val q = CurationStream.ingestStream(
+      in.toDF().toDF("doc_id", "lang", "source", "n_chars", "text"),
+      emb, trained, mk(Seq.empty), storeDir, ckpt)
+    try {
+      val persisted = dIds.grouped(2).zipWithIndex.map {
+        case (Seq(fresh, twin), k) =>
+          val tag = ('a' + k).toChar
+          in.addData(Seq(fresh -> text(s"f$tag"), twin -> text(s"m$tag"))
+            .map { case (id, t) => (id, "en", "web", t.length.toLong, t) }: _*)
+          q.processAllAvailable()
+          spark.sparkContext.getPersistentRDDs.size
+      }.toVector
+      val growth = persisted.sliding(2).map(w => w(1) - w(0)).toVector
+      assert(growth.forall(_ <= 1),
+        s"persistent RDDs after each batch: $persisted")
+      val accepted = CurationStream.readStore(spark, storeDir)
+        .filter($"ingest_batch" >= 0L).select($"doc_id").collect()
+        .map(_.getLong(0)).toSet
+      assert(accepted === dIds.filterNot(twins).toSet)
+    } finally stopAndWait(q)
+  }
+
   test("over-cap drop lists: the anti-join fallback accepts exactly the literal-filter set") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -13,12 +13,15 @@ import graft.queries.Curation
   * into executor-resident local blocks, so an executor loss on a real
   * cluster recomputes nothing and loses nothing. Same rows in both
   * modes (the checkpoint is a materialization boundary, not a
-  * transform); this spec drives the full batch ingest
-  * ([[Curation.incrementalIngest]] → acceptDelta) through both and
+  * transform). This spec drives the q122 batch ingest through both:
+  * [[Curation.incrementalIngest]] builds its lazy store leaf, then runs
+  * [[Curation.acceptDelta]] — the one delta chain q125 and the stream
+  * run too — whose eager counted stage leaves take the same knob. It
   * pins (a) row equality, (b) that the reliable mode actually WROTE
-  * checkpoint data under the configured directory, and (c) that the
-  * tracked local-mode leaves are released by the query-scoped
-  * lifecycle ([[graft.ext.Dedup.clearSignatureCaches]]).
+  * checkpoint data for the store leaf and the chain's stage leaves
+  * under the configured directory, and (c) that the tracked
+  * local-mode leaves are released by the query-scoped lifecycle
+  * ([[graft.ext.Dedup.clearSignatureCaches]]).
   */
 class CheckpointModeSpec extends AnyFunSuite {
 
@@ -98,6 +101,13 @@ class CheckpointModeSpec extends AnyFunSuite {
         else Option(f.listFiles).map(_.map(treeSize).sum).getOrElse(0L)
       assert(treeSize(new java.io.File(ckDir)) > 0L,
         "reliable mode wrote no checkpoint data")
+      // the store leaf plus at least the chain's d2 and d3 leaves
+      def rddDirs(f: java.io.File): Int =
+        Option(f.listFiles).map(_.map(c =>
+          (if (c.isDirectory && c.getName.startsWith("rdd-")) 1 else 0) +
+            rddDirs(c)).sum).getOrElse(0)
+      assert(rddDirs(new java.io.File(ckDir)) >= 3,
+        "the chain's stage leaves did not checkpoint reliably")
     } finally spark.sparkContext.setCheckpointDir(null)
     assert(spark.sparkContext.getCheckpointDir.isEmpty,
       "checkpoint dir must be unset for subsequent suites")

@@ -264,22 +264,77 @@ class IncrementalCurationSpec extends AnyFunSuite {
     val deltaPred = pmod(col("doc_id"), lit(7L)) === 0L
     def key(df: DataFrame): Seq[String] =
       df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
-    val persisted = key(Curation.persistedIngest(spark, dir))
+    // the chain labels its jobs per stage but must hand the caller's
+    // own description back (persistedIngest runs the eager stages)
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller-desc")
+    val persisted = try {
+      val p = key(Curation.persistedIngest(spark, dir))
+      assert(sc.getLocalProperty("spark.job.description") === "caller-desc",
+        "persistedIngest leaked a stage label")
+      p
+    } finally sc.setJobDescription(null)
     val inMemory = key(Curation.incrementalIngest(spark,
       graft.Tables.documents(spark, dir),
       graft.Tables.embeddings(spark, dir), deltaPred))
     assert(persisted.nonEmpty, "fixture delta must accept at least one doc")
     assert(persisted === inMemory,
       "parquet artifact round-trip changed the ingest result")
-    // over-cap route: a corpus-proportional delta must take the
-    // shuffle-join batch chain over the SAME prepared artifacts —
-    // force it on this tiny delta and pin identical rows
-    val capBefore = Curation.ServeStagedDeltaCap
-    Curation.ServeStagedDeltaCap = 0L
+    // over-cap tier: a corpus-proportional delta must take the
+    // unhinted shuffle-join shapes with distributed drop lists over the
+    // SAME prepared artifacts — force it on this tiny delta and pin
+    // identical rows
+    val capBefore = Curation.DropListCap
+    Curation.DropListCap = 0L
     try {
-      val batchRoute = key(Curation.persistedIngest(spark, dir))
-      assert(batchRoute === inMemory,
-        "the batch route over prepared artifacts diverged")
-    } finally Curation.ServeStagedDeltaCap = capBefore
+      val overCap = key(Curation.persistedIngest(spark, dir))
+      assert(overCap === inMemory,
+        "the over-cap tier over prepared artifacts diverged")
+    } finally Curation.DropListCap = capBefore
+  }
+
+  test("a NULL doc_id is rejected at entry, with the same accepted set on every tier; the caller's job description survives") {
+    import spark.implicits._
+    // the local literal-filter tier (default cap) and the over-cap
+    // anti-join tier (cap 0) must agree — a literal NOT isin drops a
+    // NULL key where a left_anti keeps it, so the entry guard rejects
+    // the row before either form can see it
+    val sIds = pickIds(4, id => bucketOf(id) < 80)
+    val Seq(okA, okB) = pickIds(2, id => bucketOf(id) < 80, from = sIds.max + 1)
+    def mk(rows: Seq[(Option[Long], String)]) =
+      rows.map { case (id, t) => (id, "en", "web", t.length.toLong, t) }
+        .toDF("doc_id", "lang", "source", "n_chars", "text")
+    val store = mk(sIds.zipWithIndex.map { case (id, i) =>
+      (Some(id), text(s"s${('a' + i).toChar}")) })
+    // the NULL-id doc twins okB's text, so every dedup stage has a
+    // NULL-keyed row to drop or keep
+    val delta = mk(Seq(Some(okA) -> text("oka"), Some(okB) -> text("okb"),
+      None -> text("okb"), None -> text("nullonly")))
+    val allIds = sIds ++ Seq(okA, okB)
+    val emb = allIds.zipWithIndex.map { case (id, i) =>
+      (id, (0 until 64).map(d => if (d == i % 64) 1.0f else 0.0f))
+    }.toDF("vec_id", "embedding")
+    val trained = graft.ext.Similarity
+      .kmeansCentroids(emb, k = 4, iters = 1, roundTo = 4)
+    // the chain labels its jobs per stage but must hand the caller's
+    // own job description back
+    val sc = spark.sparkContext
+    def accepted(): Seq[Any] = {
+      sc.setJobDescription("caller-desc")
+      try {
+        val ids = Curation.ingestDelta(spark, store, mk(Seq.empty), delta,
+          emb, trained).select($"doc_id").collect().map(_.get(0)).toSeq
+        assert(sc.getLocalProperty("spark.job.description") === "caller-desc",
+          "ingestDelta leaked a stage label")
+        ids.sortBy(_.toString)
+      } finally sc.setJobDescription(null)
+    }
+    val capBefore = Curation.DropListCap
+    val local = accepted()
+    Curation.DropListCap = 0L
+    val overCap = try accepted() finally Curation.DropListCap = capBefore
+    assert(local === Seq(okA, okB).sortBy(_.toString),
+      s"NULL-id rows must be rejected, got $local")
+    assert(overCap === local, "the two tiers disagree on a NULL doc_id")
   }
 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ext.{DriverTier, DropSet}
+
 /** Iterative fixpoint dataflow — the recursive-CTE class Spark has no
   * native operator for (SQL `WITH RECURSIVE`). Expressed as a driver
   * loop (the same shape as k-means training), with a size-tiered
@@ -180,9 +182,8 @@ object Graph {
 
   /** Driver union-find with MIN-root unions (path-compressed): returns
     * the find function — every node resolves to its component's
-    * minimum id. The tier-0 body of [[connectedComponents]], shared so
-    * the streaming ingest's within-delta component drop computes the
-    * same labels without a Dataset round-trip.
+    * minimum id. The tier-0 body of [[connectedComponents]], shared
+    * with [[componentNonRootsCapped]]'s driver tier.
     */
   def minRootFind(es: Array[(Long, Long)]): Long => Long = {
     val parent = scala.collection.mutable.Map.empty[Long, Long]
@@ -201,53 +202,31 @@ object Graph {
     find
   }
 
-  /** Every edge-list node that is NOT its component's minimum — the
-    * within-cluster drop list (keep each cluster's min id), computed
-    * entirely on the driver. Equal by construction to
-    * `connectedComponents(es).filter(node =!= component)`.
-    */
-  def minRootNonRoots(es: Array[(Long, Long)]): Array[Long] = {
-    val find = minRootFind(es)
-    es.iterator.flatMap(p => Iterator(p._1, p._2)).toArray
-      .distinct.filter(n => find(n) != n)
-  }
-
   /** The dedup drop list — every node that is NOT its component's
-    * minimum — with ONE Spark action on the common path. The callers
-    * (batch curation stage 4, the incremental delta's within-batch
-    * components) all run `connectedComponents(...).filter(node =!=
-    * component)` over a pair list that is dup-density-sized, which at
-    * bench scale took THREE actions before any drop was known: cache +
-    * count (the tier gate), collect (tier 0), plus the caller's own
-    * isEmpty probe. Here the pair list is fetched CAPPED in one job
-    * (each partition yields at most cap+1 pairs, so the driver holds
-    * ≤ (cap+1)·partitions transiently and a Some is complete — the
-    * [[graft.queries.Curation]] cappedFetch discipline), union-find
-    * runs on the driver ([[minRootNonRoots]], equal by construction to
-    * the cc filter), and an empty pair list costs exactly the one
-    * probe job. Over the cap the caller gets Right(distributed drop
-    * frame) over the STILL-CACHED edge table — the
-    * [[connectedComponents]] fixpoint, identical drop set.
+    * minimum — with ONE Spark action on the common path: the pair list
+    * comes back through [[DriverTier.fetchCapped]] and union-find runs
+    * on the driver ([[minRootFind]], equal by construction to
+    * `connectedComponents(es).filter(node =!= component)`), so an empty
+    * pair list costs exactly the one fetch. Over `cap` the drop set is
+    * the distributed [[connectedComponents]] fixpoint over the
+    * STILL-CACHED edge table — identical drops.
     */
   def componentNonRootsCapped(spark: SparkSession, edges: DataFrame,
-      cap: Long = 500000L): Either[Array[Long], DataFrame] = {
-    import org.apache.spark.sql.catalyst.InternalRow
+      cap: Long): DropSet = {
     // cached FIRST so the capped fetch materializes it and an over-cap
     // fallback re-reads blocks instead of re-running the (expensive)
     // pair-generation pipeline; registered query-scoped like the other
     // signature caches
     val e = graft.ext.Dedup.cached(edges.select(col("src"), col("dst")))
-    val perPart = math.min(cap + 1L, Int.MaxValue.toLong).toInt
-    val chunks = spark.sparkContext.runJob(
-      e.queryExecution.toRdd,
-      (it: Iterator[InternalRow]) =>
-        it.take(perPart).map(r => (r.getLong(0), r.getLong(1))).toArray)
-    val total = chunks.iterator.map(_.length.toLong).sum
-    if (total > cap)
-      Right(connectedComponents(spark, e)
+    DriverTier.fetchCapped(e, cap)(r => (r.getLong(0), r.getLong(1))) match {
+      case Some(es) =>
+        val find = minRootFind(es)
+        DropSet.Local(es.iterator.flatMap(p => Iterator(p._1, p._2)).toArray
+          .distinct.filter(n => find(n) != n))
+      case None => DropSet.Distributed(connectedComponents(spark, e)
         .filter(col("node") =!= col("component"))
         .select(col("node").as("doc_id")))
-    else Left(minRootNonRoots(Array.concat(chunks.toIndexedSeq: _*)))
+    }
   }
 
   /** Connected components over undirected `edges(src, dst)`: every node

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ext.{Dedup, Packing, Similarity, TextStats}
+import graft.ext.{Dedup, DriverTier, DropSet, Packing, Similarity, TextStats}
 import graft.queries.Num.{r => rnd}
 
 /** q117: the end-to-end curation pipeline — the product shape a 100 TB
@@ -79,6 +79,11 @@ object Curation {
   val IndexIters = 1
   val IndexRound = 4
 
+  // driver-fetch caps of the batch core's stage-4 pair list and
+  // stage-7 per-source count table
+  private val ComponentPairCap = 500000L
+  private val MixCountsCap = 100000L
+
   /** q57's cleaning transform, applied corpus-wide (stage 1). */
   private def cleaned(text: Column): Column =
     trim(regexp_replace(regexp_replace(text, "[0-9]+", "<NUM>"), " +", " "))
@@ -138,35 +143,22 @@ object Curation {
         Seq("__h", "text"), "left_anti")
       .drop("__h")
 
-  /** Apply a DRIVER-RESIDENT drop list to `df` by `key`: a literal
-    * NOT-isin for small lists (no build job at all), a LocalRelation
-    * anti-join past [[IsinLiteralMax]] (a many-thousand-entry In
-    * literal is a pathological expression tree — the DropListCap
-    * lesson). Both equal the left_anti on a non-null key; a NULL key
-    * row is dropped here where a left_anti keeps it, which is why
-    * [[acceptDelta]] rejects NULL doc_id at its entry.
-    */
-  private val IsinLiteralMax = 10000
-  private def minusDropIds(df: DataFrame, drops: Array[Long],
-      key: String = "doc_id"): DataFrame =
-    if (drops.length <= IsinLiteralMax)
-      df.filter(!col(key).isin(drops.toIndexedSeq: _*))
-    else {
-      val s = df.sparkSession
-      import s.implicits._
-      df.join(broadcast(drops.toIndexedSeq.toDF(key)), Seq(key), "left_anti")
-    }
-
   /** Stage 2: quality + repetition filter on cleaned text. The ratio
     * denominators are nullif'd (q67's form) so a zero-token doc fails
     * the filter by NULL on both engines regardless of conjunct order;
     * quality_score keeps q17's exact expression tree.
+    *
+    * NULL `doc_id` rows stop here for both chains, as at the oracle's
+    * stage-3 join: keep-min sorts nulls first (a NULL-id twin would beat
+    * the valid doc), a NULL id can be neither guarded, appended nor
+    * attributed, and [[graft.ext.DropSet.applyTo]] needs non-null keys.
     */
   private def qualityFiltered(cl: DataFrame): DataFrame = {
     val s = cl.sparkSession
     import s.implicits._
     val ntD = nullif($"n_tokens", lit(0L)).cast("double")
-    cl.select(Seq($"doc_id", $"lang", $"source", $"n_chars", $"text",
+    cl.filter($"doc_id".isNotNull)
+      .select(Seq($"doc_id", $"lang", $"source", $"n_chars", $"text",
         TextStats.repetitionStats($"text").as("r")) ++
         TextStats.statsColumns($"text"): _*)
       .filter($"n_tokens" >= MinTokens &&
@@ -185,7 +177,7 @@ object Curation {
     * split); the semantic index is trained on the full `emb` table —
     * the maintained production index.
     */
-  private def curatedSurvivors(s: SparkSession, cl: DataFrame,
+  private[graft] def curatedSurvivors(s: SparkSession, cl: DataFrame,
       emb: DataFrame,
       trainedOpt: Option[() => Seq[(Long, Seq[Float])]] = None,
       cacheFinal: Boolean = true): DataFrame = {
@@ -208,22 +200,14 @@ object Curation {
     val s3 = Dedup.cached(exactKeepMin(s2))
 
     // stage 4: MinHash-LSH near-dup drop list among survivors (q21's
-    // pair generator on the survivor frame, q73's keep-min-id policy).
-    // The drop list comes back through the size-tiered fused fetch
-    // (ONE action for pairs-pipeline materialization + union-find; the
-    // old cache/count/collect triple paid two extra job rounds), and a
-    // driver-resident list applies as a literal/local-frame filter —
-    // no broadcast-build job. NOT-isin ≡ left_anti on non-null doc_id.
+    // pair generator on the survivor frame, q73's keep-min-id policy),
+    // from one capped pair fetch plus driver union-find. No drops: s4
+    // IS s3 (already cached — re-wrapping would double-register it)
     val pairs4 = Dedup.minhashPairs(s3, MinJaccard)
       .select($"doc1".as("src"), $"doc2".as("dst"))
-    val s4 = graft.operators.Graph.componentNonRootsCapped(s, pairs4) match {
-      // no drops: s4 IS s3 (already cached — re-wrapping would just
-      // double-register the same entry)
-      case Left(drops) if drops.isEmpty => s3
-      case Left(drops) => Dedup.cached(minusDropIds(s3, drops))
-      case Right(dropDf) =>
-        Dedup.cached(s3.join(dropDf, Seq("doc_id"), "left_anti"))
-    }
+    val drops4 =
+      graft.operators.Graph.componentNonRootsCapped(s, pairs4, ComponentPairCap)
+    val s4 = if (drops4.isEmpty) s3 else Dedup.cached(drops4.applyTo(s3))
 
     // stage 5: semantic dedup — index trained on the FULL embedding
     // table (q101's trainer; [[incrementalIngest]] passes its already-
@@ -293,7 +277,7 @@ object Curation {
     // unchanged; rows identical either way (null sources never
     // equi-match the join in both forms).
     val cnts = s6.groupBy($"source").agg(count(lit(1)).as("n_before"))
-    val thrRows = cappedFetch(cnts, 100000L)(r =>
+    val thrRows = DriverTier.fetchCapped(cnts, MixCountsCap)(r =>
       (if (r.isNullAt(0)) null else r.getUTF8String(0).toString,
         r.getLong(1)))
     val thr = thrRows match {
@@ -482,12 +466,6 @@ object Curation {
     Dedup.minhashPairsAgainstSigs(side.sigs, iSig, MinJaccard)
       .select(col("in_doc").as("doc_id")).distinct()
 
-  /** Within-delta component drop list (keep each cluster's min id). */
-  private def componentDrop(s: SparkSession, pairs: DataFrame): DataFrame =
-    graft.operators.Graph.connectedComponents(s, pairs)
-      .filter(col("node") =!= col("component"))
-      .select(col("node").as("doc_id"))
-
   /** IVF cell assignment of the delta's embeddings on the maintained
     * index.
     */
@@ -573,30 +551,6 @@ object Curation {
     }
   }
 
-  /** ONE-job capped fetch: each partition yields at most cap+1 decoded
-    * rows (total ≤ cap ⇒ no partition truncated ⇒ the array is the
-    * complete result), so the driver transiently holds ≤
-    * (cap+1)·partitions values and an over-cap result comes back None
-    * — callers fall back to their distributed forms. The shared
-    * primitive behind every driver-resident probe (drop lists,
-    * within-delta pairs, hot keys): a `limit(cap+1).collect()` here
-    * would go through executeTake's incremental partition scans —
-    * measured +4 jobs per micro-batch across the drop sites.
-    */
-  private def cappedFetch[T: scala.reflect.ClassTag](df: DataFrame,
-      cap: Long)(
-      dec: org.apache.spark.sql.catalyst.InternalRow => T):
-      Option[Array[T]] = {
-    val perPart = math.min(cap + 1L, Int.MaxValue.toLong).toInt
-    val chunks = df.sparkSession.sparkContext.runJob(
-      df.queryExecution.toRdd,
-      (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
-        it.take(perPart).map(dec).toArray)
-    val total = chunks.iterator.map(_.length.toLong).sum
-    if (total > cap) None
-    else Some(Array.concat(chunks.toIndexedSeq: _*))
-  }
-
   /** [[hotKeys]] COLLECTED to the driver for the local-delta tier: the
     * hot filter then applies to the driver-resident delta bands —
     * identical pair suppression (a hot (band,key) contributes no
@@ -618,7 +572,7 @@ object Curation {
       return b.hotBaseLocal
     val df = hotKeys(b, maxBucket)
       .select(col("band").cast("int").as("band"), col("key"))
-    cappedFetch(df, DropListCap)(r =>
+    DriverTier.fetchCapped(df, DropListCap)(r =>
       (r.getInt(0), r.getUTF8String(1).toString)).map(_.toSet)
   }
 
@@ -760,11 +714,8 @@ object Curation {
     * Rows are identical on every tier (CurationStreamSpec,
     * IncrementalCurationSpec and the q122/q125 oracle gates).
     *
-    * NULL `doc_id` rows are rejected at entry: the store is the id
-    * authority, and a NULL id can be neither guarded (it never equi-
-    * matches), nor appended, nor attributed. Rejecting it also makes
-    * the literal `NOT isin` and the anti-join drop forms agree on
-    * every tier.
+    * NULL `doc_id` rows never enter: the entry leaf runs
+    * [[qualityFiltered]], which rejects them.
     */
   private[graft] def acceptDelta(s: SparkSession, side: StoreSide,
       clDelta: DataFrame, emb: DataFrame,
@@ -776,28 +727,15 @@ object Curation {
       val (c, n, _) = countedLeaf(s, name, df)
       (c, n)
     }
-    // an over-cap list stays DISTRIBUTED (Right) and applies as an
-    // anti-join instead of a driver literal
-    def dropIds(name: String)(
-        df: DataFrame): Either[Array[Long], DataFrame] =
-      stage(s, s"graft-drop $name")(
-        cappedFetch(df, DropListCap)(_.getLong(0))).toLeft(df)
-    def noDrops(drops: Either[Array[Long], DataFrame]): Boolean =
-      drops.left.exists(_.isEmpty)
-    def minusDrops(d: DataFrame,
-        drops: Either[Array[Long], DataFrame]): DataFrame = drops match {
-      case Left(ids) => minusDropIds(d, ids)
-      case Right(df) => d.join(df.select($"doc_id"), Seq("doc_id"),
-        "left_anti")
-    }
-    def minus(d: DataFrame, n: Long, drops: Either[Array[Long], DataFrame],
-        name: String): (DataFrame, Long) =
-      if (noDrops(drops)) (d, n) else leaf(name)(minusDrops(d, drops))
+    // a drop list over DropListCap stays distributed (see the tiers);
+    // a stage whose list is empty keeps the previous leaf
+    def fetchDrops(name: String)(df: DataFrame): DropSet =
+      stage(s, s"graft-drop $name")(DropSet.fetch(df, DropListCap))
     val empty = clDelta.select(cols: _*).limit(0)
 
-    // stages 1–2 (per-doc) behind the entry leaf, NULL ids rejected
+    // stages 1–2 (per-doc) behind the entry leaf
     val (d2, n2, d2Ids) = countedLeaf(s, "d2_quality",
-      qualityFiltered(clDelta.filter($"doc_id".isNotNull)), keyed = true)
+      qualityFiltered(clDelta), keyed = true)
     if (n2 == 0) return empty
 
     // stages guard + 3-store-half in ONE probe action: the known-id
@@ -808,63 +746,43 @@ object Curation {
     // and keep-min runs after every one of them — a dropped doc can
     // never win it. NULL text never equi-matches (same as an anti-join
     // form), and store-side nulls (redacted docs) likewise.
-    // Under the cap the id side is a literal filter over the store ids
-    // (a LocalRelation broadcast past IsinLiteralMax), so only the
-    // hashed-text side pays a build.
+    // Under the cap the id side restricts the store ids by the
+    // collected d2 ids, so only the hashed-text side pays a build.
     val dKeyed = d2.select($"doc_id", xxhash64($"text").as("__h"), $"text")
-    val idHits = d2Ids match {
-      case Some(ids) if ids.length <= IsinLiteralMax =>
-        side.ids.filter($"doc_id".isin(ids.toIndexedSeq: _*))
-      case Some(ids) => side.ids.join(
-        broadcast(ids.toIndexedSeq.toDF("doc_id")), Seq("doc_id"), "left_semi")
-      case None =>
-        side.ids.join(d2.select($"doc_id"), Seq("doc_id"), "left_semi")
-    }
+    val idHits = DropSet(d2Ids, d2.select($"doc_id")).restrict(side.ids)
     val textHits = side.texts.join(
       if (d2Ids.isDefined) broadcast(dKeyed) else dKeyed, Seq("__h", "text"))
-    val guardDrops = dropIds("guard_and_exact")(
+    val guardDrops = fetchDrops("guard_and_exact")(
       idHits.unionByName(textHits.select($"doc_id")))
 
     // stage 3 within the delta: keep-min per text. The leaf's action
     // also yields the d3 ids, seeding the driver-side survivor tracking
     // the local tier rides.
-    val (d3, n3, d3Ids) = countedLeaf(s, "d3_exact", exactKeepMin(
-      if (noDrops(guardDrops)) d2 else minusDrops(d2, guardDrops)),
-      keyed = true)
+    val (d3, n3, d3Ids) = countedLeaf(s, "d3_exact",
+      exactKeepMin(guardDrops.applyTo(d2)), keyed = true)
     if (n3 == 0) return empty
 
     // the tiers (see the scaladoc): survivor ids are tracked on the
-    // driver on the local tier (drop lists are always Left there: each
+    // driver on the local tier (drop sets are always Local there: each
     // is a subset of a ≤-cap delta)
     val small = d3Ids.isDefined
     val localDelta = small && n3 <= Dedup.DefaultMaxBucket
     var live: Array[Long] = d3Ids.getOrElse(Array.empty[Long])
-    def applyDrops(drops: Either[Array[Long], DataFrame]): Unit =
-      drops match {
-        case Left(ids) if ids.nonEmpty =>
-          val dset = ids.toSet; live = live.filterNot(dset)
-        case _ => ()
-      }
+    def track(dropped: DropSet): Unit = dropped match {
+      case DropSet.Local(ids) if ids.nonEmpty =>
+        val dset = ids.toSet; live = live.filterNot(dset)
+      case _ => ()
+    }
     def localFrame(rows: java.util.List[org.apache.spark.sql.Row],
         schema: org.apache.spark.sql.types.StructType): DataFrame =
       s.createDataFrame(rows, schema)
 
-    // within-delta near-dup components, DRIVER tier: the pair list is
-    // delta-bounded, so fetch it capped (the same one-job discipline
-    // as dropIds) and run the min-root union-find HERE — one job
-    // replacing an isEmpty probe plus the distributed fixpoint's
-    // several. Semantics identical to componentDrop by construction:
-    // union-by-min-root labels every component with its min id
-    // (Graph.connectedComponents' tier-0 algorithm verbatim), and the
-    // drop list is every non-root node. Over the cap, fall back to
-    // the distributed fixpoint path.
-    def componentDropsCapped(name: String)(
-        pairs: DataFrame): Either[Array[Long], DataFrame] =
-      stage(s, s"graft-drop $name") {
-        cappedFetch(pairs, DropListCap)(r => (r.getLong(0), r.getLong(1)))
-          .map(es => Left(graft.operators.Graph.minRootNonRoots(es)))
-          .getOrElse(dropIds(name)(componentDrop(s, pairs)))
-      }
+    // within-delta near-dup components: union-find on the driver over
+    // the pair list fetched under the cap, the distributed fixpoint
+    // over it
+    def componentDrops(pairs: DataFrame): DropSet =
+      stage(s, "graft-drop d4_minhash_within")(
+        graft.operators.Graph.componentNonRootsCapped(s, pairs, DropListCap))
 
     // stage 4 — the delta's signature table derives ONCE and serves
     // both halves: COLLECTED to the driver on the local tier (its rows
@@ -901,9 +819,10 @@ object Curation {
           .select($"in_doc".as("doc_id")).distinct()
       case _ => minhashVsStoreDrop(side, iSig)
     }
-    val drops4 = dropIds("d4a_minhash_vs_store")(dropVs4)
-    applyDrops(drops4)
-    val (d4a, n4a) = minus(d3, n3, drops4, "d4a_ck")
+    val drops4 = fetchDrops("d4a_minhash_vs_store")(dropVs4)
+    track(drops4)
+    val (d4a, n4a) =
+      if (drops4.isEmpty) (d3, n3) else leaf("d4a_ck")(drops4.applyTo(d3))
     if (n4a == 0) return empty
     val (d4, n4) =
       if (n4a == 1) (d4a, n4a)
@@ -918,9 +837,10 @@ object Curation {
           case None => (d4a, n4a)
           case Some(pairs) =>
             val pairsD = pairs.select($"doc1".as("src"), $"doc2".as("dst"))
-            val drops = componentDropsCapped("d4_minhash_within")(pairsD)
-            applyDrops(drops)
-            minus(d4a, n4a, drops, "d4_ck")
+            val drops = componentDrops(pairsD)
+            track(drops)
+            if (drops.isEmpty) (d4a, n4a)
+            else leaf("d4_ck")(drops.applyTo(d4a))
         }
       } else {
         // the within-delta probe rides the SAME signature leaf,
@@ -929,13 +849,12 @@ object Curation {
         // cap population included; n4a rows can never overfill a band
         // bucket when n4a is under the cap, so the cap branch is
         // provably a no-op and skipped)
-        val d4aSigs =
-          if (noDrops(drops4)) d3Sigs else minusDrops(d3Sigs, drops4)
-        val pairsD = Dedup.minhashPairsFromSigs(d4aSigs, MinJaccard,
-          incomingUnderCap = n4a <= Dedup.DefaultMaxBucket)
+        val pairsD = Dedup.minhashPairsFromSigs(drops4.applyTo(d3Sigs),
+          MinJaccard, incomingUnderCap = n4a <= Dedup.DefaultMaxBucket)
           .select($"doc1".as("src"), $"doc2".as("dst"))
-        minus(d4a, n4a, componentDropsCapped("d4_minhash_within")(pairsD),
-          "d4_ck")
+        val drops = componentDrops(pairsD)
+        if (drops.isEmpty) (d4a, n4a)
+        else leaf("d4_ck")(drops.applyTo(d4a))
       }
 
     // stage 5 — a delta with no embeddings cannot be semantically
@@ -957,12 +876,13 @@ object Curation {
         (localFrame(java.util.Arrays.asList(rows: _*), cellsFrame.schema),
           rows.length.toLong, rows)
       }
-    val drops5a: Either[Array[Long], DataFrame] =
-      if (nA == 0) Left(Array.empty[Long])
-      else dropIds("d5a_semantic_vs_store")(
+    val drops5a =
+      if (nA == 0) DropSet.empty
+      else fetchDrops("d5a_semantic_vs_store")(
         semanticVsStoreDrop(side, aD, smallDelta = small))
-    applyDrops(drops5a)
-    val (d5a, n5a) = minus(d4, n4, drops5a, "d5a_ck")
+    track(drops5a)
+    val (d5a, n5a) =
+      if (drops5a.isEmpty) (d4, n4) else leaf("d5a_ck")(drops5a.applyTo(d4))
     if (n5a == 0) return empty
     val d5 =
       if (nA <= 1 || n5a == 1) d5a
@@ -998,26 +918,20 @@ object Curation {
             StructField("vec2", LongType),
             StructField("e1", ArrayType(FloatType)),
             StructField("e2", ArrayType(FloatType)))))
-          val dropsW = dropIds("d5_semantic_within")(pairFrame
+          val dropsW = fetchDrops("d5_semantic_within")(pairFrame
             .filter(rnd(graft.ext.Similarity.cosine($"e1", $"e2"), 6)
               >= MinCos)
             .select($"vec2".as("doc_id")).distinct())
-          applyDrops(dropsW)
-          minus(d5a, n5a, dropsW, "d5_ck")._1
+          track(dropsW)
+          if (dropsW.isEmpty) d5a else leaf("d5_ck")(dropsW.applyTo(d5a))._1
         }
       } else {
         // aD restricted to the d5a survivors: the vs-store drops all
         // name aD vec_ids, so dropping them by id equals the semi-join
-        // on d5a's ids with no build job. A Right list is over the cap
-        // (drops are a subset of the delta), hence the unhinted join.
-        val aD5 = drops5a match {
-          case Left(ids) if ids.isEmpty => aD
-          case Left(ids) => minusDropIds(aD, ids, "vec_id")
-          case Right(_) =>
-            aD.join(d5a.select($"doc_id".as("vec_id")), Seq("vec_id"))
-        }
-        minus(d5a, n5a, dropIds("d5_semantic_within")(
-          semanticWithinDrop(aD5, smallDelta = small)), "d5_ck")._1
+        // on d5a's ids (over the cap the anti-join re-runs the drop plan)
+        val dropsW = fetchDrops("d5_semantic_within")(semanticWithinDrop(
+          drops5a.applyTo(aD, "vec_id"), smallDelta = small))
+        if (dropsW.isEmpty) d5a else leaf("d5_ck")(dropsW.applyTo(d5a))._1
       }
 
     // stage 6 — the train split and the final anti ride literal
@@ -1029,8 +943,8 @@ object Curation {
     // tolerating eval-bucket extras (their matches name ids not in
     // dTrain, so the literal filter ignores them).
     val dTrain = d5.filter(bucketOf($"doc_id") < HoldoutBucket)
-    val contIds: Either[Array[Long], DataFrame] =
-      if (side.holdout.n == 0) Left(Array.empty[Long])
+    val contIds =
+      if (side.holdout.n == 0) DropSet.empty
       else if (localDelta) {
         val liveSet = live.toSet
         val codeRows = new java.util.ArrayList[org.apache.spark.sql.Row]()
@@ -1039,19 +953,19 @@ object Curation {
             r.getSeq[Long](1).foreach(c =>
               codeRows.add(org.apache.spark.sql.Row(r.getLong(0), c)))
         }
-        if (codeRows.isEmpty) Left(Array.empty[Long])
+        if (codeRows.isEmpty) DropSet.empty
         else {
           import org.apache.spark.sql.types._
-          dropIds("d6_decontaminate")(Dedup.contaminationAgainstCodes(
+          fetchDrops("d6_decontaminate")(Dedup.contaminationAgainstCodes(
             localFrame(codeRows, StructType(Seq(
               StructField("doc_id", LongType),
               StructField("code", LongType)))), side.holdout)
             .select($"doc_id"))
         }
-      } else dropIds("d6_decontaminate")(
+      } else fetchDrops("d6_decontaminate")(
         Dedup.contaminationAgainst(dTrain, side.holdout, smallTrain = small)
           .select($"doc_id"))
-    if (noDrops(contIds)) dTrain else minusDrops(dTrain, contIds)
+    contIds.applyTo(dTrain)
   }
 
   /** ONE ingest round against an EXPLICIT store — the store-in /

@@ -61,12 +61,9 @@ object GraftExec {
     * wrap the checkpointed RDD as a leaf plan — and keeps the count.
     *
     * With `keyOrdinal` ≥ 0 the same action also returns that long
-    * column's values, CAPPED: each partition retains at most cap+1 keys
-    * while still counting every row, so a backlog-sized input cannot
-    * turn the count into an O(rows) driver collect — over the cap the
-    * keys come back None and the count stays exact. Total ≤ cap implies
-    * no partition truncated (a truncating partition alone holds ≥
-    * cap+2 rows), so a Some is always the complete key set.
+    * column's values under `cap`, by [[graft.ext.DriverTier]]'s rules
+    * (its per-partition quota; None over the cap), while still counting
+    * every row, so the count stays exact either way.
     */
   def checkpointCounted(df: DataFrame, reliable: Boolean, keyOrdinal: Int,
       cap: Long): (DataFrame, Long, Option[Array[Long]]) = {
@@ -74,8 +71,7 @@ object GraftExec {
       .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val rdd = df.queryExecution.toRdd.map(_.copy())
     if (reliable) rdd.checkpoint() else rdd.localCheckpoint()
-    val perPart =
-      if (keyOrdinal < 0) 0 else math.min(cap + 1L, Int.MaxValue.toLong).toInt
+    val perPart = if (keyOrdinal < 0) 0 else graft.ext.DriverTier.quota(cap)
     val parts = spark.sparkContext.runJob(rdd,
       (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
         val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -89,8 +85,8 @@ object GraftExec {
       })
     val total = parts.iterator.map(_._1).sum
     val ids =
-      if (keyOrdinal < 0 || total > cap) None
-      else Some(Array.concat(parts.iterator.map(_._2).toIndexedSeq: _*))
+      if (keyOrdinal < 0) None
+      else graft.ext.DriverTier.complete(total, cap, parts.toIndexedSeq.map(_._2))
     (spark.internalCreateDataFrame(rdd, df.schema), total, ids)
   }
 }

@@ -337,4 +337,26 @@ class IncrementalCurationSpec extends AnyFunSuite {
       s"NULL-id rows must be rejected, got $local")
     assert(overCap === local, "the two tiers disagree on a NULL doc_id")
   }
+
+  test("a NULL doc_id never wins batch keep-min: its valid text twin survives curatedSurvivors") {
+    import spark.implicits._
+    // keep-min sorts nulls first, so a NULL-id twin admitted past stage
+    // 2 would win stage 3 and the valid doc would be lost (the oracle
+    // never sees the NULL row: its stage 3 joins USING (doc_id))
+    val Seq(valid, other) = pickIds(2, id => bucketOf(id) < 80)
+    val docs = Seq(Some(valid) -> text("twin"), None -> text("twin"),
+        Some(other) -> text("other"))
+      .map { case (id, t) => (id, "en", "web", t.length.toLong, t) }
+      .toDF("doc_id", "lang", "source", "n_chars", "text")
+    val emb = Seq(valid, other).zipWithIndex.map { case (id, i) =>
+      (id, (0 until 64).map(d => if (d == i) 1.0f else 0.0f))
+    }.toDF("vec_id", "embedding")
+    val trained = graft.ext.Similarity
+      .kmeansCentroids(emb, k = 2, iters = 1, roundTo = 4)
+    val survivors = try Curation.curatedSurvivors(spark, Curation.clean(docs),
+        emb, Some(() => trained)).select($"doc_id").as[Option[Long]]
+        .collect().toSeq.sorted
+      finally graft.ext.Dedup.clearSignatureCaches()
+    assert(survivors === Seq(valid, other).sorted.map(Option(_)))
+  }
 }

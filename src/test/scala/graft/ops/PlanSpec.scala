@@ -490,4 +490,22 @@ class PlanSpec extends AnyFunSuite {
     // outside any starred stage
     assert(cg.contains("*("), cg.take(800))
   }
+
+  test("runJob appears in src/main only in DriverTier and GraftExec") {
+    // every "fetch to the driver if small" goes through
+    // DriverTier.fetchCapped; GraftExec.checkpointCounted fuses its
+    // capped key fetch into the checkpoint action under the same rules
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main")
+    assert(Files.isDirectory(root), "spec must run from the repo root")
+    val allowed = Set("DriverTier.scala", "GraftExec.scala")
+    val offenders = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        !allowed(p.getFileName.toString))
+      .filter(p => "runJob\\s*\\(".r.findFirstIn(
+        new String(Files.readAllBytes(p), "UTF-8")).isDefined)
+      .toList
+    assert(offenders.isEmpty,
+      s"runJob outside DriverTier/GraftExec: ${offenders.mkString(", ")}")
+  }
 }

@@ -207,25 +207,24 @@ object Graph {
     * comes back through [[DriverTier.fetchCapped]] and union-find runs
     * on the driver ([[minRootFind]], equal by construction to
     * `connectedComponents(es).filter(node =!= component)`), so an empty
-    * pair list costs exactly the one fetch. Over `cap` the drop set is
-    * the distributed [[connectedComponents]] fixpoint over the
-    * STILL-CACHED edge table — identical drops.
+    * pair list costs exactly the one fetch. Over `cap` the drops come
+    * from the distributed [[connectedComponents]] fixpoint over `edges`
+    * — identical drops — and are fetched under the same cap: n nodes
+    * can pair n(n-1)/2 ways, so a drop set that fits comes back Local
+    * even when its pair list did not. A caller whose pair plan is
+    * expensive passes it cached, so the fallback re-reads blocks.
     */
   def componentNonRootsCapped(spark: SparkSession, edges: DataFrame,
       cap: Long): DropSet = {
-    // cached FIRST so the capped fetch materializes it and an over-cap
-    // fallback re-reads blocks instead of re-running the (expensive)
-    // pair-generation pipeline; registered query-scoped like the other
-    // signature caches
-    val e = graft.ext.Dedup.cached(edges.select(col("src"), col("dst")))
+    val e = edges.select(col("src"), col("dst"))
     DriverTier.fetchCapped(e, cap)(r => (r.getLong(0), r.getLong(1))) match {
       case Some(es) =>
         val find = minRootFind(es)
         DropSet.Local(es.iterator.flatMap(p => Iterator(p._1, p._2)).toArray
           .distinct.filter(n => find(n) != n))
-      case None => DropSet.Distributed(connectedComponents(spark, e)
+      case None => DropSet.fetch(connectedComponents(spark, e)
         .filter(col("node") =!= col("component"))
-        .select(col("node").as("doc_id")))
+        .select(col("node").as("doc_id")), cap)
     }
   }
 

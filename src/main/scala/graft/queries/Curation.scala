@@ -201,10 +201,11 @@ object Curation {
 
     // stage 4: MinHash-LSH near-dup drop list among survivors (q21's
     // pair generator on the survivor frame, q73's keep-min-id policy),
-    // from one capped pair fetch plus driver union-find. No drops: s4
-    // IS s3 (already cached — re-wrapping would double-register it)
-    val pairs4 = Dedup.minhashPairs(s3, MinJaccard)
-      .select($"doc1".as("src"), $"doc2".as("dst"))
+    // from one capped pair fetch plus driver union-find (the pair table
+    // cached, so an over-cap fallback re-reads it). No drops: s4 IS s3
+    // (already cached — re-wrapping would double-register it)
+    val pairs4 = Dedup.cached(Dedup.minhashPairs(s3, MinJaccard)
+      .select($"doc1".as("src"), $"doc2".as("dst")))
     val drops4 =
       graft.operators.Graph.componentNonRootsCapped(s, pairs4, ComponentPairCap)
     val s4 = if (drops4.isEmpty) s3 else Dedup.cached(drops4.applyTo(s3))
@@ -764,7 +765,7 @@ object Curation {
 
     // the tiers (see the scaladoc): survivor ids are tracked on the
     // driver on the local tier (drop sets are always Local there: each
-    // is a subset of a ≤-cap delta)
+    // is a subset of a ≤-cap delta, fetched under the cap)
     val small = d3Ids.isDefined
     val localDelta = small && n3 <= Dedup.DefaultMaxBucket
     var live: Array[Long] = d3Ids.getOrElse(Array.empty[Long])
@@ -777,12 +778,12 @@ object Curation {
         schema: org.apache.spark.sql.types.StructType): DataFrame =
       s.createDataFrame(rows, schema)
 
-    // within-delta near-dup components: union-find on the driver over
-    // the pair list fetched under the cap, the distributed fixpoint
-    // over it
+    // within-delta near-dup components; the over-cap tier caches its
+    // pair table for the fixpoint fallback to re-read
     def componentDrops(pairs: DataFrame): DropSet =
-      stage(s, "graft-drop d4_minhash_within")(
-        graft.operators.Graph.componentNonRootsCapped(s, pairs, DropListCap))
+      stage(s, "graft-drop d4_minhash_within")(graft.operators.Graph
+        .componentNonRootsCapped(s,
+          if (localDelta) pairs else Dedup.cached(pairs), DropListCap))
 
     // stage 4 — the delta's signature table derives ONCE and serves
     // both halves: COLLECTED to the driver on the local tier (its rows
@@ -926,11 +927,16 @@ object Curation {
           if (dropsW.isEmpty) d5a else leaf("d5_ck")(dropsW.applyTo(d5a))._1
         }
       } else {
-        // aD restricted to the d5a survivors: the vs-store drops all
-        // name aD vec_ids, so dropping them by id equals the semi-join
-        // on d5a's ids (over the cap the anti-join re-runs the drop plan)
-        val dropsW = fetchDrops("d5_semantic_within")(semanticWithinDrop(
-          drops5a.applyTo(aD, "vec_id"), smallDelta = small))
+        // aD restricted to the d5a survivors: a fetched vs-store list
+        // drops by id; a distributed one semi-joins the d5a leaf instead
+        // of re-running the store-side drop plan
+        val aD5 = drops5a match {
+          case DropSet.Distributed(_) =>
+            DropSet.Distributed(d5a.select($"doc_id")).restrict(aD, "vec_id")
+          case local => local.applyTo(aD, "vec_id")
+        }
+        val dropsW = fetchDrops("d5_semantic_within")(
+          semanticWithinDrop(aD5, smallDelta = small))
         if (dropsW.isEmpty) d5a else leaf("d5_ck")(dropsW.applyTo(d5a))._1
       }
 

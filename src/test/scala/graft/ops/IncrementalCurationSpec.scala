@@ -359,4 +359,47 @@ class IncrementalCurationSpec extends AnyFunSuite {
       finally graft.ext.Dedup.clearSignatureCaches()
     assert(survivors === Seq(valid, other).sorted.map(Option(_)))
   }
+
+  test("a near-dup component over the pair cap on the local tier still retires its docs before stage 5") {
+    import spark.implicits._
+    // four mutually near-dup delta docs give 6 within-delta pairs: at
+    // DropListCap = 5 the delta (5 docs) rides the local tier while its
+    // pair list is over the cap. `dup` is a non-root of that component
+    // and `twin` shares its embedding only; once `dup` is dropped at
+    // stage 4 it must not knock `twin` out at stage 5
+    val sIds = pickIds(3, id => bucketOf(id) < 80)
+    val Seq(root, dup, twin, dupB, dupC) =
+      pickIds(5, id => bucketOf(id) < 80, from = sIds.max + 1)
+    val base = text("nd")
+    def mk(rows: Seq[(Long, String)]) = Curation.clean(
+      rows.map { case (id, t) => (id, "en", "web", t.length.toLong, t) }
+        .toDF("doc_id", "lang", "source", "n_chars", "text"))
+    val store = mk(sIds.zipWithIndex.map { case (id, i) =>
+      (id, text(s"s${('a' + i).toChar}")) })
+    val delta = mk(Seq(root -> base, dup -> s"$base extraa",
+      twin -> text("twin"), dupB -> s"$base extrab",
+      dupC -> s"$base extraa extrab"))
+    val allIds = sIds ++ Seq(root, dup, twin, dupB, dupC)
+    def dim(id: Long): Int = allIds.indexOf(if (id == twin) dup else id)
+    val emb = allIds.map { id =>
+      (id, (0 until 64).map(d => if (d == dim(id)) 1.0f else 0.0f))
+    }.toDF("vec_id", "embedding")
+    val trained = graft.ext.Similarity
+      .kmeansCentroids(emb, k = 4, iters = 1, roundTo = 4)
+    def accepted(cap: Long): Seq[Long] = {
+      val capBefore = Curation.DropListCap
+      Curation.DropListCap = cap
+      try Curation.ingestDelta(spark, store, mk(Seq.empty), delta, emb,
+          trained).select($"doc_id").as[Long].collect().toSeq.sorted
+      finally Curation.DropListCap = capBefore
+    }
+    val batch = try Curation.curatedSurvivors(spark, store.unionByName(delta),
+        emb, Some(() => trained)).select($"doc_id").as[Long]
+        .collect().toSeq.filterNot(sIds.contains).sorted
+      finally graft.ext.Dedup.clearSignatureCaches()
+    assert(batch === Seq(root, twin), "fixture: q117 keeps the root and the twin")
+    assert(accepted(5L) === batch, "local tier with an over-cap pair list")
+    assert(accepted(100000L) === batch, "default cap")
+    assert(accepted(0L) === batch, "over-cap tier")
+  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Materialize a FULL sf1-class dataset — every table, not just
@@ -8,18 +8,18 @@ import org.apache.spark.sql.functions._
   * so the whole 140-query gate and the bench can run at 10× the volume
   * they were developed at.
   *
-  * Replication discipline (ScaleProbe's): K× data must be K INDEPENDENT
-  * copies of the same problem, not K verbatim copies of one problem —
-  * verbatim duplication turns every doc into an exact dup of its K−1
-  * replicas (dedup output explodes quadratically), collapses every
-  * replica vector onto cos=1.0 neighbors, and multiplies every
-  * per-key group instead of adding new keys. Concretely:
+  * Replication discipline: K× data must be K INDEPENDENT copies of the
+  * same problem, not K verbatim copies of one problem — verbatim
+  * duplication turns every doc into an exact dup of its K−1 replicas
+  * (dedup output explodes quadratically), collapses every replica
+  * vector onto cos=1.0 neighbors, and multiplies every per-key group
+  * instead of adding new keys. Concretely:
   *
   *  - documents: ids strided by 1e6, every token prefixed `r<k>_`
-  *    (replicas are shingle-disjoint), ALL columns kept — unlike
-  *    ScaleProbe's probe-only frame, `source` survives because the
-  *    mixing/curation family groups by it; n_chars recomputed from the
-  *    prefixed text (keeper policies read it);
+  *    (replicas are shingle-disjoint), ALL columns kept (`source`
+  *    survives because the mixing/curation family groups by it);
+  *    n_chars recomputed from the prefixed text (keeper policies read
+  *    it);
   *  - embeddings: ids strided, replica k's dimensions cyclically
   *    rotated by k (orthogonal permutation: intra-replica cosines — and
   *    so each replica's ANN/semantic-dedup structure — are preserved
@@ -43,13 +43,7 @@ object BuildSf1 {
     val src = args(0)
     val out = args(1)
     val k = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
 
     def reps(build: Int => DataFrame): DataFrame =
       (0 until k).map(build).reduce(_ unionAll _)

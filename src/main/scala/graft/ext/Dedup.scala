@@ -400,8 +400,8 @@ object Dedup {
     * shuffle of the dictionary-sized code set. With this shape — plus
     * `spark.sql.adaptive.forceOptimizeSkewedJoin` for the aggregate
     * sitting above the join — AQE splits a hot-code train partition at
-    * runtime whenever the holdout is too large to broadcast
-    * (`ScaleProbe --skew` measures it).
+    * runtime whenever the holdout is too large to broadcast (PlanSpec
+    * "AQE splits a skewed join partition at runtime" pins it).
     */
   private def skewJoinReady(codes: DataFrame): DataFrame =
     codes.select(col("code"), pmod(col("code"), lit(64L)).as("__s"))
@@ -1012,12 +1012,12 @@ object Dedup {
     * is Θ(Σ|cell|²), never corpus² — PROVIDED k grows with the corpus so
     * cells stay bounded (SemDeDup's practice; the paper runs k=11k for
     * 1.3e8 embeddings ≈ 12k/cell). The gated query uses the q101 trained
-    * k=16 index so the oracle can replay training; ScaleProbe's
-    * q108_semdedup_scaled runs the production rule (k = n/targetCell,
-    * hash-spread seeds) and measures pairs growing ~linearly with the
-    * corpus. At 100 TB: persist `cell` as the partition key (the IVF
-    * store layout PlanSpec pins) and the self-join reads co-located
-    * partitions; the centroid set stays broadcast-sized (k×dim floats).
+    * k=16 index so the oracle can replay training; the production rule
+    * is k = n/targetCell with hash-spread seeds, under which pairs grow
+    * ~linearly with the corpus (SCALE.md). At 100 TB: persist `cell` as
+    * the partition key (the IVF store layout PlanSpec pins) and the
+    * self-join reads co-located partitions; the centroid set stays
+    * broadcast-sized (k×dim floats).
     *
     * The `assigned` frame is cached ([[cached]], released by
     * [[clearSignatureCaches]]): it feeds both sides of the pair join, and
@@ -1034,8 +1034,7 @@ object Dedup {
     // q108/q119 plan and oracle byte-identical): a cell holding m
     // vectors scores m²/2 pairs, so one hot region turns the cell join
     // quadratic no matter how k was sized. Two tiers, both only above
-    // the cap (DedupSkewSpec pins the semantics, ScaleProbe --skew the
-    // runtime):
+    // the cap (DedupSkewSpec pins the semantics):
     //  1. cells above `maxCell` are SUB-BUCKETED by an 8-plane
     //     random-projection sign hash of the vector itself
     //     ([[Similarity.rpBucket]]) — a merely-POPULAR (diverse) region

@@ -34,7 +34,7 @@ import org.apache.spark.sql.functions._
   *    subspace); [[trainCodebooks]] is the production path — an L2
   *    Lloyd per subspace (the cosine trainer
   *    [[Similarity.kmeansCentroids]] optimizes a different objective),
-  *    recall recovery measured by `RecallProbe --pq`. At 100 TB train
+  *    recall recovery recorded in SCALE.md. At 100 TB train
   *    on the round-9 1% sample rule either way.
   */
 object Pq {

@@ -123,7 +123,7 @@ object Similarity {
     * the SAME rounded-cosine (1e-6) + centroid-id tie-break total order
     * the cell assignment uses — any probe-selection reimplementation
     * with raw cosines can pick a different cell across a sub-1e-6 tie
-    * (RecallProbe's scanned-fraction estimate did, review finding).
+    * (a scanned-fraction estimate once did, review finding).
     */
   def probeCells(cents: Seq[(Long, Seq[Float])], qvec: Seq[Float],
                  nprobe: Int): Seq[Long] =
@@ -202,7 +202,7 @@ object Similarity {
     * assignment/probe plan is identical whatever the centroid source).
     * Pass `centroids = Some(kmeansCentroids(...))` for trained coarse
     * quantization — on clustered data that is what makes recall exceed
-    * the scanned fraction (RecallProbe --clustered measures both). Plan
+    * the scanned fraction (AdvancedOpsSpec's recall floors pin it). Plan
     * shape at 100 TB: centroids broadcast (tiny), assignment is a
     * narrow map over the corpus (nCentroids cosines per row, all in one
     * codegen stage), and the corpus is then partitioned/bucketed BY
@@ -347,9 +347,9 @@ object Similarity {
     * What it does NOT protect against: distribution drift. New vectors
     * from clusters the training never saw still land in SOME nearest
     * old cell — recall at fixed nprobe degrades and cells skew (the
-    * drifted mass piles into few cells). `RecallProbe --drift` measures
-    * both effects; SCALE.md documents the retrain trigger (recall floor
-    * or max-cell-share threshold) calibrated from that probe.
+    * drifted mass piles into few cells). SCALE.md documents the retrain
+    * trigger (recall floor or max-cell-share threshold) and the drift
+    * measurement it was calibrated from.
     */
   def ivfAssign(batch: DataFrame,
       centroids: Seq[(Long, Seq[Float])]): DataFrame =

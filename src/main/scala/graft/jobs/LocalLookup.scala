@@ -40,8 +40,8 @@ import graft.ext.{Pq, Retrieval, Similarity}
   *  - scoring is driver arithmetic over the matched rows
   *    ([[Retrieval.scoreSingleLocal]] / [[Pq.adcTables]] — the SAME
   *    expression trees the Spark plans evaluate, shared at the source
-  *    level so parity is by construction, and pinned by LocalLookupSpec
-  *    plus the in-probe asserts of `StreamBench --lookup`).
+  *    level so parity is by construction, pinned by LocalLookupSpec
+  *    and by perfbench bm25_serve's `jobs.lookup.wrong_answers`).
   *
   * At 100 TB this is the serving split: the batch engine maintains the
   * export (a scannable table); point traffic hits this reader (or any

@@ -18,7 +18,8 @@ import java.util.concurrent.atomic.AtomicLong
   * under a single monitor (LinkedHashMap in access order mutates on
   * read), which serialized even cache hits across ALL keys — invisible
   * to single-threaded probes, a real p99 cliff under concurrent
-  * lookups (`StreamBench --lookup-mt` now measures it).
+  * lookups (perfbench's bm25_serve `jobs.lookup.overlap_p99_ms`
+  * measures it).
   *
   * Eviction is approximate-LRU: each access bumps a global-clock stamp;
   * inserts past `maxEntries` evict the smallest-stamp COMPLETED entries

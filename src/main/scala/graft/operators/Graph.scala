@@ -37,14 +37,6 @@ import graft.ext.{DriverTier, DropSet}
   */
 object Graph {
 
-  /** Round counters for the last completed fixpoint run on this driver —
-    * DIAGNOSTIC ONLY (GraphScaleProbe reads them to report measured
-    * round counts next to wall time). Written once at the end of each
-    * run; racy under concurrent queries, so never used for control flow.
-    */
-  @volatile private[graft] var lastStarRounds: Int = -1
-  @volatile private[graft] var lastLabelRounds: Int = -1
-
   /** All nodes reachable from `start` over directed `edges(src, dst)`,
     * including the start node. `maxIters` bounds runaway cycles
     * (diameter guard, not a semantic knob — the loop exits at fixpoint).
@@ -99,24 +91,23 @@ object Graph {
     var iter = 0
     var spilled = false
     while (iter < maxIters && frontierSet.nonEmpty && !spilled) {
-      // limit+1 bounds the collect: if one expansion overflows the
-      // driver budget the partial result is DISCARDED (limit picks an
-      // arbitrary subset) and tier 2 recomputes the round
-      val nextArr = e.filter(col("src").isin(frontierSet.toSeq: _*))
+      // an expansion over the driver budget comes back None (size
+      // unknown) and tier 2 recomputes the round
+      val next = e.filter(col("src").isin(frontierSet.toSeq: _*))
         .select(col("dst")).distinct()
-        .limit(driverNodeLimit + 1).as[Long].collect()
-      if (nextArr.length > driverNodeLimit) spilled = true // truncated: size unknown
-      else {
-        // spill on the TRUE closure size, not nextArr + visited — an
-        // expansion dominated by already-visited nodes (dense graphs)
-        // must not push a closure that still fits onto the join tier
-        val fresh = nextArr.toSet -- visitedSet
-        if (visitedSet.size + fresh.size > driverNodeLimit) spilled = true
-        else {
-          frontierSet = fresh
-          visitedSet ++= fresh
-          iter += 1
-        }
+      DriverTier.fetchCapped(next, driverNodeLimit)(_.getLong(0)) match {
+        case None => spilled = true
+        case Some(nextArr) =>
+          // spill on the TRUE closure size, not nextArr + visited — an
+          // expansion dominated by already-visited nodes (dense graphs)
+          // must not push a closure that still fits onto the join tier
+          val fresh = nextArr.toSet -- visitedSet
+          if (visitedSet.size + fresh.size > driverNodeLimit) spilled = true
+          else {
+            frontierSet = fresh
+            visitedSet ++= fresh
+            iter += 1
+          }
       }
     }
     if (!spilled) {
@@ -242,7 +233,7 @@ object Graph {
     */
   def connectedComponents(spark: SparkSession, edges: DataFrame,
       maxIters: Int = 50, checkpointEvery: Int = 10,
-      driverEdgeLimit: Long = 500000L, verbose: Boolean = false,
+      driverEdgeLimit: Long = 500000L,
       fallbackToStar: Boolean = true): DataFrame = {
     import spark.implicits._
     val e = edges.cache()
@@ -283,8 +274,6 @@ object Graph {
           cp
         } else next.cache()
       val fp = labels.agg(sum(col("lbl"))).as[Long].head()
-      if (verbose)
-        System.err.println(s"[cc] iter=${iter + 1} fingerprint=$fp")
       if (fp == fingerprint) done = true
       else fingerprint = fp
       // release prev on EVERY path incl. the convergence round — the
@@ -294,7 +283,6 @@ object Graph {
       iter += 1
     }
     und.unpersist(blocking = false)
-    lastLabelRounds = iter
     // Unlike reachable — where hitting maxIters merely under-approximates
     // a closure — unconverged labels here LOOK valid but are wrong for
     // every component whose diameter exceeds the iteration budget. Never
@@ -305,8 +293,6 @@ object Graph {
       labels.unpersist(blocking = false)
       if (lastCheckpoint ne labels) lastCheckpoint.unpersist(blocking = false)
       if (fallbackToStar) {
-        if (verbose) System.err.println(
-          s"[cc] min-label hit maxIters=$maxIters; falling back to star contraction")
         // hand the STILL-CACHED edge table to the star pass — passing the
         // raw `edges` would re-run its upstream pipeline (LSH pair
         // generation) from scratch on a graph that already paid maxIters
@@ -467,7 +453,6 @@ object Graph {
       // output, and finish with union-find — two stage waves instead
       // of a full round + checkpoint + fingerprint + collect chain
       if (finishEdgeLimit > 0 && fp._1 <= finishEdgeLimit) {
-        lastStarRounds = iter
         val es = largeStar(e, dedup = false).as[(Long, Long)].collect()
         release(e)
         // when checkpointEvery > 1 the endgame can fire on a
@@ -475,19 +460,7 @@ object Graph {
         // OLDER localCheckpoint — release that frame too or it stays
         // pinned for the session (r9 advice)
         if (lastCheckpoint ne e) release(lastCheckpoint)
-        val parent = scala.collection.mutable.Map.empty[Long, Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent(r)
-          var c = x
-          while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        es.foreach { case (a, b) =>
-          parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-        }
+        val find = minRootFind(es)
         val nodes = es.iterator.flatMap(p => Iterator(p._1, p._2)).toSeq.distinct
         val mapped = nodes.map(n => (n, find(n))).toDF("node", "component")
         // mapped is driver-local and ≤ 2*finishEdgeLimit nodes by
@@ -521,7 +494,6 @@ object Graph {
       if ((prev ne lastCheckpoint) && (prev ne e)) release(prev)
       iter += 1
     }
-    lastStarRounds = iter
     if (!done) throw new IllegalStateException(
       s"connectedComponentsStar did not converge in $maxIters rounds — " +
         "the bound is O(log n); raise maxIters only for astronomically " +

@@ -376,8 +376,7 @@ object Curation {
     * broadcast, not a collect.
     */
   def incrementalIngest(s: SparkSession, docs0: DataFrame, emb: DataFrame,
-      deltaPred: Column,
-      centroidsOpt: Option[Seq[(Long, Seq[Float])]] = None): DataFrame = {
+      deltaPred: Column): DataFrame = {
     import s.implicits._
 
     val cl = Dedup.cached(clean(docs0))
@@ -388,15 +387,10 @@ object Curation {
     // trained once and shared by the store chain and the delta stages.
     // Training reads only the embeddings table, so it runs OVERLAPPED
     // (guide §2.6) with the docs-side store stages and is awaited where
-    // stage 5 first needs it. `centroidsOpt` lets ScaleProbe substitute
-    // the production k-rule index (k = n/targetCell, hash-spread seeds)
-    // — the gated default is the q101-trained k=16 the oracle replays.
-    val trainedF = centroidsOpt match {
-      case Some(c) => scala.concurrent.Future.successful(c)
-      case None => graft.ext.DriverPool.submit(s)(
-        Similarity.kmeansCentroids(emb, k = IndexK, iters = IndexIters,
-          roundTo = IndexRound))
-    }
+    // stage 5 first needs it.
+    val trainedF = graft.ext.DriverPool.submit(s)(
+      Similarity.kmeansCentroids(emb, k = IndexK, iters = IndexIters,
+        roundTo = IndexRound))
     def awaitTrained(): Seq[(Long, Seq[Float])] =
       scala.concurrent.Await.result(trainedF,
         scala.concurrent.duration.Duration.Inf)
@@ -670,8 +664,8 @@ object Curation {
   @volatile private[graft] var DropListCap: Long = 100000L
 
   /** Delta stages guard–6 against a prepared [[StoreSide]] — the ONE
-    * delta chain every ingest surface runs: [[ingestDelta]] (q122,
-    * JobAudit), [[persistedIngest]] (q125) and the streaming
+    * delta chain every ingest surface runs: [[ingestDelta]] (q122),
+    * [[persistedIngest]] (q125) and the streaming
     * [[graft.streaming.CurationStream]]. Returns the ACCEPTED delta docs
     * (doc_id, lang, source, n_chars, text) — the rows an ingest appends
     * to the store; the batch surfaces add the pack-append manifest, the

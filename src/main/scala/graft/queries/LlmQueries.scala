@@ -445,7 +445,7 @@ object LlmQueries {
         .select($"doc_id",
           when(pmod($"doc_id", lit(10L)) === 0, concat($"text", lit(" v2")))
             .otherwise($"text").as("text"))
-        // 1e12 offset sits above any scaled id space: ScaleProbe
+        // 1e12 offset sits above any scaled id space: BuildSf1
         // replicates ids with a 1e6-per-replica stride, so a 1e6 shift
         // would collide with replica-1 ids on any >=2x corpus and
         // fan out the full-outer join with duplicate keys.

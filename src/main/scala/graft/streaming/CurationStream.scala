@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 
-import graft.ext.{Dedup, Packing, Similarity, TextStats}
+import graft.ext.{Dedup, DriverTier, Packing, Similarity, TextStats}
 import graft.jobs.Dfs
 import graft.queries.Curation
 
@@ -1342,21 +1342,11 @@ object CurationStream {
     // buckets whose [min,max] range AND Bloom admit some tombstone;
     // exact confirmation then scans ONLY candidate partitions (the
     // isin partition filter prunes directories at planning time).
-    // Over-cap detection rides the SAME action as the collect (fetch
-    // cap+1 rows; the extra row IS the verdict) — the previous
-    // count-then-collect recomputed the distinct twice.
+    // Over-cap detection rides the SAME action as the fetch.
     val sortedTomb: Option[Array[Long]] =
       if (stats.valuesIterator.forall(_.isEmpty)) None
-      // a cap at or above Int.MaxValue cannot be driver-collected at
-      // all — treat it as over-cap (full scan) rather than clamping
-      // the limit, which would silently TRUNCATE the tombstone set and
-      // let pruning skip a bucket holding a tail victim
-      else if (RedactCollectCap >= Int.MaxValue.toLong) None
-      else {
-        val head = tomb.limit((RedactCollectCap + 1L).toInt).collect()
-        if (head.length > RedactCollectCap) None
-        else Some(head.map(_.getLong(0)).sorted)
-      }
+      else DriverTier.fetchCapped(tomb, RedactCollectCap)(_.getLong(0))
+        .map(_.sorted)
     val candidates = sortedTomb match {
       case None => live
       case Some(arr) => live.filter { b =>

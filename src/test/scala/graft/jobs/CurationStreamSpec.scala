@@ -50,6 +50,18 @@ class CurationStreamSpec extends AnyFunSuite {
     q.stop(); q.awaitTermination()
   }
 
+  // every data file under the store, recursively: path -> (len, mtime)
+  private def fileState(storeDir: String): Map[String, (Long, Long)] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory)
+        Option(f.listFiles()).getOrElse(Array.empty).toSeq.flatMap(walk)
+      else if (f.isFile && !f.getName.startsWith("_") &&
+        !f.getName.startsWith(".")) Seq(f)
+      else Seq.empty
+    walk(new java.io.File(storeDir))
+      .map(f => f.getPath -> (f.length, f.lastModified)).toMap
+  }
+
   test("streamed batches equal sequential ingestDelta rounds; replay is a no-op") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -347,18 +359,7 @@ class CurationStreamSpec extends AnyFunSuite {
     def view() = CurationStream
       .manifestView(CurationStream.readStore(spark, storeDir))
       .collect().map(_.toSeq).toSet
-    // every data file under the store, recursively: path -> (len, mtime)
-    def fileState(): Map[String, (Long, Long)] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory)
-          Option(f.listFiles()).getOrElse(Array.empty).toSeq.flatMap(walk)
-        else if (f.isFile && !f.getName.startsWith("_") &&
-          !f.getName.startsWith(".")) Seq(f)
-        else Seq.empty
-      walk(new java.io.File(storeDir))
-        .map(f => f.getPath -> (f.length, f.lastModified)).toMap
-    }
-    def dataFiles() = fileState().size
+    def dataFiles() = fileState(storeDir).size
     val before = view()
     assert(before.size === storeIds.size + dIds.size)
     // the seed (batch −1) and the appends (batches 0–2) land in
@@ -374,9 +375,9 @@ class CurationStreamSpec extends AnyFunSuite {
     assert(view() === before, "compaction must not move a single offset")
     // O(touched): a second compaction finds every bucket at target and
     // must not rewrite a single byte
-    val compacted = fileState()
+    val compacted = fileState(storeDir)
     CurationStream.compactStore(spark, storeDir, targetFiles = 1)
-    assert(fileState() === compacted,
+    assert(fileState(storeDir) === compacted,
       "an already-compact store must not be rewritten")
 
     // redaction: content gone, offsets frozen — and O(touched): the
@@ -384,10 +385,10 @@ class CurationStreamSpec extends AnyFunSuite {
     val victim = dIds.head
     val initPartBefore = compacted.filter(_._1.contains("batch_bucket=-1"))
     CurationStream.redactStore(spark, storeDir, Seq(victim))
-    assert(fileState().filter(_._1.contains("batch_bucket=-1"))
+    assert(fileState(storeDir).filter(_._1.contains("batch_bucket=-1"))
       === initPartBefore,
       "redaction must not rewrite partitions without tombstoned ids")
-    assert(fileState().filter(_._1.contains("batch_bucket=0"))
+    assert(fileState(storeDir).filter(_._1.contains("batch_bucket=0"))
       !== compacted.filter(_._1.contains("batch_bucket=0")),
       "the victim's partition must actually have been rewritten")
     assert(view() === before, "redaction must not move a single offset")
@@ -406,6 +407,146 @@ class CurationStreamSpec extends AnyFunSuite {
       .select($"doc_id").collect().map(_.getLong(0)).toSet
     assert(accepted === Set(newId),
       "post-redaction resubmission is NEW content by definition")
+  }
+
+  test("store evolution: 8 streamed batches under compaction every 3 and a mid-run redaction equal a plain leg and a replay of the survivors") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // the maintenance-heavy lifecycle, scaled down: compactions and a
+    // redaction run between micro-batches of ONE live query, and the
+    // durable state must still be exactly the deterministic function of
+    // what was accepted — no offset drift, no attribution loss
+    val nBatches = 8
+    val redactAfter = 4
+    val storeIds = pickIds(8, id => id % 7 != 0 && bucketOf(id) < 80)
+    val teId = pickIds(1, id => id % 7 != 0 && bucketOf(id) >= 80).head
+    val dIds = pickIds(3 * nBatches, id => id % 7 == 0 && bucketOf(id) < 80)
+    def stag(i: Int): String = s"s${('a' + i).toChar}"
+    def mk(rows: Seq[(Long, String)]) =
+      rows.map { case (id, t) => (id, "en", "web", t.length.toLong, t) }
+        .toDF("doc_id", "lang", "source", "n_chars", "text")
+    val curated = mk(storeIds.zipWithIndex.map { case (id, i) =>
+      (id, text(stag(i))) })
+    val holdout = mk(Seq(teId -> text("holdout")))
+    val allIds = storeIds ++ Seq(teId) ++ dIds
+    val dims = allIds.zipWithIndex.toMap
+    val emb = allIds.map { id =>
+      (id, (0 until 64).map(d => if (d == dims(id) % 64) 1.0f else 0.0f))
+    }.toDF("vec_id", "embedding")
+    val trained = graft.ext.Similarity
+      .kmeansCentroids(emb, k = 16, iters = 1, roundTo = 4)
+    // batch i: a fresh doc, an exact dup (of a seed doc on even
+    // batches, of the previous batch's fresh doc on odd ones) and a
+    // second fresh doc — except right after the redaction, where the
+    // third doc resubmits the victim's text, which is new content once
+    // the redaction took it
+    val victim = dIds.head
+    def tag(i: Int, t: Char): String = s"b${('a' + i).toChar}$t"
+    val slices = (0 until nBatches).map { i =>
+      val Seq(a, b, c) = dIds.slice(3 * i, 3 * i + 3)
+      Seq(a -> text(tag(i, 'x')),
+        b -> text(if (i % 2 == 0) stag(i) else tag(i - 1, 'x')),
+        c -> text(if (i == redactAfter) tag(0, 'x') else tag(i, 'y')))
+    }
+    val expected = slices.flatMap(sl => Seq(sl(0)._1, sl(2)._1)).toSet
+
+    def leg(compactEvery: Int): (Set[Seq[Any]], Set[(Long, Long)], Int) = {
+      val storeDir = Files.createTempDirectory("cur_evolve").toString
+      val ckpt = Files.createTempDirectory("cur_evolve_ckpt").toString
+      CurationStream.initStore(curated, storeDir)
+      val in = MemoryStream[(Long, String, String, Long, String)]
+      val q = CurationStream.ingestStream(
+        in.toDF().toDF("doc_id", "lang", "source", "n_chars", "text"),
+        emb, trained, holdout, storeDir, ckpt)
+      var shrinks = 0
+      try {
+        slices.zipWithIndex.foreach { case (rows, i) =>
+          in.addData(rows.map { case (id, t) =>
+            (id, "en", "web", t.length.toLong, t) }: _*)
+          q.processAllAvailable()
+          if (compactEvery > 0 && (i + 1) % compactEvery == 0) {
+            val before = fileState(storeDir).size
+            CurationStream.compactStore(spark, storeDir, targetFiles = 1)
+            if (fileState(storeDir).size < before) shrinks += 1
+          }
+          if (i + 1 == redactAfter)
+            CurationStream.redactStore(spark, storeDir, Seq(victim))
+        }
+      } finally stopAndWait(q)
+      val store = CurationStream.readStore(spark, storeDir)
+      assert(store.filter($"doc_id" === victim && $"text".isNull).count() === 1L,
+        "the victim's content must stay redacted")
+      val accepted = store.filter($"ingest_batch" >= 0L)
+        .select($"doc_id", $"ingest_batch").as[(Long, Long)].collect().toSet
+      (CurationStream.manifestView(store).collect().map(_.toSeq).toSet,
+        accepted, shrinks)
+    }
+
+    val (maintained, accepted, shrinks) = leg(compactEvery = 3)
+    assert(shrinks === 2, "both compactions must rewrite the hot bucket")
+    assert(accepted.map(_._1) === expected,
+      "exact dups drop; the victim's resubmitted text is accepted")
+    val (plain, plainAccepted, _) = leg(compactEvery = 0)
+    assert(plainAccepted === accepted)
+    assert(maintained === plain,
+      "compaction must not move a single offset across the run")
+
+    // from-scratch replay: the seed plus exactly the accepted rows,
+    // appended with their original batch ids into a fresh store (the
+    // view never reads text, so the unredacted replay must match)
+    val replayDir = Files.createTempDirectory("cur_evolve_replay").toString
+    CurationStream.initStore(curated, replayDir)
+    slices.zipWithIndex.foreach { case (rows, i) =>
+      val kept = rows.filter(r => accepted((r._1, i.toLong)))
+      if (kept.nonEmpty)
+        CurationStream.appendStore(Curation.clean(mk(kept))
+          .select($"doc_id", $"lang", $"source", $"n_chars", $"text",
+            coalesce(size(graft.ext.TextStats.tokens($"text")), lit(0))
+              .cast("long").as("n_tok"), lit(i.toLong).as("ingest_batch")),
+          replayDir)
+    }
+    assert(CurationStream.manifestView(
+      CurationStream.readStore(spark, replayDir))
+      .collect().map(_.toSeq).toSet === maintained,
+      "the evolved store's manifest must equal a replay of its survivors")
+  }
+
+  test("mass redaction over the literal limit rewrites only the victims' bucket, under and over the collect cap") {
+    import spark.implicits._
+    // 20,000 tombstones (twice DropSet's 10,000-literal limit), all in
+    // bucket 0 (ingest_batch 0..15 <=> id % 64 < 16) of a sealed
+    // 4-bucket store: the default cap prunes discovery by the sidecars,
+    // cap 0 full-scans; both must null exactly the victims and leave
+    // buckets 1-3 byte-identical (O(touched))
+    val nIds = 20000L
+    for (cap <- Seq(CurationStream.RedactCollectCap, 0L)) {
+      val storeDir = Files.createTempDirectory("cur_redact_mass").toString
+      CurationStream.appendStore(spark.range(96000L).select(
+        $"id".as("doc_id"), lit("en").as("lang"), lit("web").as("source"),
+        lit(16L).as("n_chars"),
+        concat(lit("body "), ($"id" % 13L).cast("string")).as("text"),
+        lit(4L).as("n_tok"), pmod($"id", lit(64L)).as("ingest_batch")),
+        storeDir, mode = "overwrite")
+      CurationStream.compactStore(spark, storeDir)
+      assert(CurationStream.liveBuckets(storeDir) === Seq(0L, 1L, 2L, 3L))
+      def inBucket0(state: Map[String, (Long, Long)]) =
+        state.filter(_._1.contains("batch_bucket=0/"))
+      val before = fileState(storeDir)
+      val tomb = spark.range(nIds)
+        .select(expr("(id DIV 16) * 64 + id % 16").as("doc_id"))
+      val prevCap = CurationStream.RedactCollectCap
+      CurationStream.RedactCollectCap = cap
+      try CurationStream.redactStore(spark, storeDir, tomb)
+      finally CurationStream.RedactCollectCap = prevCap
+      val after = fileState(storeDir)
+      assert(CurationStream.readStore(spark, storeDir)
+        .filter($"text".isNull).count() === nIds, s"cap $cap")
+      assert(after -- inBucket0(after).keys ===
+        before -- inBucket0(before).keys,
+        s"cap $cap: buckets 1-3 must keep every file's (path, length, mtime)")
+      assert(inBucket0(after) !== inBucket0(before),
+        s"cap $cap: the victims' bucket must have been rewritten")
+    }
   }
 
   test("an interrupted maintenance swap rolls forward on recovery") {
@@ -686,8 +827,8 @@ class CurationStreamSpec extends AnyFunSuite {
       "a missing sidecar must fall back to scanning that bucket")
 
     // over-cap fallback: force the collect cap to zero WITH sidecars
-    // present — the `head.length > RedactCollectCap` branch itself must
-    // execute, take the full-scan path, and stay exact
+    // present — the fetch's over-cap verdict itself must come back,
+    // take the full-scan path, and stay exact
     val tomb3 = spark.range(800L).filter($"id" % 64L >= 32L &&
       $"id" % 64L < 48L).select($"id".as("doc_id")).limit(10)
     val expected3 = expected2 + tomb3.count()

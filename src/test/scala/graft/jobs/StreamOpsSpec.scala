@@ -529,7 +529,7 @@ abstract class StreamOpsBehaviors(stateStoreProvider: Option[String])
     import spark.implicits._
     implicit val sc = spark.sqlContext
     import graft.ext.Similarity
-    val all = graft.RecallProbe.clusteredFixture(spark, 300).cache()
+    val all = graft.TestFixtures.clusteredFixture(spark, 300).cache()
     val cents = Similarity.kmeansCentroids(all, k = 16, iters = 3, roundTo = 4)
     // the serving index is the APPEND-ONLY disk store (two ingests), not
     // an in-memory frame — the layout incremental maintenance writes
@@ -570,7 +570,7 @@ abstract class StreamOpsBehaviors(stateStoreProvider: Option[String])
     import spark.implicits._
     implicit val sc = spark.sqlContext
     import graft.ext.{Pq, Similarity}
-    val all = graft.RecallProbe.clusteredFixture(spark, 300).cache()
+    val all = graft.TestFixtures.clusteredFixture(spark, 300).cache()
     val cents = Similarity.kmeansCentroids(all, k = 16, iters = 3, roundTo = 4)
     val cbs = Pq.seedCodebooks(all, m = 4, ksub = 16)
     // the serving index is the exported cell-partitioned CODES store —

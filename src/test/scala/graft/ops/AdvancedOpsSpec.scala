@@ -452,7 +452,7 @@ class AdvancedOpsSpec extends AnyFunSuite {
     import graft.ext.Similarity
     import org.apache.spark.sql.functions.typedLit
     import graft.queries.Num.{r => rnd}
-    val all = graft.RecallProbe.clusteredFixture(spark, 800).cache()
+    val all = graft.TestFixtures.clusteredFixture(spark, 800).cache()
     val base = all.filter($"vec_id" < 560)
     val delta = all.filter($"vec_id" >= 560)
     val cents = Similarity.kmeansCentroids(base, k = 16, iters = 3, roundTo = 4)
@@ -492,7 +492,7 @@ class AdvancedOpsSpec extends AnyFunSuite {
   test("PQ encode/ADC: plain-Scala replay parity; recall floor on clustered vectors") {
     import spark.implicits._
     import graft.ext.Pq
-    val all = graft.RecallProbe.clusteredFixture(spark, 600).cache()
+    val all = graft.TestFixtures.clusteredFixture(spark, 600).cache()
     val cbs = Pq.seedCodebooks(all, m = 4, ksub = 16)
     val vecs = all.select($"vec_id", $"embedding")
       .as[(Long, Seq[Float])].collect().sortBy(_._1)
@@ -568,7 +568,7 @@ class AdvancedOpsSpec extends AnyFunSuite {
   test("trainCodebooks: deterministic across partitionings; shape and quantization invariants") {
     import spark.implicits._
     import graft.ext.Pq
-    val all = graft.RecallProbe.clusteredFixture(spark, 400).cache()
+    val all = graft.TestFixtures.clusteredFixture(spark, 400).cache()
     val a = Pq.trainCodebooks(all, m = 4, ksub = 16, iters = 2)
     val b = Pq.trainCodebooks(all.repartition(3), m = 4, ksub = 16, iters = 2)
     assert(a === b, "training must not depend on the partition layout")
@@ -591,7 +591,7 @@ class AdvancedOpsSpec extends AnyFunSuite {
   test("IVF-PQ composition: equals ADC restricted to the probed cells") {
     import spark.implicits._
     import graft.ext.{Pq, Similarity}
-    val all = graft.RecallProbe.clusteredFixture(spark, 500).cache()
+    val all = graft.TestFixtures.clusteredFixture(spark, 500).cache()
     val cbs = Pq.seedCodebooks(all, m = 4, ksub = 16)
     val cents = all.filter($"vec_id" < 16)
       .select($"vec_id", $"embedding").as[(Long, Seq[Float])]

@@ -508,4 +508,34 @@ class PlanSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"runJob outside DriverTier/GraftExec: ${offenders.mkString(", ")}")
   }
+
+  test("harness surface: mains, session builder, listener and capped fetches stay with their owners") {
+    // five mains (the driver contract, the data builder and two
+    // diagnostics), one session factory, one job listener; the
+    // "limit(cap + 1)" probe of a capped fetch lives only in
+    // DriverTier.fetchCapped (runJob has its own check above)
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), "spec must run from the repo root")
+    val sources = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString.replace('\\', '/') ->
+        new String(Files.readAllBytes(p), "UTF-8"))
+      .toList
+    val owners = Seq(
+      "def main\\(" -> Set("graft/Bench.scala", "graft/Verify.scala",
+        "graft/QueryProbe.scala", "graft/Explain.scala", "graft/BuildSf1.scala"),
+      "SparkSession\\.builder" -> Set("graft/Sessions.scala"),
+      "SparkListener" -> Set("graft/QueryProbe.scala"),
+      "limit\\(.{0,60}?\\+\\s*1" -> Set("graft/ext/DriverTier.scala"))
+    for ((pattern, allowed) <- owners) {
+      val re = pattern.r
+      val offenders = sources.collect {
+        case (path, src) if !allowed(path) && re.findFirstIn(src).isDefined =>
+          path
+      }
+      assert(offenders.isEmpty,
+        s"`$pattern` outside ${allowed.mkString(", ")}: ${offenders.mkString(", ")}")
+    }
+  }
 }

@@ -49,7 +49,7 @@ def main():
     def fresh_con():
         c = duckdb.connect()
         for t in TABLES:
-            # Spark-written tables (e.g. BuildScaled's scaled corpus) are
+            # Spark-written tables (e.g. BuildSf1's replicated sf1) are
             # DIRECTORIES of part files; driver testdata is single files
             path = f"{sf}/{t}.parquet"
             pat = f"{path}/*.parquet" if os.path.isdir(path) else path

@@ -20,7 +20,7 @@ object QueryProbe {
       .getOrElse(Seq("q1_agg"))
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // A/B experiment hook: SPARK_GRAFT_PROBE_CONF="k=v;k2=v2" applies
     // extra session confs so config hypotheses are measurable without a
     // code change per trial.

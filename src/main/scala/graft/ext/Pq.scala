@@ -214,30 +214,20 @@ object Pq {
     adcScore(encode(embeddings, cbs), qvec, queryVecId, k, cbs)
   }
 
-  /** The per-subspace query→codebook ADC tables as driver values:
-    * `tables(j)(code)` is the scaled-integer L2² between the query's
-    * j-th subvector and that subspace's `code`-th centroid (codes dense
-    * per [[requireDense]]). ONE construction shared by the Spark plan
-    * ([[adcScore]] turns them into literals) and the no-Spark
-    * point-lookup path ([[graft.jobs.LocalLookup]]), so the two cannot
-    * drift.
+  /** The ADC tail shared by [[adcTopK]] and [[ivfAdcTopK]]: per-subspace
+    * query tables as plan literals (`tables(j)(code)` is the
+    * scaled-integer L2² between the query's j-th subvector and that
+    * subspace's `code`-th centroid, codes dense per [[requireDense]]),
+    * per-doc exact long sum, rank.
     */
-  private[graft] def adcTables(qvec: Seq[Float],
-      cbs: Codebooks): Array[Array[Long]] = {
+  private def adcScore(enc: DataFrame, qvec: Seq[Float], queryVecId: Long,
+      k: Int, cbs: Codebooks): DataFrame = {
     requireDense(cbs)
     val d = cbs.head.head._2.length
-    cbs.zipWithIndex.map { case (cb, j) =>
+    val tables = cbs.zipWithIndex.map { case (cb, j) =>
       val qsub = qvec.slice(j * d, j * d + d)
       cb.sortBy(_._1).map { case (_, cv) => l2Long(qsub, cv) }.toArray
-    }.toArray
-  }
-
-  /** The ADC tail shared by [[adcTopK]] and [[ivfAdcTopK]]: per-subspace
-    * query tables as plan literals, per-doc exact long sum, rank.
-    */
-  private[graft] def adcScore(enc: DataFrame, qvec: Seq[Float], queryVecId: Long,
-      k: Int, cbs: Codebooks): DataFrame = {
-    val tables = adcTables(qvec, cbs)
+    }
     val dist = tables.zipWithIndex.map { case (tbl, j) =>
       element_at(array(tbl.map(lit(_)).toIndexedSeq: _*),
         (element_at(col("codes"), j + 1) + 1).cast("int"))

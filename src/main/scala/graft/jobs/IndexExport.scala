@@ -1,8 +1,9 @@
 package graft.jobs
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.graft.GraftColumns
 
 import graft.ext.{Pq, Retrieval, Similarity}
@@ -11,45 +12,50 @@ import graft.ext.Retrieval.Bm25Index
 /** The point-lookup serving tier: export the retrieval indexes
   * ([[Retrieval.bm25Index]] postings/df, [[Pq]] codes) to a sorted,
   * hash-bucketed, partition-pruned parquet layout, and serve a SINGLE
-  * query by reading only the buckets/cells it touches — no streaming
+  * query by reading only the buckets it touches — no streaming
   * micro-batch floor, no full-index scan.
   *
   * Layout contract (what makes the lookup O(query), not O(index)):
   *  - postings and df are directory-partitioned by
   *    `bucket = pmod(xxhash64(term), nBuckets)` and SORTED by (term,
-  *    doc_id) within files, so a lookup prunes to `|terms|` bucket
-  *    directories at planning time (partition pruning — the other
-  *    `nBuckets − |terms|` directories are never listed into the scan),
-  *    and the pushed `term IN (…)` filter skips row groups via the
-  *    min/max statistics the sort makes tight;
-  *  - the lookup client computes bucket ids DRIVER-side via
+  *    doc_id) within files, so a lookup reads only its `|terms|` bucket
+  *    directories, and the pushed `term IN (…)` filter skips row groups
+  *    via the min/max statistics the sort makes tight;
+  *  - the lookup computes bucket ids DRIVER-side via
   *    [[GraftColumns.xxhash64String]] (bit-identical to the export's
-  *    `xxhash64` column — same expression evaluated eagerly, so
+  *    `xxhash64` column — same expression evaluated eagerly), so
   *    pruning costs zero Spark jobs;
   *  - corpus stats (n, sum_dl, n_buckets) ride a one-row meta file;
   *  - PQ codes are partitioned by IVF cell (the
-  *    [[Similarity.ivfAppendStore]] layout, but storing CODES so the
-  *    first-pass scan reads ~m bytes/vec, not the floats).
+  *    [[Similarity.ivfAppendStore]] layout, but storing CODES so a
+  *    scan reads ~m bytes/vec, not the floats).
   *
   * Epoch versioning (what makes a RE-export safe under live traffic):
   * every export writes a fresh immutable `epoch_<n>/` directory under
   * the layout root and then atomically swaps the `_LATEST` pointer file
-  * onto it — the UpsertSink `_LATEST` discipline. Readers resolve the
-  * pointer once per lookup (a ~20-byte local read) and cache per EPOCH
-  * directory, so a lookup concurrent with a re-export serves either the
-  * old epoch or the new one in full — never a mixed or missing-file
-  * read (IndexExportSpec re-exports inside a measured lookup loop). The
-  * previous epoch is retained until the NEXT export prunes it
-  * ([[KeepEpochs]]), so in-flight readers on the outgoing epoch finish
-  * against intact files.
+  * onto it — the UpsertSink `_LATEST` discipline. The previous epoch is
+  * retained until the NEXT export prunes it ([[KeepEpochs]]), and an
+  * epoch is never pruned while an in-JVM reader pins it.
   *
-  * Parity contract: [[bm25Lookup]] reconstructs a [[Bm25Index]] over
-  * the pruned scans and serves through [[Retrieval.bm25TopKIndexed]]
-  * itself — the scored rows are the same rows the in-memory index
-  * serves, so results are hash-identical by construction (pinned by
-  * IndexExportSpec and the q120 gate against the shared q105 oracle).
-  * [[pqLookup]] reads pruned cells into [[Pq.adcScore]], the exact
-  * scoring tail `ivfAdcTopK` uses.
+  * One pinned read per lookup: [[bm25LookupSingle]] and [[bm25Lookup]]
+  * each take ONE [[withPinnedEpoch]], load that epoch's
+  * [[LocalLookup.bm25Layout]], decide the tier against
+  * [[LocalLookupCap]] and compute every row inside the pin — the
+  * driver-local tier, or the distributed plan collected there (at most
+  * k·|queries| rows). Both tiers return a local frame, so no lazy plan
+  * outlives its pin, and any number of re-exports during or after a
+  * lookup cannot make it read a pruned file. There is no Spark reader
+  * cache: the fallback scans exactly the bucket files the layout lists
+  * (the local tier's own listing), with `n`, `sum_dl` and `n_buckets`
+  * from the layout's meta row.
+  *
+  * Parity contract: [[bm25LookupPlan]] reconstructs a [[Bm25Index]]
+  * over the pruned scans and serves through
+  * [[Retrieval.bm25TopKIndexed]] itself — the scored rows are the same
+  * rows the in-memory index serves, so results are hash-identical by
+  * construction (pinned by IndexExportSpec and the q120 gate against
+  * the shared q105 oracle); the local tier equals the plans by shared
+  * arithmetic (LocalLookupSpec).
   *
   * At 100 TB: the export is the KV tier SCALE.md promised — postings
   * for a term live in one directory, sorted, so a key-value store (or
@@ -78,17 +84,16 @@ object IndexExport {
   val MaxAdaptiveBuckets = 4096
 
   def adaptiveBuckets(sumDl: Long): Int =
-    sys.env.get("SPARK_GRAFT_BM25_BUCKETS").map(_.toInt).getOrElse(
-      math.max(4L, math.min(MaxAdaptiveBuckets.toLong,
-        (sumDl + BucketTokenTarget - 1) / BucketTokenTarget)).toInt)
+    math.max(4L, math.min(MaxAdaptiveBuckets.toLong,
+      (sumDl + BucketTokenTarget - 1) / BucketTokenTarget)).toInt
 
   /** Epochs retained after an export: the live one plus its
     * predecessor, so one re-export never deletes files out from under
     * a reader opened moments before the swap. Epochs OLDER than the
     * window survive while (a) an in-JVM reader holds them pinned
-    * ([[withPinnedEpoch]] — the LocalLookup tier pins for the duration
-    * of every lookup, so N re-exports inside one in-flight lookup can
-    * no longer delete the epoch it is reading), or (b) they are younger
+    * ([[withPinnedEpoch]] — every lookup pins for its whole duration,
+    * so N re-exports inside one in-flight lookup can no longer delete
+    * the epoch it is reading), or (b) they are younger
     * than [[PruneGraceMs]] (protection for EXTERNAL readers this JVM
     * cannot refcount). The next export re-attempts the prune, so a
     * protected epoch is deleted as soon as its pins drop and its grace
@@ -146,7 +151,7 @@ object IndexExport {
   /** Run `f` against the CURRENT epoch directory with the epoch PINNED:
     * [[pruneEpochs]] will not delete a pinned epoch, so a reader that
     * straddles any number of re-exports finishes against intact files.
-    * The local point-lookup tier wraps every lookup in this; long-lived
+    * Both point-lookup tiers run inside one pin per lookup; long-lived
     * external readers use the [[PruneGraceMs]] window instead. If the
     * resolved epoch loses the race with a concurrent prune before the
     * pin lands (microseconds), the pin is retried against the fresh
@@ -219,9 +224,8 @@ object IndexExport {
 
   /** Drop epochs older than the newest [[KeepEpochs]] — except those
     * pinned by an in-flight reader or younger than [[PruneGraceMs]] —
-    * and invalidate any reader entries that pointed at them: the export
-    * invalidates its own stale state instead of relying on callers to
-    * remember a `clearReaders()`. Protected epochs are simply skipped;
+    * and invalidate the layout cache entries that pointed at them.
+    * Protected epochs are simply skipped;
     * the NEXT export's prune collects them once unpinned and aged.
     */
   private def pruneEpochs(outDir: String): Unit = {
@@ -240,8 +244,6 @@ object IndexExport {
         val inGrace = now - st.getModificationTime < PruneGraceMs
         if (!pinned && !inGrace) {
           prunePauseHook(path)
-          bm25Readers.removeIf(_ == path)
-          codeReaders.removeIf(_ == path)
           LocalLookup.invalidateEpoch(path)
           Dfs.delete(st.getPath)
           ()
@@ -337,46 +339,10 @@ object IndexExport {
     pruneEpochs(outDir)
   }
 
-  /** Long-lived reader over one EPOCH: the resolved file listings (the
-    * planner's InMemoryFileIndex rides inside the DataFrames) and the
-    * meta row, opened ONCE per epoch directory. Point-lookup latency is
-    * the point of the tier; re-listing 2×nBuckets partition directories
-    * and re-reading the meta file on EVERY query would spend more time
-    * in the object store than in the index. Epoch directories are
-    * immutable, so a cached reader can never serve a stale listing.
-    */
-  final case class Bm25Reader(postings: DataFrame, dfTable: DataFrame,
-      n: Long, sumDl: Long, nBuckets: Int)
-
-  // LRU-bounded: a serving process cycling exports must not retain one
-  // reader per dead epoch forever (the export prunes its own epochs'
-  // entries eagerly; the bound covers many distinct layout roots)
-  private val bm25Readers = new Lru[String, Bm25Reader](32)
-  private val codeReaders = new Lru[String, DataFrame](32)
-
-  /** Drop cached readers (tests). Exports invalidate their own pruned
-    * epochs; this remains for harness cleanup between corpora.
-    */
-  def clearReaders(): Unit = { bm25Readers.clear(); codeReaders.clear() }
-
-  // explicit layout schemas: no footer inference on the serving path,
-  // and an EMPTY corpus's export (partition dirs absent, only _SUCCESS)
-  // still reads as an empty frame instead of UNABLE_TO_INFER_SCHEMA
+  // explicit layout schemas: no footer inference on the serving path
   private val PostingsSchema = "doc_id BIGINT, dl BIGINT, term STRING, " +
     "tf BIGINT, bucket BIGINT"
   private val DfSchema = "term STRING, df BIGINT, bucket BIGINT"
-  private val CodesSchema = "vec_id BIGINT, codes ARRAY<BIGINT>, cell BIGINT"
-
-  def bm25Reader(spark: SparkSession, outDir: String): Bm25Reader =
-    bm25Readers.get(resolveEpoch(outDir)) { dir =>
-      val meta = spark.read.parquet(s"$dir/meta").collect().head
-      val sumDl = if (meta.isNullAt(meta.fieldIndex("sum_dl"))) 0L
-        else meta.getAs[Long]("sum_dl")
-      Bm25Reader(
-        spark.read.schema(PostingsSchema).parquet(s"$dir/postings"),
-        spark.read.schema(DfSchema).parquet(s"$dir/df"),
-        meta.getAs[Long]("n"), sumDl, meta.getAs[Int]("n_buckets"))
-    }
 
   /** Max matched postings a lookup may serve through the driver-local
     * tier ([[LocalLookup]]): the summed df of the query's terms, known
@@ -392,87 +358,97 @@ object IndexExport {
     sys.env.get("SPARK_GRAFT_LOCAL_LOOKUP_CAP").map(_.toLong)
       .getOrElse(100000L)
 
-  private val SingleSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("doc_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("n_terms",
-      org.apache.spark.sql.types.LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("score",
-      org.apache.spark.sql.types.DoubleType, nullable = false)))
+  private val SingleSchema = StructType.fromDDL(
+    "doc_id BIGINT, n_terms BIGINT NOT NULL, score DOUBLE NOT NULL")
+  private val BatchSchema = StructType.fromDDL("query_id BIGINT NOT NULL, " +
+    "rank BIGINT NOT NULL, doc_id BIGINT, score DOUBLE NOT NULL")
 
-  private val BatchSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("query_id",
-      org.apache.spark.sql.types.LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("rank",
-      org.apache.spark.sql.types.LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("doc_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("score",
-      org.apache.spark.sql.types.DoubleType, nullable = false)))
-
-  private def localFrame(spark: SparkSession,
-      rows: Seq[org.apache.spark.sql.Row],
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
+  private def localFrame(spark: SparkSession, rows: Seq[Row],
+      schema: StructType): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
-  /** Serve queries `(query_id, terms)` through the exported layout.
-    * Under [[LocalLookupCap]] the rows come from the no-Spark local
-    * tier ([[LocalLookup.bm25BatchLocal]] — driver page reads +
-    * driver arithmetic, zero jobs; the verdict-sanctioned routing for
-    * tiny probe sets); over the cap, or when a matched posting carries
-    * a NULL doc_id, the distributed plan runs: prune to the terms'
-    * buckets (computed driver-side), push the term filter into the
-    * sorted scans, and run the SAME [[Retrieval.bm25TopKIndexed]]
-    * serving plan over the pruned index. Identical rows either way
-    * (LocalLookupSpec parity + the shared q105-oracle gate).
+  /** Serve queries `(query_id, terms)` through the exported layout,
+    * inside one pin: under [[LocalLookupCap]] the rows come from the
+    * no-Spark local tier ([[LocalLookup.bm25Batch]] — driver page reads
+    * + driver arithmetic, zero jobs); over the cap, or when a matched
+    * posting carries a NULL doc_id, [[bm25LookupPlan]] runs and is
+    * collected. Identical rows either way (LocalLookupSpec parity + the
+    * shared q105-oracle gate), returned as a local frame.
     */
   def bm25Lookup(spark: SparkSession, outDir: String,
-      queries: Seq[(Long, Seq[String])], k: Int): DataFrame = {
-    import spark.implicits._
-    LocalLookup.bm25BatchLocal(outDir, queries, k, LocalLookupCap) match {
-      case Some(rows) =>
-        localFrame(spark, rows.map(r =>
-          org.apache.spark.sql.Row(r._1, r._2, r._3, r._4)), BatchSchema)
-      case None =>
-        val r = bm25Reader(spark, outDir)
-        val terms = queries.flatMap(_._2).filter(_ != null).distinct
-        val buckets = terms.map(termBucket(_, r.nBuckets)).distinct
-        def pruned(base: DataFrame, cols: Seq[String]): DataFrame =
-          base.filter(col("bucket").isin(buckets: _*) &&
-            col("term").isin(terms: _*)).select(cols.map(col): _*)
-        val idx = Bm25Index(
-          pruned(r.postings, Seq("doc_id", "dl", "term", "tf")),
-          pruned(r.dfTable, Seq("term", "df")), r.n, r.sumDl)
-        Retrieval.bm25TopKIndexed(idx, queries.toDF("query_id", "terms"), k)
+      queries: Seq[(Long, Seq[String])], k: Int): DataFrame =
+    withPinnedEpoch(outDir) { epoch =>
+      val l = LocalLookup.bm25Layout(epoch)
+      val rows = LocalLookup.bm25Batch(l, queries, k, LocalLookupCap)
+        .map(_.map { case (q, r, d, sc) => Row(q, r, d, sc) })
+        .getOrElse(bm25LookupPlan(spark, l, queries, k).collect().toSeq)
+      localFrame(spark, rows, BatchSchema)
     }
-  }
 
-  /** The SINGLE-query point lookup. Under [[LocalLookupCap]] the rows
-    * come from [[LocalLookup.bm25SingleCapped]] (zero Spark jobs; the
-    * same rows by the bit-parity contract [[Retrieval.scoreSingleLocal]]
-    * pins); over it: terms as driver constants, bucket pruning + pushed
-    * term filter on the long-lived reader's scans, and
-    * [[Retrieval.bm25ScoreSingle]]'s one-shuffle plan. Output
-    * (doc_id, n_terms, score) — the [[Retrieval.bm25TopK]] shape,
-    * scores bit-identical to every other bm25 path (q121 gate).
+  /** The SINGLE-query point lookup, inside one pin: under
+    * [[LocalLookupCap]] the rows come from [[LocalLookup.bm25Single]]
+    * (zero Spark jobs; the same rows by the bit-parity contract
+    * [[Retrieval.scoreSingleLocal]] pins); over it [[bm25SinglePlan]]
+    * runs and is collected. Output (doc_id, n_terms, score) — the
+    * [[Retrieval.bm25TopK]] shape, scores bit-identical to every other
+    * bm25 path (q121 gate) — as a local frame.
     */
   def bm25LookupSingle(spark: SparkSession, outDir: String,
-      terms: Seq[String], k: Int): DataFrame = {
-    LocalLookup.bm25SingleCapped(outDir, terms, k, LocalLookupCap) match {
-      case Some(rows) =>
-        localFrame(spark, rows.map(r =>
-          org.apache.spark.sql.Row(r._1, r._2, r._3)), SingleSchema)
-      case None =>
-        val r = bm25Reader(spark, outDir)
-        val ts = terms.filter(_ != null).distinct
-        val buckets = ts.map(termBucket(_, r.nBuckets)).distinct
-        def pruned(base: DataFrame, cols: Seq[String]): DataFrame =
-          base.filter(col("bucket").isin(buckets: _*) &&
-            col("term").isin(ts: _*)).select(cols.map(col): _*)
-        Retrieval.bm25ScoreSingle(
-          pruned(r.postings, Seq("doc_id", "dl", "term", "tf")),
-          pruned(r.dfTable, Seq("term", "df")), r.n, r.sumDl, k)
+      terms: Seq[String], k: Int): DataFrame =
+    withPinnedEpoch(outDir) { epoch =>
+      val l = LocalLookup.bm25Layout(epoch)
+      val rows = LocalLookup.bm25Single(l, terms, k, LocalLookupCap)
+        .map(_.map { case (d, n, sc) => Row(d, n, sc) })
+        .getOrElse(bm25SinglePlan(spark, l, terms, k).collect().toSeq)
+      localFrame(spark, rows, SingleSchema)
     }
+
+  /** `table` of one epoch, read from the query's bucket files only (the
+    * layout's listing, no directory scan) with the bucket and term
+    * filters pushed into the sorted scan. With no file to read (a
+    * bucket the export never wrote) the explicit schema reads empty.
+    */
+  private def pruned(spark: SparkSession, l: LocalLookup.Bm25Layout,
+      table: String, schema: String, terms: Seq[String],
+      cols: Seq[String]): DataFrame = {
+    val buckets = terms.map(termBucket(_, l.nBuckets)).distinct
+    val files = LocalLookup.epochFiles(l, table, buckets)
+    spark.read.schema(schema).option("basePath", s"${l.dir}/$table")
+      .parquet(files.map(_.toString): _*)
+      .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
+      .select(cols.map(col): _*)
+  }
+
+  /** The distributed batch plan over one pinned epoch: the pruned scans
+    * rebuilt into a [[Bm25Index]] with the layout's exact stats, served
+    * by the SAME [[Retrieval.bm25TopKIndexed]] plan as the in-memory
+    * index. Run it only inside the pin that loaded `l`.
+    */
+  private[jobs] def bm25LookupPlan(spark: SparkSession,
+      l: LocalLookup.Bm25Layout, queries: Seq[(Long, Seq[String])],
+      k: Int): DataFrame = {
+    import spark.implicits._
+    val ts = queries.flatMap(_._2).filter(_ != null).distinct
+    val idx = Bm25Index(
+      pruned(spark, l, "postings", PostingsSchema, ts,
+        Seq("doc_id", "dl", "term", "tf")),
+      pruned(spark, l, "df", DfSchema, ts, Seq("term", "df")), l.n, l.sumDl)
+    Retrieval.bm25TopKIndexed(idx, queries.toDF("query_id", "terms"), k)
+  }
+
+  /** The distributed single-query plan over one pinned epoch: terms as
+    * driver constants, the pruned scans, and
+    * [[Retrieval.bm25ScoreSingle]]'s one-shuffle plan with the layout's
+    * stats. Run it only inside the pin that loaded `l`.
+    */
+  private[jobs] def bm25SinglePlan(spark: SparkSession,
+      l: LocalLookup.Bm25Layout, terms: Seq[String], k: Int): DataFrame = {
+    val ts = terms.filter(_ != null).distinct
+    Retrieval.bm25ScoreSingle(
+      pruned(spark, l, "postings", PostingsSchema, ts,
+        Seq("doc_id", "dl", "term", "tf")),
+      pruned(spark, l, "df", DfSchema, ts, Seq("term", "df")),
+      l.n, l.sumDl, k)
   }
 
   /** Write PQ codes partitioned by IVF cell into a fresh epoch:
@@ -494,23 +470,5 @@ object IndexExport {
       .parquet(s"$epoch/codes")
     swapPointer(outDir, epoch.getName)
     pruneEpochs(outDir)
-  }
-
-  /** Single-query IVF-PQ lookup over the exported codes: probe cells
-    * chosen driver-side against the broadcast-sized centroid constants,
-    * scan ONLY those cell partitions, score by ADC — identical rows to
-    * [[Pq.ivfAdcTopK]] on the live embedding table (same candidates,
-    * same codes, same exact-integer scoring tail).
-    */
-  def pqLookup(spark: SparkSession, outDir: String, qvec: Seq[Float],
-      queryVecId: Long, k: Int, cbs: Pq.Codebooks,
-      centroids: Seq[(Long, Seq[Float])], nprobe: Int = 2): DataFrame = {
-    val probes = Similarity.probeCells(centroids.sortBy(_._1), qvec, nprobe)
-    val codes = codeReaders
-      .get(resolveEpoch(outDir))(
-        dir => spark.read.schema(CodesSchema).parquet(s"$dir/codes"))
-      .filter(col("cell").isin(probes: _*))
-      .select(col("vec_id"), col("codes"))
-    Pq.adcScore(codes, qvec, queryVecId, k, cbs)
   }
 }

@@ -18,40 +18,51 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.io.api.Binary
 
-import graft.ext.{Pq, Retrieval, Similarity}
+import graft.ext.Retrieval
 
-/** The point-lookup tier WITHOUT Spark: serve single queries by reading
+/** The point-lookup tier WITHOUT Spark: serve BM25 queries by reading
   * the [[IndexExport]] layout directly through parquet-hadoop — no
   * SparkSession, no job scheduling, no shuffle. This is the "a
   * non-Spark reader serves the same bytes at file-seek latency" claim
   * from SCALE.md made executable: the `IndexExport` layout was designed
-  * so a KV-style reader only ever touches the query's own buckets/cells,
-  * and this object IS that reader.
+  * so a KV-style reader only ever touches the query's own buckets, and
+  * this object IS that reader.
   *
   * What a lookup costs (and why it is O(query), not O(index)):
-  *  - bucket/cell choice is driver arithmetic ([[IndexExport.termBucket]]
-  *    / [[Similarity.probeCells]] over the broadcast-sized centroid
-  *    constants) — zero I/O;
+  *  - bucket choice is driver arithmetic ([[IndexExport.termBucket]]) —
+  *    zero I/O;
   *  - one parquet footer + the term-matching pages per touched file:
   *    the export sorts rows by (term, doc_id) within files, so the
   *    pushed `term = …` predicate prunes row groups via min/max stats
   *    and pages via the column index — a term's postings are a few
   *    contiguous pages, not the bucket;
   *  - scoring is driver arithmetic over the matched rows
-  *    ([[Retrieval.scoreSingleLocal]] / [[Pq.adcTables]] — the SAME
-  *    expression trees the Spark plans evaluate, shared at the source
-  *    level so parity is by construction, pinned by LocalLookupSpec
-  *    and by perfbench bm25_serve's `jobs.lookup.wrong_answers`).
+  *    ([[Retrieval.scoreSingleLocal]] — the SAME expression tree the
+  *    Spark plan evaluates, shared at the source level so parity is by
+  *    construction, pinned by LocalLookupSpec and by perfbench
+  *    bm25_serve's `jobs.lookup.wrong_answers`).
+  *
+  * Epoch contract: every function here works on ONE [[Bm25Layout]],
+  * loaded by [[bm25Layout]] inside the caller's
+  * [[IndexExport.withPinnedEpoch]] — [[IndexExport.bm25LookupSingle]]
+  * and [[IndexExport.bm25Lookup]] take one pin per lookup, load the
+  * layout once, and serve both tiers (these driver functions and the
+  * distributed fallback, which reads the same per-bucket file lists
+  * through [[epochFiles]]) from it. There is no other reader cache.
   *
   * At 100 TB this is the serving split: the batch engine maintains the
   * export (a scannable table); point traffic hits this reader (or any
   * parquet-capable KV layer) and never pays a cluster round-trip. The
-  * per-directory caches below play the role of a server process's open
-  * index: footers and listings resolved once, queries only read pages.
+  * per-epoch caches below play the role of a server process's open
+  * index: meta, listings, df maps and footers resolved once per
+  * immutable epoch directory, queries only read pages.
   */
 object LocalLookup {
 
-  private final case class Bm25Layout(fs: FileSystem, dir: String,
+  /** One epoch's serving state: the epoch directory, its meta row and
+    * the caches filled as lookups touch its buckets.
+    */
+  private[jobs] final case class Bm25Layout(fs: FileSystem, dir: String,
       n: Long, sumDl: Long, nBuckets: Int,
       files: ConcurrentHashMap[String, Seq[Path]],
       // per-bucket df maps, loaded whole on first touch: the df table
@@ -64,7 +75,6 @@ object LocalLookup {
   // IndexExport's pointer protocol), LRU-bounded so a process cycling
   // exports does not retain one layout per dead epoch forever
   private val bm25Layouts = new Lru[String, Bm25Layout](32)
-  private val codeFiles = new Lru[(String, Long), Seq[Path]](4096)
   private val conf = {
     val c = new Configuration()
     // serving reads: skip the checksum-wrapper filesystem for local
@@ -83,8 +93,7 @@ object LocalLookup {
     * pruned epochs via [[invalidateEpoch]]; this remains for harness
     * cleanup between corpora.
     */
-  def clearLayouts(): Unit =
-    { bm25Layouts.clear(); codeFiles.clear(); footers.clear() }
+  def clearLayouts(): Unit = { bm25Layouts.clear(); footers.clear() }
 
   /** Invalidate every cached artifact under a pruned epoch directory —
     * called by [[IndexExport]] when an export deletes old epochs, so a
@@ -92,7 +101,6 @@ object LocalLookup {
     */
   private[jobs] def invalidateEpoch(epochDir: String): Unit = {
     bm25Layouts.removeIf(_ == epochDir)
-    codeFiles.removeIf(_._1 == epochDir)
     // directory-boundary match: a bare prefix would also evict epoch_10's
     // footers when epoch_1 is pruned (spurious re-parses on the live epoch)
     footers.removeIf(_.toString.startsWith(epochDir + java.io.File.separator))
@@ -156,7 +164,11 @@ object LocalLookup {
     terms.map(t => FilterApi.eq(FilterApi.binaryColumn("term"),
       Binary.fromString(t)): FilterPredicate).reduce(FilterApi.or)
 
-  private def bm25Layout(epochDir: String): Bm25Layout =
+  /** The serving layout of the epoch directory `epochDir`, loaded once
+    * per epoch. Call it inside the [[IndexExport.withPinnedEpoch]] that
+    * pinned `epochDir`: the pin is what keeps the files it lists alive.
+    */
+  private[jobs] def bm25Layout(epochDir: String): Bm25Layout =
     bm25Layouts.get(epochDir) { dir =>
       val fs = new Path(dir).getFileSystem(conf)
       val metaFiles = dataFiles(fs, new Path(dir, "meta"))
@@ -172,18 +184,31 @@ object LocalLookup {
         new ConcurrentHashMap, new ConcurrentHashMap)
     }
 
-  private def bucketFiles(l: Bm25Layout, table: String,
-      bucket: Long): Seq[Path] =
-    l.files.computeIfAbsent(s"$table/$bucket",
-      _ => dataFiles(l.fs, new Path(l.dir, s"$table/bucket=$bucket")))
+  /** The data files of `table` (`postings` or `df`) in `buckets`, from
+    * the layout's per-bucket listing: every file either tier reads comes
+    * through here. The mixed-epoch fence: a file outside the layout's
+    * epoch directory fails the lookup, naming both epochs, instead of
+    * serving a torn answer.
+    */
+  private[jobs] def epochFiles(l: Bm25Layout, table: String,
+      buckets: Iterable[Long]): Seq[Path] = {
+    val files = buckets.toSeq.flatMap(b => l.files.computeIfAbsent(
+      s"$table/$b", _ => dataFiles(l.fs, new Path(l.dir, s"$table/bucket=$b"))))
+    files.find(!_.toString.startsWith(l.dir + "/")).foreach { f =>
+      throw new IllegalStateException(s"mixed-epoch read: the lookup " +
+        s"pinned ${l.dir} but its $table file $f lies under " +
+        s"${f.getParent.getParent.getParent}")
+    }
+    files
+  }
 
   /** A query's matched posting rows (doc_id, dl, tf, df) read straight
     * from the export layout — the shared fetch behind [[bm25Single]]
-    * and the capped batch twin. Returns None when the terms' summed df
-    * (known from the resident df maps BEFORE any postings file is
-    * opened) exceeds `maxPostings` — the cap that keeps the
-    * driver-local tier delta-sized like every other driver-resident
-    * form; None callers fall back to the distributed plan.
+    * and [[bm25Batch]]. Returns None when the terms' summed df (known
+    * from the resident df maps BEFORE any postings file is opened)
+    * exceeds `maxPostings` — the cap that keeps the driver-local tier
+    * delta-sized like every other driver-resident form; None callers
+    * fall back to the distributed plan.
     */
   private def matchedPostings(l: Bm25Layout, ts: Seq[String],
       maxPostings: Long):
@@ -195,7 +220,7 @@ object LocalLookup {
     val dfs = byBucket.map { case (bucket, _) =>
       bucket -> l.dfCache.computeIfAbsent(bucket, { b =>
         val m = new java.util.HashMap[String, Long]
-        bucketFiles(l, "df", b).foreach { f =>
+        epochFiles(l, "df", Seq(b)).foreach { f =>
           readGroups(f, None) { g =>
             m.put(g.getBinary("term", 0).toStringUsingUTF8,
               g.getLong("df", 0))
@@ -214,7 +239,7 @@ object LocalLookup {
       byBucket.foreach { case (bucket, bucketTerms) =>
         val pred = Some(termPred(bucketTerms))
         val df = dfs(bucket)
-        bucketFiles(l, "postings", bucket).foreach { f =>
+        epochFiles(l, "postings", Seq(bucket)).foreach { f =>
           readGroups(f, pred) { g =>
             val docId: java.lang.Long =
               if (g.getFieldRepetitionCount("doc_id") == 0) null
@@ -229,40 +254,23 @@ object LocalLookup {
     }
   }
 
-  /** Single-query BM25 point lookup over an [[IndexExport.exportBm25]]
-    * layout — rows (doc_id, n_terms, score) identical to
-    * [[IndexExport.bm25LookupSingle]] (and therefore to every other
-    * bm25 path; q121's shared-oracle chain). Pays no Spark job.
+  /** Single-query BM25 over one epoch's layout — rows (doc_id, n_terms,
+    * score) identical to [[IndexExport.bm25SinglePlan]] over the same
+    * layout (and therefore to every other bm25 path; q121's
+    * shared-oracle chain). Pays no Spark job. None when the query's
+    * matched postings would exceed `maxPostings` (the caller runs the
+    * distributed plan instead).
     */
-  def bm25Single(outDir: String, terms: Seq[String],
-      k: Int): Seq[(java.lang.Long, Long, Double)] =
-    // epoch PINNED for the whole lookup: any number of re-exports may
-    // land mid-read without pruning the files under us
-    IndexExport.withPinnedEpoch(outDir) { epoch =>
-    val l = bm25Layout(epoch)
+  private[jobs] def bm25Single(l: Bm25Layout, terms: Seq[String], k: Int,
+      maxPostings: Long): Option[Seq[(java.lang.Long, Long, Double)]] = {
     val ts = terms.filter(_ != null).distinct
-    if (ts.isEmpty || l.n == 0) Seq.empty else {
-    val postings = matchedPostings(l, ts, Long.MaxValue).get
-    Retrieval.scoreSingleLocal(postings, l.n, l.sumDl, k)
-  }}
-
-  /** [[bm25Single]] with the driver-resident cap: None when the query's
-    * matched postings would exceed `maxPostings` (callers run the
-    * distributed plan instead). The row set of a Some is [[bm25Single]]'s
-    * exactly.
-    */
-  def bm25SingleCapped(outDir: String, terms: Seq[String], k: Int,
-      maxPostings: Long): Option[Seq[(java.lang.Long, Long, Double)]] =
-    IndexExport.withPinnedEpoch(outDir) { epoch =>
-      val l = bm25Layout(epoch)
-      val ts = terms.filter(_ != null).distinct
-      if (ts.isEmpty || l.n == 0) Some(Seq.empty)
-      else matchedPostings(l, ts, maxPostings)
-        .map(Retrieval.scoreSingleLocal(_, l.n, l.sumDl, k))
-    }
+    if (ts.isEmpty || l.n == 0) Some(Seq.empty)
+    else matchedPostings(l, ts, maxPostings)
+      .map(Retrieval.scoreSingleLocal(_, l.n, l.sumDl, k))
+  }
 
   /** Driver-side twin of the BATCH lookup shape
-    * ([[IndexExport.bm25Lookup]] → [[Retrieval.bm25TopKIndexed]]):
+    * ([[IndexExport.bm25LookupPlan]] → [[Retrieval.bm25TopKIndexed]]):
     * rows (query_id, rank, doc_id, score) per query, identical to the
     * Spark plan by shared arithmetic —
     *  - per-(doc, term) s4 partials and the per-doc score are
@@ -278,67 +286,25 @@ object LocalLookup {
     * doc_id through a primitive-long tuple encoder; rather than mirror
     * that coercion, the twin declines and the Spark plan serves it).
     */
-  def bm25BatchLocal(outDir: String, queries: Seq[(Long, Seq[String])],
-      k: Int, maxPostings: Long): Option[Seq[(Long, Long, Long, Double)]] =
-    IndexExport.withPinnedEpoch(outDir) { epoch =>
-      val l = bm25Layout(epoch)
-      val byQuery = queries.groupMapReduce(_._1)(_._2)(_ ++ _)
-        .view.mapValues(_.filter(_ != null).distinct).toSeq.sortBy(_._1)
-      val out = Seq.newBuilder[(Long, Long, Long, Double)]
-      val ok = byQuery.forall { case (qid, ts) =>
-        if (ts.isEmpty || l.n == 0) true
-        else matchedPostings(l, ts, maxPostings) match {
-          case None => false
-          case Some(postings) if postings.exists(_._1 == null) => false
-          case Some(postings) =>
-            val scored = Retrieval
-              .scoreSingleLocal(postings, l.n, l.sumDl, k)
-            scored.iterator.zipWithIndex.foreach { case ((d, _, sc), i) =>
-              out += ((qid, (i + 1).toLong, d.longValue(), sc))
-            }
-            true
-        }
-      }
-      if (ok) Some(out.result()) else None
-    }
-
-  /** Single-query IVF-PQ point lookup over an
-    * [[IndexExport.exportPqCells]] layout — rows (vec_id, pq_dist_s6)
-    * identical to [[IndexExport.pqLookup]] / [[Pq.ivfAdcTopK]]: same
-    * driver-side probe choice, same ADC tables ([[Pq.adcTables]] — the
-    * one construction both paths share), same exact-long sums and
-    * (dist asc, vec_id asc) order. Reads only the probed cells' code
-    * files; the floats are never touched.
-    */
-  def pqSingle(outDir: String, qvec: Seq[Float], queryVecId: Long, k: Int,
-      cbs: Pq.Codebooks, centroids: Seq[(Long, Seq[Float])],
-      nprobe: Int = 2): Seq[(Long, Long)] =
-    IndexExport.withPinnedEpoch(outDir) { epoch =>
-    val tables = Pq.adcTables(qvec, cbs)
-    val probes = Similarity.probeCells(centroids.sortBy(_._1), qvec, nprobe)
-    val fs = new Path(epoch).getFileSystem(conf)
-    val scored = ArrayBuffer.empty[(Long, Long)]
-    probes.foreach { cell =>
-      val files = codeFiles.get((epoch, cell))(
-        _ => dataFiles(fs, new Path(epoch, s"codes/cell=$cell")))
-      files.foreach { f =>
-        readGroups(f, None) { g =>
-          val vecId = g.getLong("vec_id", 0)
-          if (vecId != queryVecId) {
-            val codes = g.getGroup("codes", 0)
-            val m = codes.getFieldRepetitionCount(0)
-            var dist = 0L
-            var j = 0
-            while (j < m) {
-              dist += tables(j)(codes.getGroup(0, j).getLong(0, 0).toInt)
-              j += 1
-            }
-            scored += ((vecId, dist))
+  private[jobs] def bm25Batch(l: Bm25Layout, queries: Seq[(Long, Seq[String])],
+      k: Int, maxPostings: Long): Option[Seq[(Long, Long, Long, Double)]] = {
+    val byQuery = queries.groupMapReduce(_._1)(_._2)(_ ++ _)
+      .view.mapValues(_.filter(_ != null).distinct).toSeq.sortBy(_._1)
+    val out = Seq.newBuilder[(Long, Long, Long, Double)]
+    val ok = byQuery.forall { case (qid, ts) =>
+      if (ts.isEmpty || l.n == 0) true
+      else matchedPostings(l, ts, maxPostings) match {
+        case None => false
+        case Some(postings) if postings.exists(_._1 == null) => false
+        case Some(postings) =>
+          val scored = Retrieval
+            .scoreSingleLocal(postings, l.n, l.sumDl, k)
+          scored.iterator.zipWithIndex.foreach { case ((d, _, sc), i) =>
+            out += ((qid, (i + 1).toLong, d.longValue(), sc))
           }
-        }
+          true
       }
     }
-    scored.sortBy { case (vecId, dist) => (dist, vecId) }.take(k).toSeq
+    if (ok) Some(out.result()) else None
   }
 }
-

@@ -26,4 +26,14 @@ object TestFixtures {
     }
     rows.toDF("vec_id", "embedding", "label").repartition(8)
   }
+
+  /** Run `f` with [[graft.jobs.IndexExport.LocalLookupCap]] set to
+    * `cap` (−1 forces every lookup onto the distributed plan, even a
+    * zero-match one), restoring the previous cap afterwards.
+    */
+  def withLocalLookupCap[T](cap: Long)(f: => T): T = {
+    val prev = graft.jobs.IndexExport.LocalLookupCap
+    graft.jobs.IndexExport.LocalLookupCap = cap
+    try f finally graft.jobs.IndexExport.LocalLookupCap = prev
+  }
 }

@@ -6,7 +6,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ext.{Pq, Retrieval, Similarity}
+import graft.TestFixtures.withLocalLookupCap
+import graft.ext.Retrieval
 
 /** The point-lookup serving tier: the exported bucketed/sorted layout
   * must (a) serve results hash-identical to the in-memory index paths,
@@ -62,15 +63,11 @@ class IndexExportSpec extends AnyFunSuite {
     }.reduce(_ ++ _)
     assert(viaLookup === viaMemory)
     assert(viaLookup.nonEmpty)
-    val viaDistributed = {
-      val prev = IndexExport.LocalLookupCap
-      IndexExport.LocalLookupCap = -1L
-      try queries.map { case (qid, terms) =>
+    val viaDistributed = withLocalLookupCap(-1L)(queries.map {
+      case (qid, terms) =>
         IndexExport.bm25Lookup(spark, out, Seq(qid -> terms), 5)
           .collect().map(_.toSeq).toSet
-      }.reduce(_ ++ _)
-      finally IndexExport.LocalLookupCap = prev
-    }
+    }.reduce(_ ++ _))
     assert(viaDistributed === viaMemory)
   }
 
@@ -80,7 +77,6 @@ class IndexExportSpec extends AnyFunSuite {
     val idx = Retrieval.bm25Index(docs)
     val out = Files.createTempDirectory("bm25_export_single").toString
     IndexExport.exportBm25(idx, out, nBuckets = 16)
-    IndexExport.clearReaders()
     val terms = Seq("spark", "hash", "cpu")
     val viaMem = Retrieval
       .bm25TopKIndexed(idx, Seq((0L, terms)).toDF("query_id", "terms"), 7)
@@ -90,18 +86,23 @@ class IndexExportSpec extends AnyFunSuite {
       .select($"doc_id", $"score").collect().map(_.toSeq).toSet
     assert(viaSingle === viaMem)
     assert(viaSingle.nonEmpty)
-    // the DISTRIBUTED fast plan (forced; the default route above is the
-    // local tier): exactly ONE shuffle below the top-k
-    val prev = IndexExport.LocalLookupCap
-    IndexExport.LocalLookupCap = -1L
-    try {
-      val df = IndexExport.bm25LookupSingle(spark, out, terms, 7)
+    // the DISTRIBUTED fast plan (the default route above is the local
+    // tier): the forced route's rows, then the plan's shape — exactly
+    // ONE shuffle below the top-k, no cartesian product
+    val viaForced = withLocalLookupCap(-1L)(
+      IndexExport.bm25LookupSingle(spark, out, terms, 7))
+      .select($"doc_id", $"score").collect().map(_.toSeq).toSet
+    assert(viaForced === viaMem)
+    IndexExport.withPinnedEpoch(out) { epoch =>
+      val df = IndexExport.bm25SinglePlan(spark,
+        LocalLookup.bm25Layout(epoch), terms, 7)
       df.collect()
       assert(df.collect().map(_.toSeq).toSet
         .map((s: Seq[Any]) => Seq(s(0), s(2))) === viaMem)
-      val c = graft.PlanShape.count(df.queryExecution.executedPlan)
-      assert(c.cartesians === 0)
-    } finally IndexExport.LocalLookupCap = prev
+      val plan = df.queryExecution.executedPlan
+      assert(graft.PlanShape.count(plan).cartesians === 0)
+      assert(graft.PlanShape.shuffles(plan).size === 1)
+    }
   }
 
   test("bm25 lookup prunes to the query's buckets and pushes the term filter") {
@@ -111,15 +112,14 @@ class IndexExportSpec extends AnyFunSuite {
     IndexExport.exportBm25(idx, out, nBuckets = 16)
     graft.ext.Dedup.clearSignatureCaches()
 
-    // force the distributed plan: this test pins ITS scan shape (the
-    // default route is the driver-local tier and plans no file scan)
-    val prevCap = IndexExport.LocalLookupCap
-    IndexExport.LocalLookupCap = -1L
-    val df =
-      try IndexExport.bm25Lookup(spark, out, Seq(1L -> Seq("spark")), 5)
-      finally IndexExport.LocalLookupCap = prevCap
-    df.collect()
-    val scans = graft.PlanShape.fileScans(df.queryExecution.executedPlan)
+    // the distributed batch plan's scan shape (the lookup's default
+    // route is the driver-local tier and plans no file scan)
+    val scans = IndexExport.withPinnedEpoch(out) { epoch =>
+      val df = IndexExport.bm25LookupPlan(spark,
+        LocalLookup.bm25Layout(epoch), Seq(1L -> Seq("spark")), 5)
+      df.collect()
+      graft.PlanShape.fileScans(df.queryExecution.executedPlan)
+    }
     assert(scans.nonEmpty)
     scans.foreach { f =>
       val s = f.toString
@@ -137,45 +137,49 @@ class IndexExportSpec extends AnyFunSuite {
     }
   }
 
-  test("re-export during a lookup loop never yields a mixed-epoch or missing-file read") {
+  private val abTerms = Seq("spark", "hash")
+
+  /** Corpus A and corpus B indexed: B has different content under the
+    * same terms (every doc gains a "spark hash" tail and ids shift), so
+    * their answers to [[abTerms]] differ and a mixed-epoch read could
+    * equal neither.
+    */
+  private def abIndexes = {
     import spark.implicits._
-    val docsA = docsFixture
-    // corpus B: different content under the same terms, so the answers
-    // are distinguishable (every doc gains an extra "spark hash" tail
-    // and ids shift) — a mixed-epoch read could not equal either answer
     val docsB = docsFixture.select(($"doc_id" + 1000L).as("doc_id"),
       concat($"text", lit(" spark hash")).as("text"))
-    val idxA = Retrieval.bm25Index(docsA)
-    val idxB = Retrieval.bm25Index(docsB)
-    val terms = Seq("spark", "hash")
-    // forced distributed: this test pins the SPARK reader-cache epoch
-    // protocol (the local tier's twin lives in LocalLookupSpec)
-    def answer(dir: String): Set[Seq[Any]] = {
-      val prev = IndexExport.LocalLookupCap
-      IndexExport.LocalLookupCap = -1L
-      try IndexExport.bm25LookupSingle(spark, dir, terms, 5)
-        .collect().map(_.toSeq).toSet
-      finally IndexExport.LocalLookupCap = prev
-    }
+    (Retrieval.bm25Index(docsFixture), Retrieval.bm25Index(docsB))
+  }
 
-    // expected answers from two INDEPENDENT layouts
-    val refA = Files.createTempDirectory("bm25_epoch_refA").toString
-    val refB = Files.createTempDirectory("bm25_epoch_refB").toString
-    IndexExport.exportBm25(idxA, refA, nBuckets = 16)
-    IndexExport.exportBm25(idxB, refB, nBuckets = 16)
-    val expectA = answer(refA)
-    val expectB = answer(refB)
+  /** The forced-fallback answer to [[abTerms]] over the layout at `dir`. */
+  private def fallbackAnswer(dir: String): Set[Seq[Any]] =
+    withLocalLookupCap(-1L)(IndexExport.bm25LookupSingle(spark, dir, abTerms, 5)
+      .collect().map(_.toSeq).toSet)
+
+  /** The expected answer of `idx`, from its own independent layout. */
+  private def refAnswer(idx: Retrieval.Bm25Index): Set[Seq[Any]] = {
+    val ref = Files.createTempDirectory("bm25_epoch_ref").toString
+    IndexExport.exportBm25(idx, ref, nBuckets = 16)
+    fallbackAnswer(ref)
+  }
+
+  test("re-export during a lookup loop never yields a mixed-epoch or missing-file read") {
+    val (idxA, idxB) = abIndexes
+    // forced distributed: this test pins the fallback tier's epoch
+    // protocol (the local tier's twin lives in LocalLookupSpec)
+    val expectA = refAnswer(idxA)
+    val expectB = refAnswer(idxB)
     assert(expectA !== expectB)
 
-    // the measured loop: re-export B over the SAME root mid-loop, with
-    // NO clearReaders() anywhere — the epoch pointer + retained
-    // previous epoch must make every read a consistent full answer
+    // the measured loop: re-export B over the SAME root mid-loop — the
+    // epoch pointer + the lookup's pin must make every read a
+    // consistent full answer
     val out = Files.createTempDirectory("bm25_epoch_swap").toString
     IndexExport.exportBm25(idxA, out, nBuckets = 16)
     var seenB = false
     (0 until 8).foreach { i =>
       if (i == 4) IndexExport.exportBm25(idxB, out, nBuckets = 16)
-      val r = answer(out)
+      val r = fallbackAnswer(out)
       assert(r === expectA || r === expectB,
         s"mixed-epoch or partial read at lookup $i")
       if (r === expectB) seenB = true
@@ -186,6 +190,75 @@ class IndexExportSpec extends AnyFunSuite {
       .filter(f => f.isDirectory && f.getName.startsWith("epoch_"))
     assert(epochs.length <= IndexExport.KeepEpochs)
     graft.ext.Dedup.clearSignatureCaches()
+  }
+
+  test("a forced-fallback lookup outlives three re-exports: its rows come from the epoch it pinned") {
+    val (idxA, idxB) = abIndexes
+    val expectA = refAnswer(idxA)
+    val out = Files.createTempDirectory("bm25_fallback_pin").toString
+    IndexExport.exportBm25(idxA, out, nBuckets = 16)
+    val epochA = IndexExport.resolveEpoch(out)
+    val df = withLocalLookupCap(-1L)(
+      IndexExport.bm25LookupSingle(spark, out, abTerms, 5))
+    // three exports prune epoch A (KeepEpochs = 2) before the collect:
+    // a lookup whose plan still had to read A's files would fail here
+    Seq(idxB, idxA, idxB).foreach(IndexExport.exportBm25(_, out, nBuckets = 16))
+    assert(!Dfs.exists(new org.apache.hadoop.fs.Path(epochA)),
+      "epoch A must be pruned before the collect")
+    assert(df.collect().map(_.toSeq).toSet === expectA)
+    graft.ext.Dedup.clearSignatureCaches()
+  }
+
+  test("forced-fallback lookups racing back-to-back re-exports each return a full epoch-A or epoch-B answer") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val (idxA, idxB) = abIndexes
+    val expectA = refAnswer(idxA)
+    val expectB = refAnswer(idxB)
+    assert(expectA !== expectB)
+    val out = Files.createTempDirectory("bm25_fallback_race").toString
+    IndexExport.exportBm25(idxA, out, nBuckets = 16)
+    @volatile var stop = false
+    val loop = Future {
+      val seen = scala.collection.mutable.ArrayBuffer.empty[Set[Seq[Any]]]
+      while (!stop) seen += fallbackAnswer(out)
+      seen.toSeq
+    }
+    // six exports back to back, alternating B and A, under the loop
+    try (0 until 6).foreach(i =>
+      IndexExport.exportBm25(if (i % 2 == 0) idxB else idxA, out, nBuckets = 16))
+    finally stop = true
+    val seen = Await.result(loop, 120.seconds)
+    assert(seen.nonEmpty)
+    seen.zipWithIndex.foreach { case (r, i) =>
+      assert(r === expectA || r === expectB, s"mixed-epoch read at lookup $i")
+    }
+    assert(fallbackAnswer(out) === expectA, "the last export published A")
+    graft.ext.Dedup.clearSignatureCaches()
+  }
+
+  test("a forced-fallback lookup with no matched postings returns empty, not a read error") {
+    val idx = Retrieval.bm25Index(docsFixture)
+    val out = Files.createTempDirectory("bm25_fallback_nomatch").toString
+    IndexExport.exportBm25(idx, out, nBuckets = 16)
+    graft.ext.Dedup.clearSignatureCaches()
+    val written = new java.io.File(new java.net.URI(IndexExport.resolveEpoch(out)))
+      .toPath.resolve("postings").toFile.list()
+      .filter(_.startsWith("bucket=")).map(_.stripPrefix("bucket=").toLong).toSet
+    val candidates = Iterator.from(0).map(i => s"absent_$i")
+    // a term whose bucket directory the export never wrote, and one
+    // whose bucket exists but holds no such term
+    val noDir = candidates.find(t => !written(IndexExport.termBucket(t, 16))).get
+    val noRow = candidates.find(t => written(IndexExport.termBucket(t, 16))).get
+    withLocalLookupCap(-1L) {
+      Seq(Seq(noDir), Seq(noRow), Seq(noDir, noRow)).foreach { ts =>
+        assert(IndexExport.bm25LookupSingle(spark, out, ts, 5).collect().isEmpty,
+          s"single lookup of $ts")
+        assert(IndexExport.bm25Lookup(spark, out, Seq(1L -> ts), 5)
+          .collect().isEmpty, s"batch lookup of $ts")
+      }
+    }
   }
 
   test("a pinned epoch survives any number of re-exports, then prunes on release") {
@@ -202,8 +275,9 @@ class IndexExportSpec extends AnyFunSuite {
         "pinned epoch was pruned")
       // and its FILES are intact: the in-flight reader finishes its
       // lookup against exactly this epoch
-      val viaLocal = LocalLookup.bm25Single(dir, Seq("spark", "hash"), 5)
-      assert(viaLocal.nonEmpty)
+      val viaLocal = LocalLookup.bm25Single(LocalLookup.bm25Layout(dir),
+        Seq("spark", "hash"), 5, Long.MaxValue)
+      assert(viaLocal.exists(_.nonEmpty))
       dir
     }
     // pin released: the next export's prune collects the old epoch
@@ -217,7 +291,7 @@ class IndexExportSpec extends AnyFunSuite {
     val dir = new java.io.File(
       Files.createTempDirectory("bm25_missing").toFile, "never_exported")
     val e = intercept[IllegalArgumentException] {
-      LocalLookup.bm25Single(dir.toString, Seq("spark"), 5)
+      IndexExport.bm25LookupSingle(spark, dir.toString, Seq("spark"), 5)
     }
     assert(e.getMessage.contains("no meta file"),
       s"missing layout must surface the reader's error, got: ${e.getMessage}")
@@ -291,46 +365,6 @@ class IndexExportSpec extends AnyFunSuite {
     assert(IndexExport.resolveEpoch(dotted) === IndexExport.resolveEpoch(abs),
       s"dotted spelling split the epoch keyspace (parent $parent)")
     graft.ext.Dedup.clearSignatureCaches()
-  }
-
-  test("pq lookup over exported cells equals ivfAdcTopK on the live table") {
-    import spark.implicits._
-    val dims = 0 until 32
-    val emb = spark.range(200).select($"id".as("vec_id"),
-      array(dims.map(i =>
-        (pmod($"id" * (i + 3), lit(23)) - 11).cast("float")): _*)
-        .as("embedding"))
-    val cbs = Pq.seedCodebooks(emb, m = 4, ksub = 16)
-    val cents = emb.filter($"vec_id" < 16)
-      .select($"vec_id", $"embedding").collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1))).sortBy(_._1).toSeq
-    val out = Files.createTempDirectory("pq_export").toString
-    IndexExport.exportPqCells(emb, cents, cbs, out)
-
-    val qvec = emb.filter($"vec_id" === 0L).select($"embedding")
-      .collect().head.getSeq[Float](0)
-    val viaLookup = IndexExport
-      .pqLookup(spark, out, qvec, queryVecId = 0L, k = 10, cbs, cents)
-      .collect().map(_.toSeq).toSeq
-    val viaLive = Pq.ivfAdcTopK(emb, queryVecId = 0L, k = 10, cbs,
-      centroids = Some(cents))
-      .collect().map(_.toSeq).toSeq
-    assert(viaLookup === viaLive)
-    assert(viaLookup.nonEmpty)
-
-    // and the scan is cell-pruned: nprobe=2 of 16 cell directories
-    val df = IndexExport.pqLookup(spark, out, qvec, 0L, 10, cbs, cents)
-    df.collect()
-    val scans = graft.PlanShape.fileScans(df.queryExecution.executedPlan)
-    assert(scans.nonEmpty)
-    scans.foreach { f =>
-      assert(f.toString.contains("PartitionFilters") &&
-        f.toString.contains("cell"),
-        s"codes scan must carry a cell partition filter:\n$f")
-      assert(f.selectedPartitions.partitionCount <= 2,
-        s"nprobe=2 lookup must read <=2 cell dirs, got " +
-          s"${f.selectedPartitions.partitionCount}")
-    }
   }
 
   test("a poisoned write aborts the export fail-fast: error propagated, no pointer move, siblings cancelled") {

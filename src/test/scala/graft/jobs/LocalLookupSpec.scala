@@ -6,7 +6,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ext.{Pq, Retrieval}
+import graft.TestFixtures.withLocalLookupCap
+import graft.ext.Retrieval
 
 /** The no-Spark point-lookup reader ([[LocalLookup]]) must return rows
   * identical to the Spark lookup plans over the same export — same
@@ -57,16 +58,16 @@ class LocalLookupSpec extends AnyFunSuite {
     cur
   }
 
-  /** Run `f` with the lookup query paths FORCED onto the distributed
-    * plans (cap −1 declines even a zero-match query): the expected side
-    * of every parity test must be the Spark plan, not the local tier
-    * the routing would otherwise serve it from.
+  /** `f` over the current epoch's layout, under one pin — the way
+    * [[IndexExport]]'s lookups call the local tier.
     */
-  private def forceDistributed[T](f: => T): T = {
-    val prev = IndexExport.LocalLookupCap
-    IndexExport.LocalLookupCap = -1L
-    try f finally IndexExport.LocalLookupCap = prev
-  }
+  private def pinned[T](out: String)(f: LocalLookup.Bm25Layout => T): T =
+    IndexExport.withPinnedEpoch(out)(e => f(LocalLookup.bm25Layout(e)))
+
+  /** The driver-local single-query tier alone, uncapped. */
+  private def local(out: String, terms: Seq[String],
+      k: Int): Seq[(java.lang.Long, Long, Double)] =
+    pinned(out)(LocalLookup.bm25Single(_, terms, k, Long.MaxValue).get)
 
   test("local bm25 lookup equals the Spark single-query plan, with zero Spark jobs") {
     import spark.implicits._
@@ -75,7 +76,6 @@ class LocalLookupSpec extends AnyFunSuite {
     val out = Files.createTempDirectory("bm25_local").toString
     IndexExport.exportBm25(idx, out, nBuckets = 16)
     graft.ext.Dedup.clearSignatureCaches()
-    IndexExport.clearReaders()
     LocalLookup.clearLayouts()
 
     val queries: Seq[Seq[String]] =
@@ -83,7 +83,9 @@ class LocalLookupSpec extends AnyFunSuite {
         Seq(Seq("spark", "hash", "cpu"), Seq("scan", "scan", "join"),
           Seq("absent_term"), Seq("spark", "absent_term"),
           Seq(null, "disk"), Seq("net", "ram", "row", "col"))
-    val expected = forceDistributed(queries.map { terms =>
+    // expected: the distributed plan, forced (cap −1 declines even a
+    // zero-match query)
+    val expected = withLocalLookupCap(-1L)(queries.map { terms =>
       IndexExport.bm25LookupSingle(spark, out, terms, 7)
         .collect().map(r => (
           if (r.isNullAt(0)) null else java.lang.Long.valueOf(r.getLong(0)),
@@ -91,7 +93,7 @@ class LocalLookupSpec extends AnyFunSuite {
     })
 
     val before = stableJobCount()
-    val got = queries.map(LocalLookup.bm25Single(out, _, 7))
+    val got = queries.map(local(out, _, 7))
     val after = stableJobCount()
     assert(after === before, "local lookup must run zero Spark jobs")
     queries.lazyZip(expected).lazyZip(got).foreach { (terms, exp, act) =>
@@ -122,10 +124,10 @@ class LocalLookupSpec extends AnyFunSuite {
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
     val futures = queries.map(terms =>
-      Future(terms -> LocalLookup.bm25Single(out, terms, 7)))
+      Future(terms -> local(out, terms, 7)))
     val got = Await.result(Future.sequence(futures), 60.seconds).toMap
     queries.distinct.foreach { terms =>
-      assert(got(terms) === LocalLookup.bm25Single(out, terms, 7),
+      assert(got(terms) === local(out, terms, 7),
         s"concurrent result diverged for $terms")
     }
     assert(got.size === queries.distinct.size)
@@ -148,8 +150,8 @@ class LocalLookupSpec extends AnyFunSuite {
     IndexExport.exportBm25(idxA, out, nBuckets = 16)
     graft.ext.Dedup.clearSignatureCaches()
     LocalLookup.clearLayouts()
-    val expectA = LocalLookup.bm25Single(out, terms, 5)
-    val expectB = LocalLookup.bm25Single(refB, terms, 5)
+    val expectA = local(out, terms, 5)
+    val expectB = local(refB, terms, 5)
     assert(expectA !== expectB)
 
     // lookup loop on one thread, the re-export racing it from this one;
@@ -162,7 +164,7 @@ class LocalLookupSpec extends AnyFunSuite {
     val loop = Future {
       val seen = scala.collection.mutable.ArrayBuffer
         .empty[Seq[(java.lang.Long, Long, Double)]]
-      while (!stop) seen += LocalLookup.bm25Single(out, terms, 5)
+      while (!stop) seen += local(out, terms, 5)
       seen.toSeq
     }
     IndexExport.exportBm25(idxB, out, nBuckets = 16)
@@ -173,7 +175,7 @@ class LocalLookupSpec extends AnyFunSuite {
     seen.zipWithIndex.foreach { case (r, i) =>
       assert(r === expectA || r === expectB, s"mixed-epoch read at $i")
     }
-    assert(LocalLookup.bm25Single(out, terms, 5) === expectB,
+    assert(local(out, terms, 5) === expectB,
       "a fresh lookup after the swap must serve the new epoch")
   }
 
@@ -184,14 +186,13 @@ class LocalLookupSpec extends AnyFunSuite {
     val out = Files.createTempDirectory("bm25_routed").toString
     IndexExport.exportBm25(idx, out, nBuckets = 16)
     graft.ext.Dedup.clearSignatureCaches()
-    IndexExport.clearReaders()
     LocalLookup.clearLayouts()
 
     // the q120 shape: per-query batch lookups — expected rows from the
     // FORCED distributed plan, got rows from the routed (local) path
     val queries = Seq(0L -> Seq("spark", "table"), 1L -> Seq("scan"),
       2L -> Seq("absent_term"), 3L -> Seq("net", "ram", "row", "col"))
-    val expected = forceDistributed(queries.map { case (qid, ts) =>
+    val expected = withLocalLookupCap(-1L)(queries.map { case (qid, ts) =>
       IndexExport.bm25Lookup(spark, out, Seq(qid -> ts), 5)
         .collect().map(_.toSeq).toSet
     })
@@ -211,24 +212,20 @@ class LocalLookupSpec extends AnyFunSuite {
     // zero Spark jobs for a local-served batch lookup (no null-id match)
     IndexExport.bm25Lookup(spark, out, Seq(1L -> Seq("scan")), 5) // warm
     val before = stableJobCount()
-    val rows = LocalLookup.bm25BatchLocal(out, Seq(1L -> Seq("scan")), 5,
-      IndexExport.LocalLookupCap)
+    val rows = pinned(out)(LocalLookup.bm25Batch(_, Seq(1L -> Seq("scan")), 5,
+      IndexExport.LocalLookupCap))
     val after = stableJobCount()
     assert(after === before, "local batch lookup must run zero Spark jobs")
     assert(rows.exists(_.nonEmpty))
 
     // the cap: a query whose matched postings exceed it declines (the
     // distributed plan serves it — identical rows)
-    assert(LocalLookup.bm25BatchLocal(out, Seq(1L -> Seq("scan")), 5, 0L)
+    assert(pinned(out)(LocalLookup.bm25Batch(_, Seq(1L -> Seq("scan")), 5, 0L))
       === None)
-    assert(LocalLookup.bm25SingleCapped(out, Seq("scan"), 5, 0L) === None)
-    val capped = {
-      val prev = IndexExport.LocalLookupCap
-      IndexExport.LocalLookupCap = 0L
-      try IndexExport.bm25Lookup(spark, out, Seq(1L -> Seq("scan")), 5)
-        .collect().map(_.toSeq).toSet
-      finally IndexExport.LocalLookupCap = prev
-    }
+    assert(pinned(out)(LocalLookup.bm25Single(_, Seq("scan"), 5, 0L)) === None)
+    val capped = withLocalLookupCap(0L)(
+      IndexExport.bm25Lookup(spark, out, Seq(1L -> Seq("scan")), 5)
+        .collect().map(_.toSeq).toSet)
     assert(capped === expected(1))
   }
 
@@ -240,43 +237,37 @@ class LocalLookupSpec extends AnyFunSuite {
     IndexExport.exportBm25(idx, out, nBuckets = 8)
     graft.ext.Dedup.clearSignatureCaches()
     LocalLookup.clearLayouts()
-    assert(LocalLookup.bm25Single(out, Seq("spark"), 5) === Seq.empty)
+    assert(local(out, Seq("spark"), 5) === Seq.empty)
   }
 
-  test("local pq lookup equals the Spark pqLookup plan, with zero Spark jobs") {
-    import spark.implicits._
-    val dims = 0 until 32
-    val emb = spark.range(200).select($"id".as("vec_id"),
-      array(dims.map(i =>
-        (pmod($"id" * (i + 3), lit(23)) - 11).cast("float")): _*)
-        .as("embedding"))
-    val cbs = Pq.seedCodebooks(emb, m = 4, ksub = 16)
-    val cents = emb.filter($"vec_id" < 16)
-      .select($"vec_id", $"embedding").collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1))).sortBy(_._1).toSeq
-    val out = Files.createTempDirectory("pq_local").toString
-    IndexExport.exportPqCells(emb, cents, cbs, out)
+  test("a bucket file outside the pinned epoch fails the lookup on both tiers, naming both epochs") {
+    // the mixed-epoch fence: plant the previous epoch's postings listing
+    // into the current epoch's cached layout (a listing that crossed
+    // epochs) — no tier may serve rows from it
+    val idx = Retrieval.bm25Index(docsFixture)
+    val out = Files.createTempDirectory("bm25_local_fence").toString
+    IndexExport.exportBm25(idx, out, nBuckets = 16)
+    IndexExport.exportBm25(idx, out, nBuckets = 16)
+    graft.ext.Dedup.clearSignatureCaches()
     LocalLookup.clearLayouts()
-
-    val qids = Seq(0L, 7L, 42L, 133L)
-    val qvecs = emb.filter($"vec_id".isin(qids: _*))
-      .select($"vec_id", $"embedding").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
-    val cases = for (qid <- qids; nprobe <- Seq(1, 2, 4)) yield (qid, nprobe)
-    val expected = cases.map { case (qid, nprobe) =>
-      IndexExport.pqLookup(spark, out, qvecs(qid), qid, 10, cbs, cents, nprobe)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    }
-
-    val before = stableJobCount()
-    val got = cases.map { case (qid, nprobe) =>
-      LocalLookup.pqSingle(out, qvecs(qid), qid, 10, cbs, cents, nprobe)
-    }
-    val after = stableJobCount()
-    assert(after === before, "local pq lookup must run zero Spark jobs")
-    cases.lazyZip(expected).lazyZip(got).foreach { (c, exp, act) =>
-      assert(act === exp, s"divergence for (qid, nprobe)=$c")
-    }
-    assert(expected.forall(_.nonEmpty))
+    val epochs = new java.io.File(out).listFiles()
+      .filter(_.getName.startsWith("epoch_")).map(_.getName).sorted
+    assert(epochs.toSeq === Seq("epoch_1", "epoch_2"))
+    val old = IndexExport.withPinnedEpoch(out)(cur =>
+      cur.stripSuffix("epoch_2") + "epoch_1")
+    val b = IndexExport.termBucket("spark", 16)
+    try {
+      val stale = LocalLookup.epochFiles(LocalLookup.bm25Layout(old),
+        "postings", Seq(b))
+      assert(stale.nonEmpty)
+      val cur = pinned(out) { l => l.files.put(s"postings/$b", stale); l.dir }
+      Seq(100000L, -1L).foreach { cap =>
+        val e = intercept[IllegalStateException](withLocalLookupCap(cap)(
+          IndexExport.bm25LookupSingle(spark, out, Seq("spark"), 5)))
+        assert(e.getMessage.contains("mixed-epoch read") &&
+          e.getMessage.contains(cur) && e.getMessage.contains(old),
+          s"cap $cap: the fence must name both epochs, got: ${e.getMessage}")
+      }
+    } finally LocalLookup.clearLayouts()
   }
 }

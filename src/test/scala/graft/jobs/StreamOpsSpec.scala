@@ -577,7 +577,6 @@ abstract class StreamOpsBehaviors(stateStoreProvider: Option[String])
     // the RAM tier's bytes (m longs/vec), floats never read at serve time
     val dir = Files.createTempDirectory("pq_serve_store").toString
     graft.jobs.IndexExport.exportPqCells(all, cents, cbs, dir)
-    graft.jobs.IndexExport.clearReaders()
     val store = spark.read
       .parquet(s"${graft.jobs.IndexExport.resolveEpoch(dir)}/codes")
     val in = MemoryStream[(Long, Seq[Float], Timestamp)]

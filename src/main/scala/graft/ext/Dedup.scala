@@ -203,9 +203,6 @@ object Dedup {
     */
   private val cachedSigTables = new CacheRegistry
 
-  private def registerSigCache(df: DataFrame): DataFrame =
-    cachedSigTables.register(df)
-
   /** Cache a derived signature/gram table under the same lifecycle as
     * the pair generators' caches (released by [[clearSignatureCaches]]).
     * For multi-consumer intermediates whose consumers shuffle on
@@ -282,8 +279,8 @@ object Dedup {
       maxBucket: Int = 500, textCol: String = "text"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val sigs = registerSigCache(
-      bigramSignatures(docs, textCol).filter(col("k1").isNotNull).cache())
+    val sigs = cached(
+      bigramSignatures(docs, textCol).filter(col("k1").isNotNull))
     dropHotBuckets(sigs, Seq("k1", "k2"), maxBucket)
       .groupBy(col("k1"), col("k2"))
       .agg(collect_list(struct(col("doc_id"), col("bg"))).as("items"))
@@ -431,20 +428,18 @@ object Dedup {
     * store) builds it once per FROZEN holdout and reuses it across
     * every micro-batch — re-deriving a corpus-sized artifact per
     * 3-doc delta was a dominant term of the per-batch job floor.
-    * `register = false` opts out of the [[clearSignatureCaches]]
-    * registry: the caller owns the cache lifecycle (unpersist
-    * `codes` itself).
+    * `materialize` pins the code set: [[cached]] (released by
+    * [[clearSignatureCaches]]) for the batch paths, an eager
+    * `localCheckpoint` for the stream, which owns its leaves.
     */
   final case class HoldoutCodes(codes: DataFrame, n: Long,
       bloomBytes: Option[Array[Byte]])
 
   def prepareHoldout(test: DataFrame, fpp: Double = 0.03,
-      register: Boolean = true): HoldoutCodes = {
-    val cached0 = shingleSets(test)
+      materialize: DataFrame => DataFrame = cached): HoldoutCodes = {
+    val teCodes = materialize(shingleSets(test)
       .select(explode_outer(col("tset")).as("code"))
-      .filter(col("code").isNotNull).distinct()
-      .cache()
-    val teCodes = if (register) registerSigCache(cached0) else cached0
+      .filter(col("code").isNotNull).distinct())
     val n = teCodes.count()
     // a shingle-less holdout means no contamination is possible; skip
     // the filter build (stat.bloomFilter NPEs aggregating zero rows)
@@ -522,7 +517,7 @@ object Dedup {
     * release via [[clearSignatureCaches]].
     */
   private def sigTable(docs: DataFrame): DataFrame =
-    registerSigCache(signatureFrame(docs).cache())
+    cached(signatureFrame(docs))
 
   /** The RAW (doc_id, tset, bands) signature frame — uncached,
     * unregistered: a long-lived ingest surface derives it once per
@@ -551,12 +546,31 @@ object Dedup {
     exploded.join(broadcast(hot), keyCols, "left_anti")
   }
 
-  /** LSH candidate pairs + exact Jaccard verification.
-    * Returns (doc1, doc2, jaccard) with doc1 < doc2, jaccard rounded 4,
-    * filtered to >= minJaccard. Band buckets with more than `maxBucket`
-    * members are excluded from candidate generation (skew guard; the
-    * oracle mirrors the cap with a window count).
+  /** The hot-bucket cap every MinHash pair generator defaults to —
+    * exposed so callers can prove the cap a no-op (`rows ≤
+    * DefaultMaxBucket` ⇒ no band bucket can exceed it).
     */
+  val DefaultMaxBucket = 1000
+
+  /** |t1 ∩ t2| of a verification frame's two token sets — the shared
+    * numerator of the Jaccard and containment checks.
+    */
+  private def sharedCodes: Column =
+    size(array_intersect(col("t1"), col("t2"))).cast("double")
+
+  /** The oracle-matched Jaccard check every MinHash pair generator
+    * verifies through: over a frame already carrying both token sets as
+    * `t1`/`t2`, `jaccard = rnd(|t1 ∩ t2| / |t1 ∪ t2|, 4)`, kept at
+    * ≥ minJaccard, returned as (id1, id2, jaccard). Callers place their
+    * own broadcasts on `pairs`.
+    */
+  private def jaccardAtLeast(pairs: DataFrame, id1: String, id2: String,
+      minJaccard: Double): DataFrame =
+    pairs.withColumn("jaccard", rnd(sharedCodes /
+        size(array_distinct(concat(col("t1"), col("t2")))).cast("double"), 4))
+      .filter(col("jaccard") >= minJaccard)
+      .select(col(id1), col(id2), col("jaccard"))
+
   /** [[minhashPairs]] over a PRE-DERIVED signature table (the
     * [[signatureFrame]] shape; the caller owns its materialization —
     * typically a checkpoint leaf, so the band-candidate branch and the
@@ -565,32 +579,20 @@ object Dedup {
     * signatureFrame(docs)` — which holds for any per-row-filtered
     * subset, since the signature is a per-row function.
     */
-  /** The hot-bucket cap every pair generator defaults to — exposed so
-    * callers can prove the cap a no-op (`rows ≤ DefaultMaxBucket` ⇒ no
-    * band bucket can exceed it).
-    */
-  val DefaultMaxBucket = 1000
-
   def minhashPairsFromSigs(sigs: DataFrame, minJaccard: Double,
       maxBucket: Int = DefaultMaxBucket,
-      incomingUnderCap: Boolean = false): DataFrame = {
-    val candidates = bandCandidates(sigs, maxBucket,
-      capNoop = incomingUnderCap)
-    val sets = sigs.select(col("doc_id"), col("tset"))
-    candidates
-      .join(sets.select(col("doc_id").as("doc1"), col("tset").as("t1")),
-        Seq("doc1"))
-      .join(sets.select(col("doc_id").as("doc2"), col("tset").as("t2")),
-        Seq("doc2"))
-      .withColumn("jaccard", rnd(
-        size(array_intersect(col("t1"), col("t2"))).cast("double") /
-          size(array_distinct(concat(col("t1"), col("t2")))).cast("double"), 4))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("doc1"), col("doc2"), col("jaccard"))
-  }
+      incomingUnderCap: Boolean = false): DataFrame =
+    jaccardAtLeast(candidateSets(sigs, maxBucket, capNoop = incomingUnderCap),
+      "doc1", "doc2", minJaccard)
 
+  /** LSH candidate pairs + exact Jaccard verification.
+    * Returns (doc1, doc2, jaccard) with doc1 < doc2, jaccard rounded 4,
+    * filtered to >= minJaccard. Band buckets with more than `maxBucket`
+    * members are excluded from candidate generation (skew guard; the
+    * oracle mirrors the cap with a window count).
+    */
   def minhashPairs(docs: DataFrame, minJaccard: Double,
-      maxBucket: Int = 1000): DataFrame = {
+      maxBucket: Int = DefaultMaxBucket): DataFrame =
     // cache: the signature table feeds BOTH candidate generation and
     // Jaccard verification — uncached, the (expensive) kernel subtree
     // is evaluated once per branch. This is the in-flight form of the
@@ -599,34 +601,24 @@ object Dedup {
     // calls over the same corpus share one entry. The oracle's NULL
     // band keys drop empty-shingle docs identically (its bands CTE
     // filters len(tset) > 0 explicitly).
-    val sigs = sigTable(docs)
-    val candidates = bandCandidates(sigs, maxBucket)
-    // Verification joins the (small) distinct pair list back to the sets.
-    val sets = sigs.select(col("doc_id"), col("tset"))
-    candidates
-      .join(sets.select(col("doc_id").as("doc1"), col("tset").as("t1")), Seq("doc1"))
-      .join(sets.select(col("doc_id").as("doc2"), col("tset").as("t2")), Seq("doc2"))
-      .withColumn("jaccard", rnd(
-        size(array_intersect(col("t1"), col("t2"))).cast("double") /
-          size(array_distinct(concat(col("t1"), col("t2")))).cast("double"), 4))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("doc1"), col("doc2"), col("jaccard"))
-  }
+    minhashPairsFromSigs(sigTable(docs), minJaccard, maxBucket)
 
-  /** LSH band-collision candidate pairs (doc1 < doc2, distinct).
+  /** LSH band-collision candidate pairs (doc1 < doc2, distinct) joined
+    * back to both token sets: (doc1, doc2, t1, t2), the verification
+    * input of [[minhashPairsFromSigs]] and [[containmentPairs]].
     * Candidate generation carries ONLY (band, key, doc_id): the
     * token-set arrays must not ride through the pair-join/distinct
     * shuffle — at corpus scale that's the difference between shuffling
-    * ids and shuffling the whole corpus k times.
+    * ids and shuffling the whole corpus k times. Verification joins the
+    * (small) distinct pair list back to the sets.
     */
-  private def bandCandidates(sigs: DataFrame, maxBucket: Int,
+  private def candidateSets(sigs: DataFrame, maxBucket: Int,
       capNoop: Boolean = false): DataFrame = {
     // capNoop: the caller proved sigs has ≤ maxBucket rows, so no band
     // bucket can exceed the cap — the count + broadcast anti-join
     // would drop nothing, and skipping it saves its broadcast-build
     // job (identical rows by construction)
-    val raw = sigs.select(
-      col("doc_id"), posexplode(col("bands")).as(Seq("band", "key")))
+    val raw = explodedBands(sigs)
     // the cap stays the map-side-combined count + broadcast anti-join
     // (dropHotBuckets) and NOT a window over the join's exchange: a
     // window count would ship a flood bucket's m rows through ONE
@@ -637,12 +629,15 @@ object Dedup {
     val exploded =
       if (capNoop) raw
       else dropHotBuckets(raw, Seq("band", "key"), maxBucket)
+    val sets = sigs.select(col("doc_id"), col("tset"))
     exploded.select(col("band"), col("key"), col("doc_id").as("doc1"))
       .join(exploded.select(col("band"), col("key"), col("doc_id").as("doc2")),
         Seq("band", "key"))
       .filter(col("doc1") < col("doc2"))
       .select(col("doc1"), col("doc2"))
       .distinct()
+      .join(sets.select(col("doc_id").as("doc1"), col("tset").as("t1")), Seq("doc1"))
+      .join(sets.select(col("doc_id").as("doc2"), col("tset").as("t2")), Seq("doc2"))
   }
 
   /** Directed containment pairs: (inner_doc, outer_doc, containment)
@@ -662,18 +657,14 @@ object Dedup {
     * ids-only candidate discipline as [[minhashPairs]].
     */
   def containmentPairs(docs: DataFrame, minContainment: Double,
-      maxBucket: Int = 1000): DataFrame = {
-    val sigs = sigTable(docs)
-    val sets = sigs.select(col("doc_id"), col("tset"))
+      maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val inner1 = (size(col("t1")) < size(col("t2"))) ||
       (size(col("t1")) === size(col("t2")) && col("doc1") < col("doc2"))
-    bandCandidates(sigs, maxBucket)
-      .join(sets.select(col("doc_id").as("doc1"), col("tset").as("t1")), Seq("doc1"))
-      .join(sets.select(col("doc_id").as("doc2"), col("tset").as("t2")), Seq("doc2"))
+    candidateSets(sigTable(docs), maxBucket)
       .select(
         when(inner1, col("doc1")).otherwise(col("doc2")).as("inner_doc"),
         when(inner1, col("doc2")).otherwise(col("doc1")).as("outer_doc"),
-        rnd(size(array_intersect(col("t1"), col("t2"))).cast("double") /
+        rnd(sharedCodes /
           least(size(col("t1")), size(col("t2"))).cast("double"), 4)
           .as("containment"))
       .filter(col("containment") >= minContainment)
@@ -693,17 +684,24 @@ object Dedup {
     * [[minhashPairs]]' job at store-build time.
     */
   def minhashPairsAgainst(store: DataFrame, incoming: DataFrame,
-      minJaccard: Double, maxBucket: Int = 1000): DataFrame =
+      minJaccard: Double, maxBucket: Int = DefaultMaxBucket): DataFrame =
     minhashPairsAgainstSigs(sigTable(store), sigTable(incoming), minJaccard,
       maxBucket)
 
   /** The exploded (doc_id, band, key) band table of a [[signatureFrame]]
     * — UNCAPPED: the at-rest form a long-lived ingest surface derives
-    * once per store version; [[minhashPairsAgainstPrepared]] applies
-    * the hot-bucket cap per batch from maintained counts.
+    * once per store version; [[minhashPairsAgainstPreparedSigs]]
+    * applies the hot-bucket cap per batch from maintained counts.
     */
   def explodedBands(sigs: DataFrame): DataFrame =
     sigs.select(col("doc_id"), posexplode(col("bands")).as(Seq("band", "key")))
+
+  /** Per-(band, key) membership counts (`cnt`) of an [[explodedBands]]
+    * table — the hot-bucket cap's input, derived once per store version
+    * (the stream's leaf, q125's persisted artifact).
+    */
+  def bandCounts(bands: DataFrame): DataFrame =
+    bands.groupBy(col("band"), col("key")).agg(count(lit(1)).as("cnt"))
 
   /** [[minhashPairsAgainstSigs]] over PREPARED store-side artifacts —
     * the streaming hot path. `sBands` is the store's UNCAPPED
@@ -711,24 +709,15 @@ object Dedup {
     * EXACT current hot-key set (band buckets whose total membership
     * exceeds `maxBucket`, derived from once-per-version counts plus a
     * delta-sized reconciliation — see CurationStream), `sSig` the full
-    * signature frame for verification. Plan shape: the incoming side
-    * rides broadcast hints through every join (a micro-batch delta is
-    * small by construction), so the store side is SCANNED, never
-    * shuffled — no per-batch store-wide exchange survives. Rows are
-    * identical to [[minhashPairsAgainstSigs]] whenever sHot equals the
-    * key set dropHotBuckets would compute over sBands (pinned by
-    * CurationStreamSpec's streamed-equals-batch gate).
-    */
-  def minhashPairsAgainstPrepared(sBands: DataFrame, sHot: DataFrame,
-      sSig: DataFrame, incoming: DataFrame, minJaccard: Double,
-      maxBucket: Int = 1000): DataFrame =
-    minhashPairsAgainstPreparedSigs(sBands, sHot, sSig,
-      sigTable(incoming), minJaccard, maxBucket)
-
-  /** [[minhashPairsAgainstPrepared]] with the INCOMING signature table
-    * pre-derived too — a staged caller that already materialized the
-    * delta's [[signatureFrame]] (and reuses it for the within-delta
-    * pair probe) passes it here instead of paying a second kernel pass.
+    * signature frame for verification, `iSig` the delta's
+    * [[signatureFrame]], derived once by the staged caller (which
+    * reuses it for the within-delta pair probe). Plan shape: the
+    * incoming side rides broadcast hints through every join (a
+    * micro-batch delta is small by construction), so the store side is
+    * SCANNED, never shuffled — no per-batch store-wide exchange
+    * survives. Rows are identical to [[minhashPairsAgainstSigs]]
+    * whenever sHot equals the key set dropHotBuckets would compute over
+    * sBands (pinned by CurationStreamSpec's streamed-equals-batch gate).
     */
   def minhashPairsAgainstPreparedSigs(sBands: DataFrame, sHot: DataFrame,
       sSig: DataFrame, iSig: DataFrame, minJaccard: Double,
@@ -749,16 +738,12 @@ object Dedup {
         col("doc_id").as("in_doc"))), Seq("band", "key"))
       .select(col("in_doc"), col("doc_id").as("store_doc"))
       .distinct()
-    broadcast(candidates
+    jaccardAtLeast(broadcast(candidates
         .join(broadcast(iSig.select(col("doc_id").as("in_doc"),
           col("tset").as("t1"))), Seq("in_doc")))
       .join(sSig.select(col("doc_id").as("store_doc"),
-        col("tset").as("t2")), Seq("store_doc"))
-      .withColumn("jaccard", rnd(
-        size(array_intersect(col("t1"), col("t2"))).cast("double") /
-          size(array_distinct(concat(col("t1"), col("t2")))).cast("double"), 4))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("in_doc"), col("store_doc"), col("jaccard"))
+        col("tset").as("t2")), Seq("store_doc")),
+      "in_doc", "store_doc", minJaccard)
   }
 
   /** [[minhashPairsAgainst]] over PRE-DERIVED signature tables (the
@@ -768,27 +753,22 @@ object Dedup {
     * the incoming side once for both of its stage-4 halves.
     */
   def minhashPairsAgainstSigs(sSig: DataFrame, iSig: DataFrame,
-      minJaccard: Double, maxBucket: Int = 1000): DataFrame = {
-    def explodeBands(sigs: DataFrame) = dropHotBuckets(sigs.select(
-      col("doc_id"), posexplode(col("bands")).as(Seq("band", "key"))),
-      Seq("band", "key"), maxBucket)
-    val candidates = explodeBands(iSig)
+      minJaccard: Double, maxBucket: Int = DefaultMaxBucket): DataFrame = {
+    def capped(sigs: DataFrame) =
+      dropHotBuckets(explodedBands(sigs), Seq("band", "key"), maxBucket)
+    val candidates = capped(iSig)
       .select(col("band"), col("key"), col("doc_id").as("in_doc"))
-      .join(explodeBands(sSig)
+      .join(capped(sSig)
         .select(col("band"), col("key"), col("doc_id").as("store_doc")),
         Seq("band", "key"))
       .select(col("in_doc"), col("store_doc"))
       .distinct()
-    candidates
-      .join(iSig.select(col("doc_id").as("in_doc"), col("tset").as("t1")),
-        Seq("in_doc"))
-      .join(sSig.select(col("doc_id").as("store_doc"), col("tset").as("t2")),
-        Seq("store_doc"))
-      .withColumn("jaccard", rnd(
-        size(array_intersect(col("t1"), col("t2"))).cast("double") /
-          size(array_distinct(concat(col("t1"), col("t2")))).cast("double"), 4))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("in_doc"), col("store_doc"), col("jaccard"))
+    jaccardAtLeast(candidates
+        .join(iSig.select(col("doc_id").as("in_doc"), col("tset").as("t1")),
+          Seq("in_doc"))
+        .join(sSig.select(col("doc_id").as("store_doc"), col("tset").as("t2")),
+          Seq("store_doc")),
+      "in_doc", "store_doc", minJaccard)
   }
 
   /** [[minhashPairsAgainstPreparedSigs]] for a DRIVER-RESIDENT delta —
@@ -830,19 +810,15 @@ object Dedup {
       StructField("t1", ArrayType(LongType)))))
     val candidates = sBands.join(broadcast(iBands), Seq("band", "key"))
       .select(col("in_doc"), col("doc_id").as("store_doc")).distinct()
-    broadcast(candidates.join(broadcast(iT1), Seq("in_doc")))
+    jaccardAtLeast(broadcast(candidates.join(broadcast(iT1), Seq("in_doc")))
       .join(sSig.select(col("doc_id").as("store_doc"),
-        col("tset").as("t2")), Seq("store_doc"))
-      .withColumn("jaccard", rnd(
-        size(array_intersect(col("t1"), col("t2"))).cast("double") /
-          size(array_distinct(concat(col("t1"), col("t2")))).cast("double"), 4))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("in_doc"), col("store_doc"), col("jaccard"))
+        col("tset").as("t2")), Seq("store_doc")),
+      "in_doc", "store_doc", minJaccard)
   }
 
   /** [[minhashPairsFromSigs]] for a DRIVER-RESIDENT signature table —
     * the within-delta micro-batch tier. Candidate generation replicates
-    * [[bandCandidates]] exactly on the driver (same (band,key) buckets,
+    * [[candidateSets]] exactly on the driver (same (band,key) buckets,
     * doc1 < doc2, distinct; the hot-bucket cap is a proven no-op at
     * this row count), and the jaccard VERIFICATION still runs through
     * the same Spark expressions — over a LocalRelation carrying both
@@ -885,12 +861,7 @@ object Dedup {
         StructField("doc1", LongType), StructField("doc2", LongType),
         StructField("t1", ArrayType(LongType)),
         StructField("t2", ArrayType(LongType)))))
-      Some(frame
-        .withColumn("jaccard", rnd(
-          size(array_intersect(col("t1"), col("t2"))).cast("double") /
-            size(array_distinct(concat(col("t1"), col("t2")))).cast("double"), 4))
-        .filter(col("jaccard") >= minJaccard)
-        .select(col("doc1"), col("doc2"), col("jaccard")))
+      Some(jaccardAtLeast(frame, "doc1", "doc2", minJaccard))
     }
   }
 

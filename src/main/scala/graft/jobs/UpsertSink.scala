@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -13,12 +13,13 @@ import org.apache.spark.sql.functions._
   * function body issues the JDBC merge; the snapshot/pointer variant is
   * what object storage without a transactional table format supports.
   *
-  * The pointer goes through the Hadoop FileSystem API — java.io would
-  * silently see `exists = false` on every non-local outDir (s3://,
-  * hdfs://), degrading the snapshot to latest-batch-only — and is
-  * swapped via write-temp-then-OVERWRITE-rename, atomic on HDFS/local,
-  * so a crash mid-swap leaves the previous pointer intact instead of a
-  * truncated file.
+  * The pointer goes through [[Dfs]] — java.io would silently see
+  * `exists = false` on every non-local outDir (s3://, hdfs://),
+  * degrading the snapshot to latest-batch-only — and is swapped with
+  * [[Dfs.writeStringAtomic]], the `_LATEST` discipline IndexExport
+  * shares: a crash mid-swap leaves the previous pointer intact instead
+  * of a truncated file, and a concurrent [[latest]] always finds the
+  * old pointer or the new one, never none.
   *
   * Merge ties on `seqCol` resolve to the INCOMING row (Postgres
   * ON CONFLICT DO UPDATE semantics: the new payload wins at equal
@@ -35,52 +36,20 @@ object UpsertSink {
 
   private val Src = "__upsert_src"
 
-  /** FileSystem for the pointer, checksums off: the pointer is a tiny
-    * human-fixable file — an out-of-band edit (operator recovery, the
-    * replay spec's crash-window simulation) must not strand the sink on
-    * a stale local-FS .crc sidecar.
-    */
-  private def pointerFs(spark: org.apache.spark.sql.SparkSession,
-                        p: Path): org.apache.hadoop.fs.FileSystem = {
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.setVerifyChecksum(false)
-    fs.setWriteChecksum(false)
-    fs
-  }
+  private def pointer(outDir: String): Path =
+    new Path(Dfs.qualified(outDir), "_LATEST")
 
-  private def readPointer(spark: org.apache.spark.sql.SparkSession,
-                          outDir: String): Option[String] = {
-    val p = new Path(outDir, "_LATEST")
-    val fs = pointerFs(spark, p)
-    if (!fs.exists(p)) None
-    else {
-      val len = fs.getFileStatus(p).getLen.toInt
-      val buf = new Array[Byte](len)
-      val in = fs.open(p)
-      try in.readFully(0, buf)
-      finally in.close()
-      val v = new String(buf, java.nio.charset.StandardCharsets.UTF_8).trim
-      if (v.isEmpty) None else Some(v) // blank = interrupted legacy write
-    }
-  }
-
-  private def writePointer(spark: org.apache.spark.sql.SparkSession,
-                           outDir: String, v: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dest = new Path(outDir, "_LATEST")
-    val tmp = new Path(outDir, s"_LATEST.tmp")
-    val fs = pointerFs(spark, dest)
-    val out = fs.create(tmp, true)
-    try out.write(v.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    FileContext.getFileContext(dest.toUri, conf)
-      .rename(tmp, dest, Options.Rename.OVERWRITE)
+  private def readPointer(outDir: String): Option[String] = {
+    val p = pointer(outDir)
+    if (!Dfs.isFile(p)) None
+    else Some(Dfs.readString(p).trim)
+      .filter(_.nonEmpty) // blank = interrupted legacy write
   }
 
   def foreachBatchUpsert(outDir: String, keyCol: String, seqCol: String)
                         (batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val prev = readPointer(spark, outDir)
+    val prev = readPointer(outDir)
       .map(v => spark.read.parquet(s"$outDir/$v"))
     // src flag: 0 = previous snapshot, 1 = incoming batch — the
     // deterministic tiebreak at equal seq (incoming wins)
@@ -97,12 +66,12 @@ object UpsertSink {
       .select(col("r.*"))
     val v = s"v$batchId"
     merged.write.mode("overwrite").parquet(s"$outDir/$v")
-    writePointer(spark, outDir, v)
+    Dfs.writeStringAtomic(pointer(outDir), v)
   }
 
   /** Read the current snapshot (test/consumer convenience). */
   def latest(spark: org.apache.spark.sql.SparkSession, outDir: String): DataFrame = {
-    val v = readPointer(spark, outDir).getOrElse(
+    val v = readPointer(outDir).getOrElse(
       throw new IllegalStateException(s"no _LATEST pointer under $outDir"))
     spark.read.parquet(s"$outDir/$v")
   }

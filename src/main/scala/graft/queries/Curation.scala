@@ -130,19 +130,6 @@ object Curation {
       .filter($"rn" === 1).drop("rn")
   }
 
-  /** Drop `left` rows whose text appears in `store` — the store-first
-    * half of the delta's exact dedup, hash-led like [[exactKeepMin]]:
-    * the anti-join runs on (xxhash64(text), text) so its shuffle-side
-    * sort compares hashes, not bodies. NULL-text rows survive like a
-    * bare text anti-join (null never equi-matches). PlanSpec pins the
-    * join keys.
-    */
-  private[graft] def textAntiJoin(left: DataFrame, store: DataFrame): DataFrame =
-    left.withColumn("__h", xxhash64(col("text")))
-      .join(store.select(xxhash64(col("text")).as("__h"), col("text")),
-        Seq("__h", "text"), "left_anti")
-      .drop("__h")
-
   /** Stage 2: quality + repetition filter on cleaned text. The ratio
     * denominators are nullif'd (q67's form) so a zero-token doc fails
     * the filter by NULL on both engines regardless of conjunct order;
@@ -427,31 +414,42 @@ object Curation {
     * measured.
     */
   final case class StoreSide(ids: DataFrame, texts: DataFrame,
-      sigs: DataFrame, cells: DataFrame, holdout: Dedup.HoldoutCodes)
+      sigs: DataFrame, cells: DataFrame, holdout: Dedup.HoldoutCodes) {
+    /** `f` over the four derived tables; the holdout stays as prepared. */
+    def map(f: DataFrame => DataFrame): StoreSide =
+      StoreSide(f(ids), f(texts), f(sigs), f(cells), holdout)
+
+    /** Each derived table unioned with `o`'s (appended rows). */
+    def union(o: StoreSide): StoreSide = StoreSide(ids.unionByName(o.ids),
+      texts.unionByName(o.texts), sigs.unionByName(o.sigs),
+      cells.unionByName(o.cells), holdout)
+  }
 
   /** The id-guard and exact-text-guard frames of a store — ONE
-    * definition shared by the transient ([[storeSideOf]]) and persisted
-    * ([[preparedStoreSide]]) side builders, so the guard shapes can
-    * never drift between the q122 and q125 paths.
+    * definition shared by the derived ([[storeTables]]) and persisted
+    * ([[preparedStoreSide]]) sides, so the guard shapes can never drift
+    * between the q122 and q125 paths.
     */
   private def storeGuards(store: DataFrame): (DataFrame, DataFrame) = (
     store.select(col("doc_id")),
     store.select(xxhash64(col("text")).as("__h"), col("text")))
 
-  /** The transient per-call [[StoreSide]] (batch paths). */
-  private def storeSideOf(s: SparkSession, store: DataFrame,
-      holdout: DataFrame, emb: DataFrame,
-      trained: Seq[(Long, Seq[Float])]): StoreSide = {
-    import s.implicits._
-    val (gIds, gTexts) = storeGuards(store)
-    StoreSide(
-      ids = gIds,
-      texts = gTexts,
-      sigs = Dedup.cached(Dedup.signatureFrame(store)),
-      cells = Dedup.cached(Similarity.ivfAssign(
-        emb.join(store.select($"doc_id".as("vec_id")), Seq("vec_id")),
-        trained)),
-      holdout = Dedup.prepareHoldout(holdout))
+  /** The RAW, lazy [[StoreSide]] tables of a store frame — ids, hashed
+    * texts, [[Dedup.signatureFrame]] and IVF cells on the maintained
+    * index — the ONE derivation every ingest surface materializes its
+    * own way: q122 caches the sigs and cells, q125's artifact build
+    * writes them, and the stream checkpoints all four (and unions this
+    * derivation of its appended rows).
+    */
+  private[graft] def storeTables(store: DataFrame, emb: DataFrame,
+      trained: Seq[(Long, Seq[Float])],
+      holdout: Dedup.HoldoutCodes): StoreSide = {
+    val (ids, texts) = storeGuards(store)
+    StoreSide(ids, texts, Dedup.signatureFrame(store),
+      Similarity.ivfAssign(
+        emb.join(store.select(col("doc_id").as("vec_id")), Seq("vec_id")),
+        trained),
+      holdout)
   }
 
   /** Stage-4 store half: the q76 asymmetric band join's drop list, over
@@ -521,7 +519,8 @@ object Curation {
       counts: DataFrame): Option[Set[(Int, String)]] =
     hotKeysLocal(s, BandSide(counts, counts, None))
 
-  private def hotKeys(b: BandSide, maxBucket: Int = 1000): DataFrame = {
+  private def hotKeys(b: BandSide): DataFrame = {
+    val maxBucket = Dedup.DefaultMaxBucket
     val hotBase = b.counts.filter(col("cnt") > maxBucket)
       .select(col("band"), col("key"))
     b.recentBands match {
@@ -555,17 +554,17 @@ object Curation {
     * unhinted form would sort-merge-SHUFFLE the store-sized counts
     * leaf per batch under the stream's AQE-off scope — the exact
     * degradation the hinted decomposition exists to prevent). Hot keys
-    * are structurally few (≤ total band rows / maxBucket by
+    * are structurally few (≤ total band rows / DefaultMaxBucket by
     * pigeonhole), but the fetch is still capped; None = over the cap,
     * caller falls back to the distributed form.
     */
-  private def hotKeysLocal(s: SparkSession, b: BandSide,
-      maxBucket: Int = 1000): Option[Set[(Int, String)]] = {
+  private def hotKeysLocal(s: SparkSession,
+      b: BandSide): Option[Set[(Int, String)]] = {
     // empty window ⇒ the reconciliation degenerates to the base set,
     // already collected once per store version — zero jobs
     if (b.recentBands.isEmpty && b.hotBaseLocal.isDefined)
       return b.hotBaseLocal
-    val df = hotKeys(b, maxBucket)
+    val df = hotKeys(b)
       .select(col("band").cast("int").as("band"), col("key"))
     DriverTier.fetchCapped(df, DropListCap)(r =>
       (r.getInt(0), r.getUTF8String(1).toString)).map(_.toSet)
@@ -988,10 +987,14 @@ object Curation {
     */
   def ingestDelta(s: SparkSession, store: DataFrame, holdout: DataFrame,
       clDelta: DataFrame, emb: DataFrame,
-      trained: Seq[(Long, Seq[Float])]): DataFrame =
-    // stages guard–6 against the transient store side, then pack-append
+      trained: Seq[(Long, Seq[Float])]): DataFrame = {
+    // stages guard–6 against the transient store side (sigs and cells
+    // cached in Dedup's registry), then pack-append
+    val side = storeTables(store, emb, trained, Dedup.prepareHoldout(holdout))
     packAppend(s, store, acceptDelta(s,
-      storeSideOf(s, store, holdout, emb, trained), clDelta, emb, trained))
+      side.copy(sigs = Dedup.cached(side.sigs),
+        cells = Dedup.cached(side.cells)), clDelta, emb, trained))
+  }
 
   /** Stage 7: pack-append — offsets continue the store's token stream.
     * The base prefers a materialized n_tok column when the store
@@ -1061,8 +1064,8 @@ object Curation {
 
   /** The [[StoreSide]] read back from a [[storeArtifacts]] directory:
     * signature table, IVF cell assignments, and holdout codes + Bloom
-    * are parquet round-trips of the derivations [[storeSideOf]] pays
-    * per call — every value is a deterministic integer/float that
+    * are parquet round-trips of the [[storeTables]] derivations q122
+    * pays per call — every value is a deterministic integer/float that
     * parquet preserves bit-exactly, so the prepared side's rows equal
     * the transient side's by construction (and the q125 gate pins it
     * against the q122 oracle end-to-end). Only the exact-text guard
@@ -1209,17 +1212,13 @@ object Curation {
       // per store VERSION; the serving twin persists them): derived
       // from the WRITTEN store bytes, so reader and derivation can
       // never disagree about the store contents
-      val storeBack = s.read.parquet(s"$broot/store")
-      Dedup.signatureFrame(storeBack)
-        .write.mode("overwrite").parquet(s"$broot/sigs")
-      Dedup.explodedBands(s.read.parquet(s"$broot/sigs"))
-        .groupBy($"band", $"key").agg(count(lit(1)).as("cnt"))
+      val side = storeTables(s.read.parquet(s"$broot/store"), emb, trained,
+        Dedup.prepareHoldout(s.read.parquet(s"$broot/holdout")))
+      side.sigs.write.mode("overwrite").parquet(s"$broot/sigs")
+      Dedup.bandCounts(Dedup.explodedBands(s.read.parquet(s"$broot/sigs")))
         .write.mode("overwrite").parquet(s"$broot/band_counts")
-      Similarity.ivfAssign(
-          emb.join(storeBack.select($"doc_id".as("vec_id")), Seq("vec_id")),
-          trained)
-        .write.mode("overwrite").parquet(s"$broot/cells")
-      val h = Dedup.prepareHoldout(s.read.parquet(s"$broot/holdout"))
+      side.cells.write.mode("overwrite").parquet(s"$broot/cells")
+      val h = side.holdout
       h.codes.write.mode("overwrite").parquet(s"$broot/holdout_codes")
       java.nio.file.Files.write(
         new java.io.File(bld, "holdout_n").toPath,

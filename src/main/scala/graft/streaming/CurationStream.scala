@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 
-import graft.ext.{Dedup, DriverTier, Packing, Similarity, TextStats}
+import graft.ext.{Dedup, DriverTier, Packing, TextStats}
 import graft.jobs.Dfs
 import graft.queries.Curation
 
@@ -746,39 +746,18 @@ object CurationStream {
       recent = Nil
       // the stream owns its holdout artifact; checkpoint-backed for
       // the same plan-leaf reason
-      if (holdoutPrepared == null) {
-        val codes = Dedup.shingleSets(holdout)
-          .select(explode_outer(col("tset")).as("code"))
-          .filter(col("code").isNotNull).distinct()
-          .localCheckpoint(true)
-        val n = codes.count()
-        val bytes = if (n == 0) None else Some {
-          val bloom = codes.stat.bloomFilter("code", n, 0.03)
-          val b = new java.io.ByteArrayOutputStream()
-          bloom.writeTo(b)
-          b.toByteArray
-        }
-        holdoutPrepared = Dedup.HoldoutCodes(codes, n, bytes)
-      }
-      val store = readStore(s, storeDir)
-      val sigs = Dedup.signatureFrame(store).localCheckpoint(true)
-      side = Curation.StoreSide(
-        ids = store.select(col("doc_id")).localCheckpoint(true),
-        texts = store.select(xxhash64(col("text")).as("__h"),
-          col("text")).localCheckpoint(true),
-        sigs = sigs,
-        cells = Similarity.ivfAssign(
-          emb.join(store.select(col("doc_id").as("vec_id")),
-            Seq("vec_id")), trained).localCheckpoint(true),
-        holdout = holdoutPrepared)
+      if (holdoutPrepared == null)
+        holdoutPrepared = Dedup.prepareHoldout(holdout,
+          materialize = _.localCheckpoint(true))
+      side = Curation.storeTables(readStore(s, storeDir), emb, trained,
+        holdoutPrepared).map(_.localCheckpoint(true))
       // the store's exploded band table and its per-key counts — the
       // hot-bucket cap's input — derived once per store version so a
       // micro-batch never re-explodes or re-aggregates the store
       // (Curation.BandSide; the per-batch hot-key set is an EXACT
       // delta-sized reconciliation against these leaves)
-      bands = Dedup.explodedBands(sigs).localCheckpoint(true)
-      bandCounts = bands.groupBy(col("band"), col("key"))
-        .agg(count(lit(1)).as("cnt")).localCheckpoint(true)
+      bands = Dedup.explodedBands(side.sigs).localCheckpoint(true)
+      bandCounts = Dedup.bandCounts(bands).localCheckpoint(true)
       // the BASE hot-key set, collected once per store version: the
       // local tier's hot probe is then job-free on every empty-window
       // batch (the first after each rebuild)
@@ -794,18 +773,8 @@ object CurationStream {
       */
     def effectiveSide: Curation.StoreSide =
       if (recent.isEmpty) side
-      else {
-        val r = recent.reduce(_ unionByName _)
-        Curation.StoreSide(
-          side.ids.unionByName(r.select(col("doc_id"))),
-          side.texts.unionByName(
-            r.select(xxhash64(col("text")).as("__h"), col("text"))),
-          side.sigs.unionByName(Dedup.signatureFrame(r)),
-          side.cells.unionByName(Similarity.ivfAssign(
-            emb.join(r.select(col("doc_id").as("vec_id")), Seq("vec_id")),
-            trained)),
-          side.holdout)
-      }
+      else side.union(Curation.storeTables(recent.reduce(_ unionByName _),
+        emb, trained, side.holdout))
 
     /** The prepared band artifacts matching [[effectiveSide]]'s sigs. */
     def effectiveBands: Curation.BandSide =

@@ -326,6 +326,33 @@ abstract class StreamOpsBehaviors(stateStoreProvider: Option[String])
     assert(snap() === expected, "replay from the pre-swap snapshot must converge")
   }
 
+  test("upsert sink: a reader racing 24 committing batches always finds a snapshot") {
+    import spark.implicits._
+    // the _LATEST swap is one atomic replace: a concurrent `latest`
+    // sees the previous pointer or the new one, never no pointer and
+    // never a half-written one
+    val out = Files.createTempDirectory("upsert_race").toString
+    def upsert(i: Long): Unit = UpsertSink.foreachBatchUpsert(
+      out, "track_id", "seq")(
+      Seq((i % 5, s"p$i", i)).toDF("track_id", "payload", "seq"), i)
+    upsert(0L)
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val reads = new java.util.concurrent.atomic.AtomicInteger(0)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val reader = new Thread(() =>
+      while (!done.get) {
+        try { UpsertSink.latest(spark, out); reads.incrementAndGet(); () }
+        catch { case t: Throwable => errors.add(t); () }
+      })
+    reader.start()
+    try (1L to 24L).foreach(upsert)
+    finally { done.set(true); reader.join() }
+    val failed = errors.size
+    assert(failed == 0, s"failed reads, first: ${errors.peek}")
+    assert(reads.get > 0, "the reader never ran")
+    assert(UpsertSink.latest(spark, out).count() === 5)
+  }
+
   test("near-dup guard: shingle-less short docs never collide on sentinel bands") {
     import spark.implicits._
     implicit val sc = spark.sqlContext

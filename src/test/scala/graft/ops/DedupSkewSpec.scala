@@ -53,6 +53,14 @@ class DedupSkewSpec extends AnyFunSuite {
       minJaccard = 0.5).select($"doc1", $"doc2").as[(Long, Long)].collect().toSet
     assert(uncapped.exists { case (a, b) => a < 20 && b < 20 },
       "identical docs must pair when under the cap")
+    // containmentPairs shares the capped candidate join
+    val contained = Dedup.containmentPairs(docs, minContainment = 0.5,
+        maxBucket = 100)
+      .select($"inner_doc", $"outer_doc").as[(Long, Long)].collect()
+      .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.toSet
+    assert(contained.forall { case (a, b) => a >= 1000 && b >= 1000 },
+      "flooded bucket must be excluded from containment candidates")
+    assert(planted.subsetOf(contained), "honest containment pairs must be kept")
   }
 
   test("hammingPairs cap drops the boilerplate flood, keeps honest pairs") {

@@ -372,13 +372,13 @@ class PlanSpec extends AnyFunSuite {
         .filter(p => p.contains("text#"))
       assert(onText.nonEmpty, s"$tag lost its text-keyed exchange entirely")
       // the hash rides the key as a pre-projected alias: an aggregate
-      // names it _groupingexpression#L, a window _w0#L, the anti-join
-      // __h#L — either way the text column never partitions an exchange
-      // alone, and the computed expression must actually BE the
-      // xxhash64 (checked on the plan string below)
+      // names it _groupingexpression#L, a window _w0#L — either way the
+      // text column never partitions an exchange alone, and the
+      // computed expression must actually BE the xxhash64 (checked on
+      // the plan string below)
       onText.foreach(p => assert(
         p.contains("xxhash64") || p.contains("_groupingexpression") ||
-          p.contains("_w0#") || p.contains("__h#"),
+          p.contains("_w0#"),
         s"$tag shuffles raw text without the leading hash: $p"))
       assert(physical(df).toString.contains("xxhash64"),
         s"$tag's plan computes no xxhash64 — the hash key is gone")
@@ -387,18 +387,14 @@ class PlanSpec extends AnyFunSuite {
     // q20's aggregate path
     pinTextShuffles("q20_dedup_exact",
       graft.SparkEntry.queries("q20_dedup_exact")(spark, sf))
-    // the curation stage-3 window and the delta's store anti-join are
-    // pinned on the SHARED helpers both q117 and q122 call — the
-    // composed pipelines truncate lineage behind RDD/cache boundaries,
-    // so the stage plan is only visible here
+    // the curation stage-3 window is pinned on the SHARED helper both
+    // q117 and q122 call — the composed pipelines truncate lineage
+    // behind RDD/cache boundaries, so the stage plan is only visible
+    // here
     val docs = graft.queries.Curation.clean(
       spark.read.parquet(s"$sf/documents.parquet"))
     pinTextShuffles("exactKeepMin",
       graft.queries.Curation.exactKeepMin(docs))
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try pinTextShuffles("textAntiJoin",
-      graft.queries.Curation.textAntiJoin(docs, docs.limit(50)))
-    finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
   test("q105 batch BM25: every small side broadcasts, none shuffles the corpus") {
@@ -537,5 +533,15 @@ class PlanSpec extends AnyFunSuite {
       assert(offenders.isEmpty,
         s"`$pattern` outside ${allowed.mkString(", ")}: ${offenders.mkString(", ")}")
     }
+    // one copy of the MinHash Jaccard check (Dedup's shared |t1 ∩ t2|)
+    // and one hot-bucket default (Dedup.DefaultMaxBucket)
+    val jaccard = "array_intersect\\(col\\(\"t1\"\\)".r
+    val copies = sources.map { case (_, src) => jaccard.findAllIn(src).size }.sum
+    assert(copies == 1, s"the Jaccard expression is written $copies times")
+    val literal = sources.collect {
+      case (path, src)
+          if "maxBucket: Int = 1000\\b".r.findFirstIn(src).isDefined => path
+    }
+    assert(literal.isEmpty, s"`maxBucket: Int = 1000` in ${literal.mkString(", ")}")
   }
 }

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.graft.GraftColumns
+import org.apache.spark.sql.graft.{GraftColumns, GraftExec}
 
 import graft.ext.{Pq, Retrieval, Similarity}
 import graft.ext.Retrieval.Bm25Index
@@ -372,7 +372,8 @@ object IndexExport {
     * no-Spark local tier ([[LocalLookup.bm25Batch]] — driver page reads
     * + driver arithmetic, zero jobs); over the cap, or when a matched
     * posting carries a NULL doc_id, [[bm25LookupPlan]] runs and is
-    * collected. Identical rows either way (LocalLookupSpec parity + the
+    * collected once, releasing its broadcasts on return
+    * (`GraftExec.collectOnce`). Identical rows either way (LocalLookupSpec parity + the
     * shared q105-oracle gate), returned as a local frame.
     */
   def bm25Lookup(spark: SparkSession, outDir: String,
@@ -381,7 +382,8 @@ object IndexExport {
       val l = LocalLookup.bm25Layout(epoch)
       val rows = LocalLookup.bm25Batch(l, queries, k, LocalLookupCap)
         .map(_.map { case (q, r, d, sc) => Row(q, r, d, sc) })
-        .getOrElse(bm25LookupPlan(spark, l, queries, k).collect().toSeq)
+        .getOrElse(
+          GraftExec.collectOnce(bm25LookupPlan(spark, l, queries, k)).toSeq)
       localFrame(spark, rows, BatchSchema)
     }
 
@@ -389,7 +391,7 @@ object IndexExport {
     * [[LocalLookupCap]] the rows come from [[LocalLookup.bm25Single]]
     * (zero Spark jobs; the same rows by the bit-parity contract
     * [[Retrieval.scoreSingleLocal]] pins); over it [[bm25SinglePlan]]
-    * runs and is collected. Output (doc_id, n_terms, score) — the
+    * runs and is collected once, like [[bm25Lookup]]'s plan. Output (doc_id, n_terms, score) — the
     * [[Retrieval.bm25TopK]] shape, scores bit-identical to every other
     * bm25 path (q121 gate) — as a local frame.
     */
@@ -399,7 +401,8 @@ object IndexExport {
       val l = LocalLookup.bm25Layout(epoch)
       val rows = LocalLookup.bm25Single(l, terms, k, LocalLookupCap)
         .map(_.map { case (d, n, sc) => Row(d, n, sc) })
-        .getOrElse(bm25SinglePlan(spark, l, terms, k).collect().toSeq)
+        .getOrElse(
+          GraftExec.collectOnce(bm25SinglePlan(spark, l, terms, k)).toSeq)
       localFrame(spark, rows, SingleSchema)
     }
 

@@ -2,21 +2,23 @@ package graft.jobs
 
 import java.util.concurrent.ConcurrentHashMap
 
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.mutable.{ArrayBuffer, ArrayBuilder}
+import scala.reflect.ClassTag
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.column.ColumnReader
+import org.apache.parquet.column.impl.ColumnReadStoreImpl
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.ColumnIOFactory
-import org.apache.parquet.io.api.Binary
+import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter}
+import org.apache.parquet.schema.MessageType
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
 import graft.ext.Retrieval
 
@@ -31,11 +33,19 @@ import graft.ext.Retrieval
   * What a lookup costs (and why it is O(query), not O(index)):
   *  - bucket choice is driver arithmetic ([[IndexExport.termBucket]]) —
   *    zero I/O;
-  *  - one parquet footer + the term-matching pages per touched file:
-  *    the export sorts rows by (term, doc_id) within files, so the
-  *    pushed `term = …` predicate prunes row groups via min/max stats
-  *    and pages via the column index — a term's postings are a few
-  *    contiguous pages, not the bucket;
+  *  - one cached parquet footer + the term-matching pages per touched
+  *    file: the pushed `term = …` predicate prunes row groups via
+  *    min/max stats and pages via the column index. The export sorts
+  *    rows by (term, doc_id) within files, which makes that pruning
+  *    tight (a term's postings are a few contiguous pages, not the
+  *    bucket) but is never relied on for correctness;
+  *  - one column-reader kernel ([[readColumns]]) over the surviving
+  *    row range: it scans the `term` column once, selecting the rows
+  *    whose term is in the query, then reads `doc_id`, `dl` and `tf`
+  *    only up to the last selected row, skipping the values between —
+  *    no record assembly and no per-row filter over the other columns.
+  *    The meta row and the per-bucket df maps load through the same
+  *    kernel;
   *  - scoring is driver arithmetic over the matched rows
   *    ([[Retrieval.scoreSingleLocal]] — the SAME expression tree the
   *    Spark plan evaluates, shared at the source level so parity is by
@@ -119,45 +129,123 @@ object LocalLookup {
       })
       .map(_.getPath).sortBy(_.getName)
 
-  /** Read every row of `file` matching `pred` (or all rows when None)
-    * into `row`-mapped values, against the CACHED footer. Row-group
-    * stats filtering happens in the reader's constructor
-    * (`filterRowGroups` over the footer blocks), dictionary and
-    * column-index page filtering inside `readNextFilteredRowGroup`,
-    * record-level filtering in the record reader — the export's
-    * within-file sort is what makes the stats/page pruning tight.
+  // ColumnReadStoreImpl builds its readers from a converter tree; the
+  // kernel reads values straight from the column readers and never
+  // calls a converter, so one no-op leaf serves every column
+  private object NoConverter extends GroupConverter {
+    private val leaf = new PrimitiveConverter {}
+    override def getConverter(fieldIndex: Int): Converter = leaf
+    override def start(): Unit = ()
+    override def end(): Unit = ()
+  }
+
+  /** One row group's selected rows, read a column at a time: `rows` are
+    * the selected positions within the group's (filtered) row range,
+    * ascending, and `keys(i)` is the index into the kernel's term list
+    * of the term row `rows(i)` holds (0 when no term filter applies).
+    * Each column can be read once per group (its pages are consumed).
     */
-  private def readGroups[T](file: Path, pred: Option[FilterPredicate])
-      (row: Group => T): Seq[T] = {
-    val footer = footers.get(file)(f =>
-      ParquetFileReader.readFooter(HadoopInputFile.fromPath(f, conf),
-        ParquetMetadataConverter.NO_FILTER))
-    val opts = pred match {
-      case Some(p) => HadoopReadOptions.builder(conf, file)
-        .withRecordFilter(FilterCompat.get(p)).build()
-      case None => HadoopReadOptions.builder(conf, file).build()
+  private final class Selected(store: ColumnReadStoreImpl,
+      schema: MessageType, val rows: Array[Int], val keys: Array[Int]) {
+
+    /** `name`'s values at the selected rows, NULL as null; the reader
+      * stops at the last selected row and `skip()`s the values between.
+      */
+    private def read[T <: AnyRef: ClassTag](name: String)
+        (get: ColumnReader => T): Array[T] = {
+      val desc = schema.getColumnDescription(Array(name))
+      val r = store.getColumnReader(desc)
+      val maxDef = desc.getMaxDefinitionLevel
+      val out = new Array[T](rows.length)
+      var row = 0
+      var i = 0
+      while (i < rows.length) {
+        val defined = r.getCurrentDefinitionLevel == maxDef
+        if (row == rows(i)) {
+          if (defined) out(i) = get(r)
+          i += 1
+        } else if (defined) r.skip()
+        row += 1
+        if (i < rows.length) r.consume()
+      }
+      out
     }
-    val reader = new ParquetFileReader(conf, file, footer, opts)
+
+    /** An INT64 or INT32 column, widened to long. */
+    def longs(name: String): Array[java.lang.Long] = {
+      val int32 = schema.getColumnDescription(Array(name)).getPrimitiveType
+        .getPrimitiveTypeName == PrimitiveTypeName.INT32
+      read(name)(r => java.lang.Long.valueOf(
+        if (int32) r.getInteger.toLong else r.getLong))
+    }
+
+    def strings(name: String): Array[String] =
+      read(name)(_.getBinary.toStringUsingUTF8)
+  }
+
+  /** The lookup kernel: read `file` column by column against the CACHED
+    * footer, calling `f` once per row group that has selected rows.
+    * With `terms`, the pushed `term IN (terms)` predicate prunes row
+    * groups by their stats (in the reader's constructor) and pages by
+    * the column index (in `readNextFilteredRowGroup`); the kernel then
+    * scans the `term` column once over the remaining row range and
+    * selects the rows whose value is in `terms` — no record assembly,
+    * no per-row filter evaluation over the other columns. Without
+    * `terms` every row is selected. Selection never assumes the
+    * export's (term, doc_id) sort: that sort only makes the pruning
+    * tight.
+    */
+  private def readColumns(file: Path, terms: Option[IndexedSeq[String]])
+      (f: Selected => Unit): Unit = {
+    val footer = footers.get(file)(p =>
+      ParquetFileReader.readFooter(HadoopInputFile.fromPath(p, conf),
+        ParquetMetadataConverter.NO_FILTER))
+    val builder = HadoopReadOptions.builder(conf, file)
+    terms.foreach(ts => builder.withRecordFilter(FilterCompat.get(termPred(ts))))
+    // term -> its index in `terms`, the key a selected row carries
+    val keyOf = new java.util.HashMap[Binary, Integer]
+    terms.foreach(_.zipWithIndex.foreach { case (t, i) =>
+      keyOf.put(Binary.fromString(t), i) })
+    val reader = new ParquetFileReader(conf, file, footer, builder.build())
     try {
-      val schema = footer.getFileMetaData.getSchema
-      val colIO = new ColumnIOFactory().getColumnIO(schema)
-      val out = ArrayBuffer.empty[T]
+      val meta = footer.getFileMetaData
+      val schema = meta.getSchema
       var pages = reader.readNextFilteredRowGroup()
       while (pages != null) {
-        val materializer = new GroupRecordConverter(schema)
-        val rr = pred.fold(colIO.getRecordReader(pages, materializer))(p =>
-          colIO.getRecordReader(pages, materializer, FilterCompat.get(p)))
-        val n = pages.getRowCount
-        var i = 0L
-        while (i < n) {
-          val g = rr.read()
-          if (g != null && !rr.shouldSkipCurrentRecord) out += row(g)
-          i += 1
+        val n = Math.toIntExact(pages.getRowCount)
+        if (n > 0) {
+          val store = new ColumnReadStoreImpl(pages, NoConverter, schema,
+            meta.getCreatedBy)
+          val sel = terms.fold(new Selected(store, schema,
+            Array.range(0, n), new Array[Int](n)))(_ =>
+            matchTerms(store, schema, n, keyOf))
+          if (sel.rows.nonEmpty) f(sel)
         }
         pages = reader.readNextFilteredRowGroup()
       }
-      out.toSeq
     } finally reader.close()
+  }
+
+  /** One scan of the `term` column over a group's `n` rows: the rows
+    * whose term is a key of `keyOf`, with that key's value.
+    */
+  private def matchTerms(store: ColumnReadStoreImpl, schema: MessageType,
+      n: Int, keyOf: java.util.HashMap[Binary, Integer]): Selected = {
+    val desc = schema.getColumnDescription(Array("term"))
+    val r = store.getColumnReader(desc)
+    val maxDef = desc.getMaxDefinitionLevel
+    val rows = new ArrayBuilder.ofInt
+    val keys = new ArrayBuilder.ofInt
+    var row = 0
+    while (row < n) {
+      if (r.getCurrentDefinitionLevel == maxDef) {
+        val k = keyOf.get(r.getBinary)
+        if (k != null) { rows += row; keys += k }
+      }
+      row += 1
+      if (row < n) r.consume()
+    }
+    new Selected(store, schema, rows.result(), keys.result())
   }
 
   private def termPred(terms: Seq[String]): FilterPredicate =
@@ -175,11 +263,19 @@ object LocalLookup {
       require(metaFiles.nonEmpty, s"no meta file under $dir/meta")
       // one row: (n: long, sum_dl: nullable long, n_buckets: int) —
       // but the writer may emit empty sibling part files, so scan all
-      val meta = metaFiles.flatMap(readGroups(_, None) { g =>
-        val sumDl = if (g.getFieldRepetitionCount("sum_dl") == 0) 0L
-          else g.getLong("sum_dl", 0)
-        (g.getLong("n", 0), sumDl, g.getInteger("n_buckets", 0))
-      }).head
+      val meta = metaFiles.flatMap { f =>
+        val rows = ArrayBuffer.empty[(Long, Long, Int)]
+        readColumns(f, None) { s =>
+          val n = s.longs("n")
+          val sumDl = s.longs("sum_dl")
+          val nBuckets = s.longs("n_buckets")
+          s.rows.indices.foreach { i =>
+            rows += ((n(i), Option(sumDl(i)).fold(0L)(_.longValue()),
+              nBuckets(i).intValue()))
+          }
+        }
+        rows
+      }.head
       Bm25Layout(fs, dir, meta._1, meta._2, meta._3,
         new ConcurrentHashMap, new ConcurrentHashMap)
     }
@@ -221,9 +317,10 @@ object LocalLookup {
       bucket -> l.dfCache.computeIfAbsent(bucket, { b =>
         val m = new java.util.HashMap[String, Long]
         epochFiles(l, "df", Seq(b)).foreach { f =>
-          readGroups(f, None) { g =>
-            m.put(g.getBinary("term", 0).toStringUsingUTF8,
-              g.getLong("df", 0))
+          readColumns(f, None) { s =>
+            val terms = s.strings("term")
+            val df = s.longs("df")
+            s.rows.indices.foreach(i => m.put(terms(i), df(i)))
           }
         }
         m
@@ -237,16 +334,17 @@ object LocalLookup {
     else {
       val postings = ArrayBuffer.empty[(java.lang.Long, Long, Long, Long)]
       byBucket.foreach { case (bucket, bucketTerms) =>
-        val pred = Some(termPred(bucketTerms))
+        val ts = bucketTerms.toIndexedSeq
         val df = dfs(bucket)
         epochFiles(l, "postings", Seq(bucket)).foreach { f =>
-          readGroups(f, pred) { g =>
-            val docId: java.lang.Long =
-              if (g.getFieldRepetitionCount("doc_id") == 0) null
-              else java.lang.Long.valueOf(g.getLong("doc_id", 0))
-            val term = g.getBinary("term", 0).toStringUsingUTF8
-            postings += ((docId, g.getLong("dl", 0), g.getLong("tf", 0),
-              df.get(term)))
+          readColumns(f, Some(ts)) { s =>
+            val docId = s.longs("doc_id")
+            val dl = s.longs("dl")
+            val tf = s.longs("tf")
+            s.rows.indices.foreach { i =>
+              postings += ((docId(i), dl(i).longValue(), tf(i).longValue(),
+                df.get(ts(s.keys(i)))))
+            }
           }
         }
       }

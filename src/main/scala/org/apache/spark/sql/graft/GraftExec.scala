@@ -1,6 +1,8 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
 
 /** Execution helpers that need the sql-package seam. */
 object GraftExec {
@@ -36,6 +38,29 @@ object GraftExec {
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
+
+  /** `df.collect()`, then destroy the broadcasts its executed plan
+    * built before returning. A broadcast hash relation holds a whole
+    * memory page (`spark.buffer.pageSize`, 16 MB on a 3 GB local
+    * driver) however few rows it carries, and the driver's block
+    * manager keeps it until the ContextCleaner finds the plan
+    * unreachable — after a collection of the generation the plan was
+    * promoted to, so a serving loop's one-shot broadcasts linger for a
+    * GC-timing-dependent while. Only for a frame collected once: a
+    * destroyed broadcast cannot serve another execution.
+    */
+  def collectOnce(df: DataFrame): Array[Row] = {
+    val rows = df.collect()
+    // the collect prepared every broadcast exchange of the executed
+    // plan (inside AQE query stages too), so each future is done
+    BroadcastStages.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case b: BroadcastExchangeLike => b.relationFuture
+    }.filter(_.isDone).map(_.get).distinct.filter(_.isValid)
+      .foreach(_.destroy(blocking = true))
+    rows
+  }
+
+  private object BroadcastStages extends AdaptiveSparkPlanHelper
 
   /** The leaf RDD of a checkpointed frame (its analyzed plan is a
     * LogicalRDD), so stage-boundary checkpoints can be tracked for

@@ -2,6 +2,13 @@ package graft.jobs
 
 import java.nio.file.Files
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.FilterApi
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -227,6 +234,128 @@ class LocalLookupSpec extends AnyFunSuite {
       IndexExport.bm25Lookup(spark, out, Seq(1L -> Seq("scan")), 5)
         .collect().map(_.toSeq).toSet)
     assert(capped === expected(1))
+  }
+
+  test("a distributed-fallback lookup leaves no broadcast relation in the driver's block manager") {
+    import org.apache.spark.sql.graft.BlockProbe
+    val idx = Retrieval.bm25Index(docsFixture)
+    val out = Files.createTempDirectory("bm25_release").toString
+    IndexExport.exportBm25(idx, out, nBuckets = 16)
+    LocalLookup.clearLayouts()
+    def relations() = BlockProbe.broadcastValues()
+      .filter(_._2.contains("HashedRelation")).keySet
+
+    // terms the NULL-doc_id row does not hold, so both local twins serve
+    val terms = Seq("scan", "cpu", "disk")
+    val before = relations()
+    // cap −1: both lookups take the distributed plan, which broadcasts
+    // the df rows (single) and the query's term set (batch)
+    val single = withLocalLookupCap(-1L)(
+      IndexExport.bm25LookupSingle(spark, out, terms, 7).collect().toSeq)
+    val batch = withLocalLookupCap(-1L)(
+      IndexExport.bm25Lookup(spark, out, Seq(0L -> terms), 7).collect().toSeq)
+    assert((relations() -- before).isEmpty,
+      "the fallback's broadcast relations must leave the block manager with the lookup")
+    // and the answers still match the local tier's
+    assert(single.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))) ===
+      local(out, terms, 7).map { case (d, n, s) => (d.longValue, n, s) })
+    assert(batch.map(_.toSeq).toSet === IndexExport.bm25Lookup(spark, out,
+      Seq(0L -> terms), 7).collect().map(_.toSeq).toSet)
+  }
+
+  test("multi-page postings: one bucket, mid-file row ranges, page-crossing and NULL doc_id rows match the plans with zero jobs") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    // 5,000 docs of 12 Zipf-skewed draws over 300 terms (~46k postings)
+    // plus one NULL doc_id doc of its own terms; nBuckets = 1 puts every
+    // posting in one file, so each column spans several pages
+    val rnd = new scala.util.Random(20261020L)
+    val rows = (0 until 5000).map { i =>
+      val text = Seq.fill(12)(f"t${(300 * math.pow(rnd.nextDouble(), 3)).toInt}%03d")
+        .mkString(" ")
+      (Option(i.toLong), text)
+    } :+ ((Option.empty[Long], "orphan orphan lonely"))
+    val idx = Retrieval.bm25Index(rows.toDF("doc_id", "text"))
+    val out = Files.createTempDirectory("bm25_local_pages").toString
+    IndexExport.exportBm25(idx, out, nBuckets = 1)
+    graft.ext.Dedup.clearSignatureCaches()
+    LocalLookup.clearLayouts()
+
+    val file = pinned(out)(LocalLookup.epochFiles(_, "postings", Seq(0L))) match {
+      case Seq(f) => f
+      case fs => fail(s"one postings file expected, got $fs")
+    }
+    val conf = new Configuration()
+    val input = HadoopInputFile.fromPath(file, conf)
+    // first row of every page after the first, per column
+    val boundaries = {
+      val r = ParquetFileReader.open(input)
+      try r.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala.map { c =>
+        val oi = r.readOffsetIndex(c)
+        c.getPath.toDotString -> (1 until oi.getPageCount).map(oi.getFirstRowIndex)
+      }).toMap
+      finally r.close()
+    }
+    assert(boundaries.keySet === Set("doc_id", "dl", "term", "tf"))
+    assert(boundaries.values.forall(_.size >= 2),
+      s"every column must span at least 3 pages: $boundaries")
+    // each term's [first, end) row range in file order
+    val fileTerms = spark.read.parquet(file.toString).select("term")
+      .as[String].collect()
+    assert(fileTerms.length > 40000)
+    val range = fileTerms.zipWithIndex.groupBy(_._1).view
+      .mapValues(rs => (rs.head._2.toLong, rs.last._2 + 1L)).toMap
+    val crossing = range.keys.toSeq.sorted.filter { t =>
+      val (a, b) = range(t)
+      boundaries("doc_id").exists(x => a < x && x < b)
+    }
+    assert(crossing.nonEmpty, "no term's rows cross a doc_id page boundary")
+    val late = fileTerms.last
+    assert(late != "orphan" && late != "lonely")
+    // the column-index filter hands the kernel a row range that starts
+    // mid-file for a late term
+    val filteredFrom = {
+      val opts = HadoopReadOptions.builder(conf, file)
+        .withRecordFilter(FilterCompat.get(FilterApi.eq(
+          FilterApi.binaryColumn("term"), Binary.fromString(late)))).build()
+      val r = ParquetFileReader.open(input, opts)
+      try r.readNextFilteredRowGroup().getRowIndexes.get.nextLong()
+      finally r.close()
+    }
+    assert(filteredFrom > 0L && filteredFrom <= range(late)._1)
+
+    val k = 10000 // every matched doc, so every posting row is compared
+    val singles = Seq(Seq(late), Seq(crossing.head),
+      Seq(late, crossing.head, "t000"), Seq("orphan", crossing.last),
+      Seq("lonely"), Seq("absent_term"), Seq("absent_term", late))
+    val batch = Seq(0L -> Seq(late), 1L -> Seq(crossing.head),
+      2L -> Seq("t000", late, crossing.last), 3L -> Seq("absent_term"))
+    val (expSingles, expBatch) = pinned(out) { l =>
+      (singles.map(ts => IndexExport.bm25SinglePlan(spark, l, ts, k).collect()
+        .map(r => (if (r.isNullAt(0)) null else java.lang.Long.valueOf(r.getLong(0)),
+          r.getLong(1), r.getDouble(2))).toSeq),
+        IndexExport.bm25LookupPlan(spark, l, batch, k).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+          .toSeq.sortBy(r => (r._1, r._2)))
+    }
+    LocalLookup.clearLayouts()
+    val before = stableJobCount()
+    val (gotSingles, gotBatch, nullBatch) = pinned(out) { l =>
+      (singles.map(LocalLookup.bm25Single(l, _, k, Long.MaxValue).get),
+        LocalLookup.bm25Batch(l, batch, k, Long.MaxValue),
+        LocalLookup.bm25Batch(l, Seq(4L -> Seq("orphan")), k, Long.MaxValue))
+    }
+    val after = stableJobCount()
+    assert(after === before, "local lookups must run zero Spark jobs")
+    singles.lazyZip(expSingles).lazyZip(gotSingles).foreach { (ts, exp, act) =>
+      assert(act === exp, s"divergence for terms=$ts")
+    }
+    assert(gotBatch.map(_.sortBy(r => (r._1, r._2))) === Some(expBatch))
+    assert(expSingles(1).size.toLong === range(crossing.head)._2 - range(crossing.head)._1)
+    assert(expSingles(3).exists(_._1 == null), "the NULL doc_id doc must match")
+    assert(expSingles(5).isEmpty && expSingles(6) === expSingles(0))
+    // a matched NULL doc_id declines the batch twin (the plan serves it)
+    assert(nullBatch === None)
   }
 
   test("local bm25 over an empty-corpus export returns empty") {

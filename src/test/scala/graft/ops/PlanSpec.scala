@@ -505,6 +505,22 @@ class PlanSpec extends AnyFunSuite {
       s"runJob outside DriverTier/GraftExec: ${offenders.mkString(", ")}")
   }
 
+  test("src/main reads parquet through the column-reader kernel, never the example Group API") {
+    // LocalLookup's readColumns reads values a column at a time; the
+    // example record assembly (Group + ColumnIOFactory) it replaced must
+    // not come back beside it, imported or fully qualified
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main")
+    assert(Files.isDirectory(root), "spec must run from the repo root")
+    val offenders = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => "org\\.apache\\.parquet\\.example\\b|\\bColumnIOFactory\\b".r
+        .findFirstIn(new String(Files.readAllBytes(p), "UTF-8")).isDefined)
+      .toList
+    assert(offenders.isEmpty, "org.apache.parquet.example or ColumnIOFactory " +
+      s"in: ${offenders.mkString(", ")}")
+  }
+
   test("harness surface: mains, session builder, listener and capped fetches stay with their owners") {
     // five mains (the driver contract, the data builder and two
     // diagnostics), one session factory, one job listener; the

@@ -38,7 +38,6 @@ object Bench {
         }
       }
       graft.ext.Dedup.clearSignatureCaches(blocking = true)
-      graft.streaming.StreamOps.clearStaticIndexes(blocking = true)
     }
 
     // Best-of-N per query: the host shows heavy steal time, so a single
@@ -54,21 +53,17 @@ object Bench {
       case Some(f) => SparkEntry.queries.filter { case (k, _) => f(k) }
       case None => SparkEntry.queries
     }
-    // Round-5 drift fix: several operators register cached intermediates
-    // (Dedup.cached / StreamOps static indexes) that the queries never
-    // release themselves. 106 queries x 3 passes in one JVM accumulated
-    // those blocks until unchanged queries ran 1.4-1.8x slower than r4
-    // purely from storage+GC pressure. Release them BETWEEN timings
-    // (blocking, so eviction cost is paid outside the timed window).
-    def releaseCaches(): Unit = {
-      graft.ext.Dedup.clearSignatureCaches(blocking = true)
-      graft.streaming.StreamOps.clearStaticIndexes(blocking = true)
-    }
+    // Round-5 drift fix: the dedup operators register cached signature
+    // tables that the queries never release themselves. 106 queries x 3
+    // passes in one JVM accumulated those blocks until unchanged queries
+    // ran 1.4-1.8x slower than r4 purely from storage+GC pressure.
+    // Release them BETWEEN timings (blocking, so eviction cost is paid
+    // outside the timed window).
     def timedPass(): Map[String, Double] = benchQueries.map { case (name, fn) =>
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
       val dt = (System.nanoTime() - t0) / 1e9
-      releaseCaches()
+      graft.ext.Dedup.clearSignatureCaches(blocking = true)
       name -> dt
     }
     val passes = (1 to runs).map { _ =>

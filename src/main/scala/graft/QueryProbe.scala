@@ -97,7 +97,6 @@ object QueryProbe {
               println(f"   ${ms / 1e3}%7.2fs x$cnt%-4d ($tk%d tasks) $site%s")
             }
             graft.ext.Dedup.clearSignatureCaches(blocking = true)
-            graft.streaming.StreamOps.clearStaticIndexes(blocking = true)
           }
       }
     }

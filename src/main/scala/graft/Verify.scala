@@ -40,7 +40,6 @@ object Verify {
       // doesn't accumulate pinned blocks (round-5 "already cached" log
       // spam / bench-drift companion fix)
       graft.ext.Dedup.clearSignatureCaches()
-      graft.streaming.StreamOps.clearStaticIndexes()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

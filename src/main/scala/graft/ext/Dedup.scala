@@ -72,21 +72,6 @@ object Dedup {
     acc
   }
 
-  /** Word 5-gram shingle set — the dedup shingle. Unigram sets are useless
-    * on homogeneous corpora (a 31-word vocabulary makes every pair ~0.9
-    * Jaccard); 5-grams separate true near-dups (~0.9+) from unrelated
-    * documents (~0.0).
-    */
-  def shingleSet(codes: Column): Column = chainCodes(codes, 5)
-
-  /** Single-pass Scala signature kernel: text -> (5-gram shingle set,
-    * band keys). Same arithmetic as the column/oracle formulation, but one
-    * tight JVM pass per row — the column version chains five
-    * CodegenFallback higher-order functions whose trees get re-evaluated
-    * per consumer, which measured ~100x slower. (Same trade the AIS decode
-    * kernel makes: scalar-heavy per-row logic belongs in one JVM function;
-    * joins/shuffles stay relational.)
-    */
   /** The tset-building half of [[signatureScala]]: distinct 5-gram
     * shingle codes only, no minhash work — the per-row kernel for
     * consumers that never read the bands (decontamination guards hash
@@ -119,6 +104,14 @@ object Dedup {
     tset
   }
 
+  /** Single-pass Scala signature kernel: text -> (5-gram shingle set,
+    * band keys). Same arithmetic as the oracle's SQL formulation, but one
+    * tight JVM pass per row — a column formulation chains five
+    * CodegenFallback higher-order functions whose trees get re-evaluated
+    * per consumer, which measured ~100x slower. (Same trade the AIS decode
+    * kernel makes: scalar-heavy per-row logic belongs in one JVM function;
+    * joins/shuffles stay relational.)
+    */
   private def signatureScala(text: String): (Array[Long], Array[String]) = {
     val tset = shingleCodesScala(text)
     // a doc under 5 tokens has NO shingles; minhash over the empty set
@@ -325,28 +318,6 @@ object Dedup {
     docs.select(col("doc_id"),
       shingleCodesUdf(coalesce(col(textCol), lit(""))).as("tset"))
 
-  /** Column form of the 5-gram shingle set (streaming pipelines compose
-    * it against their own watermark/selection). Shingle-only kernel —
-    * no minhash/band work per row.
-    */
-  def shingleCol(text: Column): Column =
-    shingleCodesUdf(coalesce(text, lit("")))
-
-  /** LSH band keys for one text column (same kernel as the pair
-    * generators — one arithmetic, every consumer).
-    */
-  def bandCol(text: Column): Column =
-    signatureUdf(coalesce(text, lit(""))).getField("_2")
-
-  /** (doc_id, band, key) band table — the at-rest signature-store
-    * layout (bucket by `key` when writing) and the static side of the
-    * streaming near-dup guard.
-    */
-  def bandTable(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs.select(col("doc_id"),
-        posexplode_outer(bandCol(col(textCol))).as(Seq("band", "key")))
-      .filter(col("key").isNotNull)
-
   /** Test-set decontamination: for every CONTAMINATED train document
     * (≥1 shared shingle), the number of distinct 5-gram shingles it
     * shares with ANY test document — the standard n-gram-overlap
@@ -478,20 +449,6 @@ object Dedup {
       else trCodes.join(skewJoinReady(h.codes), Seq("code"))
     joined.groupBy(col("doc_id")).agg(count(lit(1)).as("n_shared"))
   }
-
-  /** K-wide MinHash signature over the token set. */
-  def minhashSignature(setCol: Column): Column =
-    array((0 until K).map { i =>
-      aggregate(setCol, lit(Long.MaxValue),
-        (m, c) => least(m, (lit(A(i)) * c + lit(B(i))) % P))
-    }: _*)
-
-  /** Band key: rows of one band joined ':' (string key shuffles fine). */
-  def bandKeys(sig: Column): Column =
-    array((0 until Bands).map { b =>
-      concat_ws(":",
-        (0 until Rows).map(r => element_at(sig, b * Rows + r + 1)): _*)
-    }: _*)
 
   /** Exact-duplicate groups keyed on raw text: (kept doc_id = min,
     * duplicate count). SURVEY R12-adjacent; one shuffle.

@@ -156,29 +156,6 @@ object Multimodal {
     out
   }
 
-  /** Resize via container-header decode: (w, h) parsed out of the real
-    * PNG/JPEG/GIF header bytes, then [[resizeKernel]]. WAV (no 2D
-    * raster) and unparsable payloads degrade to a null raster with
-    * format "unknown".
-    */
-  def resize(media: Dataset[MediaRecord], outW: Int, outH: Int): Dataset[ResizedMedia] = {
-    require(outW > 0 && outH > 0 && outW.toLong * outH <= Int.MaxValue - 8,
-      s"output dims must be positive and fit an array: $outW x $outH")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { it =>
-      it.map { r =>
-        MediaHeaders.parse(r.mime, r.payload) match {
-          case Some(m) if m.width > 0 && m.height > 0 =>
-            ResizedMedia(r.media_id, m.format, m.width, m.height, outW, outH,
-              resizeKernel(r.payload, m.width, m.height, outW, outH))
-          case _ =>
-            ResizedMedia(r.media_id, "unknown", 0, 0, outW, outH, null)
-        }
-      }
-    }
-  }
-
   /** Resize from DECLARED dims — the entry point a real codec feeds
     * (raster + dims in, raster out), and the oracle-gatable one: with
     * the byte-grid stub the output is pure index arithmetic over the

@@ -172,8 +172,8 @@ object Retrieval {
     * per call that does not depend on the queries. Build once (two
     * corpus passes), persist, then serve arbitrary query batches with
     * per-batch cost O(postings of the queried terms) instead of
-    * O(corpus tokens) — the shape a streaming retrieval endpoint needs
-    * (see [[graft.streaming.StreamOps.retrievalServeStream]]).
+    * O(corpus tokens) — the shape the point-lookup export needs
+    * ([[graft.jobs.IndexExport.exportBm25]]).
     *
     * Restricting the full postings/df tables to a batch's term set
     * yields exactly the values the batch path computes from a filtered

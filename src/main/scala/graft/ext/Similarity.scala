@@ -273,16 +273,21 @@ object Similarity {
       nearestCentroid(centRows.toIndexedSeq, col("embedding")))
     val queries = embeddings.filter(col("vec_id") < queryMaxId)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    ivfBatchTopKQueries(assigned, centRows.toIndexedSeq, queries, k, nprobe)
+    val q = probesPerQuery(queries, centRows.toIndexedSeq, nprobe)
+      .select(col("query_id"), col("qvec"), col("cell"))
+    val topk = udaf(new TopKByScore(k))
+    assigned.withColumn("cell", col("cell").cast("long"))
+      .join(broadcast(q), Seq("cell"))
+      .filter(col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id"),
+        rnd(cosine(col("embedding"), col("qvec")), 6).as("cos"))
+      .groupBy(col("query_id"))
+      .agg(topk(col("cos"), col("vec_id")).as("top"))
+      .select(col("query_id"), posexplode(col("top")).as(Seq("rank0", "r")))
+      .select(col("query_id"), (col("rank0") + 1).cast("long").as("rank"),
+        col("r._2").as("vec_id"), col("r._1").as("cos"))
   }
 
-  /** The query-side half of [[ivfBatchTopK]], factored so a serving
-    * path can run arbitrary query frames `(query_id, qvec)` against a
-    * PREBUILT assigned store (persisted [[ivfAssign]] output or the
-    * cell-partitioned parquet [[ivfAppendStore]] writes) without
-    * re-deriving the assignment per call. [[ivfBatchTopK]] delegates
-    * here, so batch and serving results are identical by construction.
-    */
   /** In-plan probe-cell selection for a query frame `(query_id, qvec,
     * …)`: one output row per (query, probed cell), columns preserved
     * plus `cell`. Same total order as the driver-side [[probeCells]]
@@ -298,7 +303,7 @@ object Similarity {
     * a zero/±1e30 query makes the cosine NaN/±Inf, whose cast(long)
     * throws under ANSI. NaN/far maps to cos = -2 = "probe last".
     */
-  private[ext] def probesPerQuery(queries: DataFrame,
+  private def probesPerQuery(queries: DataFrame,
       centRows: Seq[(Long, Seq[Float])], nprobe: Int): DataFrame = {
     val cands = centRows.map { case (id, cv) =>
       val c = nanvl(rnd(cosine(col("qvec"), typedLit(cv)), 6), lit(-2.0))
@@ -313,24 +318,6 @@ object Similarity {
       .withColumn("p", explode(col("probes")))
       .withColumn("cell", col("p.id").cast("long"))
       .drop("probes", "p")
-  }
-
-  def ivfBatchTopKQueries(assigned: DataFrame,
-      centRows: Seq[(Long, Seq[Float])], queries: DataFrame, k: Int,
-      nprobe: Int): DataFrame = {
-    val q = probesPerQuery(queries, centRows, nprobe)
-      .select(col("query_id"), col("qvec"), col("cell"))
-    val topk = udaf(new TopKByScore(k))
-    assigned.withColumn("cell", col("cell").cast("long"))
-      .join(broadcast(q), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        rnd(cosine(col("embedding"), col("qvec")), 6).as("cos"))
-      .groupBy(col("query_id"))
-      .agg(topk(col("cos"), col("vec_id")).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("rank0", "r")))
-      .select(col("query_id"), (col("rank0") + 1).cast("long").as("rank"),
-        col("r._2").as("vec_id"), col("r._1").as("cos"))
   }
 
   /** Incremental IVF maintenance, ingest half (the ANN twin of q76's
@@ -355,18 +342,6 @@ object Similarity {
       centroids: Seq[(Long, Seq[Float])]): DataFrame =
     batch.withColumn("cell",
       nearestCentroid(centroids.sortBy(_._1), col("embedding")))
-
-  /** Append-only ingest into an on-disk cell-partitioned IVF store (the
-    * layout whose probe-time partition pruning PlanSpec pins): assign
-    * the batch, append under `cell=<id>/` partitions. Existing store
-    * files are never rewritten — at 100 TB an ingest touches only the
-    * partitions the batch lands in, and compaction is an orthogonal
-    * concern of the table format.
-    */
-  def ivfAppendStore(batch: DataFrame, centroids: Seq[(Long, Seq[Float])],
-      storeDir: String): Unit =
-    ivfAssign(batch, centroids).write.mode("append")
-      .partitionBy("cell").parquet(storeDir)
 
   /** Deterministic ±1 random hyperplanes for RP-LSH: sign of a Knuth
     * multiplicative hash of (plane, dim). Unlike the raw sign-bucket

@@ -20,22 +20,6 @@ import org.apache.spark.sql.catalyst.util.ArrayData
   */
 object VecMath {
 
-  /** Sequential dot product: float32 multiply, double accumulate.
-    * CAVEAT: truncates to min(length) — callers needing the declarative
-    * form's NULL-on-ragged semantics must gate on [[cosineComparable]]
-    * first (the CosineSimilarity expression does).
-    */
-  def dot(a: ArrayData, b: ArrayData): Double = {
-    val n = math.min(a.numElements(), b.numElements())
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      acc += (a.getFloat(i) * b.getFloat(i)).toDouble
-      i += 1
-    }
-    acc
-  }
-
   /** True when the pair is comparable under the declarative reference:
     * equal lengths and no null elements. zip_with null-pads a ragged
     * pair and propagates null elements, so the HOF cosine is NULL in

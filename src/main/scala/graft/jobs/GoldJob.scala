@@ -62,18 +62,8 @@ object GoldJob {
   /** [[decode]] without the null filter: one kernel call per peek-admitted
     * message, and a null `d` for a message that fails to decode.
     */
-  private def decodeAll(lines: DataFrame, peekChars: Seq[String]): DataFrame =
-    decodeAssembled(
-      Reassembly.assembleBatch(Reassembly.parseFragments(lines)), peekChars)
-
-  /** The shared peek-filter + decode chain over an assembled frame —
-    * one implementation for the batch and streaming paths (the stream
-    * used to inline a copy WITHOUT the peek pushdown, running the
-    * decode kernel on every message to keep a fraction of them).
-    * The result is not null-filtered.
-    */
-  private def decodeAssembled(assembled: DataFrame,
-      peekChars: Seq[String]): DataFrame = {
+  private def decodeAll(lines: DataFrame, peekChars: Seq[String]): DataFrame = {
+    val assembled = Reassembly.assembleBatch(Reassembly.parseFragments(lines))
     val peek = substring(element_at(split(element_at(col("sentences"), 1), ","), 6), 1, 1)
     val filtered =
       if (peekChars.nonEmpty) assembled.filter(peek.isin(peekChars: _*))
@@ -131,44 +121,6 @@ object GoldJob {
     goldDf
       .filter(Geo.inTssNorthbound(col("longitude"), col("latitude")))
       .agg(countDistinct(col("mmsi")).as("n_vessels"))
-
-  /** Streaming twin of [[run]]: tail a datalog landing zone and keep
-    * the date-partitioned gold position table continuously appended.
-    * Decode is the same narrow plan; the as-of static join is a BATCH
-    * concern (it needs the full static history — the reference also
-    * joins at analysis time, ais_analysis.py:476), so the stream lands
-    * silver positions and batch `gold` runs over the landed table.
-    * Checkpointed file sink => exactly-once appends at 100 TB.
-    *
-    * Known limit: this path still decodes each position twice. The
-    * position filter on `d.messageType` is pushed under the decode
-    * projection, and with no exchange between them there is nothing to
-    * stop it (the decode-once rule above).
-    */
-  def runStream(spark: SparkSession, datalogDir: String, goldOut: String,
-      checkpointDir: String,
-      evictionTimeout: Option[String] = Some("60 seconds"))
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val lines = graft.sources.Sources.datalogStream(spark, datalogDir)
-    val frags = Reassembly.parseFragments(lines)
-    import spark.implicits._
-    // evictionTimeout bounds reassembly state: package ids cycle 0-9,
-    // so a lost fragment's stale state would otherwise splice with the
-    // next message reusing its key. Peek pushdown (types 1/2/3) skips
-    // the decode kernel for messages positions() would discard anyway.
-    val assembled = Reassembly
-      .assembleStream(frags.as[Reassembly.Fragment], evictionTimeout).toDF()
-    val decoded = decodeAssembled(assembled, Seq("1", "2", "3"))
-    positions(decoded)
-      .withColumn("event_date", to_date(col("ts")))
-      .writeStream
-      .format("parquet")
-      .partitionBy("event_date")
-      .option("path", goldOut)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .start()
-  }
 
   /** End-to-end: datalog path -> gold parquet + zone count. The gold
     * table is written partitioned by event date so downstream

@@ -6,11 +6,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.graft.{GraftColumns, GraftExec}
 
-import graft.ext.{Pq, Retrieval, Similarity}
+import graft.ext.Retrieval
 import graft.ext.Retrieval.Bm25Index
 
-/** The point-lookup serving tier: export the retrieval indexes
-  * ([[Retrieval.bm25Index]] postings/df, [[Pq]] codes) to a sorted,
+/** The point-lookup serving tier: export the BM25 index
+  * ([[Retrieval.bm25Index]] postings/df) to a sorted,
   * hash-bucketed, partition-pruned parquet layout, and serve a SINGLE
   * query by reading only the buckets it touches — no streaming
   * micro-batch floor, no full-index scan.
@@ -25,10 +25,7 @@ import graft.ext.Retrieval.Bm25Index
   *    [[GraftColumns.xxhash64String]] (bit-identical to the export's
   *    `xxhash64` column — same expression evaluated eagerly), so
   *    pruning costs zero Spark jobs;
-  *  - corpus stats (n, sum_dl, n_buckets) ride a one-row meta file;
-  *  - PQ codes are partitioned by IVF cell (the
-  *    [[Similarity.ivfAppendStore]] layout, but storing CODES so a
-  *    scan reads ~m bytes/vec, not the floats).
+  *  - corpus stats (n, sum_dl, n_buckets) ride a one-row meta file.
   *
   * Epoch versioning (what makes a RE-export safe under live traffic):
   * every export writes a fresh immutable `epoch_<n>/` directory under
@@ -64,8 +61,6 @@ import graft.ext.Retrieval.Bm25Index
   * scannable table for the batch path.
   */
 object IndexExport {
-
-  val DefaultBuckets = 64
 
   /** Scale-adaptive bucket count for [[exportBm25]]'s default (guide
     * §6: size output partitions from the data, not a constant): one
@@ -452,26 +447,5 @@ object IndexExport {
         Seq("doc_id", "dl", "term", "tf")),
       pruned(spark, l, "df", DfSchema, ts, Seq("term", "df")),
       l.n, l.sumDl, k)
-  }
-
-  /** Write PQ codes partitioned by IVF cell into a fresh epoch:
-    * `<outDir>/epoch_<n>/codes/cell=<c>/` (vec_id, codes array<long>),
-    * sorted by vec_id within files, then the same pointer swap + prune
-    * as [[exportBm25]]. The cell assignment and the encode ride ONE
-    * select over the embedding scan — the floats are read once at
-    * export time and never again at lookup time.
-    */
-  def exportPqCells(embeddings: DataFrame,
-      centroids: Seq[(Long, Seq[Float])], cbs: Pq.Codebooks,
-      outDir: String): Unit = {
-    val epoch = nextEpochDir(outDir)
-    Similarity.ivfAssign(embeddings, centroids)
-      .select(col("cell"), col("vec_id"), Pq.codesCol(cbs).as("codes"))
-      .repartition(col("cell"))
-      .sortWithinPartitions(col("cell"), col("vec_id"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$epoch/codes")
-    swapPointer(outDir, epoch.getName)
-    pruneEpochs(outDir)
   }
 }

@@ -1,36 +1,16 @@
 package graft.jobs
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Sharded JSONL corpus export — the materialization step that ends a
-  * training-data pipeline: ingest → clean → dedup → mix → EXPORT.
-  * Training stacks consume line-delimited JSON in size-balanced shards,
-  * so the writer must (a) balance bytes across shards, (b) be
-  * deterministic enough that re-running the export reproduces the same
-  * bytes, and (c) never funnel data through the driver.
-  *
-  * Shard assignment is the SAME multiplicative hash as
-  * q93_shard_balance (`((id % 1000000007) * 2654435761 + 17) %
-  * 1000000007 % nShards` — injective below the modulus, overflow-safe
-  * for every Long id; see [[shardOf]]), so q93 over the corpus IS the
-  * pre-write balance check for this writer — run the count-sized
-  * aggregate first, then materialize.
-  *
-  * Reproducibility: rows are hash-repartitioned ON the shard id (each
-  * shard's rows land wholly in one task) and sorted by (shard, id)
-  * within the task, so each shard directory holds exactly ONE part file
-  * whose bytes depend only on the input rows — byte-identical across
-  * re-runs, partition layouts, and cluster sizes. `to_json` escapes
-  * embedded newlines/quotes, so one row is always one line.
-  *
-  * Scale: one narrow projection + one shuffle keyed on nShards values.
-  * Per SCALE.md's sizing rule, nShards = ceil(corpus bytes / target
-  * file size); at 100 TB with 1 GB shards that is ~10^5 shards — far
-  * above any task-count concern, and the sort is per-shard, never
-  * global. For multi-file shards (relaxing single-file determinism for
-  * write parallelism within a shard), raise `spark.sql.files
-  * .maxRecordsPerFile` instead of changing this layout.
+/** The shard assignment of a sharded JSONL corpus export — the step that
+  * ends a training-data pipeline (ingest → clean → dedup → mix → export).
+  * q93_shard_balance reports the balance of exactly this hash
+  * (`((id % 1000000007) * 2654435761 + 17) % 1000000007 % nShards` —
+  * injective below the modulus, overflow-safe for every Long id; see
+  * [[shardOf]]), so a writer that partitions on it can check its balance
+  * with q93 before it writes: `df.withColumn("shard", shardOf(...))
+  * .write.partitionBy("shard").json(...)`.
   */
 object JsonlExport {
 
@@ -44,73 +24,11 @@ object JsonlExport {
     * Long once id ≥ 2^63 / 2654435761 ≈ 3.47e9 — Spark would silently
     * wrap while an int64 SQL oracle errors, breaking both the q93
     * parity claim and the balance guarantee exactly at the corpus sizes
-    * this writer exists for. Reduced first, the product is bounded by
+    * that need sharding. Reduced first, the product is bounded by
     * (Mod-1) * Mult ≈ 2.66e18 < 2^63. Injectivity holds for
     * id ∈ [0, Mod); above that ids collide mod Mod by construction —
-    * fine for balance, so only in-file ORDER still needs unique ids.
+    * fine for balance.
     */
   def shardOf(id: Column, nShards: Int): Column =
     pmod(pmod(pmod(id, lit(Mod)) * Mult + Salt, lit(Mod)), lit(nShards))
-
-  /** Size-targeted export: derive `nShards` from the measured corpus
-    * bytes — SCALE.md's sizing rule `nShards = ceil(B / targetFileBytes)`
-    * as an executed entry point instead of a caller-side estimate.
-    *
-    * The measurement is one count-sized aggregate over the EXACT bytes
-    * the writer will emit (`octet_length(to_json(line)) + 1` per row,
-    * the +1 is the newline), i.e. the q93 pre-write pass extended from
-    * row balance to byte volume; with the hash spreading rows uniformly,
-    * per-file bytes land on ~targetFileBytes. Costs one extra serialize
-    * pass over the corpus — at 100 TB you would feed the same formula
-    * from table statistics or a hash-sample instead; the formula, not
-    * the measurement pass, is the contract. For gzip shards the target
-    * governs UNCOMPRESSED bytes (compression ratio is content-dependent
-    * and not the writer's business). Returns the chosen `nShards`.
-    */
-  def exportSized(df: DataFrame, idCol: String, outDir: String,
-      targetFileBytes: Long, compression: Option[String] = None): Int = {
-    require(targetFileBytes > 0,
-      s"targetFileBytes must be positive, got $targetFileBytes")
-    def bt(c: String) = col("`" + c.replace("`", "``") + "`")
-    val cols = df.columns.map(bt)
-    val totalBytes = df
-      .select((octet_length(to_json(struct(cols: _*))) + lit(1)).cast("long").as("b"))
-      .agg(sum(col("b"))).head() match {
-        case r if r.isNullAt(0) => 0L
-        case r => r.getLong(0)
-      }
-    val nShards = math.max(1L,
-      (totalBytes + targetFileBytes - 1) / targetFileBytes)
-    require(nShards <= Int.MaxValue, s"nShards $nShards overflows Int")
-    export(df, idCol, outDir, nShards.toInt, compression)
-    nShards.toInt
-  }
-
-  /** Write `df` as `outDir/shard=K/part-*.txt` JSONL, one line per row,
-    * one file per shard, deterministic bytes. `idCol` must be a unique
-    * non-negative long (drives both shard assignment and in-file
-    * order). Pass `compression = Some("gzip")` for .gz shards.
-    */
-  def export(df: DataFrame, idCol: String, outDir: String, nShards: Int,
-      compression: Option[String] = None): Unit = {
-    require(nShards > 0, s"nShards must be positive, got $nShards")
-    // the internal column would silently CLOBBER a same-named input
-    // column (withColumn replaces, and the serialized struct would then
-    // carry the internal value instead of the user's data) — fail loud
-    require(!df.columns.contains("shard"),
-      "input column 'shard' collides with JsonlExport's internal shard " +
-        "column; rename it before exporting")
-    // backtick-quote every user column: bare col(name) parses dots as
-    // nested-field paths, so a literal "user.name" column would fail to
-    // resolve in a generic exporter
-    def bt(c: String) = col("`" + c.replace("`", "``") + "`")
-    val cols = df.columns.map(bt)
-    val lines = df
-      .withColumn("shard", shardOf(bt(idCol), nShards))
-      .repartition(col("shard"))
-      .sortWithinPartitions(col("shard"), bt(idCol))
-      .select(col("shard"), to_json(struct(cols: _*)).as("value"))
-    val w = lines.write.mode("overwrite").partitionBy("shard")
-    compression.fold(w)(c => w.option("compression", c)).text(outDir)
-  }
 }

@@ -48,8 +48,16 @@ class NmeaSocketProvider extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     NmeaSocket.schema
   override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new NmeaSocketTable(new CaseInsensitiveStringMap(properties))
+      properties: util.Map[String, String]): Table = {
+    val options = new CaseInsensitiveStringMap(properties)
+    // a half-given credential would connect without the preamble
+    val missing = Seq(NmeaSocket.USER, NmeaSocket.PASSWORD)
+      .filterNot(options.containsKey)
+    require(missing.size != 1, s"nmea socket credential is missing option " +
+      s"'${missing.head}': give both '${NmeaSocket.USER}' and " +
+      s"'${NmeaSocket.PASSWORD}' or neither")
+    new NmeaSocketTable(options)
+  }
 }
 
 class NmeaSocketTable(options: CaseInsensitiveStringMap)

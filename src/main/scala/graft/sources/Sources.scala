@@ -1,10 +1,12 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
-/** Source connectors (SURVEY §2.1 S1–S3, S9–S10).
+/** Live socket source connectors (SURVEY §2.1 S2, S10). File sources
+  * are plain Spark readers at their use sites: S1 datalogs are
+  * `spark.read.text` (batch) or `spark.readStream.text` (a landing
+  * directory), S3 JSON lines are `from_json`, S9 CSV dimensions are
+  * `spark.read.csv` joined under `broadcast`.
   *
   * The analytic core is transport-agnostic: every source lands on the same
   * DataFrame of raw lines (or XML docs) that the decode/flatten operators
@@ -15,64 +17,26 @@ import org.apache.spark.sql.types.StructType
   */
 object Sources {
 
-  /** S1: batch datalog scan — one raw line per row (ais_analysis.py:317-321). */
-  def datalog(spark: SparkSession, path: String): DataFrame =
-    spark.read.text(path)
-
-  /** S1 (streaming): tail a datalog directory as a file stream. At scale
-    * this is the landing-zone pattern: upstream collectors append
-    * immutable files; maxFilesPerTrigger bounds batch size.
-    */
-  def datalogStream(spark: SparkSession, dir: String,
-      maxFilesPerTrigger: Int = 16): DataFrame =
-    spark.readStream
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .text(dir)
-
   /** S2: live TCP NMEA feed with the reference's credential preamble
     * (`\x01user\x00pwd\x00`, ais_ingressServer.py:33-39) and reconnect —
     * a custom DataSource V2 micro-batch stream (see NmeaSocket.scala).
+    * Give both `user` and `password` or neither; the provider rejects
+    * one without the other.
     */
   def tcpLines(spark: SparkSession, host: String, port: Int,
-      user: Option[String] = None, password: Option[String] = None): DataFrame = {
-    val r = spark.readStream
+      user: Option[String] = None, password: Option[String] = None): DataFrame =
+    spark.readStream
       .format(classOf[NmeaSocketProvider].getName)
       .option(NmeaSocket.HOST, host)
       .option(NmeaSocket.PORT, port.toString)
-    ((user, password) match {
-      case (Some(u), Some(p)) =>
-        r.option(NmeaSocket.USER, u).option(NmeaSocket.PASSWORD, p)
-      case _ => r
-    }).load()
-  }
-
-  /** S3: newline-delimited JSON of decoded messages -> typed columns
-    * (ais_egressServerCH.py:113-135).
-    */
-  def jsonLines(lines: DataFrame, schema: StructType): DataFrame =
-    lines.select(from_json(col("value"), schema).as("j")).select(col("j.*"))
-
-  /** S9: CSV dimension scan (atonlist.csv pattern,
-    * ais_webSocketServer.py:186-188). Small dims get broadcast by the
-    * caller at join time.
-    */
-  def csvDimension(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").option("inferSchema", "true").csv(path)
-
-  /** S10: IVEF XML document files (one MSG_IVEF doc per file, or a
-    * pre-split doc-per-line text file).
-    */
-  def ivefDocs(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    spark.read.text(path)
-      .withColumn("seq", monotonically_increasing_id())
-      .select(col("seq"), col("value").as("xml"))
-  }
+      .options(user.map(NmeaSocket.USER -> _).toMap ++
+        password.map(NmeaSocket.PASSWORD -> _))
+      .load()
 
   /** S10 (live): the reference's IVEF TCP client protocol — XML login,
     * `</MSG_IVEF>` framing, Ping->Pong heartbeat, reconnect+re-login on
-    * a silent feed (see IvefSocket.scala). Emits (seq, xml) rows, the
-    * same contract as `ivefDocs`.
+    * a silent feed (see IvefSocket.scala). Emits (seq, xml) rows, one
+    * MSG_IVEF document each, the input `Ivef.parseDoc` flattens.
     */
   def ivefStream(spark: SparkSession, host: String, port: Int,
       name: String, password: String, heartbeatSec: Long = 30L): DataFrame =

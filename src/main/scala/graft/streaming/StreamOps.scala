@@ -6,30 +6,18 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
-/** Event-time streaming aggregations (SURVEY §2.4): watermarked tumbling
-  * windows and session windows. The reference keeps state forever and
-  * stamps processing time (ais_egressServerCH.py:132-134); these add the
-  * event-time/watermark discipline a 100 TB stream needs — state is
-  * dropped once the watermark passes, so long-running state size is
-  * bounded by (watermark delay x event rate), not by stream lifetime.
+/** Bounded-state event-time streaming (SURVEY §2.4): watermarked dedup,
+  * event-time key expiry and session windows. The reference keeps state
+  * forever and stamps processing time (ais_egressServerCH.py:132-134);
+  * these add the event-time/watermark discipline a 100 TB stream needs —
+  * state is dropped once the watermark passes, so long-running state
+  * size is bounded by (watermark delay x event rate), not by stream
+  * lifetime.
   *
-  * Both shapes run identically in batch (withWatermark is a no-op there),
-  * which is how the session_window variant is oracle-checked (q34).
+  * The session windows run identically in batch (withWatermark is a
+  * no-op there), which is how they are oracle-checked (q34).
   */
 object StreamOps {
-
-  /** Tumbling-window counts per key; in append mode a window emits once
-    * the watermark passes its end, and events older than the watermark
-    * are dropped (late-data policy the reference lacks).
-    */
-  def windowedCounts(events: DataFrame, tsCol: String, keyCol: String,
-                     windowDur: String, watermarkDelay: String): DataFrame =
-    events
-      .withWatermark(tsCol, watermarkDelay)
-      .groupBy(window(col(tsCol), windowDur).as("w"), col(keyCol))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col(keyCol), col("w.start").as("window_start"),
-        col("w.end").as("window_end"), col("n_events"))
 
   /** Streaming exact dedup with BOUNDED state: duplicates are dropped
     * only within the watermark horizon, so per-key state is evicted once
@@ -62,7 +50,7 @@ object StreamOps {
     * successive events within the batch — which is exactly what makes
     * live and replay runs emit the SAME expiries regardless of
     * batching. (The events slice is buffered and sorted per (key,
-    * batch) — trigger sizing bounds it, as with tokenBudgetStream.)
+    * batch) — trigger sizing bounds it.)
     */
   def trackExpiry(events: Dataset[(Long, Timestamp)], ttlSeconds: Long,
                   watermarkDelay: String): Dataset[Expiry] = {
@@ -96,236 +84,13 @@ object StreamOps {
       }
   }
 
-  /** Admitted document under the streaming token-budget quota. */
-  final case class Admitted(lang: String, doc_id: Long, n_tok: Long,
-      cum: Long)
-
-  /** Streaming per-language ingestion quota, enforced ACROSS
-    * micro-batches. State is one long per language (the running token
-    * total) — nothing corpus-sized ever enters state.
-    *
-    * Admission is FIRST-FIT: each doc (in doc_id order within a batch,
-    * arrival order across batches) is admitted iff it still fits the
-    * remaining budget; an oversized doc is skipped and LATER smaller
-    * docs are still admitted (StreamOpsSpec pins this). That is a
-    * deliberately different policy from the batch q87 sampler, which
-    * cuts a language off at the first doc whose prefix sum overflows —
-    * under first-fit the quota fills tighter; under q87's prefix-cut
-    * the admitted set is a deterministic function of the hash order.
-    * The two admit the same set only when no doc overflows mid-stream.
-    *
-    * Memory bound: each (batch, language) group is buffered and sorted
-    * in one task (`toArray.sortBy` below), so the working set is the
-    * micro-batch's largest per-language slice — TRIGGER SIZING is the
-    * bound (processingTime / maxOffsetsPerTrigger), the corpus size is
-    * irrelevant. Same honesty note as the q63 packing sub-shard: the
-    * buffer is bounded by configuration, not by the operator.
-    */
-  def tokenBudgetStream(docs: Dataset[(String, Long, Long)],
-      budget: Long): Dataset[Admitted] = {
-    require(budget >= 0, s"budget must be non-negative, got $budget")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.groupByKey(_._1)
-      .flatMapGroupsWithState[Long, Admitted](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case (lang, it, state) =>
-          var cum = state.getOption.getOrElse(0L)
-          val out = it.toArray.sortBy(_._2).iterator.flatMap {
-            case (_, docId, nTok) =>
-              // overflow-safe admission: `cum + nTok <= budget` wraps
-              // negative for an adversarial nTok near Long.MaxValue and
-              // would admit it, leaving cum corrupt in state forever.
-              // cum <= budget is invariant, so compare against the
-              // remaining headroom instead.
-              if (nTok >= 0 && nTok <= budget - cum) {
-                cum += nTok
-                Some(Admitted(lang, docId, nTok, cum))
-              } else None
-          }.toVector
-          state.update(cum)
-          out.iterator
-      }
-  }
-
-  /** One heavy-hitter estimate: `est` undercounts the true frequency by
-    * at most N/(k+1) tokens seen for the language (Misra–Gries bound).
-    */
-  final case class HeavyHitter(lang: String, code: Long, est: Long)
-
-  /** Streaming per-language token heavy hitters with BOUNDED state: a
-    * Misra–Gries frequent-items summary of at most k counters per
-    * language, maintained ACROSS micro-batches — the streaming twin of
-    * the batch q89 top-k (which is exact because it sees all counts).
-    * State is ≤ k (code, count) entries per language no matter how many
-    * distinct tokens flow past; any token whose true count exceeds
-    * N/(k+1) is GUARANTEED present in the summary, and estimates only
-    * ever undercount (classic MG semantics — a verify pass over the
-    * candidate set recovers exact counts when needed, the same
-    * candidates-then-verify shape as the LSH dedup).
-    *
-    * Each batch appends the language's full post-batch summary snapshot
-    * (score-desc, code tiebreak), so the sink's latest snapshot per
-    * language is the current estimate. Within a batch the slice is
-    * buffered and processed in code order for deterministic replay
-    * (trigger sizing bounds the buffer, as with tokenBudgetStream);
-    * across batches arrival order is the semantic, and the MG guarantee
-    * holds under every order.
-    */
-  def heavyHittersStream(toks: Dataset[(String, Long)],
-      k: Int): Dataset[HeavyHitter] = {
-    require(k > 0, s"k must be positive, got $k (k = 0 would silently emit nothing)")
-    val spark = toks.sparkSession
-    import spark.implicits._
-    toks.groupByKey(_._1)
-      // NoTimeout is safe HERE ONLY because total state is bounded by
-      // construction: one group per language x <= k MG counters each.
-      // Do not copy this onto an unbounded key domain (doc ids, users) —
-      // those need an event-time timeout to evict, like trackExpiry.
-      .flatMapGroupsWithState[Map[Long, Long], HeavyHitter](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case (lang, it, state) =>
-          var m = state.getOption.getOrElse(Map.empty[Long, Long])
-          it.toArray.map(_._2).sorted.foreach { code =>
-            if (m.contains(code)) m += code -> (m(code) + 1L)
-            else if (m.size < k) m += code -> 1L
-            else m = m.map { case (c, n) => c -> (n - 1L) }
-              .filter { case (_, n) => n > 0L }
-          }
-          state.update(m)
-          m.toSeq.sortBy { case (c, n) => (-n, c) }
-            .map { case (c, n) => HeavyHitter(lang, c, n) }.iterator
-      }
-  }
-
-  /** Static shingle indexes persisted by [[contaminationStream]] /
-    * [[nearDupStream]]; one entry per guard. [[clearStaticIndexes]]
-    * releases them when a guard's query stops (shared
-    * [[graft.ext.CacheRegistry]] lifecycle with Dedup's signature
-    * tables).
-    */
-  private val staticIndexes = new graft.ext.CacheRegistry
-
-  /** Test hook: snapshot of the persisted holdout indexes. */
-  private[graft] def staticIndexSnapshot: Seq[DataFrame] =
-    staticIndexes.snapshot
-
-  /** Unpersist every holdout index registered by running guards. Call
-    * after stopping the streaming queries that use them; an unpersisted
-    * dependency recomputes, so calling early is safe, just slow.
-    */
-  def clearStaticIndexes(blocking: Boolean = false): Unit =
-    staticIndexes.clear(blocking)
-
-  /** Streaming contamination guard — the stream-static join shape: a
-    * STATIC holdout corpus is indexed once (distinct 5-gram shingle
-    * codes, PERSISTED so the shingle kernel + distinct run on the first
-    * micro-batch only — an unpersisted static side is re-evaluated every
-    * batch), and the document stream is flagged by a LEFT SEMI join on
-    * the code. Emits each contaminated doc once within the watermark
-    * horizon (dropDuplicatesWithinWatermark keyed on doc_id — bounded
-    * state, like the dedup op above). Release the index with
-    * [[clearStaticIndexes]] once the query stops.
-    *
-    * At 100 TB the static side is a benchmark suite (tiny, broadcast);
-    * the stream side explodes ids + codes only — the same shape as the
-    * batch `Dedup.contamination`, with the count aggregation traded for
-    * once-per-doc flagging (streaming counts over an unbounded doc's
-    * shingles would need a per-doc watermark anyway; the flag is the
-    * actionable signal).
-    */
-  def contaminationStream(docs: DataFrame, testDocs: DataFrame,
-                          tsCol: String, watermarkDelay: String): DataFrame = {
-    val testCodes = graft.ext.Dedup.shingleSets(testDocs)
-      .select(explode_outer(col("tset")).as("code"))
-      .filter(col("code").isNotNull).distinct()
-      .persist()
-    staticIndexes.register(testCodes)
-    docs
-      .withWatermark(tsCol, watermarkDelay)
-      .select(col("doc_id"), col(tsCol),
-        explode_outer(graft.ext.Dedup.shingleCol(col("text"))).as("code"))
-      .filter(col("code").isNotNull)
-      .join(testCodes, Seq("code"), "left_semi")
-      .select(col("doc_id"), col(tsCol))
-      .dropDuplicatesWithinWatermark(Seq("doc_id"))
-  }
-
-  /** Streaming incremental dedup — the stream twin of
-    * Dedup.minhashPairsAgainst (q76): an incoming document stream is
-    * flagged when any of its LSH band keys hits the STATIC signature
-    * store's band table. The store index (distinct (band, key)) is
-    * built and persisted ONCE (release via [[clearStaticIndexes]]);
-    * the stream side explodes to ids + band keys only and LEFT SEMI
-    * joins the index. Each flagged doc emits once within the watermark
-    * horizon — bounded state, same discipline as the other guards.
-    * Band-collision candidates are a superset of true near-dups (no
-    * streaming Jaccard verification: the set join would need the
-    * store's tsets per batch); at ingest that is the right trade —
-    * flagged docs go to a batch verify/drop stage, clean docs flow on.
-    */
-  def nearDupStream(docs: DataFrame, storeDocs: DataFrame,
-                    tsCol: String, watermarkDelay: String): DataFrame = {
-    val bandIndex = graft.ext.Dedup.bandTable(storeDocs)
-      .select(col("band"), col("key")).distinct()
-      .persist()
-    staticIndexes.register(bandIndex)
-    docs
-      .withWatermark(tsCol, watermarkDelay)
-      .select(col("doc_id"), col(tsCol),
-        posexplode_outer(graft.ext.Dedup.bandCol(col("text")))
-          .as(Seq("band", "key")))
-      .filter(col("key").isNotNull)
-      .join(bandIndex, Seq("band", "key"), "left_semi")
-      .select(col("doc_id"), col(tsCol))
-      .dropDuplicatesWithinWatermark(Seq("doc_id"))
-  }
-
-  /** Near-real-time retrieval serving — a live stream of QUERIES against
-    * a STATIC indexed corpus (the inverse of the guard ops above, where
-    * the corpus streams and the reference set is static). Each
-    * micro-batch of query rows is answered by `serve` — a pure
-    * batch-DataFrame function, so per-batch results carry the batch
-    * path's exact semantics (the specs pin batch-equality against
-    * [[graft.ext.Retrieval.bm25BatchTopK]] /
-    * [[graft.ext.Similarity.ivfBatchTopK]] via their shared indexed
-    * entry points) — and handed to `emit` with the batch id.
-    *
-    * The stream side first dedups query ids within the watermark
-    * horizon (state-store-backed, so at-least-once upstream delivery
-    * answers each query once per horizon instead of re-serving every
-    * redelivery); the corpus side lives OUTSIDE the stream as a
-    * prebuilt index ([[graft.ext.Retrieval.bm25Index]] postings /
-    * [[graft.ext.Similarity.ivfAppendStore]] cells), so per-batch work
-    * is O(index entries matched by the batch), never a corpus pass.
-    * That split is the 100 TB shape: the index updates by append
-    * (incremental ingest ops), the serving query only ever joins
-    * batch-sized query rows against it.
-    *
-    * Returns the started query. foreachBatch owns the writeStream
-    * builder, so the checkpoint dir is a parameter rather than a
-    * caller-side option.
-    */
-  def retrievalServeStream(queries: DataFrame, tsCol: String,
-      watermarkDelay: String, checkpointDir: String,
-      serve: DataFrame => DataFrame)(
-      emit: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    queries
-      .withWatermark(tsCol, watermarkDelay)
-      .dropDuplicatesWithinWatermark(Seq("query_id"))
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        emit(serve(batch.drop(tsCol)), batchId)
-      }
-      .start()
-
   /** Session windows (built-in state merge): a session extends while the
     * next event arrives strictly before last_ts + gap; window end is
-    * last_ts + gap. The streaming twin of the batch gaps-and-islands
-    * operator (graft.operators.Sessionize) — split rule differs by one
-    * ulp of the gap (>= here, > there), both oracle-checked.
+    * last_ts + gap. In append mode a session emits once the watermark
+    * passes its end, and events older than the watermark are dropped.
+    * The streaming twin of the batch gaps-and-islands operator
+    * (graft.operators.Sessionize) — split rule differs by one ulp of the
+    * gap (>= here, > there), both oracle-checked.
     */
   def sessionCounts(events: DataFrame, tsCol: String, keyCol: String,
                     gap: String, watermarkDelay: String): DataFrame =

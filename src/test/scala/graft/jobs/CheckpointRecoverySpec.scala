@@ -8,6 +8,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.ops.Reassembly
 import graft.streaming.StreamOps
 
 /** Checkpoint-recovery evidence for the at-least-once + idempotent-sink
@@ -19,11 +20,13 @@ import graft.streaming.StreamOps
   *    window forces a full batch REPLAY (commit marker deleted, so the
   *    restarted query recomputes the last batch against a snapshot that
   *    already contains it);
-  *  - dropDuplicatesWithinWatermark's key state survives the restart (a
-  *    duplicate arriving after recovery is still suppressed);
-  *  - the windowed aggregation's watermark survives the restart (a
-  *    finalized window is not re-opened, late data stays dropped, and no
-  *    window is emitted twice across the stop/restart boundary).
+  *  - fragment reassembly's dedup state survives the restart (a
+  *    fragment redelivered after recovery is still recognized as a
+  *    duplicate, and a message split across the restart completes from
+  *    the restored buffer);
+  *  - the session-window aggregation's watermark survives the restart (a
+  *    finalized session is not re-opened, late data stays dropped, and
+  *    no session is emitted twice across the stop/restart boundary).
   *
   * Parameterized over the state-store provider like StreamOpsBehaviors:
   * recovery must hold on the default HDFS-backed store AND on RocksDB
@@ -126,41 +129,57 @@ abstract class CheckpointRecoveryBehaviors(stateStoreProvider: Option[String])
   test("dedup state survives restart: post-recovery duplicate still suppressed") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, Timestamp)]
+    import graft.ops.Reassembly.{Assembled, Fragment}
+    val in = MemoryStream[Fragment]
     val ckpt = Files.createTempDirectory("ckpt_dedup").toString
     // the memory sink refuses an existing checkpoint
     // ([UNSUPPORTED_FEATURE.QUERY_RECOVERY]) — collect emitted rows
     // driver-side per run instead, the foreachBatch sink recovery
     // supports
-    val emitted = new java.util.concurrent.ConcurrentLinkedQueue[Long]
-    def start() = StreamOps.dedupWithinWatermark(
-        in.toDF().toDF("event_id", "ts"), "ts", Seq("event_id"), "30 minutes")
+    val emitted = new java.util.concurrent.ConcurrentLinkedQueue[Assembled]
+    def start() = Reassembly.assembleStream(in.toDS())
       .writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        b.collect().foreach(r => emitted.add(r.getLong(0)))
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[Assembled], _: Long) =>
+        b.collect().foreach(emitted.add)
       }
       .outputMode("append")
       .option("checkpointLocation", ckpt)
       .start()
+    def frag(id: Int, no: Int) =
+      Fragment(id, "A", 2, no, s"!AIVDM,2,$no,$id,A,p$id$no", s"t$id")
+    def message(id: Int) =
+      Assembled(id, "A", s"t$id", Seq(frag(id, 1).sentence, frag(id, 2).sentence))
+    def drain(): Seq[Assembled] = {
+      val out = emitted.toArray(Array.empty[Assembled]).toSeq
+      emitted.clear()
+      out
+    }
 
+    // two-fragment messages 1 and 2: only their first fragments arrive
     val q1 = start()
-    in.addData((1L, ts(0)), (2L, ts(5)))
+    in.addData(frag(1, 1), frag(2, 1))
     q1.processAllAvailable()
     stopAndWait(q1)
-    assert(emitted.toArray(Array.empty[java.lang.Long]).map(_.toLong).toSet
-      === Set(1L, 2L))
+    assert(drain().isEmpty, "half-assembled messages stay buffered")
     assertProviderEngaged(ckpt)
-    emitted.clear()
 
-    // restart: id=1 arrives again WITHIN the watermark horizon — only
-    // restored state can know it is a duplicate; id=3 is genuinely new
+    // restart: message 1's first fragment is redelivered — only the
+    // restored buffer knows it is a duplicate (without the dedup it
+    // would "complete" message 1 from two copies of fragment 1);
+    // message 2's second fragment completes it from restored state
     val q2 = start()
-    in.addData((1L, ts(6)), (3L, ts(7)))
+    in.addData(frag(1, 1), frag(2, 2))
     q2.processAllAvailable()
     stopAndWait(q2)
-    assert(emitted.toArray(Array.empty[java.lang.Long]).map(_.toLong).toSet
-      === Set(3L),
-      "duplicate id=1 must be suppressed by state restored from the checkpoint")
+    assert(drain() === Seq(message(2)),
+      "the redelivered fragment must be suppressed by state restored from the checkpoint")
+
+    // message 1's buffer still holds exactly one fragment 1
+    val q3 = start()
+    in.addData(frag(1, 2))
+    q3.processAllAvailable()
+    stopAndWait(q3)
+    assert(drain() === Seq(message(1)))
   }
 
   test("watermark survives restart: finalized window stays closed, none emit twice") {
@@ -170,12 +189,12 @@ abstract class CheckpointRecoveryBehaviors(stateStoreProvider: Option[String])
     val ckpt = Files.createTempDirectory("ckpt_window").toString
     val emitted =
       new java.util.concurrent.ConcurrentLinkedQueue[(Timestamp, Long)]
-    def start() = StreamOps.windowedCounts(
+    def start() = StreamOps.sessionCounts(
         in.toDF().toDF("ts", "user_id"), "ts", "user_id",
-        windowDur = "10 minutes", watermarkDelay = "2 minutes")
+        gap = "5 minutes", watermarkDelay = "2 minutes")
       .writeStream
       .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        b.select(col("window_start"), col("n_events")).collect()
+        b.select(col("session_start"), col("n_events")).collect()
           .foreach(r => emitted.add((r.getTimestamp(0), r.getLong(1))))
       }
       .outputMode("append")
@@ -183,30 +202,30 @@ abstract class CheckpointRecoveryBehaviors(stateStoreProvider: Option[String])
       .start()
 
     val q1 = start()
-    in.addData((ts(0), 1L), (ts(5), 1L)) // window [10:00,10:10): 2 events
+    in.addData((ts(0), 1L), (ts(3), 1L)) // session [10:00,10:08): 2 events
     q1.processAllAvailable()
-    in.addData((ts(30), 1L)) // watermark -> 10:28, finalizes [10:00,10:10)
+    in.addData((ts(30), 1L)) // watermark -> 10:28, finalizes [10:00,10:08)
     q1.processAllAvailable()
     stopAndWait(q1)
     val run1 = emitted.toArray(Array.empty[(Timestamp, Long)]).toSeq
-    assert(run1 === Seq((ts(0), 2L)), "first window finalized before the stop")
+    assert(run1 === Seq((ts(0), 2L)), "first session finalized before the stop")
     assertProviderEngaged(ckpt)
     emitted.clear()
 
-    // restart: a late event into the finalized window must STILL be
-    // dropped (only the restored watermark knows the window is closed),
-    // and closing the [10:30,10:40) window must emit it exactly once
-    // with the pre-restart event counted from restored state
+    // restart: a late event into the finalized session must STILL be
+    // dropped (only the restored watermark knows it is closed), and
+    // closing the 10:30 session must emit it exactly once with the
+    // pre-restart event counted from restored state
     val q2 = start()
-    in.addData((ts(1), 1L)) // late into the closed window
+    in.addData((ts(1), 1L)) // late into the closed session
     q2.processAllAvailable()
-    in.addData((ts(31), 1L), (ts(50), 1L)) // +1 to 10:30 window, then close it
+    in.addData((ts(31), 1L), (ts(50), 1L)) // +1 to the 10:30 session, then close it
     q2.processAllAvailable()
     stopAndWait(q2)
     val run2 = emitted.toArray(Array.empty[(Timestamp, Long)]).toSeq
     assert(run2 === Seq((ts(30), 2L)),
-      "exactly the 10:30 window (pre-restart event + post-restart event), " +
-        s"no re-emission of the closed window — got $run2")
+      "exactly the 10:30 session (pre-restart event + post-restart event), " +
+        s"no re-emission of the closed session — got $run2")
   }
 }
 

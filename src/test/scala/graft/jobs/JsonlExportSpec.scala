@@ -1,15 +1,10 @@
 package graft.jobs
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Sharded JSONL export: round-trip fidelity (including embedded
-  * newlines/quotes/unicode — the content a real corpus contains), shard
-  * assignment shared with q93, exactly one deterministic file per
-  * shard, and byte-identical re-export.
+/** The JSONL export shard hash q93 shares: exact modular arithmetic for
+  * every Long id.
   */
 class JsonlExportSpec extends AnyFunSuite {
 
@@ -19,130 +14,6 @@ class JsonlExportSpec extends AnyFunSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
-
-  private def fixture = {
-    import spark.implicits._
-    (0L until 200L).map { i =>
-      val text = i % 7 match {
-        case 0 => s"plain doc $i"
-        case 1 => s"embedded\nnewline $i"     // must stay ONE jsonl line
-        case 2 => s"""quotes "and" backslash \\ $i"""
-        case 3 => s"unicode 中文 😀 $i"
-        case 4 => ""                           // empty text round-trips
-        case 5 => s"tab\tand\rcr $i"
-        case _ => s"ordinary body of doc number $i with some words"
-      }
-      (i, text, if (i % 3 == 0) "en" else "de")
-    }.toDF("doc_id", "text", "lang")
-  }
-
-  test("export round-trips every row through spark.read.json, one line each") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("jsonl").toString
-    JsonlExport.export(fixture, "doc_id", dir, nShards = 8)
-
-    val back = spark.read
-      .schema("doc_id LONG, text STRING, lang STRING")
-      .json(s"$dir/shard=*/")
-    assert(back.count() === 200L)
-    val a = fixture.as[(Long, String, String)].collect().toSet
-    val b = back.select($"doc_id", $"text", $"lang")
-      .as[(Long, String, String)].collect().toSet
-    assert(b === a)
-
-    // one physical line per row: total text-format line count == rows
-    val nLines = spark.read.text(s"$dir/shard=*/").count()
-    assert(nLines === 200L)
-  }
-
-  test("shard layout: q93's hash, exactly one file per shard") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("jsonl").toString
-    JsonlExport.export(fixture, "doc_id", dir, nShards = 8)
-
-    val shardDirs = new java.io.File(dir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("shard=")).sortBy(_.getName)
-    // every doc_id's dir matches the q93 formula; all 8 shards occupied
-    // (200 sequential ids cover all residues of the injective hash)
-    assert(shardDirs.map(_.getName).toSet ===
-      (0 until 8).map(k => s"shard=$k").toSet)
-    shardDirs.foreach { sd =>
-      val parts = sd.listFiles().filter(_.getName.startsWith("part-"))
-      assert(parts.length === 1, s"${sd.getName} has ${parts.length} part files")
-    }
-    val expected = fixture.select($"doc_id",
-      JsonlExport.shardOf($"doc_id", 8).as("shard"))
-      .as[(Long, Long)].collect().toMap
-    val got = spark.read
-      .schema("doc_id LONG, text STRING, lang STRING")
-      .json(s"$dir")   // partition-dir discovery recovers the shard column
-      .select($"doc_id", $"shard".cast("long"))
-      .as[(Long, Long)].collect().toMap
-    assert(got === expected)
-  }
-
-  test("re-export is byte-identical (deterministic shard files)") {
-    val d1 = Files.createTempDirectory("jsonl").toString
-    val d2 = Files.createTempDirectory("jsonl").toString
-    // second export from a differently-partitioned frame of the same rows
-    JsonlExport.export(fixture, "doc_id", d1, nShards = 4)
-    JsonlExport.export(fixture.repartition(7), "doc_id", d2, nShards = 4)
-    def shardBytes(root: String): Map[String, Seq[Byte]] =
-      new java.io.File(root).listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("shard=")).map { sd =>
-          val part = sd.listFiles().filter(_.getName.startsWith("part-")).head
-          sd.getName -> Files.readAllBytes(Paths.get(part.getPath)).toSeq
-        }.toMap
-    val b1 = shardBytes(d1); val b2 = shardBytes(d2)
-    assert(b1.keySet === b2.keySet)
-    b1.keySet.foreach(k => assert(b1(k) === b2(k), s"bytes differ in $k"))
-  }
-
-  test("exportSized: shard count tracks corpus bytes, per-file bytes in the target band") {
-    import spark.implicits._
-    def corpus(nDocs: Int) = (0L until nDocs.toLong).map { i =>
-      (i, s"document body number $i with a stable amount of words", "en")
-    }.toDF("doc_id", "text", "lang")
-    def lineBytes(df: org.apache.spark.sql.DataFrame): Long = df
-      .select((octet_length(to_json(struct($"doc_id", $"text", $"lang"))) + lit(1))
-        .cast("long").as("b")).agg(sum($"b")).as[Long].head()
-    val target = 4096L
-    for (nDocs <- Seq(50, 200, 800)) {
-      val df = corpus(nDocs)
-      val dir = Files.createTempDirectory("jsonl_sized").toString
-      val nShards = JsonlExport.exportSized(df, "doc_id", dir, target)
-      val total = lineBytes(df)
-      // the sizing rule, exactly
-      assert(nShards === math.max(1L, (total + target - 1) / target),
-        s"nDocs=$nDocs")
-      // per-file bytes inside the band: uniform rows + uniform hash ->
-      // every file within 2x of target and the mean within ±40%
-      val sizes = new java.io.File(dir).listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("shard="))
-        .map(_.listFiles().filter(_.getName.startsWith("part-")).head.length())
-      assert(sizes.length === nShards)
-      assert(sizes.sum === total, "files hold exactly the measured bytes")
-      if (nShards > 1) {
-        // ceil rounding bounds the mean: total/ceil(total/target) is
-        // always in (target/2, target]
-        val mean = sizes.sum.toDouble / sizes.length
-        assert(mean > target / 2.0 && mean <= target,
-          s"mean $mean vs target $target (nDocs=$nDocs)")
-        assert(sizes.max <= 2 * target, s"hot shard: ${sizes.max} (nDocs=$nDocs)")
-      }
-    }
-    // shard count tracks corpus growth through the formula (a pure
-    // ratio check would be ceil-rounding-dominated at small counts)
-    val bytesSmall = lineBytes(corpus(50))
-    val bytesBig = lineBytes(corpus(800))
-    val small = JsonlExport.exportSized(corpus(50), "doc_id",
-      Files.createTempDirectory("jsonl_sized").toString, target)
-    val big = JsonlExport.exportSized(corpus(800), "doc_id",
-      Files.createTempDirectory("jsonl_sized").toString, target)
-    assert(small === ((bytesSmall + target - 1) / target).toInt)
-    assert(big === ((bytesBig + target - 1) / target).toInt)
-    assert(big > small)
-  }
 
   test("shardOf matches exact BigInt arithmetic beyond the Long-overflow id range") {
     import spark.implicits._
@@ -158,29 +29,5 @@ class JsonlExportSpec extends AnyFunSuite {
         mod BigInt(JsonlExport.Mod)) mod BigInt(16)).toLong
       assert(got(id) === exact, s"id=$id")
     }
-  }
-
-  test("a pre-existing 'shard' column fails loud instead of being clobbered") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("jsonl").toString
-    val withShard = fixture.withColumn("shard", lit(99))
-    val e = intercept[IllegalArgumentException] {
-      JsonlExport.export(withShard, "doc_id", dir, nShards = 4)
-    }
-    assert(e.getMessage.contains("shard"))
-  }
-
-  test("gzip compression writes .gz shards that read back whole") {
-    val dir = Files.createTempDirectory("jsonl").toString
-    JsonlExport.export(fixture, "doc_id", dir, nShards = 4,
-      compression = Some("gzip"))
-    val files = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("shard=")).flatMap(_.listFiles())
-      .filter(_.getName.startsWith("part-"))
-    assert(files.nonEmpty && files.forall(_.getName.endsWith(".txt.gz")))
-    val back = spark.read
-      .schema("doc_id LONG, text STRING, lang STRING")
-      .json(s"$dir/shard=*/")
-    assert(back.count() === 200L)
   }
 }

@@ -6,11 +6,10 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.ops.{GeoMath, TssZones, ZoneTracker}
 
-/** The ENTIRE stateful streaming family re-run under the RocksDB state
-  * store provider (ships inside spark-sql; no extra jars): windowed
-  * counts, dedup-within-watermark, token-budget quota, event-time
-  * expiry, contamination/near-dup guards, session windows, Misra–Gries
-  * heavy hitters — plus the zone tracker below. The default in-memory
+/** The stateful streaming family re-run under the RocksDB state store
+  * provider (ships inside spark-sql; no extra jars): session windows,
+  * dedup-within-watermark, event-time expiry and the upsert sink — plus
+  * fragment reassembly and the zone tracker below. The default in-memory
   * store holds every key on-heap per executor; at 100 TB-ingest key
   * cardinality (reassembly buffers, dedup horizons) RocksDB's
   * off-heap + spill-to-disk store is the one that survives, so it must

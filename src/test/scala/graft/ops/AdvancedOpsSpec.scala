@@ -375,28 +375,6 @@ class AdvancedOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("salted join == plain join on a skewed key distribution") {
-    import spark.implicits._
-    import graft.operators.Skew
-    // 90% of the left rows share one hot key
-    val left = (0 until 5000).map { i =>
-      (i.toLong, if (i % 10 != 0) 7L else (i % 50).toLong)
-    }.toDF("row_id", "k")
-    val right = (0 until 50).map(k => (k.toLong, s"dim_$k")).toDF("rk", "attr")
-
-    val salted = Skew.saltedEquiJoin(left, "k", $"row_id", right, "rk", buckets = 8)
-      .select($"row_id", $"attr").as[(Long, String)].collect().sorted.toSeq
-    val plain = left.join(right, $"k" === $"rk")
-      .select($"row_id", $"attr").as[(Long, String)].collect().sorted.toSeq
-    assert(salted === plain)
-
-    // and the shuffle actually partitions by (key, salt), spreading the
-    // hot key over `buckets` reducers
-    val p = Skew.saltedEquiJoin(left, "k", $"row_id", right, "rk", 8)
-      .queryExecution.executedPlan.toString
-    assert(p.contains("__salt"), p.take(800))
-  }
-
   test("approx sketches stay within error bounds of exact answers") {
     import spark.implicits._
     val rnd = new scala.util.Random(3)
@@ -459,8 +437,9 @@ class AdvancedOpsSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("ivf_incr").toString
 
     // two append-only ingests through the UNCHANGED trained centroids...
-    Similarity.ivfAppendStore(base, cents, dir)
-    Similarity.ivfAppendStore(delta, cents, dir)
+    for (batch <- Seq(base, delta))
+      Similarity.ivfAssign(batch, cents).write.mode("append")
+        .partitionBy("cell").parquet(dir)
     val store = spark.read.parquet(dir)
     // ...carry the identical (vec_id, cell) assignment a full rebuild
     // computes (ivfAssign distributes over union)
@@ -563,29 +542,6 @@ class AdvancedOpsSpec extends AnyFunSuite {
         .as[(Long, Seq[Long])].collect().sortBy(_._1).toList
       assert(native === hof, s"kernel diverged from HOF at m=$m")
     }
-  }
-
-  test("trainCodebooks: deterministic across partitionings; shape and quantization invariants") {
-    import spark.implicits._
-    import graft.ext.Pq
-    val all = graft.TestFixtures.clusteredFixture(spark, 400).cache()
-    val a = Pq.trainCodebooks(all, m = 4, ksub = 16, iters = 2)
-    val b = Pq.trainCodebooks(all.repartition(3), m = 4, ksub = 16, iters = 2)
-    assert(a === b, "training must not depend on the partition layout")
-    assert(a.size === 4 && a.forall(_.size === 16))
-    assert(a.forall(_.forall(_._2.size === 16)))
-    // a code with members moves to the (quantized) subspace mean:
-    // float32 of the 1e-4-rounded double, exactly — codes that lost
-    // every member keep their seed entry, so compare membership-aware
-    val seed = Pq.seedCodebooks(all, m = 4, ksub = 16)
-    assert(a.flatten.toSet != seed.flatten.toSet,
-      "training must move at least one codebook entry")
-    for (((cb, sb), _) <- a.zip(seed).zipWithIndex; ((code, cv), (_, sv)) <- cb.zip(sb)
-         if cv != sv; x <- cv) {
-      val r = math.floor(x.toDouble * 10000 + 0.5) / 10000
-      assert(x === r.toFloat, s"trained component $x not float32(round4(mean))")
-    }
-    all.unpersist()
   }
 
   test("IVF-PQ composition: equals ADC restricted to the probed cells") {

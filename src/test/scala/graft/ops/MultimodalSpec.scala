@@ -243,23 +243,6 @@ class MultimodalSpec extends AnyFunSuite {
       Multimodal.resizeKernel(p, 4, 3, 2, 0))
   }
 
-  test("resize parses real headers; WAV and junk degrade to null raster") {
-    import spark.implicits._
-    val body = (0 until 64).map(_.toByte).toArray
-    val recs = Seq(
-      Multimodal.MediaRecord(1L, MediaHeaders.encodePng(5, 4, body), "image/png", 0, 0),
-      Multimodal.MediaRecord(2L, MediaHeaders.encodeWav(8000, 1, body), "audio/wav", 0, 0),
-      Multimodal.MediaRecord(3L, "not media at all".getBytes, "text/plain", 0, 0))
-    val out = Multimodal.resize(recs.toDS(), 3, 2).collect().sortBy(_.media_id)
-    assert(out(0).format === "png" && out(0).src_width === 5 &&
-      out(0).src_height === 4 && out(0).raster.length === 6)
-    // the png row's picks match the kernel applied to the WHOLE payload
-    assert(out(0).raster.toSeq ===
-      Multimodal.resizeKernel(recs.head.payload, 5, 4, 3, 2).toSeq)
-    assert(out(1).format === "unknown" && out(1).raster == null)
-    assert(out(2).format === "unknown" && out(2).raster == null)
-  }
-
   test("resizeRaw keeps declared dims and degrades per-row") {
     import spark.implicits._
     val rows = Seq(

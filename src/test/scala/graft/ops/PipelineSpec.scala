@@ -108,43 +108,6 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("streaming gold landing == batch positions, date-partitioned") {
-    import spark.implicits._
-    val in = Files.createTempDirectory("gold_in").toString
-    val out = Files.createTempDirectory("gold_out").toString + "/gold"
-    val cp = Files.createTempDirectory("gold_cp").toString
-    // two landing files, split on a group boundary
-    val (a, b) = datalogLines.splitAt(12)
-    Files.write(java.nio.file.Paths.get(in, "part-0.log"),
-      a.mkString("\n").getBytes("UTF-8"))
-    // evictionTimeout None: processing-time timers fire empty timer
-    // micro-batches forever, livelocking processAllAvailable (see
-    // assembleStream's doc) — the synchronous test drives the sync path
-    val q = GoldJob.runStream(spark, in, out, cp, evictionTimeout = None)
-    try {
-      q.processAllAvailable()
-      // late-arriving file: the stream must pick it up incrementally
-      Files.write(java.nio.file.Paths.get(in, "part-1.log"),
-        b.mkString("\n").getBytes("UTF-8"))
-      q.processAllAvailable()
-    } finally q.stop()
-
-    val streamed = spark.read.parquet(out)
-      .select($"mmsi", $"latitude", $"longitude",
-        $"event_date".cast("string").as("event_date"))
-      .as[(Long, Double, Double, String)].collect().toSet
-    val batch = GoldJob.positions(GoldJob.decode(datalogLines.toDF("value")))
-      .select($"mmsi", $"latitude", $"longitude",
-        to_date($"ts").cast("string").as("event_date"))
-      .as[(Long, Double, Double, String)].collect().toSet
-    assert(streamed === batch)
-    assert(batch.nonEmpty)
-    // layout contract: the sink produced event_date=... partitions
-    val parts = new java.io.File(out).listFiles()
-      .filter(_.getName.startsWith("event_date="))
-    assert(parts.nonEmpty, "gold table must be date-partitioned on disk")
-  }
-
   test("gold write layout: date-partitioned files are (mmsi, ts)-sorted") {
     import spark.implicits._
     val in = Files.createTempDirectory("gold_sort_in").toString

@@ -133,10 +133,7 @@ class PlanSpec extends AnyFunSuite {
       }
       rm(whDir)
     }
-    val exploded = spark.read.parquet(s"$sf/documents.parquet")
-      .select(col("doc_id"),
-        Dedup.bandKeys(Dedup.minhashSignature(
-          Dedup.shingleSet(Dedup.tokenSet(col("text"))))).as("bands"))
+    val exploded = Dedup.signatureFrame(spark.read.parquet(s"$sf/documents.parquet"))
       .select(col("doc_id"), posexplode(col("bands")).as(Seq("band", "key")))
     exploded.write.bucketBy(8, "band", "key").sortBy("band", "key")
       .format("parquet").saveAsTable("dedup_bands")
@@ -559,5 +556,136 @@ class PlanSpec extends AnyFunSuite {
           if "maxBucket: Int = 1000\\b".r.findFirstIn(src).isDefined => path
     }
     assert(literal.isEmpty, s"`maxBucket: Int = 1000` in ${literal.mkString(", ")}")
+  }
+
+  test("src/main members are reached") {
+    // src/main holds only what a main, a declared query, the live streams
+    // or the benchmark run: every public top-level definition, and every
+    // public member of a top-level object or class, must be named in
+    // another src/main file, in perfbench/src, or in its own file beyond
+    // its definition. Overrides, mains and the objects holding them, and
+    // extractor `unapply`s (called by pattern syntax) are exempt, and so
+    // is what is private or package-private. Code only specs reach is
+    // deleted; each exception below names why it stays: the COVERAGE row
+    // of a reference capability, the parity spec that compares against
+    // it, or `spec hook`.
+    val allowed = Map(
+      "FanoutHub.liveClients" -> "S4/S5",
+      "FanoutHub.shutdown" -> "S4/S5",
+      "SocketFanoutServer" -> "S4/S5",
+      "WebSocketFanoutServer" -> "S4/S5",
+      "FanoutSink" -> "S4/S5",
+      "UpsertSink" -> "S7/R12",
+      "StreamOps.dedupWithinWatermark" -> "streaming bounded-state dedup",
+      "StreamOps.trackExpiry" -> "event-time state expiry (live-key tracking)",
+      "Sources.ivefStream" -> "S10",
+      "GoldJob.statics" -> "PipelineSpec: single-pass gold == two-input as-of join",
+      "Dedup.simhash16Hof" -> "VecMathSpec",
+      "Pq.encodeHof" -> "AdvancedOpsSpec: native PqEncode == HOF encode",
+      "Similarity.cosineHof" -> "VecMathSpec, ExtensionsSpec",
+      "Similarity.rpBucketHof" -> "VecMathSpec",
+      "TextStats.fingerprintHof" -> "VecMathSpec",
+      "TextStats.repetitionStatsUdf" -> "VecMathSpec",
+      "TextStats.tokenCodesHof" -> "VecMathSpec",
+      "LocalLookup.clearLayouts" -> "spec hook",
+      "PlanShape.fileScans" -> "spec hook",
+      "PlanShape.shuffles" -> "spec hook")
+
+    import scala.jdk.CollectionConverters._
+    def read(dir: String): Map[String, String] = {
+      val root = java.nio.file.Paths.get(dir)
+      assert(Files.isDirectory(root), "spec must run from the repo root")
+      Files.walk(root).iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .map(p => p.toString.replace('\\', '/') ->
+          new String(Files.readAllBytes(p), "UTF-8"))
+        .toMap
+    }
+    // (source without comments, source without comments or string
+    // literals): names count inside strings (SQL interpolates constants),
+    // declarations and braces only outside them
+    def lex(src: String): (String, String) = {
+      val kept = new StringBuilder
+      val bare = new StringBuilder
+      var i = 0
+      def literal(end: Int): Unit = {
+        kept ++= src.substring(i, end); bare ++= "\"\""; i = end
+      }
+      while (i < src.length) {
+        if (src.startsWith("//", i)) {
+          while (i < src.length && src(i) != '\n') i += 1
+        } else if (src.startsWith("/*", i)) {
+          var depth = 0
+          while ({
+            if (src.startsWith("/*", i)) { depth += 1; i += 2 }
+            else if (src.startsWith("*/", i)) { depth -= 1; i += 2 }
+            else i += 1
+            depth > 0 && i < src.length
+          }) ()
+          kept += ' '; bare += ' '
+        } else if (src.startsWith("\"\"\"", i)) {
+          val close = src.indexOf("\"\"\"", i + 3)
+          var end = if (close < 0) src.length else close + 3
+          while (end < src.length && src(end) == '"') end += 1
+          literal(end)
+        } else if (src(i) == '"') {
+          var j = i + 1
+          while (j < src.length && src(j) != '"' && src(j) != '\n')
+            j += (if (src(j) == '\\') 2 else 1)
+          literal(math.min(j + 1, src.length))
+        } else if (src(i) == '\'' && i + 2 < src.length &&
+            (src(i + 2) == '\'' || src(i + 1) == '\\')) {
+          literal(src.indexOf('\'', i + (if (src(i + 1) == '\\') 3 else 2)) + 1)
+        } else {
+          kept += src(i); bare += src(i); i += 1
+        }
+      }
+      (kept.toString, bare.toString)
+    }
+
+    val main = read("src/main").map { case (p, src) => p -> lex(src) }
+    val bench = read("perfbench/src").map { case (p, src) => p -> lex(src)._1 }
+    val ident = "[A-Za-z_][A-Za-z0-9_]*".r
+    def words(src: String): Map[String, Int] =
+      ident.findAllIn(src).toSeq.groupBy(identity).map { case (w, ws) => w -> ws.size }
+    val wordsOf = main.map { case (p, (kept, _)) => p -> words(kept) } ++
+      bench.map { case (p, kept) => p -> words(kept) }
+    val filesNaming = wordsOf.toSeq
+      .flatMap { case (p, ws) => ws.keys.map(_ -> p) }
+      .groupBy(_._1).map { case (w, ps) => w -> ps.map(_._2).toSet }
+    val decl = ("(?m)^[ \\t]*((?:(?:@\\w+(?:\\([^)]*\\))?|final|case|sealed|abstract|" +
+      "implicit|lazy|override|private(?:\\[\\w+\\])?|protected(?:\\[\\w+\\])?)\\s+)*)" +
+      "(def|val|var|object|class|trait)\\s+([A-Za-z_][A-Za-z0-9_]*)").r
+
+    val unreached = main.toSeq.flatMap { case (path, (_, bare)) =>
+      val depth = bare.scanLeft(0) {
+        case (d, '{') => d + 1
+        case (d, '}') => d - 1
+        case (d, _) => d
+      }
+      val decls = decl.findAllMatchIn(bare).map(m =>
+        (depth(m.start(2)), m.group(1), m.group(2), m.group(3))).toSeq
+      val declCount = decls.groupBy(_._4).map { case (n, ds) => n -> ds.size }
+      val holdsMain = decls.exists { case (_, _, k, n) => k == "def" && n == "main" }
+      var owner = ("", false)
+      decls.flatMap { case (d, mods, kind, name) =>
+        val hidden = mods.contains("private") || mods.contains("protected")
+        if (d == 0) owner = (name, hidden)
+        val key = if (d == 0) name else s"${owner._1}.$name"
+        val exempt = d > 1 || hidden || (d == 1 && owner._2) ||
+          mods.contains("override") || name == "main" || name == "unapply" ||
+          (d == 0 && kind == "object" && holdsMain)
+        val reached = filesNaming.getOrElse(name, Set.empty).exists(_ != path) ||
+          wordsOf(path).getOrElse(name, 0) > declCount(name)
+        if (exempt || reached) None else Some(key)
+      }
+    }.distinct
+    def allows(entry: String, key: String) =
+      key == entry || key.startsWith(entry + ".")
+    val offenders = unreached.filterNot(k => allowed.keys.exists(allows(_, k)))
+    assert(offenders.isEmpty, "src/main members named only by specs (delete " +
+      s"them, or allow one with its reason): ${offenders.sorted.mkString(", ")}")
+    val stale = allowed.keys.filterNot(e => unreached.exists(allows(e, _)))
+    assert(stale.isEmpty, s"allow-list entries now reached: ${stale.mkString(", ")}")
   }
 }

@@ -98,6 +98,19 @@ class NmeaSocketSpec extends AnyFunSuite {
     }
   }
 
+  test("a half-given credential is rejected at load, naming the missing option") {
+    // without the check the source connects with no preamble at all
+    val noPassword = intercept[IllegalArgumentException](
+      Sources.tcpLines(spark, "127.0.0.1", 9, user = Some("user")))
+    assert(noPassword.getMessage.contains(s"'${NmeaSocket.PASSWORD}'"),
+      noPassword.getMessage)
+    val noUser = intercept[IllegalArgumentException](
+      spark.readStream.format(classOf[NmeaSocketProvider].getName)
+        .option(NmeaSocket.HOST, "127.0.0.1").option(NmeaSocket.PORT, "9")
+        .option(NmeaSocket.PASSWORD, "pwd").load())
+    assert(noUser.getMessage.contains(s"'${NmeaSocket.USER}'"), noUser.getMessage)
+  }
+
   test("restart restore fast-forwards offsets — no regression, no phantom replay") {
     import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
     import org.apache.spark.sql.connector.read.streaming.Offset

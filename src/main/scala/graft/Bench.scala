@@ -127,34 +127,25 @@ object Bench {
 
     def r3(v: Double): String = f"$v%.3f"
 
-    // PAIRED CONTROL RUN (ON BY DEFAULT since round 10; opt out with
-    // SPARK_GRAFT_CONTROL_COMMIT="" / "none" / "off"): automates the
-    // BASELINE.md drift-adjudication recipe — check the control commit
-    // out into a worktree, bench a subset of queries there minutes
-    // apart from the identical HEAD timings, and emit head/control
-    // ratio over the COMMON subset. "auto" (the default) resolves the
-    // last driver round-snapshot commit. Promoted to default because
-    // round 9 showed the frozen in-band control alone can misestimate
-    // drift by ~2x — the paired same-session ratio is the
-    // authoritative signal when they disagree. Failures degrade to a
-    // control_error field — the main bench numbers never depend on it.
+    // PAIRED CONTROL RUN (on by default; opt out with
+    // SPARK_GRAFT_CONTROL_COMMIT="" / "none" / "off"): the BASELINE.md
+    // drift-adjudication recipe — check the control commit out into a
+    // worktree, bench a subset of queries there minutes apart from the
+    // identical HEAD timings, and emit the head/control ratio over the
+    // COMMON subset. "auto" (the default) is the parent commit (HEAD^):
+    // the pair is the change and its predecessor on one host, never an
+    // older snapshot measured elsewhere. The frozen in-band control
+    // alone can misestimate drift by ~2x, so the paired ratio wins when
+    // they disagree. Failures degrade to a control_error field — the
+    // main bench numbers never depend on it.
     //
-    // Subset choice (round 12): the 10 slowest HEAD queries PLUS a
-    // drift watchlist (SPARK_GRAFT_CONTROL_WATCH, default = the
-    // queries the round-11 small-query drift flagged). Round 11's
-    // control had n=1 because HEAD's 5 slowest were all new that round
-    // — pinning the set to slowest ∪ watchlist keeps the intersection
-    // with the snapshot ≥ the watchlist size, so drift claims on the
-    // STANDING surface stay falsifiable. Queries the control commit
-    // lacks simply drop out of its own filter; the ratio and the
-    // per-query control_detail line cover the intersection only.
+    // Subset: the 10 slowest HEAD queries plus a drift watchlist
+    // (SPARK_GRAFT_CONTROL_WATCH; default = recent top movers and the
+    // heavy q117/q122), so the intersection with the control stays at
+    // least the watchlist even when the slowest queries are new.
+    // Queries the control commit lacks drop out of its own filter; the
+    // ratio and the control_detail line cover the intersection only.
     val controlSpec = sys.env.getOrElse("SPARK_GRAFT_CONTROL_COMMIT", "auto")
-    // SELF-UPDATING watchlist (round-13 protocol): default = the
-    // PREVIOUS round's top raw movers on the small common set (refresh
-    // each round from the VERDICT/driver diff) ∪ the heavy common
-    // queries (q117/q122 — their raw numbers dominate the total, so
-    // they must always be pair-adjudicable). The r11-era static list
-    // retired; override via SPARK_GRAFT_CONTROL_WATCH.
     val controlWatch = sys.env.getOrElse("SPARK_GRAFT_CONTROL_WATCH",
       "q97_exact_k_sample,q89_lang_heavy_hitters,q79_inverted_index," +
         "q63_sequence_packing,q117_curation_pipeline,q122_incremental_curation")
@@ -165,10 +156,8 @@ object Bench {
         import scala.sys.process._
         val repo = new java.io.File(".").getCanonicalFile
         val commit =
-          (if (spec == "auto")
-            Process(Seq("git", "log", "--grep", "^round [0-9]*:", "-1",
-              "--format=%H"), repo).!!
-          else Process(Seq("git", "rev-parse", spec), repo).!!).trim
+          Process(Seq("git", "rev-parse",
+            if (spec == "auto") "HEAD^" else spec), repo).!!.trim
         require(commit.nonEmpty, s"cannot resolve control commit '$spec'")
         val wt = new java.io.File(s"/tmp/graft_bench_ctrl_${commit.take(12)}")
         if (!new java.io.File(wt, "build.sbt").isFile)

@@ -9,10 +9,8 @@ import org.apache.spark.sql.SparkSession
   * codegen-cache sizing below was Bench-only, which made ~half the
   * bench win a session shape the correctness harness and deployments
   * never ran with).
-  *
-  * Env contract (unchanged from the per-main builders this replaces):
-  * `SPARK_GRAFT_CPUS` drives `local[N]` and the static shuffle
-  * partition count; callers pass their own default.
+  * It reads no environment: each main passes the `SPARK_GRAFT_CPUS`
+  * it read.
   */
 object Sessions {
 
@@ -27,7 +25,7 @@ object Sessions {
     * runtime `set` cannot change it). Default 100 re-Janino-compiles
     * every stage once a workload exceeds ~100 distinct codegen units
     * (this suite compiles ~3k per pass); 4096 covers the whole suite.
-    * Env-tunable via SPARK_GRAFT_CODEGEN_CACHE like the other knobs.
+    * A caller that needs another size passes it in `extraConfs`.
     */
   def build(cpus: String,
       extraConfs: Seq[(String, String)] = Nil): SparkSession = {
@@ -36,12 +34,22 @@ object Sessions {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
     val spark = extraConfs.foldLeft(b0)((b, kv) => b.config(kv._1, kv._2))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     org.apache.spark.sql.graft.GraftExtensions.install(spark)
     spark
   }
+
+  /** Tier cap `key` (a `spark.graft.*` conf) of `s`, the session the
+    * call was handed (never the active one: [[graft.ext.DriverPool]]
+    * runs actions on other threads), else `default`. A value that is
+    * not a whole number fails, naming the key.
+    */
+  def cap(s: SparkSession, key: String, default: Long): Long =
+    Option(s.conf.get(key, null)).fold(default) { v =>
+      v.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"$key must be a whole number, got '$v'"))
+    }
 }

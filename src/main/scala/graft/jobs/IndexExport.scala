@@ -36,8 +36,8 @@ import graft.ext.Retrieval.Bm25Index
   *
   * One pinned read per lookup: [[bm25LookupSingle]] and [[bm25Lookup]]
   * each take ONE [[withPinnedEpoch]], load that epoch's
-  * [[LocalLookup.bm25Layout]], decide the tier against
-  * [[LocalLookupCap]] and compute every row inside the pin — the
+  * [[LocalLookup.bm25Layout]], decide the tier against the session's
+  * [[localLookupCap]] and compute every row inside the pin — the
   * driver-local tier, or the distributed plan collected there (at most
   * k·|queries| rows). Both tiers return a local frame, so no lazy plan
   * outlives its pin, and any number of re-exports during or after a
@@ -85,25 +85,15 @@ object IndexExport {
   /** Epochs retained after an export: the live one plus its
     * predecessor, so one re-export never deletes files out from under
     * a reader opened moments before the swap. Epochs OLDER than the
-    * window survive while (a) an in-JVM reader holds them pinned
+    * window survive while an in-JVM reader holds them pinned
     * ([[withPinnedEpoch]] — every lookup pins for its whole duration,
     * so N re-exports inside one in-flight lookup can no longer delete
-    * the epoch it is reading), or (b) they are younger
-    * than [[PruneGraceMs]] (protection for EXTERNAL readers this JVM
-    * cannot refcount). The next export re-attempts the prune, so a
-    * protected epoch is deleted as soon as its pins drop and its grace
-    * expires.
+    * the epoch it is reading). The next export re-attempts the prune,
+    * so a pinned epoch is deleted as soon as its pins drop. Readers in
+    * other processes get no pin and no grace: every reader the system
+    * has runs in the exporting JVM.
     */
   val KeepEpochs = 2
-
-  /** Minimum age (ms since last modification) before an out-of-window
-    * epoch may be pruned — the external-reader grace. Default 0 (prune
-    * eagerly; in-JVM readers are covered by pins); a deployment whose
-    * readers live in other processes sets it to its slowest-lookup
-    * bound, e.g. via `SPARK_GRAFT_EPOCH_GRACE_MS`.
-    */
-  @volatile var PruneGraceMs: Long =
-    sys.env.get("SPARK_GRAFT_EPOCH_GRACE_MS").map(_.toLong).getOrElse(0L)
 
   // per-epoch in-flight reader counts; entries are swept once the
   // epoch directory is gone and the count is zero. Keys are the
@@ -146,8 +136,7 @@ object IndexExport {
   /** Run `f` against the CURRENT epoch directory with the epoch PINNED:
     * [[pruneEpochs]] will not delete a pinned epoch, so a reader that
     * straddles any number of re-exports finishes against intact files.
-    * Both point-lookup tiers run inside one pin per lookup; long-lived
-    * external readers use the [[PruneGraceMs]] window instead. If the
+    * Both point-lookup tiers run inside one pin per lookup. If the
     * resolved epoch loses the race with a concurrent prune before the
     * pin lands (microseconds), the pin is retried against the fresh
     * pointer.
@@ -218,14 +207,12 @@ object IndexExport {
       new Path(Dfs.qualified(outDir), "_LATEST"), epochName)
 
   /** Drop epochs older than the newest [[KeepEpochs]] — except those
-    * pinned by an in-flight reader or younger than [[PruneGraceMs]] —
-    * and invalidate the layout cache entries that pointed at them.
-    * Protected epochs are simply skipped;
-    * the NEXT export's prune collects them once unpinned and aged.
+    * pinned by an in-flight reader — and invalidate the layout cache
+    * entries that pointed at them. Pinned epochs are simply skipped;
+    * the NEXT export's prune collects them once unpinned.
     */
   private def pruneEpochs(outDir: String): Unit = {
     val root = Dfs.qualified(outDir)
-    val now = System.currentTimeMillis()
     val epochs = Dfs.list(root)
       .filter(f => f.isDirectory && epochNum(f.getPath.getName).isDefined)
       .sortBy(f => epochNum(f.getPath.getName).get)
@@ -235,9 +222,7 @@ object IndexExport {
       // the condemnation and re-resolves instead of trusting its pin
       condemned.add(path)
       try {
-        val pinned = Option(epochPins.get(path)).exists(_.get() > 0)
-        val inGrace = now - st.getModificationTime < PruneGraceMs
-        if (!pinned && !inGrace) {
+        if (!Option(epochPins.get(path)).exists(_.get() > 0)) {
           prunePauseHook(path)
           LocalLookup.invalidateEpoch(path)
           Dfs.delete(st.getPath)
@@ -346,12 +331,13 @@ object IndexExport {
     * zero Spark jobs, the latency the serving tier exists for; over it
     * (a flood term whose postings are corpus-proportional) the lookup
     * runs the distributed pruned-scan plan, identical rows by the
-    * LocalLookup parity contract. `@volatile var` so a spec can force
-    * the distributed route on a tiny query.
+    * LocalLookup parity contract. The default of the session conf
+    * [[LocalLookupCapKey]] (−1 forces the distributed route).
     */
-  @volatile var LocalLookupCap: Long =
-    sys.env.get("SPARK_GRAFT_LOCAL_LOOKUP_CAP").map(_.toLong)
-      .getOrElse(100000L)
+  val LocalLookupCap = 100000L
+  val LocalLookupCapKey = "spark.graft.index.localLookupCap"
+  private def localLookupCap(spark: SparkSession): Long =
+    graft.Sessions.cap(spark, LocalLookupCapKey, LocalLookupCap)
 
   private val SingleSchema = StructType.fromDDL(
     "doc_id BIGINT, n_terms BIGINT NOT NULL, score DOUBLE NOT NULL")
@@ -363,7 +349,7 @@ object IndexExport {
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   /** Serve queries `(query_id, terms)` through the exported layout,
-    * inside one pin: under [[LocalLookupCap]] the rows come from the
+    * inside one pin: under [[localLookupCap]] the rows come from the
     * no-Spark local tier ([[LocalLookup.bm25Batch]] — driver page reads
     * + driver arithmetic, zero jobs); over the cap, or when a matched
     * posting carries a NULL doc_id, [[bm25LookupPlan]] runs and is
@@ -375,7 +361,7 @@ object IndexExport {
       queries: Seq[(Long, Seq[String])], k: Int): DataFrame =
     withPinnedEpoch(outDir) { epoch =>
       val l = LocalLookup.bm25Layout(epoch)
-      val rows = LocalLookup.bm25Batch(l, queries, k, LocalLookupCap)
+      val rows = LocalLookup.bm25Batch(l, queries, k, localLookupCap(spark))
         .map(_.map { case (q, r, d, sc) => Row(q, r, d, sc) })
         .getOrElse(
           GraftExec.collectOnce(bm25LookupPlan(spark, l, queries, k)).toSeq)
@@ -383,7 +369,7 @@ object IndexExport {
     }
 
   /** The SINGLE-query point lookup, inside one pin: under
-    * [[LocalLookupCap]] the rows come from [[LocalLookup.bm25Single]]
+    * [[localLookupCap]] the rows come from [[LocalLookup.bm25Single]]
     * (zero Spark jobs; the same rows by the bit-parity contract
     * [[Retrieval.scoreSingleLocal]] pins); over it [[bm25SinglePlan]]
     * runs and is collected once, like [[bm25Lookup]]'s plan. Output (doc_id, n_terms, score) — the
@@ -394,7 +380,7 @@ object IndexExport {
       terms: Seq[String], k: Int): DataFrame =
     withPinnedEpoch(outDir) { epoch =>
       val l = LocalLookup.bm25Layout(epoch)
-      val rows = LocalLookup.bm25Single(l, terms, k, LocalLookupCap)
+      val rows = LocalLookup.bm25Single(l, terms, k, localLookupCap(spark))
         .map(_.map { case (d, n, sc) => Row(d, n, sc) })
         .getOrElse(
           GraftExec.collectOnce(bm25SinglePlan(spark, l, terms, k)).toSeq)

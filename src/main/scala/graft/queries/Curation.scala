@@ -517,7 +517,7 @@ object Curation {
     */
   private[graft] def collectHotBaseLocal(s: SparkSession,
       counts: DataFrame): Option[Set[(Int, String)]] =
-    hotKeysLocal(s, BandSide(counts, counts, None))
+    hotKeysLocal(BandSide(counts, counts, None), dropListCap(s))
 
   private def hotKeys(b: BandSide): DataFrame = {
     val maxBucket = Dedup.DefaultMaxBucket
@@ -558,15 +558,15 @@ object Curation {
     * pigeonhole), but the fetch is still capped; None = over the cap,
     * caller falls back to the distributed form.
     */
-  private def hotKeysLocal(s: SparkSession,
-      b: BandSide): Option[Set[(Int, String)]] = {
+  private def hotKeysLocal(b: BandSide,
+      cap: Long): Option[Set[(Int, String)]] = {
     // empty window ⇒ the reconciliation degenerates to the base set,
     // already collected once per store version — zero jobs
     if (b.recentBands.isEmpty && b.hotBaseLocal.isDefined)
       return b.hotBaseLocal
     val df = hotKeys(b)
       .select(col("band").cast("int").as("band"), col("key"))
-    DriverTier.fetchCapped(df, DropListCap)(r =>
+    DriverTier.fetchCapped(df, cap)(r =>
       (r.getInt(0), r.getUTF8String(1).toString)).map(_.toSet)
   }
 
@@ -640,16 +640,17 @@ object Curation {
 
   /** The delta chain's stage boundary: a tracked leaf materialized
     * EAGERLY under a `graft-stage <name>` job description, with its row
-    * count — and, `keyed`, its doc_ids capped at [[DropListCap]] — from
+    * count — and, `keyed`, its doc_ids capped at `cap` — from
     * the materializing action itself (no extra job). The counts are
     * what the chain's tier choices and empty-stage short-circuits read.
     */
   private def countedLeaf(s: SparkSession, name: String, df: DataFrame,
-      keyed: Boolean = false): (DataFrame, Long, Option[Array[Long]]) =
+      cap: Long, keyed: Boolean = false)
+      : (DataFrame, Long, Option[Array[Long]]) =
     stage(s, s"graft-stage $name") {
       val r = org.apache.spark.sql.graft.GraftExec.checkpointCounted(df,
         reliableCheckpoints(s), keyOrdinal = if (keyed) 0 else -1,
-        cap = DropListCap)
+        cap = cap)
       tracked(r._1)
       r
     }
@@ -657,10 +658,13 @@ object Curation {
   /** Max rows a delta counts as DELTA-SIZED: the size at which the chain
     * stops forcing broadcasts and driver-resident drop lists (see
     * [[acceptDelta]]). Every collect the chain makes is capped by it,
-    * so an over-cap drop list stays distributed. `@volatile var` so a
-    * spec can force the over-cap shapes on a tiny delta.
+    * so an over-cap drop list stays distributed. The default of the
+    * session conf [[DropListCapKey]] (0 forces the over-cap shapes).
     */
-  @volatile private[graft] var DropListCap: Long = 100000L
+  private[graft] val DropListCap = 100000L
+  private[graft] val DropListCapKey = "spark.graft.curation.dropListCap"
+  private[graft] def dropListCap(s: SparkSession): Long =
+    graft.Sessions.cap(s, DropListCapKey, DropListCap)
 
   /** Delta stages guard–6 against a prepared [[StoreSide]] — the ONE
     * delta chain every ingest surface runs: [[ingestDelta]] (q122),
@@ -686,13 +690,13 @@ object Curation {
     * Shark's partial-DAG rule, broadcast or shuffle by what a stage
     * actually produced:
     *  - entry: the d2 leaf (stages 1–2) is counted with its ids. At
-    *    most [[DropListCap]] rows ⇒ the guard probe filters the store
+    *    most [[dropListCap]] rows ⇒ the guard probe filters the store
     *    ids by the collected ids and broadcasts the delta's hashed
     *    texts; over it, the probe is an unhinted join. The plan's own
     *    size estimate cannot make this call: a micro-batch reaches
     *    `foreachBatch` as a LogicalRDD without statistics (sizeInBytes
     *    = Long.MaxValue).
-    *  - after d3: n3 ≤ [[DropListCap]] ⇒ every delta-side build side is
+    *  - after d3: n3 ≤ the cap ⇒ every delta-side build side is
     *    broadcast explicitly, and n3 ≤ [[Dedup.DefaultMaxBucket]] adds
     *    the DRIVER-LOCAL tier (signatures, cells and shingle codes
     *    collected; every delta-side frame a LocalRelation). Over the
@@ -717,19 +721,20 @@ object Curation {
       bands: Option[BandSide] = None): DataFrame = {
     import s.implicits._
     val cols = Seq($"doc_id", $"lang", $"source", $"n_chars", $"text")
+    val cap = dropListCap(s)
     def leaf(name: String)(df: DataFrame): (DataFrame, Long) = {
-      val (c, n, _) = countedLeaf(s, name, df)
+      val (c, n, _) = countedLeaf(s, name, df, cap)
       (c, n)
     }
-    // a drop list over DropListCap stays distributed (see the tiers);
+    // a drop list over the cap stays distributed (see the tiers);
     // a stage whose list is empty keeps the previous leaf
     def fetchDrops(name: String)(df: DataFrame): DropSet =
-      stage(s, s"graft-drop $name")(DropSet.fetch(df, DropListCap))
+      stage(s, s"graft-drop $name")(DropSet.fetch(df, cap))
     val empty = clDelta.select(cols: _*).limit(0)
 
     // stages 1–2 (per-doc) behind the entry leaf
     val (d2, n2, d2Ids) = countedLeaf(s, "d2_quality",
-      qualityFiltered(clDelta), keyed = true)
+      qualityFiltered(clDelta), cap, keyed = true)
     if (n2 == 0) return empty
 
     // stages guard + 3-store-half in ONE probe action: the known-id
@@ -753,7 +758,7 @@ object Curation {
     // also yields the d3 ids, seeding the driver-side survivor tracking
     // the local tier rides.
     val (d3, n3, d3Ids) = countedLeaf(s, "d3_exact",
-      exactKeepMin(guardDrops.applyTo(d2)), keyed = true)
+      exactKeepMin(guardDrops.applyTo(d2)), cap, keyed = true)
     if (n3 == 0) return empty
 
     // the tiers (see the scaladoc): survivor ids are tracked on the
@@ -776,7 +781,7 @@ object Curation {
     def componentDrops(pairs: DataFrame): DropSet =
       stage(s, "graft-drop d4_minhash_within")(graft.operators.Graph
         .componentNonRootsCapped(s,
-          if (localDelta) pairs else Dedup.cached(pairs), DropListCap))
+          if (localDelta) pairs else Dedup.cached(pairs), cap))
 
     // stage 4 — the delta's signature table derives ONCE and serves
     // both halves: COLLECTED to the driver on the local tier (its rows
@@ -796,7 +801,7 @@ object Curation {
       else d3Sigs
     val hotLocal: Option[Set[(Int, String)]] = bands match {
       case Some(b) if localDelta =>
-        stage(s, "graft-drop d4a_hot_keys")(hotKeysLocal(s, b))
+        stage(s, "graft-drop d4a_hot_keys")(hotKeysLocal(b, cap))
       case _ => None
     }
     val dropVs4 = (bands, hotLocal) match {

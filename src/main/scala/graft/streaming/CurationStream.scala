@@ -213,13 +213,11 @@ object CurationStream {
   // [[LeaseStaleMs]], i.e. a crashed owner — is reclaimable;
   // [[recoverStore]] heals whatever the dead owner left behind.
 
-  /** Heartbeat age beyond which a lease is considered abandoned.
-    * Override via `SPARK_GRAFT_LEASE_STALE_MS` (or directly in tests);
-    * size it well above the slowest expected micro-batch.
+  /** Heartbeat age beyond which a lease is considered abandoned: well
+    * above the slowest expected micro-batch. Specs backdate the lease
+    * file's mtime to make it stale.
     */
-  @volatile var LeaseStaleMs: Long =
-    sys.env.get("SPARK_GRAFT_LEASE_STALE_MS").map(_.toLong)
-      .getOrElse(10L * 60L * 1000L)
+  private val LeaseStaleMs = 10L * 60L * 1000L
 
   private val defaultToken = {
     val rt = java.lang.management.ManagementFactory.getRuntimeMXBean
@@ -318,7 +316,7 @@ object CurationStream {
     * verify read plus two small control writes), so a minute is already
     * ~6 orders of magnitude above its expected hold time.
     */
-  @volatile var ClaimStaleMs: Long = 60000L
+  private val ClaimStaleMs = 60000L
 
   private def claimPath(storeDir: String): Path =
     new Path(Dfs.qualified(storeDir), "_lease.claim")
@@ -800,8 +798,8 @@ object CurationStream {
     *
     * Delta-sizing contract: none on the caller. The chain picks its
     * join physics from each batch's OBSERVED stage counts
-    * ([[Curation.acceptDelta]]): a micro-batch under
-    * [[Curation.DropListCap]] rows gets explicit broadcasts and the
+    * ([[Curation.acceptDelta]]): a micro-batch under [[Curation.dropListCap]]
+    * (of the session as it was at start) gets explicit broadcasts and the
     * driver-local tier (the measured 21-jobs/batch floor under the
     * scoped AQE-off), while an unthrottled backlog replay over the cap
     * runs the shuffle-join shapes with distributed drop lists — slower
@@ -896,7 +894,7 @@ object CurationStream {
             accepted.select(col("doc_id"), col("lang"), col("source"),
               col("n_chars"), col("text"), tokCount,
               lit(batchId).as("ingest_batch")), reliable = false,
-            keyOrdinal = 0, cap = graft.queries.Curation.DropListCap))
+            keyOrdinal = 0, cap = Curation.dropListCap(s)))
         if (nRows > 0) {
           ph("appendStore")(appendStore(rows, storeDir,
             touchedBuckets = Some(Seq(batchId / BatchesPerBucket)),
@@ -957,9 +955,10 @@ object CurationStream {
   /** Tombstone batches up to this size consult the sidecars driver-side
     * (8 bytes/id on the driver); larger batches fall back to the full
     * column-pruned scan, which a compliance batch that size amortizes.
-    * `@volatile var` so a spec can force the over-cap fallback.
+    * The default of the session conf [[RedactCollectCapKey]].
     */
-  @volatile var RedactCollectCap = 1000000L
+  val RedactCollectCap = 1000000L
+  val RedactCollectCapKey = "spark.graft.curation.redactCollectCap"
 
   // underscore-prefixed FILE name too (not just the directory): every
   // data-file walker in the store's ecosystem skips `_`/`.` names, and
@@ -1314,8 +1313,8 @@ object CurationStream {
     // Over-cap detection rides the SAME action as the fetch.
     val sortedTomb: Option[Array[Long]] =
       if (stats.valuesIterator.forall(_.isEmpty)) None
-      else DriverTier.fetchCapped(tomb, RedactCollectCap)(_.getLong(0))
-        .map(_.sorted)
+      else DriverTier.fetchCapped(tomb, graft.Sessions.cap(spark,
+        RedactCollectCapKey, RedactCollectCap))(_.getLong(0)).map(_.sorted)
     val candidates = sortedTomb match {
       case None => live
       case Some(arr) => live.filter { b =>

@@ -27,13 +27,18 @@ object TestFixtures {
     rows.toDF("vec_id", "embedding", "label").repartition(8)
   }
 
-  /** Run `f` with [[graft.jobs.IndexExport.LocalLookupCap]] set to
-    * `cap` (−1 forces every lookup onto the distributed plan, even a
-    * zero-match one), restoring the previous cap afterwards.
+  /** Run `f` with each `key -> value` set in `spark`'s session conf
+    * (e.g. a tier cap: −1 for [[graft.jobs.IndexExport.LocalLookupCapKey]]
+    * forces every lookup onto the distributed plan, even a zero-match
+    * one), restoring each key's previous value, or its absence,
+    * afterwards.
     */
-  def withLocalLookupCap[T](cap: Long)(f: => T): T = {
-    val prev = graft.jobs.IndexExport.LocalLookupCap
-    graft.jobs.IndexExport.LocalLookupCap = cap
-    try f finally graft.jobs.IndexExport.LocalLookupCap = prev
+  def withConf[T](spark: SparkSession)(kvs: (String, Any)*)(f: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v.toString) }
+    try f finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestFixtures.withConf
 import graft.queries.Curation
 import graft.streaming.CurationStream
 
@@ -265,7 +266,9 @@ class CurationStreamSpec extends AnyFunSuite {
   test("over-cap drop lists: the anti-join fallback accepts exactly the literal-filter set") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    // the in-memory-increment scenario re-run with DropListCap = 0, so
+    // the in-memory-increment scenario re-run with the drop-list cap at
+    // 0 (set on the session before the stream starts: the stream runs
+    // on a copy of it, so the cap holds for the stream's life), so
     // every NON-EMPTY drop list (the id-guard overlap at batch 2, the
     // semantic vs-store drop at batch 1) exceeds the cap and takes the
     // distributed anti-join fallback instead of a driver literal — the
@@ -291,10 +294,10 @@ class CurationStreamSpec extends AnyFunSuite {
     val ckpt = Files.createTempDirectory("cur_caplist_ckpt").toString
     CurationStream.initStore(curated, storeDir)
     val in = MemoryStream[(Long, String, String, Long, String)]
-    Curation.DropListCap = 0L
-    val q = CurationStream.ingestStream(
-      in.toDF().toDF("doc_id", "lang", "source", "n_chars", "text"),
-      emb, trained, mk(Seq.empty), storeDir, ckpt)
+    val q = withConf(spark)(Curation.DropListCapKey -> 0L)(
+      CurationStream.ingestStream(
+        in.toDF().toDF("doc_id", "lang", "source", "n_chars", "text"),
+        emb, trained, mk(Seq.empty), storeDir, ckpt))
     try {
       def push(rows: Seq[(Long, String)]): Unit = {
         in.addData(rows.map { case (id, t) =>
@@ -311,10 +314,7 @@ class CurationStreamSpec extends AnyFunSuite {
       assert(accepted === Set((a, 0L), (d, 1L), (f, 2L)),
         "the anti-join fallback must accept exactly the literal set, " +
           s"got $accepted")
-    } finally {
-      Curation.DropListCap = 100000L
-      stopAndWait(q)
-    }
+    } finally stopAndWait(q)
   }
 
   test("store lifecycle: compaction and redaction leave the manifest invariant") {
@@ -534,10 +534,8 @@ class CurationStreamSpec extends AnyFunSuite {
       val before = fileState(storeDir)
       val tomb = spark.range(nIds)
         .select(expr("(id DIV 16) * 64 + id % 16").as("doc_id"))
-      val prevCap = CurationStream.RedactCollectCap
-      CurationStream.RedactCollectCap = cap
-      try CurationStream.redactStore(spark, storeDir, tomb)
-      finally CurationStream.RedactCollectCap = prevCap
+      withConf(spark)(CurationStream.RedactCollectCapKey -> cap)(
+        CurationStream.redactStore(spark, storeDir, tomb))
       val after = fileState(storeDir)
       assert(CurationStream.readStore(spark, storeDir)
         .filter($"text".isNull).count() === nIds, s"cap $cap")
@@ -757,13 +755,10 @@ class CurationStreamSpec extends AnyFunSuite {
         start()
       }
       assert(s2.getMessage.contains("leased by another writer"))
-      // stale foreign lease (crashed owner): reclaimable
-      val prevStale = CurationStream.LeaseStaleMs
-      CurationStream.LeaseStaleMs = 0L
-      try {
-        val q3 = start()
-        stopAndWait(q3)
-      } finally CurationStream.LeaseStaleMs = prevStale
+      // stale foreign lease (crashed owner): reclaimable once its
+      // heartbeat is older than the stale window
+      assert(new java.io.File(storeDir, "_lease").setLastModified(1000L))
+      stopAndWait(start())
       Dfs.writeStringAtomic(lease, own) // restore for clean stop
     } finally {
       if (q.isActive) stopAndWait(q)
@@ -832,10 +827,8 @@ class CurationStreamSpec extends AnyFunSuite {
     val tomb3 = spark.range(800L).filter($"id" % 64L >= 32L &&
       $"id" % 64L < 48L).select($"id".as("doc_id")).limit(10)
     val expected3 = expected2 + tomb3.count()
-    val prevCap = CurationStream.RedactCollectCap
-    CurationStream.RedactCollectCap = 0L
-    try CurationStream.redactStore(spark, storeDir, tomb3)
-    finally CurationStream.RedactCollectCap = prevCap
+    withConf(spark)(CurationStream.RedactCollectCapKey -> 0L)(
+      CurationStream.redactStore(spark, storeDir, tomb3))
     assert(CurationStream.readStore(spark, storeDir)
       .filter($"text".isNull).count() === expected3,
       "an over-cap tombstone batch must full-scan exactly")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestFixtures.withLocalLookupCap
+import graft.TestFixtures.withConf
 import graft.ext.Retrieval
 
 /** The point-lookup serving tier: the exported bucketed/sorted layout
@@ -27,6 +27,9 @@ class IndexExportSpec extends AnyFunSuite {
       .getOrCreate()
     s
   }
+
+  // −1 forces every lookup onto the distributed plan
+  private val LookupCap = IndexExport.LocalLookupCapKey
 
   private def docsFixture = {
     import spark.implicits._
@@ -63,7 +66,7 @@ class IndexExportSpec extends AnyFunSuite {
     }.reduce(_ ++ _)
     assert(viaLookup === viaMemory)
     assert(viaLookup.nonEmpty)
-    val viaDistributed = withLocalLookupCap(-1L)(queries.map {
+    val viaDistributed = withConf(spark)(LookupCap -> -1L)(queries.map {
       case (qid, terms) =>
         IndexExport.bm25Lookup(spark, out, Seq(qid -> terms), 5)
           .collect().map(_.toSeq).toSet
@@ -89,7 +92,7 @@ class IndexExportSpec extends AnyFunSuite {
     // the DISTRIBUTED fast plan (the default route above is the local
     // tier): the forced route's rows, then the plan's shape — exactly
     // ONE shuffle below the top-k, no cartesian product
-    val viaForced = withLocalLookupCap(-1L)(
+    val viaForced = withConf(spark)(LookupCap -> -1L)(
       IndexExport.bm25LookupSingle(spark, out, terms, 7))
       .select($"doc_id", $"score").collect().map(_.toSeq).toSet
     assert(viaForced === viaMem)
@@ -153,8 +156,9 @@ class IndexExportSpec extends AnyFunSuite {
 
   /** The forced-fallback answer to [[abTerms]] over the layout at `dir`. */
   private def fallbackAnswer(dir: String): Set[Seq[Any]] =
-    withLocalLookupCap(-1L)(IndexExport.bm25LookupSingle(spark, dir, abTerms, 5)
-      .collect().map(_.toSeq).toSet)
+    withConf(spark)(LookupCap -> -1L)(
+      IndexExport.bm25LookupSingle(spark, dir, abTerms, 5)
+        .collect().map(_.toSeq).toSet)
 
   /** The expected answer of `idx`, from its own independent layout. */
   private def refAnswer(idx: Retrieval.Bm25Index): Set[Seq[Any]] = {
@@ -198,7 +202,7 @@ class IndexExportSpec extends AnyFunSuite {
     val out = Files.createTempDirectory("bm25_fallback_pin").toString
     IndexExport.exportBm25(idxA, out, nBuckets = 16)
     val epochA = IndexExport.resolveEpoch(out)
-    val df = withLocalLookupCap(-1L)(
+    val df = withConf(spark)(LookupCap -> -1L)(
       IndexExport.bm25LookupSingle(spark, out, abTerms, 5))
     // three exports prune epoch A (KeepEpochs = 2) before the collect:
     // a lookup whose plan still had to read A's files would fail here
@@ -251,7 +255,7 @@ class IndexExportSpec extends AnyFunSuite {
     // whose bucket exists but holds no such term
     val noDir = candidates.find(t => !written(IndexExport.termBucket(t, 16))).get
     val noRow = candidates.find(t => written(IndexExport.termBucket(t, 16))).get
-    withLocalLookupCap(-1L) {
+    withConf(spark)(LookupCap -> -1L) {
       Seq(Seq(noDir), Seq(noRow), Seq(noDir, noRow)).foreach { ts =>
         assert(IndexExport.bm25LookupSingle(spark, out, ts, 5).collect().isEmpty,
           s"single lookup of $ts")

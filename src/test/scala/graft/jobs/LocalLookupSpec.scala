@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestFixtures.withLocalLookupCap
+import graft.TestFixtures.withConf
 import graft.ext.Retrieval
 
 /** The no-Spark point-lookup reader ([[LocalLookup]]) must return rows
@@ -36,6 +36,9 @@ class LocalLookupSpec extends AnyFunSuite {
     s
   }
 
+  // −1 forces every lookup onto the distributed plan
+  private val LookupCap = IndexExport.LocalLookupCapKey
+
   private val vocab = Seq("spark", "table", "hash", "scan", "join",
     "sort", "row", "col", "disk", "ram", "net", "cpu")
 
@@ -53,12 +56,13 @@ class LocalLookupSpec extends AnyFunSuite {
     rows.toDF("doc_id", "text")
   }
 
-  /** Spark jobs visible to the status tracker, flushed until stable so
-    * an async listener event from fixture-building cannot leak into the
-    * measured window.
+  /** Spark jobs of job group `group` (null: jobs outside any group)
+    * visible to the status tracker, flushed until stable so an async
+    * listener event from fixture-building cannot leak into the measured
+    * window.
     */
-  private def stableJobCount(): Int = {
-    def c() = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
+  private def stableJobCount(group: String = null): Int = {
+    def c() = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
     var prev = -1
     var cur = c()
     while (cur != prev) { Thread.sleep(100); prev = cur; cur = c() }
@@ -92,7 +96,7 @@ class LocalLookupSpec extends AnyFunSuite {
           Seq(null, "disk"), Seq("net", "ram", "row", "col"))
     // expected: the distributed plan, forced (cap −1 declines even a
     // zero-match query)
-    val expected = withLocalLookupCap(-1L)(queries.map { terms =>
+    val expected = withConf(spark)(LookupCap -> -1L)(queries.map { terms =>
       IndexExport.bm25LookupSingle(spark, out, terms, 7)
         .collect().map(r => (
           if (r.isNullAt(0)) null else java.lang.Long.valueOf(r.getLong(0)),
@@ -199,8 +203,8 @@ class LocalLookupSpec extends AnyFunSuite {
     // FORCED distributed plan, got rows from the routed (local) path
     val queries = Seq(0L -> Seq("spark", "table"), 1L -> Seq("scan"),
       2L -> Seq("absent_term"), 3L -> Seq("net", "ram", "row", "col"))
-    val expected = withLocalLookupCap(-1L)(queries.map { case (qid, ts) =>
-      IndexExport.bm25Lookup(spark, out, Seq(qid -> ts), 5)
+    val expected = withConf(spark)(LookupCap -> -1L)(queries.map {
+      case (qid, ts) => IndexExport.bm25Lookup(spark, out, Seq(qid -> ts), 5)
         .collect().map(_.toSeq).toSet
     })
     // NOTE: "spark" matches the NULL-doc_id row, so its batch twin
@@ -230,7 +234,7 @@ class LocalLookupSpec extends AnyFunSuite {
     assert(pinned(out)(LocalLookup.bm25Batch(_, Seq(1L -> Seq("scan")), 5, 0L))
       === None)
     assert(pinned(out)(LocalLookup.bm25Single(_, Seq("scan"), 5, 0L)) === None)
-    val capped = withLocalLookupCap(0L)(
+    val capped = withConf(spark)(LookupCap -> 0L)(
       IndexExport.bm25Lookup(spark, out, Seq(1L -> Seq("scan")), 5)
         .collect().map(_.toSeq).toSet)
     assert(capped === expected(1))
@@ -250,9 +254,9 @@ class LocalLookupSpec extends AnyFunSuite {
     val before = relations()
     // cap −1: both lookups take the distributed plan, which broadcasts
     // the df rows (single) and the query's term set (batch)
-    val single = withLocalLookupCap(-1L)(
+    val single = withConf(spark)(LookupCap -> -1L)(
       IndexExport.bm25LookupSingle(spark, out, terms, 7).collect().toSeq)
-    val batch = withLocalLookupCap(-1L)(
+    val batch = withConf(spark)(LookupCap -> -1L)(
       IndexExport.bm25Lookup(spark, out, Seq(0L -> terms), 7).collect().toSeq)
     assert((relations() -- before).isEmpty,
       "the fallback's broadcast relations must leave the block manager with the lookup")
@@ -261,6 +265,61 @@ class LocalLookupSpec extends AnyFunSuite {
       local(out, terms, 7).map { case (d, n, s) => (d.longValue, n, s) })
     assert(batch.map(_.toSeq).toSet === IndexExport.bm25Lookup(spark, out,
       Seq(0L -> terms), 7).collect().map(_.toSeq).toSet)
+  }
+
+  test("two sessions of one JVM each serve from their own lookup tier, interleaved on two threads") {
+    val idx = Retrieval.bm25Index(docsFixture)
+    val out = Files.createTempDirectory("bm25_two_sessions").toString
+    IndexExport.exportBm25(idx, out, nBuckets = 16)
+    graft.ext.Dedup.clearSignatureCaches()
+    LocalLookup.clearLayouts()
+    // the cap is session conf: `forced` (cap −1) takes the distributed
+    // plan while `spark` (default cap) stays on the local tier, with
+    // both lookups in flight in one JVM at once. Terms the NULL-doc_id
+    // row does not hold, so the local twins serve every query
+    val forced = spark.newSession()
+    forced.conf.set(LookupCap, "-1")
+    val queries = Seq(Seq("scan"), Seq("net", "ram"), Seq("table", "join"),
+      Seq("cpu", "disk", "sort"))
+    val rounds = 3
+    val barrier = new java.util.concurrent.CyclicBarrier(2)
+    def serve(s: SparkSession, group: String) = {
+      s.sparkContext.setJobGroup(group, group)
+      try (1 to rounds).flatMap(_ => queries.zipWithIndex.map {
+        case (terms, i) =>
+          barrier.await() // the two threads take each lookup together
+          (IndexExport.bm25LookupSingle(s, out, terms, 7).collect().toSeq,
+            IndexExport.bm25Lookup(s, out, Seq(i.toLong -> terms), 5)
+              .collect().map(_.toSeq).toSet)
+      }) finally s.sparkContext.clearJobGroup()
+    }
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val group = "two-sessions-" + java.util.UUID.randomUUID().toString.take(8)
+    val both = Seq(spark -> s"$group-default", forced -> s"$group-forced")
+      .map { case (s, g) => Future(serve(s, g)) }
+    val Seq(viaDefault, viaForced) =
+      Await.result(Future.sequence(both), 120.seconds)
+    assert(viaDefault === viaForced, "the two tiers must serve identical rows")
+    assert(viaDefault.forall(_._1.nonEmpty), "every query matches docs")
+    // the forced count first: once its last job is seen, every earlier
+    // job event (the default thread's included) has been delivered
+    assert(stableJobCount(s"$group-forced") >= 2 * rounds * queries.size,
+      "the cap −1 session must run each lookup as a Spark plan")
+    assert(stableJobCount(s"$group-default") === 0,
+      "the default session must serve every lookup with zero Spark jobs")
+  }
+
+  test("a malformed cap value fails the lookup, naming its key") {
+    val idx = Retrieval.bm25Index(docsFixture)
+    val out = Files.createTempDirectory("bm25_bad_cap").toString
+    IndexExport.exportBm25(idx, out, nBuckets = 16)
+    val e = intercept[IllegalArgumentException](
+      withConf(spark)(LookupCap -> "10k")(
+        IndexExport.bm25LookupSingle(spark, out, Seq("scan"), 5)))
+    assert(e.getMessage.contains(LookupCap) && e.getMessage.contains("10k"),
+      s"the error must name the key and the value, got: ${e.getMessage}")
   }
 
   test("multi-page postings: one bucket, mid-file row ranges, page-crossing and NULL doc_id rows match the plans with zero jobs") {
@@ -391,8 +450,9 @@ class LocalLookupSpec extends AnyFunSuite {
       assert(stale.nonEmpty)
       val cur = pinned(out) { l => l.files.put(s"postings/$b", stale); l.dir }
       Seq(100000L, -1L).foreach { cap =>
-        val e = intercept[IllegalStateException](withLocalLookupCap(cap)(
-          IndexExport.bm25LookupSingle(spark, out, Seq("spark"), 5)))
+        val e = intercept[IllegalStateException](
+          withConf(spark)(LookupCap -> cap)(
+            IndexExport.bm25LookupSingle(spark, out, Seq("spark"), 5)))
         assert(e.getMessage.contains("mixed-epoch read") &&
           e.getMessage.contains(cur) && e.getMessage.contains(old),
           s"cap $cap: the fence must name both epochs, got: ${e.getMessage}")

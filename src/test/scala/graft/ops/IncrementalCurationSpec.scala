@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestFixtures.withConf
 import graft.queries.Curation
 
 /** The q122 incremental-ingest contract, pinned cause by cause on a
@@ -284,13 +285,10 @@ class IncrementalCurationSpec extends AnyFunSuite {
     // unhinted shuffle-join shapes with distributed drop lists over the
     // SAME prepared artifacts — force it on this tiny delta and pin
     // identical rows
-    val capBefore = Curation.DropListCap
-    Curation.DropListCap = 0L
-    try {
-      val overCap = key(Curation.persistedIngest(spark, dir))
-      assert(overCap === inMemory,
-        "the over-cap tier over prepared artifacts diverged")
-    } finally Curation.DropListCap = capBefore
+    val overCap = withConf(spark)(Curation.DropListCapKey -> 0L)(
+      key(Curation.persistedIngest(spark, dir)))
+    assert(overCap === inMemory,
+      "the over-cap tier over prepared artifacts diverged")
   }
 
   test("a NULL doc_id is rejected at entry, with the same accepted set on every tier; the caller's job description survives") {
@@ -329,10 +327,8 @@ class IncrementalCurationSpec extends AnyFunSuite {
         ids.sortBy(_.toString)
       } finally sc.setJobDescription(null)
     }
-    val capBefore = Curation.DropListCap
     val local = accepted()
-    Curation.DropListCap = 0L
-    val overCap = try accepted() finally Curation.DropListCap = capBefore
+    val overCap = withConf(spark)(Curation.DropListCapKey -> 0L)(accepted())
     assert(local === Seq(okA, okB).sortBy(_.toString),
       s"NULL-id rows must be rejected, got $local")
     assert(overCap === local, "the two tiers disagree on a NULL doc_id")
@@ -363,7 +359,7 @@ class IncrementalCurationSpec extends AnyFunSuite {
   test("a near-dup component over the pair cap on the local tier still retires its docs before stage 5") {
     import spark.implicits._
     // four mutually near-dup delta docs give 6 within-delta pairs: at
-    // DropListCap = 5 the delta (5 docs) rides the local tier while its
+    // a drop-list cap of 5 the delta (5 docs) rides the local tier while its
     // pair list is over the cap. `dup` is a non-root of that component
     // and `twin` shares its embedding only; once `dup` is dropped at
     // stage 4 it must not knock `twin` out at stage 5
@@ -386,13 +382,10 @@ class IncrementalCurationSpec extends AnyFunSuite {
     }.toDF("vec_id", "embedding")
     val trained = graft.ext.Similarity
       .kmeansCentroids(emb, k = 4, iters = 1, roundTo = 4)
-    def accepted(cap: Long): Seq[Long] = {
-      val capBefore = Curation.DropListCap
-      Curation.DropListCap = cap
-      try Curation.ingestDelta(spark, store, mk(Seq.empty), delta, emb,
-          trained).select($"doc_id").as[Long].collect().toSeq.sorted
-      finally Curation.DropListCap = capBefore
-    }
+    def accepted(cap: Long): Seq[Long] =
+      withConf(spark)(Curation.DropListCapKey -> cap)(
+        Curation.ingestDelta(spark, store, mk(Seq.empty), delta, emb,
+          trained).select($"doc_id").as[Long].collect().toSeq.sorted)
     val batch = try Curation.curatedSurvivors(spark, store.unionByName(delta),
         emb, Some(() => trained)).select($"doc_id").as[Long]
         .collect().toSeq.filterNot(sIds.contains).sorted

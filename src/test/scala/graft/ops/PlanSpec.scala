@@ -558,6 +558,117 @@ class PlanSpec extends AnyFunSuite {
     assert(literal.isEmpty, s"`maxBucket: Int = 1000` in ${literal.mkString(", ")}")
   }
 
+  // ---- source checks: src/main read as text ----------------------------
+
+  /** Every .scala file under `dir`, by path. */
+  private def read(dir: String): Map[String, String] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    assert(Files.isDirectory(root), "spec must run from the repo root")
+    Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p.toString.replace('\\', '/') ->
+        new String(Files.readAllBytes(p), "UTF-8"))
+      .toMap
+  }
+
+  // (source without comments, source without comments or string
+  // literals): names count inside strings (SQL interpolates constants),
+  // declarations and braces only outside them
+  private def lex(src: String): (String, String) = {
+    val kept = new StringBuilder
+    val bare = new StringBuilder
+    var i = 0
+    def literal(end: Int): Unit = {
+      kept ++= src.substring(i, end); bare ++= "\"\""; i = end
+    }
+    while (i < src.length) {
+      if (src.startsWith("//", i)) {
+        while (i < src.length && src(i) != '\n') i += 1
+      } else if (src.startsWith("/*", i)) {
+        var depth = 0
+        while ({
+          if (src.startsWith("/*", i)) { depth += 1; i += 2 }
+          else if (src.startsWith("*/", i)) { depth -= 1; i += 2 }
+          else i += 1
+          depth > 0 && i < src.length
+        }) ()
+        kept += ' '; bare += ' '
+      } else if (src.startsWith("\"\"\"", i)) {
+        val close = src.indexOf("\"\"\"", i + 3)
+        var end = if (close < 0) src.length else close + 3
+        while (end < src.length && src(end) == '"') end += 1
+        literal(end)
+      } else if (src(i) == '"') {
+        var j = i + 1
+        while (j < src.length && src(j) != '"' && src(j) != '\n')
+          j += (if (src(j) == '\\') 2 else 1)
+        literal(math.min(j + 1, src.length))
+      } else if (src(i) == '\'' && i + 2 < src.length &&
+          (src(i + 2) == '\'' || src(i + 1) == '\\')) {
+        literal(src.indexOf('\'', i + (if (src(i + 1) == '\\') 3 else 2)) + 1)
+      } else {
+        kept += src(i); bare += src(i); i += 1
+      }
+    }
+    (kept.toString, bare.toString)
+  }
+
+  // a definition: modifiers, keyword, name
+  private val decl = ("(?m)^[ \\t]*((?:(?:@\\w+(?:\\([^)]*\\))?|final|case|sealed|abstract|" +
+    "implicit|lazy|override|private(?:\\[\\w+\\])?|protected(?:\\[\\w+\\])?)\\s+)*)" +
+    "(def|val|var|object|class|trait)\\s+([A-Za-z_][A-Za-z0-9_]*)").r
+
+  // brace depth before each offset of a lexed (string-free) source
+  private def depths(bare: String): IndexedSeq[Int] = bare.scanLeft(0) {
+    case (d, '{') => d + 1
+    case (d, '}') => d - 1
+    case (d, _) => d
+  }
+
+  test("src/main holds no mutable tuning state, and only mains read the environment") {
+    // a tuning value lives in the session that runs the query
+    // (`spark.graft.*` conf, read through Sessions.cap) or is a
+    // constant, never in a var of a top-level object, where two
+    // sessions or two specs would race on it. The only such vars are
+    // the named test hooks. The environment is read only by an object
+    // that holds a main: the harness passes what it read to the engine
+    val hooks = Set("Dfs.nonAtomicRenameShim", "Dfs.nonAtomicDirRenameShim",
+      "IndexExport.prunePauseHook", "IndexExport.pinPauseHook",
+      "CurationStream.maintenancePauseHook", "CurationStream.reclaimPauseHook",
+      "CurationStream.claimPauseHook")
+    val env = "\\bsys\\.env\\b|\\bSystem\\.getenv\\b".r
+    val found = read("src/main").toSeq.map { case (path, src) =>
+      val bare = lex(src)._2
+      val depth = depths(bare)
+      val decls = decl.findAllMatchIn(bare).map(m =>
+        (m.start(2), depth(m.start(2)), m.group(2), m.group(3))).toSeq
+      // each top-level definition with the span of source it owns
+      val tops = decls.filter(_._2 == 0)
+      val spans = tops.zip(tops.drop(1).map(_._1) :+ bare.length)
+      spans.map { case ((from, _, kind, name), until) =>
+        val members = decls.filter { case (at, d, _, _) =>
+          d == 1 && at > from && at < until }
+        val vars = if (kind != "object") Nil else members.collect {
+          case (_, _, "var", v) => s"$name.$v" }
+        val holdsMain = members.exists { case (_, _, k, n) =>
+          k == "def" && n == "main" }
+        val readsEnv = !holdsMain &&
+          env.findFirstIn(bare.substring(from, until)).isDefined
+        (vars, if (readsEnv) Seq(s"$path: $name") else Nil)
+      }
+    }.flatten
+    val vars = found.flatMap(_._1).toSet
+    val tuning = vars -- hooks
+    assert(tuning.isEmpty,
+      s"vars in top-level objects: ${tuning.toSeq.sorted.mkString(", ")}")
+    assert((hooks -- vars).isEmpty,
+      s"named hooks that are gone: ${(hooks -- vars).mkString(", ")}")
+    val readers = found.flatMap(_._2)
+    assert(readers.isEmpty,
+      s"environment read outside a main: ${readers.sorted.mkString(", ")}")
+  }
+
   test("src/main members are reached") {
     // src/main holds only what a main, a declared query, the live streams
     // or the benchmark run: every public top-level definition, and every
@@ -591,58 +702,6 @@ class PlanSpec extends AnyFunSuite {
       "PlanShape.fileScans" -> "spec hook",
       "PlanShape.shuffles" -> "spec hook")
 
-    import scala.jdk.CollectionConverters._
-    def read(dir: String): Map[String, String] = {
-      val root = java.nio.file.Paths.get(dir)
-      assert(Files.isDirectory(root), "spec must run from the repo root")
-      Files.walk(root).iterator().asScala
-        .filter(_.toString.endsWith(".scala"))
-        .map(p => p.toString.replace('\\', '/') ->
-          new String(Files.readAllBytes(p), "UTF-8"))
-        .toMap
-    }
-    // (source without comments, source without comments or string
-    // literals): names count inside strings (SQL interpolates constants),
-    // declarations and braces only outside them
-    def lex(src: String): (String, String) = {
-      val kept = new StringBuilder
-      val bare = new StringBuilder
-      var i = 0
-      def literal(end: Int): Unit = {
-        kept ++= src.substring(i, end); bare ++= "\"\""; i = end
-      }
-      while (i < src.length) {
-        if (src.startsWith("//", i)) {
-          while (i < src.length && src(i) != '\n') i += 1
-        } else if (src.startsWith("/*", i)) {
-          var depth = 0
-          while ({
-            if (src.startsWith("/*", i)) { depth += 1; i += 2 }
-            else if (src.startsWith("*/", i)) { depth -= 1; i += 2 }
-            else i += 1
-            depth > 0 && i < src.length
-          }) ()
-          kept += ' '; bare += ' '
-        } else if (src.startsWith("\"\"\"", i)) {
-          val close = src.indexOf("\"\"\"", i + 3)
-          var end = if (close < 0) src.length else close + 3
-          while (end < src.length && src(end) == '"') end += 1
-          literal(end)
-        } else if (src(i) == '"') {
-          var j = i + 1
-          while (j < src.length && src(j) != '"' && src(j) != '\n')
-            j += (if (src(j) == '\\') 2 else 1)
-          literal(math.min(j + 1, src.length))
-        } else if (src(i) == '\'' && i + 2 < src.length &&
-            (src(i + 2) == '\'' || src(i + 1) == '\\')) {
-          literal(src.indexOf('\'', i + (if (src(i + 1) == '\\') 3 else 2)) + 1)
-        } else {
-          kept += src(i); bare += src(i); i += 1
-        }
-      }
-      (kept.toString, bare.toString)
-    }
-
     val main = read("src/main").map { case (p, src) => p -> lex(src) }
     val bench = read("perfbench/src").map { case (p, src) => p -> lex(src)._1 }
     val ident = "[A-Za-z_][A-Za-z0-9_]*".r
@@ -653,16 +712,8 @@ class PlanSpec extends AnyFunSuite {
     val filesNaming = wordsOf.toSeq
       .flatMap { case (p, ws) => ws.keys.map(_ -> p) }
       .groupBy(_._1).map { case (w, ps) => w -> ps.map(_._2).toSet }
-    val decl = ("(?m)^[ \\t]*((?:(?:@\\w+(?:\\([^)]*\\))?|final|case|sealed|abstract|" +
-      "implicit|lazy|override|private(?:\\[\\w+\\])?|protected(?:\\[\\w+\\])?)\\s+)*)" +
-      "(def|val|var|object|class|trait)\\s+([A-Za-z_][A-Za-z0-9_]*)").r
-
     val unreached = main.toSeq.flatMap { case (path, (_, bare)) =>
-      val depth = bare.scanLeft(0) {
-        case (d, '{') => d + 1
-        case (d, '}') => d - 1
-        case (d, _) => d
-      }
+      val depth = depths(bare)
       val decls = decl.findAllMatchIn(bare).map(m =>
         (depth(m.start(2)), m.group(1), m.group(2), m.group(3))).toSeq
       val declCount = decls.groupBy(_._4).map { case (n, ds) => n -> ds.size }
